@@ -236,7 +236,7 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
 
     Bulk pipelines should project ``tokens(text)`` into a real column
     first and call ``shingles_of_tokens`` on it, so the tokenizer runs
-    exactly once per row (see dedup._shingle_sets)."""
+    exactly once per row (see dedup.jaccard_pairs)."""
     return shingles_of_tokens(tokens(col), n)
 
 

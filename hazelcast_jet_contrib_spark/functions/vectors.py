@@ -56,13 +56,6 @@ def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(d / (na * nb))
 
 
-def vec_dim(df, vec_col: str) -> int | None:
-    """Embedding width from one sampled row (one tiny job); None if the
-    frame is empty. Use to feed `dim=` for the unrolled fast path."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    return None if row is None else row["d"]
-
-
 def quantize_symmetric(df, id_col: str, vec_col: str, levels: int = 127):
     """Symmetric linear quantization of an embedding column to signed-int
     levels (int8 range when levels=127): scale = max(|v|)/levels,

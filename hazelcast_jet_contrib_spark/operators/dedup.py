@@ -1,5 +1,7 @@
 """Deduplication operators for training-data pipelines: exact,
-n-gram-Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup.
+n-gram-Jaccard, MinHash+LSH and SimHash near-dup, plus near-dup
+clustering (embedding-cosine near-dup lives in similarity.py and
+clustering.py).
 
 All are DataFrame→DataFrame transforms built from joins/aggregations the
 optimizer can plan (shuffle on content keys, partial aggregation, AQE
@@ -62,51 +64,16 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, shingle_words: int,
-    spread: bool = True,
-) -> DataFrame:
-    """(id, sh) with sh = distinct word-n-gram set. The token array is
-    projected into a real column first so the regex tokenizer runs once
-    per row; shingling then only reads that attribute (CollapseProject
-    keeps the two projections apart because the token array is referenced
-    n+2 times and is non-cheap).
-
-    ``spread=False`` skips the under-partitioned-corpus repartition for
-    inputs that are SMALL BY CONTRACT (probe/eval sets): spreading ~10²
-    rows over 32 partitions adds an exchange plus a cluster-wide stage
-    for no CPU win — measured r17 (OPTIMIZATION_r17.md §18): the probe-
-    side band collect drops 2.1 → 1.2 s at sf0.1. Corpus-side callers
-    keep the default (the local fixture is 1-2 splits and shingling is
-    CPU-bound; on a real corpus _spread no-ops)."""
-    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text__"))
-    if spread:
-        base = _spread(base)
-    return (
-        base
-        .select("id", tokens("__text__").alias("__toks__"))
-        .select("id", shingles_of_tokens("__toks__", shingle_words).alias("sh"))
-        .filter(F.size("sh") > 0)
-    )
-
-
 def hashed_shingle_sets(
     df: DataFrame, id_col: str, text_col: str, shingle_words: int,
     spread: bool = True,
 ) -> DataFrame:
     """(id, hs) with hs = the DISTINCT xxhash64 values of the word-n-gram
-    shingles — the MinHash family's real input — computed WITHOUT ever
-    materializing a shingle string (r18, guide §1.2 "don't compute
-    things you throw away"): one ``transform`` over the shingle index
-    range feeds each ``concat_ws`` of three token ``element_at``s
-    STRAIGHT into ``xxhash64``, and distinctness applies to the 8-byte
-    hashes only. The former path (``_shingle_sets`` →
-    ``array_distinct(transform(sh, xxhash64))``) built an arrays_zip
-    struct array + three slice copies + an ``array_distinct`` over
-    shingle STRINGS, all of which existed only to be hashed and
-    dropped — measured 3.1× on the hs pass at sf0.1
-    (scripts/mb_shinglevar.py record: 1.39 → 0.45 s min, hs sets
-    asserted identical over the full corpus first).
+    shingles — the MinHash family's input — computed WITHOUT ever
+    materializing a shingle string (guide §1.2 "don't compute things
+    you throw away"): one ``transform`` over the shingle index range
+    feeds each ``concat_ws`` of the n token ``element_at``s STRAIGHT into
+    ``xxhash64``, and distinctness applies to the 8-byte hashes only.
 
     ``element_at`` inside the lambda is safe here because the token
     array is a projected ATTRIBUTE, not a computed expression — the
@@ -115,14 +82,18 @@ def hashed_shingle_sets(
     element.
 
     Value contract (pinned in tests/test_dedup_similarity.py): equal to
-    ``array_distinct(transform(_shingle_sets(...).sh, xxhash64))`` row
-    for row — same tokens, same space-joined n-grams, same hashes;
-    string-level distinctness differs from hash-level distinctness only
-    on an intra-document xxhash64 collision (~2^-64 per pair), exactly
-    the collapse the former shape's hash-distinct already performed.
+    ``array_distinct(transform(word_shingles(text, n), xxhash64))`` row
+    for row, with docs of fewer than n tokens dropped — same tokens,
+    same space-joined n-grams, same hashes; string-level distinctness
+    differs from hash-level distinctness only on an intra-document
+    xxhash64 collision (~2^-64 per pair).
 
     ``spread=False`` skips the under-partitioned-corpus repartition for
-    inputs small by contract (probe/eval sets) — see ``_shingle_sets``.
+    inputs that are SMALL BY CONTRACT (probe/eval sets): spreading ~10²
+    rows over 32 partitions adds an exchange plus a cluster-wide stage
+    for no CPU win (OPTIMIZATION_r17.md §18: the probe-side band collect
+    drops 2.1 → 1.2 s at sf0.1). Corpus-side callers keep the default
+    (shingling is CPU-bound; on a real corpus _spread no-ops).
     """
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text__"))
     if spread:
@@ -139,8 +110,8 @@ def hashed_shingle_sets(
     )
     return (
         base.select("id", tokens("__text__").alias("__toks__"))
-        # size < n ⇔ the string path's size(sh) > 0 filter (empty/NULL
-        # text tokenizes to size 1/-1, both dropped either way)
+        # size < n ⇔ an empty shingle list (empty/NULL text tokenizes
+        # to size 1/-1, both dropped)
         .filter(F.size(t) >= shingle_words)
         .select("id", F.array_distinct(sh).alias("hs"))
     )
@@ -161,13 +132,30 @@ def jaccard_pairs(
     per-shingle document frequency — use `minhash_lsh_pairs` at corpus
     scale and keep this as the verifier inside candidate buckets.
     """
-    sh = _shingle_sets(df, id_col, text_col, shingle_words)
+    # (id, sh) with sh = the distinct word-n-gram strings. The token
+    # array is projected into a real column first so the regex tokenizer
+    # runs once per row (CollapseProject keeps the two projections apart
+    # because the token array is referenced n+2 times and is non-cheap).
+    # STRING shingles, not hashed_shingle_sets: an A/B on the
+    # neardup_clusters input (sf0.01, 4 CPUs, 6 interleaved noop-sink
+    # reps, identical 100-pair sets) measured this shape at 0.83 s median
+    # (0.65 s min) vs 1.21 s (1.13 s min) for exploding hashed_shingle_sets'
+    # hs — the explode below is needed either way, and xxhash64 after it
+    # runs in whole-stage codegen while hashing inside a transform lambda
+    # is interpreted.
+    base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text__"))
+    sh = (
+        _spread(base)
+        .select("id", tokens("__text__").alias("__toks__"))
+        .select("id", shingles_of_tokens("__toks__", shingle_words).alias("sh"))
+        .filter(F.size("sh") > 0)
+    )
     sizes = sh.select("id", F.size("sh").alias("sz"))
     # join on the 8-byte shingle hash, not the shingle string: narrower
     # shuffle + cheaper key compare; a 64-bit collision adds 1 to one
     # pair's intersection with probability ~n_pairs/2^64 — negligible.
     # DELIBERATELY three recomputed subtrees (sizes + both join sides),
-    # no cache: an r17 A/B (scripts/mb_jaccard.py, sf0.1, interleaved
+    # no cache: an r17 A/B (OPTIMIZATION_r17.md §3, sf0.1, interleaved
     # noop-sink reps) measured the cached-prepartitioned single-pass
     # shape at 2.30 s vs 1.85 s (cache + recomputed sizes) vs 1.52 s
     # for this shape — the pipelined recompute saturates all cores
@@ -213,20 +201,6 @@ def _cap_buckets(
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup pairs (the scale path)
 # ---------------------------------------------------------------------------
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 128) -> Column:
-    """MinHash signature as one array expression: sig[i] = min over
-    shingles of xxhash64(shingle, i). Convenient for ad-hoc use, but
-    higher-order functions are interpreted (not codegen'd) — the bulk
-    pipeline below uses the explode + min-aggregate formulation instead,
-    which whole-stage-codegen executes ~10x faster at corpus scale."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingle_col, lambda s: F.xxhash64(s, i))
-        ),
-    )
 
 
 def _minhash_family_kernel(num_hashes: int):
@@ -304,56 +278,22 @@ def _minhash_family_kernel(num_hashes: int):
     return pandas_udf(_mins, "array<long>")
 
 
-def minhash_signatures(shingle_sets: DataFrame, num_hashes: int) -> DataFrame:
+def minhash_signatures(hashed: DataFrame, num_hashes: int) -> DataFrame:
     """MinHash signature + verification set per id from a
-    ``_shingle_sets``-shaped frame (id, sh), computed WITHOUT leaving
-    the row: hash each shingle string ONCE to 64 bits inside the
-    shingle array (one ``transform`` pass — same number of string
-    hashes as the former exploded shape), dedupe the longs, and derive
-    the ``num_hashes`` family mins with the bit-exact vectorized
-    kernel. Output: (id, h0..h{n-1}, hs) — the shared relation batch
-    LSH, decontamination, the persisted index and the streaming
-    near-dup index all build on.
+    ``hashed_shingle_sets``-shaped frame (id, hs), computed WITHOUT
+    leaving the row: the bit-exact vectorized family kernel derives the
+    ``num_hashes`` mins from each doc's distinct shingle hashes. Output:
+    (id, h0..h{n-1}, hs) — the shared relation batch LSH,
+    decontamination, the persisted index and the streaming near-dup
+    index all build on.
 
-    Until r17 this was explode(sh) → xxhash64 → groupBy(id).agg(
-    num_hashes × min(xxhash64(h0, i)) + collect_set(h0)) — an explode
-    row-blowup, a wide aggregate, and one full exchange of the hashed
-    shingle data, for what is a per-row function of a per-row array.
-    Because explode emits a doc's shingles inside the doc's own
-    partition, the partial-agg state crossing that exchange was already
-    the finished per-id row, so the shuffle bought no reduction at all.
-    The fused shape removes all three (plan: scan → project → one
-    ArrowEvalPython, ZERO exchanges); measured at sf0.1
-    (scripts/mb_sigfused.py, interleaved noop-sink reps, signatures +
-    hs sets + final pair sets asserted identical first): full
-    minhash_lsh_pairs 2.39 → 2.22 s min in-script, index_rows build
-    3.04 → 1.70 s min, and the registered queries' scoped bench
-    improved accordingly (OPTIMIZATION_r17.md §16).
-
-    Distinctness note: the former shape deduped shingle STRINGS and
-    collect_set then collapsed equal hashes again; this shape dedupes
-    the hashed longs directly — identical output unless two distinct
-    shingles of ONE doc collide in xxhash64 (~2^-64 per pair; the same
-    collision already collapsed in the old hs, and the min-family is
-    collision-insensitive). The output is NOT hash-clustered on id
-    anymore (the groupBy exchange is gone); every registry consumer was
-    re-measured under the new shape — the verify joins either broadcast
-    or exchange candidate ids, never this relation (guide §3.1)."""
-    hashed = shingle_sets.select(
-        "id",
-        F.array_distinct(F.transform("sh", lambda s: F.xxhash64(s))).alias("hs"),
-    )
-    return minhash_signatures_hs(hashed, num_hashes)
-
-
-def minhash_signatures_hs(hashed: DataFrame, num_hashes: int) -> DataFrame:
-    """MinHash signature + verification set per id from a
-    ``hashed_shingle_sets``-shaped frame (id, hs): the bit-exact
-    vectorized family kernel over the per-doc distinct shingle hashes.
-    Output: (id, h0..h{n-1}, hs). This is ``minhash_signatures`` minus
-    the string-shingle hashing — the bulk pipeline builds (id, hs) with
-    ``hashed_shingle_sets`` (no shingle strings ever materialized, r18)
-    and feeds it here."""
+    Plan: scan → project → one ArrowEvalPython, ZERO exchanges — the
+    signature is a per-row function of a per-row array, so an explode +
+    groupBy(id) formulation only adds a row blow-up and a shuffle that
+    reduces nothing (OPTIMIZATION_r17.md §16 records the A/B). The
+    output is NOT hash-clustered on id: every registry consumer's verify
+    join either broadcasts or exchanges candidate ids, never this
+    relation (guide §3.1)."""
     kernel = _minhash_family_kernel(num_hashes)
     return hashed.select("id", kernel("hs").alias("__mh__"), "hs").select(
         "id",
@@ -406,9 +346,9 @@ def minhash_lsh_pairs(
     threshold while only ever joining within buckets.
 
     Plan shape:
-    1. signatures + verification sets ROW-LOCALLY (hash each shingle
-       string once inside the array, vectorized family kernel for the
-       mins — see minhash_signatures): zero exchanges, no explode;
+    1. signatures + verification sets ROW-LOCALLY (hashed shingle
+       sets, vectorized family kernel for the mins — see
+       minhash_signatures): zero exchanges, no explode;
     2. hash `rows`-wide signature slices into band keys, unpivot to
        (id, band, band_hash) — one row per band;
     3. self-join on (band, band_hash) carrying ONLY ids (narrow shuffle),
@@ -438,7 +378,7 @@ def minhash_lsh_pairs(
     base = hashed_shingle_sets(df, id_col, text_col, shingle_words)
 
     # 1. signatures + verification sets in one row-local pass (see
-    # minhash_signatures_hs — zero exchanges since r17, no shingle
+    # minhash_signatures — zero exchanges since r17, no shingle
     # strings materialized since r18). Three consumers
     # read the relation (banding, verify side a, verify side b); persist
     # it so the scan → shingle → hash → kernel pass runs ONCE instead of
@@ -450,7 +390,7 @@ def minhash_lsh_pairs(
     # banded relation below.
     from hazelcast_jet_contrib_spark.cache import tracked_persist
 
-    agg = tracked_persist(minhash_signatures_hs(base, num_hashes))
+    agg = tracked_persist(minhash_signatures(base, num_hashes))
     sig = agg
 
     # 2. band keys from signature slices (multi-column xxhash64),
@@ -531,8 +471,8 @@ def minhash_decontaminate(
     # like minhash_lsh_pairs so the scan -> shingle -> kernel runs once
     from hazelcast_jet_contrib_spark.cache import tracked_persist
 
-    agg_c = tracked_persist(minhash_signatures_hs(base_c, num_hashes))
-    agg_p = tracked_persist(minhash_signatures_hs(base_p, num_hashes))
+    agg_c = tracked_persist(minhash_signatures(base_c, num_hashes))
+    agg_p = tracked_persist(minhash_signatures(base_p, num_hashes))
 
     bands_c = band_keys(agg_c, num_hashes, bands)
     bands_p = band_keys(agg_p, num_hashes, bands).withColumnRenamed("id", "probe_id")
@@ -832,58 +772,6 @@ def simhash128_pairs(
 
 
 # ---------------------------------------------------------------------------
-# embedding-cosine near-dup pairs
-# ---------------------------------------------------------------------------
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.99,
-    dim: int | None = None,
-    exact_baseline: bool = False,
-) -> DataFrame:
-    """Pairs of rows whose embeddings have cosine >= threshold.
-
-    Brute-force pairwise — the EXACT O(n²) baseline, kept for recall
-    ground-truth on small corpora. Because an exported all-pairs join
-    pointed at a real corpus is a scale-killer (10⁸ docs → 10¹⁶
-    candidate pairs), calling it requires an explicit
-    ``exact_baseline=True`` acknowledgment; otherwise it refuses with a
-    pointer to the bucketed production paths
-    (similarity.lsh_bucketed_pairs — hyperplane-LSH buckets;
-    clustering.semantic_dedup_pairs — k-means/IVF cells), which join
-    only within buckets. The same opt-in contract as
-    probe_minhash_index's side-swap error (this module). Output
-    (id_a, id_b)."""
-    if not exact_baseline:
-        raise ValueError(
-            "embedding_near_dup_pairs is the exact O(n^2) all-pairs "
-            "baseline — it cross-joins the corpus with itself and does "
-            "not scale past ground-truth-sized inputs. Pass "
-            "exact_baseline=True to acknowledge, or use the bucketed "
-            "paths: operators.similarity.lsh_bucketed_pairs "
-            "(hyperplane-LSH) / operators.clustering.semantic_dedup_pairs "
-            "(IVF-style k-means cells)."
-        )
-    from hazelcast_jet_contrib_spark.functions.vectors import as_double, cosine
-
-    v = df.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v"))
-    a, b = v.alias("a"), v.alias("b")
-    return (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(cosine(F.col("a.v"), F.col("b.v"), dim), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b")
-    )
-
-
-# ---------------------------------------------------------------------------
 # near-dup clusters: connected components over the pair graph
 # ---------------------------------------------------------------------------
 
@@ -1057,22 +945,6 @@ def connected_components(
                 pass
 
 
-
-
-
-def dedup_canonical_per_cluster(
-    df: DataFrame, pairs: DataFrame, id_col: str
-) -> DataFrame:
-    """Keep one row per near-dup cluster (the minimum id — deterministic
-    keep-first) plus every row with no near-dup at all. ``pairs`` is any
-    (id_a, id_b) near-dup pair relation (MinHash, SimHash, embedding…)."""
-    comps = connected_components(pairs)
-    losers = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
 def keep_best_per_cluster(
     df: DataFrame,
     pairs: DataFrame,
@@ -1084,10 +956,10 @@ def keep_best_per_cluster(
     mark as canonical the document with the BEST quality (ties break on
     the smaller id); documents in no cluster are their own canonicals.
 
-    This is the retention policy production dedup actually wants —
-    `dedup_canonical_per_cluster` keeps the arbitrary min-id member,
-    but a training pipeline keeps the highest-quality copy (longest,
-    best LM score, least boilerplate) and drops the rest. ``pairs`` is
+    This is the retention policy production dedup actually wants:
+    rather than an arbitrary member (the min id), a training pipeline
+    keeps the highest-quality copy (longest, best LM score, least
+    boilerplate) and drops the rest. ``pairs`` is
     any (id_a, id_b) near-dup relation (MinHash, SimHash, embedding…);
     ``quality_col`` is any per-document numeric (n_chars, a Gopher
     score, unigram/bigram LM quality…).
@@ -1310,7 +1182,7 @@ def index_rows(
     row + each ``hs`` once — records linear in corpus, constant
     exchanges) IS the index build's cost law."""
     sh = hashed_shingle_sets(corpus, id_col, text_col, shingle_words)
-    sig = minhash_signatures_hs(sh, num_hashes)
+    sig = minhash_signatures(sh, num_hashes)
     rows = num_hashes // bands
     structs = [
         F.struct(
@@ -1329,7 +1201,7 @@ def index_rows(
     # hs carried FLAT through the explode and nulled for band rows in
     # the same codegen stage — keeping it out of the struct array
     # matters: an array-typed field inside the exploded struct array
-    # measurably slows the whole write (scripts/mb_idxwrite.py:
+    # measurably slows the whole write (OPTIMIZATION_r17.md §19:
     # w_instruct vs w_carryS)
     return sig.select(
         "id", F.explode(F.array(*structs)).alias("bb"), "hs"
@@ -1350,7 +1222,8 @@ def _route_index_epoch(rel: DataFrame) -> DataFrame:
     (r17 finding: the former ``sortWithinPartitions("bh")`` produced
     files that were NOT bh-sorted — 0/32 sorted at sf0.01 — so the
     row-group-pruning story was physically hollow; band-leading sort is
-    what makes it real, physically verified in scripts/mb_splitidx.py).
+    what makes it real, physically verified file by file —
+    OPTIMIZATION_r17.md §19).
     Band files end up bh-sorted, the sets run id-sorted (bh is NULL
     constant there, so the id key takes over)."""
     routed = rel.withColumn(
@@ -1437,9 +1310,8 @@ def build_minhash_index(
     the SAME single action, build/append stay one job each and the
     compaction/crash-repair protocol needs no second code path
     (measured A/B vs both the old layout and a two-relation `_sets`
-    variant in scripts/mb_splitidx.py + mb_idxwrite.py — the unified
-    write matches the old layout's wall clock locally at ~6× fewer
-    index bytes).
+    variant in OPTIMIZATION_r17.md §19 — the unified write matches the
+    old layout's wall clock locally at ~6× fewer index bytes).
 
     Index parameters persist in a `_`-prefixed sidecar so probes can
     never be computed with a mismatched family."""
@@ -1462,7 +1334,7 @@ def build_minhash_index(
         )
 
 
-def _probe_candidates(spark, idx: DataFrame, probe_rows, id_type) -> DataFrame:
+def _probe_candidates(idx: DataFrame, probe_rows) -> DataFrame:
     """The probe's LSH candidate-generation relation: the index's NARROW
     band rows, partition-pruned to band >= 0 and row-group-pruned by
     `bh IN (...)` (both pushed into the scan — the plan pin lives on
@@ -1475,11 +1347,10 @@ def _probe_candidates(spark, idx: DataFrame, probe_rows, id_type) -> DataFrame:
     createDataFrame → broadcast → hash join → dropDuplicates exchange
     existed only to re-derive driver-known data and cost ~1.3 s of the
     probe leg at sf0.1 (guide §1.2: don't compute things you already
-    have; measured in /tmp-scripted A/B, recorded in
-    OPTIMIZATION_r18.md §5). Collected (bounded) by probe_minhash_index,
-    which forms and dedupes the (probe_id, corpus_id) pairs driver-side;
-    exposed so tests can assert the pushdowns on exactly the plan the
-    probe executes."""
+    have; OPTIMIZATION_r18.md §3). Collected (bounded) by
+    probe_minhash_index, which forms and dedupes the (probe_id,
+    corpus_id) pairs driver-side; exposed so tests can assert the
+    pushdowns on exactly the plan the probe executes."""
     bhs = sorted({r["bh"] for r in probe_rows})
     return (
         # band >= 0 is partition pruning (the sets partition never joins
@@ -1517,16 +1388,13 @@ def probe_minhash_index(
     item 6): ``max_probe_band_rows`` caps the driver materialization of
     the probe side (|probes| x bands band rows — that is what makes it
     a broadcast, not a corpus shuffle), and ``max_candidate_ids`` caps
-    the candidate-PAIR collect that drives the sets scan's `id IN (...)`
-    pruning (candidates are bucket matches: bounded by probe count x
-    bucket sizes, so a degenerate corpus bucket that floods the
-    candidate set raises loudly instead of silently scanning — and
-    shipping a predicate over — a corpus-sized id list). Since r18 the
-    cap applies to distinct (probe_id, corpus_id) PAIRS rather than
-    distinct corpus ids — pairs >= distinct ids, so every workload the
-    old cap rejected is still rejected, and the pair collect this
-    bounds replaced the r17 persist-plus-two-executions shape: the
-    candidate job runs once uncached, its pairs broadcast back, and
+    the collect of *matched band rows* that drives the sets scan's
+    `id IN (...)` pruning. A (probe_id, corpus_id) pair contributes one
+    matched row per band it collides in, so the cap counts up to
+    ``bands``× the distinct candidate pairs: a degenerate corpus bucket
+    that floods the candidates raises loudly instead of silently
+    scanning — and shipping a predicate over — a corpus-sized id list.
+    The candidate job runs once uncached, its pairs broadcast back, and
     the returned verify plan scans ONLY the id-pruned sets run
     (VERDICT r17 item 5 — no tracked persist left alive, nothing for
     a long-lived session to leak even on the cap's error path).
@@ -1558,7 +1426,7 @@ def probe_minhash_index(
     sh = hashed_shingle_sets(
         probes, id_col, text_col, params["shingle_words"], spread=False
     )
-    sig = minhash_signatures_hs(sh, params["num_hashes"])
+    sig = minhash_signatures(sh, params["num_hashes"])
     # same one-pass shape as index_rows: hs carried through the unpivot
     pb = band_keys(sig, params["num_hashes"], params["bands"], carry=("hs",))
     # bounded collect: fetch at most cap+1 rows in ONE job, then fail
@@ -1572,9 +1440,6 @@ def probe_minhash_index(
             "build_minhash_index over the probes and probe with the "
             "corpus — or raise max_probe_band_rows deliberately."
         )
-    # Derive the probe-id field type from the caller's id column — the
-    # contract accepts any orderable id type, not just longs.
-    id_type = probes.schema[id_col].dataType
     idx = spark.read.parquet(path)
     # bounded collect #2: the matched BAND ROWS drive the sets scan's
     # `id IN (...)` pruning and the driver-side pair formation; fetch at
@@ -1589,10 +1454,8 @@ def probe_minhash_index(
     # pairs come from a dict lookup against the already-collected probe
     # band rows instead of a createDataFrame → broadcast → join →
     # dropDuplicates round-trip (~1.3 s of the probe leg at sf0.1 —
-    # OPTIMIZATION_r18.md §5).
-    cand = _probe_candidates(spark, idx, probe_rows, id_type).limit(
-        max_candidate_ids + 1
-    )
+    # OPTIMIZATION_r18.md §3).
+    cand = _probe_candidates(idx, probe_rows).limit(max_candidate_ids + 1)
     match_rows = cand.collect()
     if _observe is not None:
         # test seam: the EXECUTED candidate plan (where the In(bh ...)
@@ -1622,9 +1485,11 @@ def probe_minhash_index(
     # re-attach each probe's verification set driver-side (hs rides
     # every collected band row already — no extra job)
     phs_by_probe = {r["id"]: r["hs"] for r in probe_rows}
+    # the probe-id field type comes from the caller's id column — the
+    # contract accepts any orderable id type, not just longs
     pair_schema = StructType(
         [
-            StructField("probe_id", id_type),
+            StructField("probe_id", probes.schema[id_col].dataType),
             StructField("corpus_id", idx.schema["id"].dataType),
             StructField("phs", ArrayType(LongType())),
         ]

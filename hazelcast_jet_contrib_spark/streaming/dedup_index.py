@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from hazelcast_jet_contrib_spark.operators.dedup import (
     band_keys,
     hashed_shingle_sets,
-    minhash_signatures_hs,
+    minhash_signatures,
 )
 
 
@@ -161,7 +161,7 @@ class StreamingNearDupIndex:
 
         id_col, text_col = self._id_col, self._text_col
         base = hashed_shingle_sets(batch_df, id_col, text_col, self.shingle_words)
-        sig = minhash_signatures_hs(base, self.num_hashes).persist(
+        sig = minhash_signatures(base, self.num_hashes).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         try:

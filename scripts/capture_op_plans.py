@@ -2,13 +2,15 @@
 registry queries are eager / lineage-cut (so the query-level plan shows
 only the final leg). Usage:
 
-    python scripts/capture_op_plans.py <tag> <op> [...]
+    PLANS_ROUND=r19 python scripts/capture_op_plans.py <tag> <op> [...]
 
-ops: jaccard_pairs, index_rows, bm25_topk_multi, probe_bands
+ops: jaccard_pairs, index_rows, bm25_topk_multi. Files land in
+plans/$PLANS_ROUND/OP_<op>_<tag>.txt (same rule as capture_plans.py).
 """
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -16,7 +18,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = "/root/testdata/sf0.01"
-OUT = REPO / "plans" / "r17"
+OUT = REPO / "plans" / os.environ.get("PLANS_ROUND", "r18")
 
 
 def main() -> None:
@@ -69,8 +71,9 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        (OUT / f"OP_{op}_{tag}.txt").write_text(plan)
-        print(f"wrote plans/r17/OP_{op}_{tag}.txt ({len(plan)} chars)")
+        out = OUT / f"OP_{op}_{tag}.txt"
+        out.write_text(plan)
+        print(f"wrote {out.relative_to(REPO)} ({len(plan)} chars)")
         spark.catalog.clearCache()
     spark.stop()
 

@@ -1,6 +1,6 @@
 """Capture .explain("formatted") for named registry queries into
-plans/r17/<query>_<tag>.txt — the before/after plan evidence for the
-optimization rounds.
+plans/$PLANS_ROUND/<query>_<tag>.txt (PLANS_ROUND defaults to r18) —
+the before/after plan evidence for the optimization rounds.
 
 Usage: python scripts/capture_plans.py <tag> <query-name> [...]
        (tag is e.g. "before" or "after"; query names are exact)
@@ -39,8 +39,9 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        (OUT / f"{name}_{tag}.txt").write_text(plan)
-        print(f"wrote plans/r17/{name}_{tag}.txt ({len(plan)} chars)")
+        out = OUT / f"{name}_{tag}.txt"
+        out.write_text(plan)
+        print(f"wrote {out.relative_to(REPO)} ({len(plan)} chars)")
         spark.catalog.clearCache()
     spark.stop()
 

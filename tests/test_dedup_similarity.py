@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from hazelcast_jet_contrib_spark.operators.dedup import (
     dedup_exact,
-    embedding_near_dup_pairs,
     jaccard_pairs,
     minhash_lsh_pairs,
     simhash_pairs,
@@ -88,31 +87,6 @@ def embeddings(spark):
         v = vecs[i] + 1e-4 * rng.standard_normal(16)
         rows.append((1000 + i, [float(x) for x in v]))
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>"), vecs
-
-
-def test_embedding_near_dup_exact(spark, embeddings):
-    df, _ = embeddings
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(
-            df, "vec_id", "embedding", 0.999, exact_baseline=True
-        ).collect()
-    }
-    assert got == {(i, 1000 + i) for i in range(5)}
-
-
-def test_embedding_near_dup_refuses_without_exact_baseline_optin(spark, embeddings):
-    """VERDICT r10 What's-wrong #2: the exported all-pairs baseline must
-    refuse by default — a user pointing it at a corpus gets a clear
-    error naming the bucketed paths, not an O(n²) cross-join."""
-    import pytest
-
-    df, _ = embeddings
-    with pytest.raises(ValueError) as ei:
-        embedding_near_dup_pairs(df, "vec_id", "embedding", 0.999)
-    msg = str(ei.value)
-    assert "exact_baseline=True" in msg
-    assert "lsh_bucketed_pairs" in msg and "semantic_dedup_pairs" in msg
 
 
 def test_lsh_bucketed_pairs_recall_on_planted(spark, embeddings):
@@ -293,22 +267,6 @@ def test_cc_frees_superseded_checkpoints(spark):
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after - before <= 1, (before, after)
     assert {r["component"] for r in result.collect()} == {0}
-
-
-def test_dedup_canonical_per_cluster_keeps_min_and_singletons(spark):
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        dedup_canonical_per_cluster,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in (1, 2, 3, 4, 7, 9)], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    kept = sorted(
-        r["doc_id"] for r in dedup_canonical_per_cluster(df, pairs, "doc_id").collect()
-    )
-    # cluster {1,2,3} -> keep 1; 4, 7, 9 untouched (no near-dup)
-    assert kept == [1, 4, 7, 9]
 
 
 def test_minhash_decontaminate_flags_only_near_probes(spark):
@@ -622,9 +580,9 @@ def test_simhash_arrow_kernel_matches_sum_formulation(spark):
 
 
 def test_minhash_fused_kernel_matches_aggregate_formulation(spark):
-    """The r17 fused row-local signature shape (array-hash + vectorized
-    family kernel, minhash_signatures) is value-identical to the former
-    explode → groupBy(id).agg(num_hashes × min(xxhash64(h0, i)) +
+    """The fused row-local signature shape (vectorized family kernel over
+    the hashed shingle sets, minhash_signatures) is value-identical to
+    the explode → groupBy(id).agg(num_hashes × min(xxhash64(h0, i)) +
     collect_set(h0)) formulation, at both registry widths (64 for
     minhash_lsh_near_dup / the curation pipeline, 128 for
     decontamination and the persisted index), on real fixture text plus
@@ -632,7 +590,7 @@ def test_minhash_fused_kernel_matches_aggregate_formulation(spark):
     one shingle) docs. hs compared as SETS: collect_set's order is
     plan-dependent and no consumer reads order (array_intersect/size)."""
     from hazelcast_jet_contrib_spark.operators.dedup import (
-        _shingle_sets,
+        hashed_shingle_sets,
         minhash_signatures,
     )
 
@@ -650,12 +608,10 @@ def test_minhash_fused_kernel_matches_aggregate_formulation(spark):
             "doc_id long, text string",
         )
     )
-    base = _shingle_sets(docs, "doc_id", "text", 3)
+    base = hashed_shingle_sets(docs, "doc_id", "text", 3)
 
     for num_hashes in (64, 128):
-        exploded = base.select("id", F.explode("sh").alias("s")).select(
-            "id", F.xxhash64("s").alias("h0")
-        )
+        exploded = base.select("id", F.explode("hs").alias("h0"))
         old = exploded.groupBy("id").agg(
             *[
                 F.min(F.xxhash64("h0", F.lit(i))).alias(f"h{i}")
@@ -683,27 +639,26 @@ def test_minhash_fused_kernel_matches_aggregate_formulation(spark):
         for k in o:
             assert n[k][0] == o[k][0], f"signature differs for id {k} @ {num_hashes}"
             assert n[k][1] == o[k][1], f"hs set differs for id {k} @ {num_hashes}"
-            # both shapes must already be duplicate-free (distinct
-            # strings hashed vs array_distinct on the hashed longs)
+            # both shapes must already be duplicate-free (collect_set vs
+            # array_distinct on the hashed longs)
             assert len(n[k][1]) == n[k][2] == o[k][2]
 
 
 def test_hashed_shingle_sets_matches_string_shingle_path(spark):
-    """The r18 fused hash-only shingle pass (hashed_shingle_sets: one
+    """The fused hash-only shingle pass (hashed_shingle_sets: one
     transform over the shingle index range, element_at + concat_ws fed
     straight into xxhash64, NO shingle string ever materialized) is
-    value-identical to the string path (_shingle_sets →
-    array_distinct(transform(sh, xxhash64))) — same row set, same hs
-    sets, and the same end-to-end signatures through
-    minhash_signatures(_hs) — on real fixture text plus unicode,
+    value-identical to hashing the public string-shingle expression
+    (array_distinct(transform(word_shingles(text, n), xxhash64))) — same
+    row set and same hs sets — on real fixture text plus unicode,
     duplicated-shingle, mixed-whitespace, sub-shingle-length, empty and
     NULL docs (the filter boundary: size(toks) >= n must drop exactly
-    the docs whose string shingle list is empty)."""
+    the docs whose string shingle list is empty) — and the same
+    end-to-end signatures through minhash_signatures."""
+    from hazelcast_jet_contrib_spark.functions.text import word_shingles
     from hazelcast_jet_contrib_spark.operators.dedup import (
-        _shingle_sets,
         hashed_shingle_sets,
         minhash_signatures,
-        minhash_signatures_hs,
     )
 
     docs = spark.read.parquet(
@@ -725,17 +680,18 @@ def test_hashed_shingle_sets_matches_string_shingle_path(spark):
             "doc_id long, text string",
         )
     )
+
+    def reference(n):
+        return docs.select(
+            F.col("doc_id").alias("id"),
+            F.array_distinct(
+                F.transform(word_shingles("text", n), lambda s: F.xxhash64(s))
+            ).alias("hs"),
+        ).filter(F.size("hs") > 0)
+
     for shingle_words in (2, 3):
         old = {
-            r["id"]: frozenset(r["hs"])
-            for r in _shingle_sets(docs, "doc_id", "text", shingle_words)
-            .select(
-                "id",
-                F.array_distinct(
-                    F.transform("sh", lambda s: F.xxhash64(s))
-                ).alias("hs"),
-            )
-            .collect()
+            r["id"]: frozenset(r["hs"]) for r in reference(shingle_words).collect()
         }
         new = {
             r["id"]: frozenset(r["hs"])
@@ -748,16 +704,10 @@ def test_hashed_shingle_sets_matches_string_shingle_path(spark):
             assert old[k] == new[k], f"hs differs for id {k} @ n={shingle_words}"
 
     # end-to-end: the signature relation the pipelines actually consume
-    sig_old = {
-        r["id"]: tuple(r[f"h{i}"] for i in range(64))
-        for r in minhash_signatures(
-            _shingle_sets(docs, "doc_id", "text", 3), 64
-        ).collect()
-    }
-    sig_new = {
-        r["id"]: tuple(r[f"h{i}"] for i in range(64))
-        for r in minhash_signatures_hs(
-            hashed_shingle_sets(docs, "doc_id", "text", 3), 64
-        ).collect()
-    }
-    assert sig_old == sig_new
+    def sigs(hashed):
+        return {
+            r["id"]: tuple(r[f"h{i}"] for i in range(64))
+            for r in minhash_signatures(hashed, 64).collect()
+        }
+
+    assert sigs(reference(3)) == sigs(hashed_shingle_sets(docs, "doc_id", "text", 3))

@@ -204,7 +204,7 @@ def test_no_headline_query_uses_row_at_a_time_python(spark):
         "simhash128_near_dup": 1,
         "simhash_near_dup": 1,  # retired, same kernel
         # r17: MinHash signatures fused row-local (array-hash + family
-        # kernel, zero exchanges — measured in scripts/mb_sigfused.py;
+        # kernel, zero exchanges — measured in OPTIMIZATION_r17.md §16;
         # value-equality pinned by
         # test_minhash_fused_kernel_matches_aggregate_formulation).
         # decontamination counts 2: the persisted corpus kernel + the

@@ -76,6 +76,14 @@ def test_hll_estimate_bounded_error(spark, values):
     assert abs(est - true) <= max(1, int(0.05 * true))
 
 
+def _py_word_shingles(t: str, n: int) -> set[str]:
+    """Distinct word n-grams of ``t`` under the engine's tokenization
+    (lower(trim(text)) split on whitespace runs)."""
+    toks = t.strip().lower().split()
+    toks = toks if t.strip() else [""]  # split('\s+') on '' yields ['']
+    return {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
+
+
 @given(texts)
 @_settings
 def test_word_shingles_match_python_reference(spark, docs):
@@ -91,12 +99,41 @@ def test_word_shingles_match_python_reference(spark, docs):
         for r in df.select("doc_id", word_shingles("text", 2).alias("sh")).collect()
     }
     for i, t in enumerate(docs):
-        toks = t.strip().lower().split()
-        toks = toks if t.strip() else [""]  # split('\s+') on '' yields ['']
-        expect = sorted(
-            {" ".join(toks[j : j + 2]) for j in range(len(toks) - 1)}
-        ) if len(toks) >= 2 else []
+        expect = sorted(_py_word_shingles(t, 2))
         assert got[i] == expect, (t, got[i], expect)
+
+
+@given(texts, st.data())
+@_settings
+def test_jaccard_pairs_match_python_reference(spark, docs, data):
+    """jaccard_pairs must return exactly the id pairs whose distinct
+    word-2-gram sets have Jaccard >= threshold, for any corpus. Every
+    corpus also carries fixed empty, whitespace-only, sub-width (no
+    shingle: never paired) and duplicate-shingle documents ("a a a" vs
+    "a a a b" is 1/2 on distinct sets, more on shingle multisets). The
+    threshold is drawn from the corpus's own positive Jaccard values,
+    so some pair always sits exactly on the boundary."""
+    from hazelcast_jet_contrib_spark.operators.dedup import jaccard_pairs
+
+    docs = ["", "   ", "a", "a a", "a a a", "a a a b", *docs]
+    sets = {i: _py_word_shingles(t, 2) for i, t in enumerate(docs)}
+    jac = {}
+    for i, a in sets.items():
+        for j, b in sets.items():
+            inter = len(a & b)
+            if i < j and inter:
+                jac[(i, j)] = inter / (len(a) + len(b) - inter)
+    threshold = data.draw(st.sampled_from(sorted(set(jac.values()))))
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
+    )
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in jaccard_pairs(
+            df, "doc_id", "text", threshold=threshold, shingle_words=2
+        ).collect()
+    }
+    assert got == {p for p, v in jac.items() if v >= threshold}, (docs, threshold)
 
 
 @given(

@@ -28,8 +28,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from hazelcast_jet_contrib_spark.operators.dedup import (
-    _shingle_sets,
     band_keys,
+    hashed_shingle_sets,
     minhash_lsh_pairs,
     minhash_signatures,
 )
@@ -69,7 +69,7 @@ def _bucket_stats(spark, path: str) -> tuple[int, int]:
     """(max band-bucket size, Σ C(size,2)) of the LSH banding — the
     in-bucket candidate-join work the self-join actually performs."""
     df = spark.read.parquet(path)
-    sig = minhash_signatures(_shingle_sets(df, "id", "text", 3), 128)
+    sig = minhash_signatures(hashed_shingle_sets(df, "id", "text", 3), 128)
     sizes = band_keys(sig, 128, 64).groupBy("band", "bh").agg(
         F.count(F.lit(1)).alias("n")
     )
