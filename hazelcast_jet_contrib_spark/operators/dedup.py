@@ -503,11 +503,11 @@ def minhash_decontaminate(
 # ---------------------------------------------------------------------------
 
 
-def _simhash_vote_kernel(n_words: int):
+def _simhash_vote_kernel():
     """Vectorized SimHash vote counter: one Arrow batch in, per-doc
-    64-bit signature words out. Input: ``n_words`` array<long> columns
-    (the per-doc collected token hashes, one list per signature word);
-    output: array<long> of ``n_words`` signature longs. Bit b of word w
+    64-bit signature words out. Input: two array<long> columns (the
+    per-doc token hashes, one list per signature word); output:
+    array<long> of the two signature longs. Bit b of word w
     is set iff at least half the doc's token hashes have bit b set —
     identical to the former 128-column ``sum(when(bit, 1).otherwise
     (-1)) >= 0`` formulation (votes = 2*ones - n, votes >= 0 <=>
@@ -551,13 +551,6 @@ def _simhash_vote_kernel(n_words: int):
         sig = (maj.astype(np.uint64) << shifts[None, :]).sum(axis=1, dtype=np.uint64)
         return sig.astype(np.int64)
 
-    if n_words == 1:
-
-        def _sigs1(a0: pd.Series) -> pd.Series:
-            return pd.Series(list(_word_sigs(a0)[:, None]))
-
-        return pandas_udf(_sigs1, "array<long>")
-
     def _sigs2(a0: pd.Series, a1: pd.Series) -> pd.Series:
         return pd.Series(
             list(np.stack([_word_sigs(a0), _word_sigs(a1)], axis=1))
@@ -566,118 +559,28 @@ def _simhash_vote_kernel(n_words: int):
     return pandas_udf(_sigs2, "array<long>")
 
 
-def simhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash per document as a LONG column `sig`: bit b = sign
-    of the sum over distinct tokens of ±1 according to bit b of
-    xxhash64(token). The long form keeps banding (shift+mask) and
-    hamming (bit_count of xor) single codegen'd instructions. Votes are
-    counted by the vectorized Arrow kernel (`_simhash_vote_kernel` —
-    r17; same values as the former 64-column JVM vote aggregate)."""
+def hamming_distance(a: Column, b: Column) -> Column:
+    """Hamming distance between 64-bit long signatures: popcount(a^b)."""
+    return F.bit_count(a.bitwiseXOR(b))
+
+
+def simhash_signature128(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """128-bit SimHash per document as TWO long columns (sig0, sig1).
+    Bit b of word w is the sign of the sum over distinct tokens of ±1
+    according to bit b of xxhash64(token, seed=w) (word 0 unseeded) —
+    two independent hashes give 128 independent bits. The long form
+    keeps banding (shift+mask) and hamming (bit_count of xor) single
+    codegen'd instructions. Votes are counted by the vectorized Arrow
+    kernel (`_simhash_vote_kernel` — r17; same values as the former
+    128-column JVM vote aggregate, measured 3.45 s -> 0.78 s at
+    sf0.1)."""
     # row-local since r17 (§16's fused-signature pattern): the distinct
     # token array is already per-doc, so hash it in place and feed the
     # kernel directly — the former explode → groupBy(id).collect_list
     # shape paid an explode row-blowup and one full exchange of the
     # token hashes for zero reduction (each doc's tokens live in its
     # own partition). Same values: vote counting is order-insensitive.
-    base = _spread(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text__"))
-    ).select(
-        "id",
-        F.transform(
-            F.array_distinct(F.split(F.lower(F.trim(F.col("__text__"))), r"\s+")),
-            lambda t: F.xxhash64(t),
-        ).alias("a0"),
-    )
-    kernel = _simhash_vote_kernel(1)
-    return base.select("id", kernel("a0").alias("__sp__")).select(
-        "id", F.element_at("__sp__", 1).alias("sig")
-    )
-
-
-def hamming_distance(a: Column, b: Column) -> Column:
-    """Hamming distance between 64-bit long signatures: popcount(a^b)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket_size: int | None = None,
-    prepartition_bands: bool = False,
-) -> DataFrame:
-    """Near-dup pairs with SimHash distance <= max_hamming. Banding over
-    `bands` equal bit-slices guarantees exact recall when
-    max_hamming < bands (pigeonhole: some band must match exactly), so
-    the cross-corpus join only happens inside identical-band buckets.
-    Output (id_a, id_b, hamming).
-
-    ``prepartition_bands=True`` caches the banded relation
-    hash-partitioned on the bucket key so the candidate self-join (and
-    the optional bucket cap) satisfy their clustering from the same
-    cache — one build exchange instead of one per join side, the
-    minhash_lsh_pairs round-13 pattern (19,200 banded rows → 12 live
-    records under forced SMJ, tests/test_scale_rehearsal.py). Default
-    False for parameter stability, but the registered simhash queries
-    run with it ON since round 14 (staged r13, flipped inside the r14
-    re-prove window — ROUND14_PLAN.md item 1)."""
-    if max_hamming >= bands:
-        raise ValueError("exact recall requires max_hamming < bands")
-    if 64 % bands:
-        raise ValueError("bands must divide 64")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    # persist: both sides of the in-bucket self-join (plus the optional
-    # bucket-size cap) read the signature relation — cache the tiny
-    # (id, long) result rather than re-running tokenize + 64 vote sums
-    # per consumer
-    from hazelcast_jet_contrib_spark.cache import tracked_persist
-
-    sig = tracked_persist(simhash_signature(df, id_col, text_col))
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned("sig", b * width).bitwiseAND(F.lit(mask)).alias("bs"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select("id", "sig", F.explode(F.array(*band_cols)).alias("bb")).select(
-        "id", "sig", F.col("bb.band").alias("band"), F.col("bb.bs").alias("bs")
-    )
-    if prepartition_bands:
-        banded = tracked_persist(banded.repartition("band", "bs"))
-    banded = _cap_buckets(banded, ["band", "bs"], max_bucket_size)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bs") == F.col("b.bs"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming_distance(F.col("a.sig"), F.col("b.sig")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def simhash_signature128(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """128-bit SimHash per document as TWO long columns (sig0, sig1):
-    the corpus-scale escape hatch for SimHash's chance-collision growth.
-    Bit b of word w votes by bit b of xxhash64(token, seed=w) — two
-    independent seeded hashes give 128 independent bits. Votes are
-    counted by the vectorized Arrow kernel (`_simhash_vote_kernel` —
-    r17; same values as the former 128-column JVM vote aggregate,
-    measured 3.45 s -> 0.78 s at sf0.1)."""
-    # row-local since r17, same rationale as simhash_signature. The
-    # token array is projected into its own column first: it is
+    # The token array is projected into its own column first: it is
     # non-cheap and referenced twice (a0, a1), so CollapseProject keeps
     # the projections apart and the tokenizer runs once per row.
     base = _spread(
@@ -692,7 +595,7 @@ def simhash_signature128(df: DataFrame, id_col: str, text_col: str) -> DataFrame
         F.transform("__toks__", lambda t: F.xxhash64(t)).alias("a0"),
         F.transform("__toks__", lambda t: F.xxhash64(t, F.lit(1))).alias("a1"),
     )
-    kernel = _simhash_vote_kernel(2)
+    kernel = _simhash_vote_kernel()
     return base.select("id", kernel("a0", "a1").alias("__sp__")).select(
         "id",
         F.element_at("__sp__", 1).alias("sig0"),
@@ -707,20 +610,24 @@ def simhash128_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     max_bucket_size: int | None = None,
-    prepartition_bands: bool = False,
 ) -> DataFrame:
-    """Near-dup pairs with 128-bit SimHash distance <= max_hamming —
-    same pigeonhole-exact banding as `simhash_pairs`, but each band
-    slice is 128/bands bits wide. At the default 4 bands that is 32
-    bits per band, so CHANCE band collisions drop from the 64-bit
-    form's 4·C(n,2)/2¹⁶ to 4·C(n,2)/2³² — a 65,536× reduction that
-    keeps the in-bucket join linear well past 10⁹ documents (measured:
-    tests/test_dedup_similarity.py chance-collision comparison).
-    Output (id_a, id_b, hamming).
+    """Near-dup pairs with 128-bit SimHash distance <= max_hamming.
+    Banding over `bands` equal bit-slices guarantees exact recall when
+    max_hamming < bands (pigeonhole: some band must match exactly), so
+    the cross-corpus join only happens inside identical-band buckets.
+    Each band slice is 128/bands bits wide: at the default 4 bands
+    that is 32 bits per band, so CHANCE band collisions are
+    4·C(n,2)/2³², where a 64-bit signature's 16-bit bands would see
+    4·C(n,2)/2¹⁶ — 65,536× more, which is why the 64-bit width was
+    dropped (measured: tests/test_dedup_similarity.py chance-collision
+    comparison). Output (id_a, id_b, hamming).
 
-    ``prepartition_bands``: see `simhash_pairs` — the cached-clustering
-    single-shuffle path for the candidate self-join (registry call
-    sites run it ON since round 14)."""
+    The banded relation is cached hash-partitioned on the bucket key,
+    so the candidate self-join (and the optional bucket cap) satisfy
+    their clustering from the same cache — one build exchange instead
+    of one per join side, the minhash_lsh_pairs round-13 pattern
+    (19,200 banded rows → 12 live records under forced SMJ,
+    tests/test_scale_rehearsal.py)."""
     if max_hamming >= bands:
         raise ValueError("exact recall requires max_hamming < bands")
     if 128 % bands or 64 % (128 // bands):
@@ -746,8 +653,7 @@ def simhash128_pairs(
         "id", "sig0", "sig1",
         F.col("bb.band").alias("band"), F.col("bb.bs").alias("bs"),
     )
-    if prepartition_bands:
-        banded = tracked_persist(banded.repartition("band", "bs"))
+    banded = tracked_persist(banded.repartition("band", "bs"))
     banded = _cap_buckets(banded, ["band", "bs"], max_bucket_size)
     a, b = banded.alias("a"), banded.alias("b")
     hamming = hamming_distance(F.col("a.sig0"), F.col("b.sig0")) + hamming_distance(
@@ -1083,7 +989,7 @@ def band_probe_pairs_64(
     hash, fingerprint). Pigeonhole over `bands` equal bit-slices gives
     exact recall for hamming <= max_hamming when max_hamming < bands,
     so the cross join only happens inside identical-band buckets — the
-    same scale shape as simhash_pairs but between two sides (probe
+    same scale shape as simhash128_pairs but between two sides (probe
     pattern, like minhash_decontaminate), so a small probe side never
     triggers a corpus self-join. Output (id_a, id_b, hamming) with
     id_a from left, id_b from right."""

@@ -1,5 +1,5 @@
-"""Event-time window operators: tumbling, sliding, session, and rolling
-(running) aggregation.
+"""Event-time window operators: sliding (tumbling is the slide ==
+duration case), session, and rolling (running) aggregation.
 
 The reference repo itself contains no window operators (SURVEY.md §2.6)
 — they are engine capabilities its connectors feed via per-item event
@@ -37,25 +37,6 @@ def _windowed(
     )
 
 
-def tumbling(
-    df: DataFrame,
-    ts_col: str,
-    duration: str,
-    keys: list[str] | None = None,
-    aggs: list[Column] | None = None,
-) -> DataFrame:
-    """Fixed, non-overlapping windows of `duration`. Output columns:
-    window_start, window_end, keys..., aggs...."""
-    return _windowed(
-        df,
-        F.window(ts_col, duration),
-        keys or [],
-        aggs or [F.count(F.lit(1)).alias("n")],
-        "window_start",
-        "window_end",
-    )
-
-
 def sliding(
     df: DataFrame,
     ts_col: str,
@@ -65,7 +46,9 @@ def sliding(
     aggs: list[Column] | None = None,
 ) -> DataFrame:
     """Overlapping windows of `duration` advancing every `slide`; each
-    event lands in duration/slide windows."""
+    event lands in duration/slide windows. Output columns:
+    window_start, window_end, keys..., aggs.... With slide == duration
+    the windows are tumbling (fixed and non-overlapping)."""
     return _windowed(
         df,
         F.window(ts_col, duration, slide),

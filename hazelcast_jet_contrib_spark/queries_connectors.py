@@ -52,54 +52,6 @@ def paged_rest_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# SimHash near-dup as an oracle-checked recall gate. The raw pair set
-# is not SQL-expressible (the signature depends on the engine's 64-bit
-# tokenizer hash, which DuckDB cannot reproduce), so — like the HLL and
-# IVF accuracy gates — the query reduces to a deterministic contract SQL
-# CAN state: every planted exact copy (identical text ⇒ identical
-# signature ⇒ hamming 0 ⇒ guaranteed band collision) must come back as
-# a pair, with hamming 0. The pair-set semantics beyond the gate are
-# pinned by tests/test_dedup_similarity.py against planted near-dups.
-@retired_query(
-    "simhash_near_dup",
-    reason="r09: 64-bit simhash banding subsumed by simhash128_near_dup (identical signature/banding pipeline, wider signature) and media_phash_near_dup (64-bit hamming band-probe join)",
-    oracle="""
-    SELECT COUNT(*) AS planted_total,
-           COUNT(*) AS planted_found,
-           COUNT(*) AS planted_hamming0
-    FROM documents WHERE doc_id % 2 = 0
-    """,
-)
-def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hazelcast_jet_contrib_spark.operators.dedup import simhash_pairs
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 2 == 0)
-    )
-    aug = docs.unionByName(
-        docs.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    )
-    # prepartition_bands=True (flipped r14 with the live simhash128 row;
-    # staged+proven r13): the banded relation is built and shuffled once,
-    # not once per join side (tests/test_scale_rehearsal.py).
-    pairs = simhash_pairs(
-        aug, "doc_id", "text", max_hamming=3, bands=4, prepartition_bands=True
-    )
-    planted = pairs.filter(
-        (F.col("id_a") < 1000000) & (F.col("id_b") == F.col("id_a") + 1000000)
-    )
-    return docs.agg(F.count("*").alias("planted_total")).join(
-        planted.agg(
-            F.count("*").alias("planted_found"),
-            F.sum(F.when(F.col("hamming") == 0, 1).otherwise(0)).alias(
-                "planted_hamming0"
-            ),
-        )
-    )
-
-
 def _media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthetic multimodal table: payload bytes derived from document
     text, with planted magic-byte headers (doc_id%3==0 → JPEG,
@@ -438,12 +390,17 @@ def json_props_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Same recall-gate contract for the 128-bit SimHash variant (the
-# chance-collision escape hatch): every planted exact copy must come
-# back at hamming 0 through the 4x32-bit banding. The raw pair set is
-# engine-hash-dependent (not SQL-expressible); the exact pair-set
-# semantics are pinned against brute force in
-# tests/test_dedup_similarity.py::test_simhash128_recall_matches_brute_force.
+# SimHash near-dup as an oracle-checked recall gate. The raw pair set
+# is not SQL-expressible (the signature depends on the engine's 64-bit
+# tokenizer hashes, which DuckDB cannot reproduce), so — like the HLL
+# and IVF accuracy gates — the query reduces to a deterministic
+# contract SQL CAN state: every planted exact copy (identical text ⇒
+# identical signature ⇒ hamming 0 ⇒ guaranteed band collision) must
+# come back as a pair through the 4x32-bit banding, with hamming 0.
+# The pair-set semantics beyond the gate are pinned against planted
+# near-dups and brute force in tests/test_dedup_similarity.py
+# (test_simhash_finds_planted_near_dups,
+# test_simhash128_recall_matches_brute_force).
 @query(
     "simhash128_near_dup",
     oracle="""
@@ -476,12 +433,7 @@ def simhash128_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("__v__.doc_id").alias("doc_id"), F.col("__v__.text").alias("text")
     )
-    # prepartition_bands=True (flipped r14, staged+proven r13): single
-    # banded-relation build + shuffle — 19,200 banded rows → 12 live
-    # records under forced SMJ (tests/test_scale_rehearsal.py).
-    pairs = simhash128_pairs(
-        aug, "doc_id", "text", max_hamming=3, bands=4, prepartition_bands=True
-    )
+    pairs = simhash128_pairs(aug, "doc_id", "text", max_hamming=3, bands=4)
     planted = pairs.filter(
         (F.col("id_a") < 1000000) & (F.col("id_b") == F.col("id_a") + 1000000)
     )
@@ -577,7 +529,7 @@ def media_phash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     keepers, and member counts are all value-hash checked. Scale: the
     group-by key is a 16-char hash — the same narrow-shuffle shape as
     text exact dedup; near-dup images would band the 64-bit phash
-    exactly like simhash_pairs."""
+    exactly like band_probe_pairs_64."""
     from hazelcast_jet_contrib_spark.operators.multimodal import image_features
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -1,112 +1,23 @@
-"""Connector-shaped queries: the source-builder framework exercised over
-the driver's tables acting as external systems (SURVEY.md §2.1 S3-S6,
-S1-S2). Each demonstrates the reference's contract — partitioned client
-reads, server-side filter/projection pushdown — through the DuckDB
-oracle gate.
+"""Connector-shaped queries: the DSv2 store sources (`sources/dsv2.py`)
+exercised over the driver's tables acting as external systems
+(SURVEY.md §2.1 S3-S6, S1-S2). Each demonstrates the reference's
+contract — partitioned client reads, server-side filter/projection
+pushdown — through the DuckDB oracle gate, with the pushdown driven by
+Catalyst from plain .filter() predicates.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hazelcast_jet_contrib_spark.registry import query, retired_query
-from hazelcast_jet_contrib_spark.sources.docstore import docstore_source
-from hazelcast_jet_contrib_spark.sources.kv import kv_source, sorted_set_source
-from hazelcast_jet_contrib_spark.sources.timeseries import measurement_source
-
-
-# S3 RedisSources.hash — KV snapshot read emitting (key, value) entries.
-@retired_query(
-    "kv_hash_snapshot",
-    reason="r07: HGETALL snapshot read subsumed by "
-    "kv_hash_catalyst_pushdown (same store, DSv2 + pushdown on top)",
-    oracle="""
-    SELECT c_name AS key, CAST(c_custkey AS VARCHAR) AS value
-    FROM customer
-    """,
-)
-def kv_hash_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return kv_source(
-        spark, "kv-customer", f"{sf_dir}/customer.parquet", key_col="c_name", value_col="c_custkey"
-    )
+from hazelcast_jet_contrib_spark.registry import query
 
 
 # S4 RedisSources.sortedSet — ZRANGEBYSCORE with the range evaluated
-# server-side (both ends inclusive, RedisSourceTest.java:114-127).
-@retired_query(
-    "sorted_set_range",
-    reason="r07: manual-pushdown range read subsumed by "
-    "zset_range_catalyst_pushdown (same store, Catalyst pushFilters)",
-    oracle="""
-    SELECT value AS score, CAST(event_id AS VARCHAR) AS member
-    FROM events
-    WHERE value BETWEEN 10.0 AND 50.0
-    """,
-)
-def sorted_set_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sorted_set_source(
-        spark,
-        "zset-events",
-        f"{sf_dir}/events.parquet",
-        score_col="value",
-        member_col="event_id",
-        score_from=10.0,
-        score_to=50.0,
-    )
-
-
-# S6 MongoDBSources.batch — find(filter, projection) pushed into the
-# store (90-of-100 contract, MongoDBSourceTest.java:97-123).
-@retired_query(
-    "docstore_find_pushdown",
-    reason="r09: manual find(filter, projection) builder subsumed by docstore_catalyst_pushdown (DSv2 + Catalyst pushFilters on the same store) - the kv_hash_snapshot r07 precedent",
-    oracle="""
-    SELECT doc_id, lang, n_chars
-    FROM documents
-    WHERE n_chars >= 300 AND lang IN ('en', 'de')
-    """,
-)
-def docstore_find_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return docstore_source(
-        spark,
-        "docs-find",
-        f"{sf_dir}/documents.parquet",
-        schema="doc_id long, lang string, n_chars long",
-        filter={"n_chars": {"$gte": 300}, "lang": {"$in": ["en", "de"]}},
-        projection=["doc_id", "lang", "n_chars"],
-    )
-
-
-# S1 InfluxDbSources.influxDb — measurement query with time-range
-# pushdown, long-format (name, tags, time, field, value) projection.
-@retired_query(
-    "measurement_timeseries_read",
-    reason="r09: measurement projection subsumed by timeseries_catalyst_pushdown (DSv2 + pushdown on the same store) - the sorted_set_range r07 precedent",
-    oracle="""
-    SELECT 'events' AS measurement, event_type AS tag,
-           CAST(ts AS TIMESTAMP) AS time, 'value' AS field, value AS val
-    FROM events
-    WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-12 00:00:00'
-    """,
-)
-def measurement_timeseries_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return measurement_source(
-        spark,
-        "ts-events",
-        f"{sf_dir}/events.parquet",
-        measurement="events",
-        time_col="ts",
-        tag_col="event_type",
-        field_cols=["value"],
-        time_from="2024-01-10 00:00:00",
-        time_to="2024-01-12 00:00:00",
-    )
-
-
-# DSv2 optimizer-driven pushdown: same store and range as
-# sorted_set_range, but the range arrives as a plain .filter() and
-# Catalyst hands it to the source via pushFilters — proving the
-# composable pushdown path (SURVEY.md §7 "Custom Catalyst/DSv2").
+# server-side (both ends inclusive, RedisSourceTest.java:114-127). The
+# range arrives as a plain .filter() and Catalyst hands it to the source
+# via pushFilters — the composable pushdown path (SURVEY.md §7 "Custom
+# Catalyst/DSv2").
 @query(
     "zset_range_catalyst_pushdown",
     oracle="""
@@ -133,8 +44,8 @@ def zset_range_catalyst_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.filter((F.col("score") >= 10.0) & (F.col("score") <= 50.0))
 
 
-# DSv2 optimizer-driven find() pushdown over the document store: the
-# same Mongo-ish contract as docstore_find_pushdown, but the filter
+# S6 MongoDBSources.batch — find(filter, projection) executed inside the
+# store (MongoDBSourceTest.java:97-123). The Mongo-ish filter
 # document is BUILT from plain .filter() predicates by pushFilters —
 # $gte/$lte/$eq execute inside the store; the startswith predicate has
 # no counterpart in the find language and comes back as a residual that
@@ -171,10 +82,10 @@ def docstore_catalyst_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DSv2 optimizer-driven time-range pushdown over the time-series store:
-# the same window as measurement_timeseries_read, but arriving as a
-# plain .filter() that Catalyst pushes into the client read — the
-# fourth and last store family on the pushFilters pattern. The tag
+# S1 InfluxDbSources.influxDb — measurement read with time-range
+# pushdown: the window arrives as a plain .filter() that Catalyst pushes
+# into the client read — the fourth and last store family on the
+# pushFilters pattern. The tag
 # equality has no counterpart in the reader's time-range language and
 # returns as a residual Spark re-checks post-scan.
 @query(
@@ -210,9 +121,9 @@ def timeseries_catalyst_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DSv2 optimizer-driven key pushdown over the KV/hash store: where
-# kv_hash_snapshot is HGETALL (full snapshot), a plain .filter() on the
-# key column narrows the store read to the server-side key ops a hash
+# S3 RedisSources.hash — KV read emitting (key, value) entries. With no
+# key predicate the read is HGETALL (full snapshot); here a plain
+# .filter() on the key column narrows the store read to the server-side key ops a hash
 # store has — startswith becomes a SCAN MATCH "p*" cursor scan executed
 # inside the client (row-group stats pruning + arrow mask), while the
 # contains predicate on the VALUE has no key-op counterpart and comes

@@ -1,8 +1,8 @@
 """Event-time windowing queries over the events table, evaluated in
 batch mode (identical operators run on streams — see tests/
-test_streaming.py) with DuckDB oracles: tumbling via time_bucket,
-sliding via bucket enumeration, session via gaps-and-islands, rolling
-via SQL window frames.
+test_streaming.py) with DuckDB oracles: sliding via bucket enumeration
+(a tumbling window is the slide == duration case), session via
+gaps-and-islands, rolling via SQL window frames.
 """
 
 from __future__ import annotations
@@ -14,37 +14,8 @@ from hazelcast_jet_contrib_spark.operators.windows import (
     rolling_aggregate,
     session,
     sliding,
-    tumbling,
 )
 from hazelcast_jet_contrib_spark.registry import query, retired_query, table
-
-
-@retired_query(
-    "window_tumbling_daily",
-    reason="r07: tumbling is window_sliding_12h's slide==width special "
-    "case; session windows keep their own entry (distinct gap semantics)",
-    oracle="""
-    SELECT time_bucket(INTERVAL '1 day', CAST(ts AS TIMESTAMP)) AS window_start,
-           time_bucket(INTERVAL '1 day', CAST(ts AS TIMESTAMP)) + INTERVAL '1 day' AS window_end,
-           event_type,
-           COUNT(*) AS n_events,
-           ROUND(SUM(value), 2) AS total_value
-    FROM events
-    GROUP BY 1, 2, 3
-    """,
-)
-def window_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    return tumbling(
-        ev,
-        "ts",
-        "1 day",
-        keys=["event_type"],
-        aggs=[
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        ],
-    )
 
 
 @query(

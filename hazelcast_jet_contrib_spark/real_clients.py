@@ -416,10 +416,11 @@ def influx_flux_records(client: Any, flux: str):
 
 def influx_long_record_fn(tag_key: str) -> Callable[[Any], dict]:
     """Map a FluxRecord to the engine's long measurement layout —
-    ``(measurement, tag, time, field, val)``, the same schema
-    ``sources.timeseries.measurement_source`` emits — so a caller can
-    swap the in-process boundary for the live one without touching a
-    downstream plan. The typed/POJO path (InfluxDbSources.java:167-221)
+    ``(measurement, tag, time, field, val)``: the ``(tag, time, val)``
+    row the in-process ``ts_store`` DSv2 source emits per field
+    (``sources/dsv2.py``), plus the measurement and field names, since
+    one Flux stream carries every field of a measurement. The
+    typed/POJO path (InfluxDbSources.java:167-221)
     is any other ``record_fn`` returning dicts matching the caller's
     explicit StructType."""
 

@@ -142,12 +142,12 @@ from hazelcast_jet_contrib_spark import queries_retrieval  # noqa: E402,F401
 #      capability a live query subsumes. Retired queries (see
 #      retired_query) keep implementation + oracle + an every-run
 #      pytest running the exact driver comparison — retirement moves
-#      the proof from the driver gate to the pytest gate, it never
-#      deletes one. Round-7 retirements (6, each subsumed):
+#      the proof from the driver gate to the pytest gate. A retired
+#      query is DELETED only together with code that nothing live runs
+#      (a second copy of a capability whose live copy its subsuming
+#      query already exercises); the deleted ones are listed last.
+#      Round-7 retirements (6, each subsumed; 3 since deleted):
 #        media_phash_dup_groups    ⊂ media_phash_near_dup (exact tier)
-#        window_tumbling_daily     ⊂ window_sliding_12h (slide==width)
-#        kv_hash_snapshot          ⊂ kv_hash_catalyst_pushdown (DSv2)
-#        sorted_set_range          ⊂ zset_range_catalyst_pushdown
 #        hll_events_users_accuracy ⊂ hll_customers_accuracy (same gate)
 #        ivf_cosine_topk           ⊂ ivf_index_probe_topk (same
 #                                    degenerate-exact gate, persisted)
@@ -177,12 +177,11 @@ from hazelcast_jet_contrib_spark import queries_retrieval  # noqa: E402,F401
 #      cannot alter any green query's result, schema, or plan.
 #      Round-9 retirements (11, reasons at their @retired_query sites
 #      and in ROUND9_PLAN.md — all from the r07-green set, freeing the
-#      window slots for the 11 round-8 operators registered this round):
+#      window slots for the 11 round-8 operators registered this round;
+#      3 since deleted):
 #        ivf_index_probe_topk      ⊂ ivf_pq_probe_exact_topk
 #        ann_cosine_topk           ⊂ ivf_recall_at_nprobe (truth side)
 #        embedding_near_dup        ⊂ semantic_dedup_pairs
-#        simhash_near_dup          ⊂ simhash128_near_dup +
-#                                    media_phash_near_dup
 #        dup_span_removal          ⊂ dup_span_extraction (shared find)
 #        ngram_jaccard_pairs       ⊂ minhash_lsh_near_dup (same oracle,
 #                                    full corpus)
@@ -191,8 +190,19 @@ from hazelcast_jet_contrib_spark import queries_retrieval  # noqa: E402,F401
 #        text_stats                ⊂ text_quality_scores +
 #                                    token_length_profile
 #        stratified_sample_by_lang ⊂ temperature_resample_by_lang
-#        docstore_find_pushdown    ⊂ docstore_catalyst_pushdown
-#        measurement_timeseries_read ⊂ timeseries_catalyst_pushdown
+#      Deleted retirees (r07: 3, r09: 3), each with the second copy of
+#      a capability that only it still ran:
+#        64-bit SimHash (word 0 of simhash128_pairs' signature is the
+#        same signature): the r09 SimHash retiree, whose gate
+#        simhash128_near_dup runs;
+#        manual-pushdown store builders (the sources/ kv, docstore and
+#        timeseries modules): the r07 HGETALL and ZRANGEBYSCORE
+#        retirees and the r09 find() and measurement retirees, whose
+#        stores the DSv2 kv_hash/zset_range/docstore/
+#        timeseries_catalyst_pushdown queries read;
+#        operators.windows.tumbling (F.window(ts, d) is
+#        F.window(ts, d, d)): the r07 daily tumbling retiree, whose
+#        shape window_sliding_12h runs.
 #      Streaming ops (streaming_zscore_anomalies,
 #      streaming_funnel_progress, compact_stream, streaming_dedup TTL)
 #      stay pytest-proven — not DuckDB-expressible.

@@ -332,8 +332,8 @@ def point_sink(
     integer in ``precision`` units ("ns"/"us"/"ms"/"s" — the Point's
     TimeUnit). Tags serialize as strings, fields as doubles, matching the
     reference's tag-vs-field split (SURVEY.md §1.1 InfluxDB row shape).
-    Round-trips through ``sources.timeseries.measurement_source`` via
-    ``points_to_parquet``.
+    Round-trips through the ``ts_store`` DSv2 source
+    (``sources/dsv2.py``, one read per field) via ``points_to_parquet``.
     """
     if precision not in _PRECISION_NS:
         raise ValueError(f"precision must be one of {sorted(_PRECISION_NS)}")
@@ -393,8 +393,8 @@ def read_points(path: str) -> list[dict]:
 
 def points_to_parquet(path: str, out_file: str, tag: str, field_cols: list[str]) -> int:
     """Store-side compaction: materialize the point store as the wide
-    parquet layout ``measurement_source`` reads (one row per point, one
-    column per field, nanosecond timestamps) — the analog of the
+    parquet layout the ``ts_store`` source reads (one row per point,
+    one column per field, nanosecond timestamps) — the analog of the
     time-series store indexing incoming points into its series storage.
     Returns the number of points written."""
     import pandas as pd

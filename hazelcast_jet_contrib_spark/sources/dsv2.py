@@ -1,11 +1,12 @@
 """Catalyst-driven pushdown for external-store reads — the Python
-DataSource V2 path (SURVEY.md §7 "Custom Catalyst/DSv2, optional"):
-where `sources/kv.py` does MANUAL pushdown (the caller passes the range
-to the source builder, the reference's own mechanism), this source lets
-the OPTIMIZER do it. The user writes a plain ``.filter(col("score")
->= x)``; Spark hands the predicates to ``pushFilters()`` during
-planning; the source absorbs the score-range comparisons into the
-client read (parquet row-group statistics pruning + arrow filter — the
+DataSource V2 path (SURVEY.md §7 "Custom Catalyst/DSv2, optional") for
+the paper's Redis sorted-set, Redis hash, MongoDB find and InfluxDB
+sources. The reference passes the range or filter to the source
+builder by hand (manual pushdown); here the OPTIMIZER does it. The
+user writes a plain ``.filter(col("score") >= x)``; Spark hands the
+predicates to ``pushFilters()`` during planning; each source absorbs
+the comparisons its store can execute into the client read (parquet
+row-group statistics pruning + arrow filter — for the sorted set the
 ZRANGEBYSCORE analog, RedisSources.java:200-256,479) and returns only
 the predicates it cannot execute for Spark to re-check.
 
@@ -13,12 +14,19 @@ At 100 TB the difference matters: manual pushdown couples query shape
 to call sites; optimizer pushdown composes — any view/join/subquery
 that narrows the score range narrows the store read, with zero changes
 to reading code.
+
+The bundled store clients read a parquet file with pyarrow as the
+stand-in external system (no Redis, MongoDB or InfluxDB server is
+needed), one input partition per parquet row group — the analog of
+the reference round-robinning streams across members×threads
+(RedisSources.java:693-756).
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -167,10 +175,10 @@ class ZSetStoreDataSource(DataSource):
 class KVStoreReader(DataSourceReader):
     """KV/hash-store reader with optimizer-driven key pushdown — the
     third store to adopt the pushFilters pattern (after zset and
-    docstore). The manual `sources/kv.py` hash source is HGETALL-only
-    (full snapshot, RedisSources.java:100-183); here Catalyst narrows
-    the read to the server-side key operations a hash store actually
-    has:
+    docstore). With no key predicate the read is the reference's
+    HGETALL snapshot (RedisSources.java:100-183); otherwise Catalyst
+    narrows the read to the server-side key operations a hash store
+    actually has:
 
       * ``EqualTo(key, k)``        → single-field HGET
       * ``In(key, [k...])``        → HMGET
@@ -284,6 +292,41 @@ class KVStoreDataSource(DataSource):
         )
 
 
+_OPS = {"$gt", "$gte", "$lt", "$lte", "$eq", "$ne", "$in"}
+
+
+def _compile_filter(flt: dict[str, Any]):
+    """Compile a Mongo-ish find() filter document — {field: value}
+    equality and {field: {"$gt"|"$gte"|"$lt"|"$lte"|"$eq"|"$ne"|"$in":
+    v}}, the operator subset the reference's own tests use
+    (MongoDBSourceTest.java:97-123) — to a pyarrow dataset expression,
+    evaluated during the parquet read (row-group stats pruning +
+    filter): the "query executes in the external system" contract."""
+    import pyarrow.dataset as ds
+
+    expr = None
+    for field, cond in flt.items():
+        f = ds.field(field)
+        if isinstance(cond, dict):
+            for op, v in cond.items():
+                if op not in _OPS:
+                    raise ValueError(f"unsupported operator {op!r}")
+                e = {
+                    "$gt": lambda: f > v,
+                    "$gte": lambda: f >= v,
+                    "$lt": lambda: f < v,
+                    "$lte": lambda: f <= v,
+                    "$eq": lambda: f == v,
+                    "$ne": lambda: f != v,
+                    "$in": lambda: f.isin(list(v)),
+                }[op]()
+                expr = e if expr is None else (expr & e)
+        else:
+            e = f == cond
+            expr = e if expr is None else (expr & e)
+    return expr
+
+
 _FIND_OPS: dict[type, str] = {
     EqualTo: "$eq",
     GreaterThan: "$gt",
@@ -297,10 +340,10 @@ _FIND_OPS: dict[type, str] = {
 class DocStoreReader(DataSourceReader):
     """Document-store reader with optimizer-driven find() pushdown.
 
-    Where `sources/docstore.py` takes the Mongo-ish filter document as a
-    manual argument (the reference's own mechanism,
-    MongoDBSources.java:80-96), this reader BUILDS that document from the
-    predicates Catalyst hands to ``pushFilters()``: each absorbed
+    Where the reference takes the Mongo-ish filter document as a manual
+    argument (MongoDBSources.java:80-96), this reader BUILDS that
+    document from the predicates Catalyst hands to ``pushFilters()``:
+    the declared DDL is the projection, and each absorbed
     comparison becomes a `{field: {$op: value}}` entry executed inside
     the store client (row-group stats pruning + arrow filter), and
     everything else is returned for Spark to re-check. One op per
@@ -339,8 +382,6 @@ class DocStoreReader(DataSourceReader):
 
     def read(self, partition: _RowGroup):
         import pyarrow.dataset as ds
-
-        from hazelcast_jet_contrib_spark.sources.docstore import _compile_filter
 
         dataset = ds.dataset(self.path, format="parquet")
         expr = _compile_filter(self.find) if self.find else None
@@ -382,12 +423,12 @@ class DocStoreDataSource(DataSource):
 class TimeSeriesStoreReader(DataSourceReader):
     """Time-series store reader with optimizer-driven time-range
     pushdown — the fourth and last store family on the pushFilters
-    pattern. The manual `sources/timeseries.py` source takes the time
-    range as builder arguments (the reference's own mechanism,
-    InfluxDbSources.java:79-221 where the range lives inside the
-    caller's query string); here a plain ``.filter(col("time") >= x)``
-    reaches the store via Catalyst, composing with any view or join
-    that narrows the window.
+    pattern. The reference takes the time range inside the caller's
+    query string (InfluxDbSources.java:79-221); here a plain
+    ``.filter(col("time") >= x)`` reaches the store via Catalyst,
+    composing with any view or join that narrows the window. One field
+    is read per source (option ``field_col``), so a multi-field
+    measurement is one read per field.
 
     Bounds are kept in integer epoch MICROSECONDS — Spark timestamp
     precision, which is also the precision of the emitted `time`

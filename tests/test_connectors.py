@@ -495,16 +495,18 @@ def test_sink_failure_fails_the_job(spark, tmp_path):
 
 def test_point_sink_roundtrip_through_measurement_source(spark, tmp_path):
     """Write Points (measurement/time@ms/tags/fields), compact the store,
-    and read back through measurement_source (InfluxDbSinks.java:44-64 →
-    InfluxDbSources round trip, as in InfluxDbSourceTest.java:97-123)."""
+    and read back through the ts_store DSv2 source, one read per field
+    (InfluxDbSinks.java:44-64 → InfluxDbSources round trip, as in
+    InfluxDbSourceTest.java:97-123)."""
     import datetime
 
+    from hazelcast_jet_contrib_spark.plans.audit import audit
     from hazelcast_jet_contrib_spark.sinks.connectors import (
         point_sink,
         points_to_parquet,
         read_points,
     )
-    from hazelcast_jet_contrib_spark.sources.timeseries import measurement_source
+    from hazelcast_jet_contrib_spark.sources import dsv2
 
     rows = [
         (datetime.datetime(2024, 1, 1, 0, 0, i), f"h{i % 2}", float(i), i * 2.0)
@@ -521,20 +523,38 @@ def test_point_sink_roundtrip_through_measurement_source(spark, tmp_path):
 
     pq_file = str(tmp_path / "cpu.parquet")
     assert points_to_parquet(store, pq_file, "host", ["load", "mem"]) == 10
-    back = measurement_source(
-        spark, "cpu-read", pq_file, "cpu", "time", "host", ["load", "mem"]
-    )
-    got = {(r["tag"], r["time"], r["field"], r["val"]) for r in back.collect()}
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    dsv2.register(spark)
+
+    def read(field):
+        return (
+            spark.read.format("ts_store")
+            .option("path", pq_file)
+            .option("time_col", "time")
+            .option("tag_col", "host")
+            .option("field_col", field)
+            .load()
+        )
+
+    got = {
+        (r["tag"], r["time"], field, r["val"])
+        for field in ("load", "mem")
+        for r in read(field).collect()
+    }
     expected = {(h, ts, "load", ld) for ts, h, ld, _ in rows} | {
         (h, ts, "mem", m) for ts, h, _, m in rows
     }
     assert got == expected
-    # time-range pushdown still works over the compacted store
-    ranged = measurement_source(
-        spark, "cpu-ranged", pq_file, "cpu", "time", "host", ["load"],
-        time_from="2024-01-01 00:00:03", time_to="2024-01-01 00:00:06",
+    # time-range pushdown still works over the compacted store, and both
+    # comparisons reach the store read
+    ranged = read("load").filter(
+        (F.col("time") >= F.lit("2024-01-01 00:00:03").cast("timestamp"))
+        & (F.col("time") < F.lit("2024-01-01 00:00:06").cast("timestamp"))
     )
     assert ranged.count() == 3
+    pushed = audit(ranged).pushed_filters()
+    assert any("GreaterThanOrEqual(time" in p for p in pushed), pushed
+    assert any("LessThan(time" in p for p in pushed), pushed
 
 
 def test_point_sink_rejects_bad_precision(spark, tmp_path):

@@ -13,7 +13,7 @@ from hazelcast_jet_contrib_spark.operators.dedup import (
     dedup_exact,
     jaccard_pairs,
     minhash_lsh_pairs,
-    simhash_pairs,
+    simhash128_pairs,
 )
 from hazelcast_jet_contrib_spark.operators.similarity import cosine_topk, lsh_bucketed_pairs
 
@@ -64,16 +64,21 @@ def test_jaccard_and_minhash_agree(spark, doc_corpus):
 
 
 def test_simhash_finds_planted_near_dups(spark, doc_corpus):
-    pairs = simhash_pairs(doc_corpus, "doc_id", "text", max_hamming=16, bands=32).collect()
+    # Measured 128-bit hamming distances on this corpus: the planted
+    # pairs (i, 100+i) sit at 17, 14, 21, 17 for i = 0..3, and every
+    # other pair (unrelated docs, doc 999 included) at 57-75. So
+    # max_hamming=31 (4-bit bands, pigeonhole-exact below 32) keeps
+    # every planted pair and no other.
+    pairs = simhash128_pairs(
+        doc_corpus, "doc_id", "text", max_hamming=31, bands=32
+    ).collect()
     got = {(r["id_a"], r["id_b"]) for r in pairs}
-    for i in range(len(BASE_DOCS)):
-        assert (i, 100 + i) in got, f"missing near-dup pair for doc {i}"
-    assert not any(999 in p for p in got)
+    assert got == {(i, 100 + i) for i in range(len(BASE_DOCS))}, got
 
 
 def test_simhash_identical_distance_zero(spark):
     df = spark.createDataFrame([(1, "same text here"), (2, "same text here")], "doc_id long, text string")
-    out = simhash_pairs(df, "doc_id", "text", max_hamming=0, bands=4).collect()
+    out = simhash128_pairs(df, "doc_id", "text", max_hamming=0, bands=4).collect()
     assert len(out) == 1 and out[0]["hamming"] == 0
 
 
@@ -333,13 +338,12 @@ def test_simhash128_recall_matches_brute_force(spark):
 
 
 def test_simhash128_kills_chance_band_collisions(spark):
-    """The scale claim, measured: on unrelated random docs, 64-bit
-    SimHash (4 x 16-bit bands) accumulates chance band-candidate pairs
-    ~ 4*C(n,2)/2^16, while 128-bit (4 x 32-bit bands) sees ~none."""
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        simhash_signature,
-        simhash_signature128,
-    )
+    """The scale claim, measured: on unrelated random docs, a 64-bit
+    SimHash (4 x 16-bit bands — word 0 of the 128-bit signature, which
+    votes on unseeded xxhash64 exactly as a 64-bit signature does)
+    accumulates chance band-candidate pairs ~ 4*C(n,2)/2^16, while
+    128-bit (4 x 32-bit bands) sees ~none."""
+    from hazelcast_jet_contrib_spark.operators.dedup import simhash_signature128
 
     n = 2000
     words = F.transform(
@@ -367,10 +371,9 @@ def test_simhash128_kills_chance_band_collisions(spark):
             )
         return total
 
-    c64 = band_pairs(simhash_signature(docs, "id", "text"), ["sig", "sig"], 16)
-    c128 = band_pairs(
-        simhash_signature128(docs, "id", "text"), ["sig0", "sig1"], 32
-    )
+    sig = simhash_signature128(docs, "id", "text")
+    c64 = band_pairs(sig, ["sig0", "sig0"], 16)
+    c128 = band_pairs(sig, ["sig0", "sig1"], 32)
     # E[c64] = 4*C(2000,2)/2^16 ~= 122; E[c128] = 4*C(2000,2)/2^32 ~= 0.002
     assert c64 > 30, f"expected substantial 16-bit chance collisions, got {c64}"
     assert c128 <= 2, f"32-bit bands should kill chance collisions, got {c128}"
@@ -507,11 +510,10 @@ def test_kmeans_plan_size_is_iteration_invariant(spark):
 def test_simhash_arrow_kernel_matches_sum_formulation(spark):
     """The r17 vectorized vote kernel is value-identical to the former
     JVM 128-column sum formulation (votes = sum(when(bit,1).otherwise
-    (-1)) >= 0), for both the 64- and 128-bit signatures, on real
-    fixture text including empty/whitespace docs and vote ties."""
+    (-1)) >= 0), for the 128-bit signature, on real fixture text
+    including empty/whitespace docs and vote ties."""
     from hazelcast_jet_contrib_spark.operators.dedup import (
         _spread,
-        simhash_signature,
         simhash_signature128,
     )
 
@@ -571,12 +573,6 @@ def test_simhash_arrow_kernel_matches_sum_formulation(spark):
         for r in simhash_signature128(docs, "doc_id", "text").collect()
     }
     assert new128 == old128
-    old64 = {(r["id"], r["sig0"]) for r in old_votes(1).collect()}
-    new64 = {
-        (r["id"], r["sig"])
-        for r in simhash_signature(docs, "doc_id", "text").collect()
-    }
-    assert new64 == old64
 
 
 def test_minhash_fused_kernel_matches_aggregate_formulation(spark):

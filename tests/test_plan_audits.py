@@ -29,14 +29,6 @@ def test_q3_broadcasts_small_dimensions(spark):
     assert a.broadcast_joins() >= 1, "expected at least one broadcast join"
 
 
-def test_sorted_set_range_pushdown_is_inside_the_client_read(spark):
-    """The score range executes inside the source's client read (manual
-    pushdown, the reference's own mechanism) — the Spark plan must
-    contain NO Filter node doing the range post-hoc."""
-    a = audit(RETIRED_QUERIES["sorted_set_range"](spark, SF))
-    assert "Filter" not in a.plan, "range must not be re-evaluated Spark-side"
-
-
 def test_zset_catalyst_pushdown_removes_range_from_plan(spark):
     """DSv2 path: the user's .filter() range comparisons must be
     absorbed by pushFilters — the executed plan keeps only the isnotnull
@@ -184,10 +176,6 @@ def test_no_headline_query_uses_row_at_a_time_python(spark):
         "ivf_cosine_topk": 3,  # cell_of (corpus) + cell_of/probe_cells (retired)
         "ivf_recall_at_nprobe": 3,
         "service_token_stats": 1,  # mapUsingService is by definition an Arrow stage
-        "kv_hash_snapshot": 1,  # retired: client read partition fn
-        "sorted_set_range": 1,  # retired: client read partition fn
-        "docstore_find_pushdown": 1,
-        "measurement_timeseries_read": 1,
         "paged_rest_parts": 1,
         # round-9 registrations whose Arrow stage IS the declared design:
         "bpe_encode_pinned": 1,  # Arrow-batched trie encode (bpe.py)
@@ -202,7 +190,6 @@ def test_no_headline_query_uses_row_at_a_time_python(spark):
         # value-equality pinned by
         # test_simhash_arrow_kernel_matches_sum_formulation)
         "simhash128_near_dup": 1,
-        "simhash_near_dup": 1,  # retired, same kernel
         # r17: MinHash signatures fused row-local (array-hash + family
         # kernel, zero exchanges — measured in OPTIMIZATION_r17.md §16;
         # value-equality pinned by

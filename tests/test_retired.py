@@ -2,7 +2,8 @@
 every retired query keeps running the EXACT driver comparison (row
 count + schema + normalized value multiset vs its DuckDB oracle) in
 pytest, each round, at the driver's correctness SF — retirement moves
-the proof from the driver window to this file, it never deletes one.
+the proof from the driver window to this file. A retired query leaves
+only when it is deleted together with the code only it still ran.
 """
 
 from __future__ import annotations
@@ -19,9 +20,6 @@ from tests.conftest import compare_with_oracle
 
 EXPECTED_RETIRED = {
     "media_phash_dup_groups",
-    "window_tumbling_daily",
-    "kv_hash_snapshot",
-    "sorted_set_range",
     "hll_events_users_accuracy",
     "ivf_cosine_topk",
     "rollup_order_status",
@@ -32,14 +30,11 @@ EXPECTED_RETIRED = {
     "ivf_index_probe_topk",
     "ann_cosine_topk",
     "embedding_near_dup",
-    "simhash_near_dup",
     "dup_span_removal",
     "ngram_jaccard_pairs",
     "fingerprint_dedup",
     "text_stats",
     "stratified_sample_by_lang",
-    "docstore_find_pushdown",
-    "measurement_timeseries_read",
     # round-10 retirements (ROUND10_PLAN.md)
     "media_image_features",
     "q14_promo_effect",
