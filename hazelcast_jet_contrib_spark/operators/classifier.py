@@ -106,18 +106,11 @@ def train_quality_classifier(
     iterations: int = 30,
     lr: float = 2.0,
     l2: float = 0.0,
-    round_stats: list | None = None,
 ) -> dict[int, float]:
     """Train logistic regression (full-batch GD) on labeled documents
     (``label_col``: 1 = keep-quality, 0 = reject). Returns the weight
     map {feature_idx: weight} (bias under BIAS_IDX) — pass it to
-    ``score_documents``.
-
-    ``round_stats``: diagnostic-only — one shuffle-stats dict per GD
-    iteration (the pagerank ``sweep_stats`` shape incl. the ``live_*``
-    cache-excluded view), measured off each iteration's gradient query;
-    how the one-exchange-per-iteration claim is measured rather than
-    claimed (tests/test_scale_rehearsal_analytics.py)."""
+    ``score_documents``."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     from pyspark import StorageLevel
@@ -189,14 +182,7 @@ def train_quality_classifier(
                 .groupBy("idx")
                 .agg((F.sum(F.col("val") * F.col("r")) / F.lit(float(n_docs))).alias("g"))
             )
-            grad_rows = grad_df.collect()
-            if round_stats is not None:
-                from hazelcast_jet_contrib_spark.plans.audit import (
-                    executed_shuffle_stats_with_live,
-                )
-
-                round_stats.append(executed_shuffle_stats_with_live(grad_df))
-            for row in grad_rows:
+            for row in grad_df.collect():
                 idx, g = row["idx"], row["g"]
                 if l2 and idx != BIAS_IDX:
                     g += l2 * w.get(idx, 0.0)

@@ -88,7 +88,6 @@ def kmeans_lloyd(
     k: int = 10,
     iters: int = 2,
     prepartition: bool = False,
-    round_stats: list | None = None,
 ) -> DataFrame:
     """Final assignment (id, cidx, dist) after `iters` Lloyd rounds from
     the deterministic k-lowest-id initialization.
@@ -119,13 +118,7 @@ def kmeans_lloyd(
     tests/test_dedup_similarity.py). Default False for parameter
     stability, but the registry query kmeans_cluster_profile runs with
     it ON since round 14 (staged r13, flipped inside the r14 re-prove
-    window — ROUND14_PLAN.md item 1, the mmr_rerank_multi precedent).
-
-    ``round_stats``: diagnostic-only — one shuffle-stats dict per Lloyd
-    round (the pagerank ``sweep_stats`` shape incl. the ``live_*``
-    cache-excluded view), measured off each round's centroid
-    recomputation; how the per-round law is measured rather than
-    claimed."""
+    window — ROUND14_PLAN.md item 1, the mmr_rerank_multi precedent)."""
     points = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
@@ -148,7 +141,7 @@ def kmeans_lloyd(
     # first Lloyd job builds the cache while computing the init
     # centroids/assignment — an up-front count was one extra pass of the
     # vector relation for nothing (interleaved A/B at sf0.1,
-    # scripts/mb_eagercount.py: kmeans_cluster_profile min 1.74 s with
+    # OPTIMIZATION_r17.md §10: kmeans_cluster_profile min 1.74 s with
     # the count vs 1.49 s without).
     try:
         centroids = (
@@ -163,12 +156,6 @@ def kmeans_lloyd(
         for _ in range(iters - 1):
             recomputed = kmeans_recompute(points, assign)
             centroids = recomputed.localCheckpoint(eager=True)
-            if round_stats is not None:
-                from hazelcast_jet_contrib_spark.plans.audit import (
-                    executed_shuffle_stats_with_live,
-                )
-
-                round_stats.append(executed_shuffle_stats_with_live(recomputed))
             assign = kmeans_assign(points, centroids)
         if prepartition:
             # materialize the returned assignment before the points

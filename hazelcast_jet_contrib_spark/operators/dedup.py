@@ -516,7 +516,7 @@ def _simhash_vote_kernel():
 
     Why a kernel (r17 optimization, guide §4.2): the 128-column vote
     aggregate dominated the signature computation — measured at sf0.1
-    (scripts/mb_simhash.py, interleaved noop-sink reps) 3.45-3.57 s
+    (OPTIMIZATION_r17.md §5, interleaved noop-sink reps) 3.45-3.57 s
     for the JVM aggregate variants (conditional, branchless, and
     32-bit-lane-packed all within noise of each other — the cost is
     the wide aggregate itself, not the branch) vs 0.78 s for
@@ -687,7 +687,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    round_stats: list | None = None,
 ) -> DataFrame:
     """(node, component) for every node that appears in ``pairs``, where
     ``component`` is the minimum node id reachable through the pair
@@ -734,11 +733,6 @@ def connected_components(
     cache is held for the loop's whole duration so lost edge blocks
     recompute from a pinned snapshot, not from a possibly
     nondeterministic upstream detector (ADVICE r13 #1).
-
-    ``round_stats``: diagnostic-only — pass a list to receive one
-    shuffle-stats dict per round (the pagerank ``sweep_stats`` shape,
-    including the ``live_*`` cache-excluded view); how the per-round
-    shuffle law is measured rather than claimed.
     """
     from pyspark import StorageLevel
 
@@ -786,7 +780,7 @@ def connected_components(
         # builds the edge cache in its own first job — an up-front
         # count was one extra pass of 2|E| for nothing, and failures
         # still surface inside the try (interleaved A/B at sf0.1,
-        # scripts/mb_eagercount.py: neardup_clusters min 3.04 s with the
+        # OPTIMIZATION_r17.md §10: neardup_clusters min 3.04 s with the
         # count vs 2.66 s without, 23 -> 21 Spark jobs)
         # p stays persisted for the WHOLE loop (released in finally), not
         # unpersisted here: if edge cache blocks are lost mid-loop
@@ -819,16 +813,6 @@ def connected_components(
             )
             stepped = stepped_plan.localCheckpoint(eager=True)
             stepped_h = _checkpoint_rdd_handle(stepped)
-            if round_stats is not None:
-                # diagnostic-only (the pagerank sweep_stats pattern): each
-                # round's executed-plan shuffle metrics, with the live_*
-                # view excluding the cached edge relation's frozen build
-                # exchanges — what THIS round actually shuffled
-                from hazelcast_jet_contrib_spark.plans.audit import (
-                    executed_shuffle_stats_with_live,
-                )
-
-                round_stats.append(executed_shuffle_stats_with_live(stepped_plan))
             # the count runs against the already-materialized checkpoint
             # partitions — later rounds and the returned relation never
             # fall back to recomputing a deep lineage

@@ -41,7 +41,6 @@ def pagerank(
     damping: float = 0.85,
     iterations: int = 10,
     seeds: list | None = None,
-    sweep_stats: list | None = None,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge list (duplicate edges count once).
@@ -61,15 +60,6 @@ def pagerank(
     ranks), preserving the per-sweep invariant. Iteration arithmetic
     afterwards is IDENTICAL to the cold path. Mutually exclusive with
     ``seeds`` (personalized teleport defines its own mass placement).
-
-    ``sweep_stats``: diagnostic-only — pass a list to receive one
-    ``executed_shuffle_stats`` dict per sweep, read from each sweep's
-    executed plan right after its checkpoint materializes it. The
-    returned relation's own lineage is cut (by design), so per-sweep
-    shuffle is observable ONLY here; this is how the growth law
-    (8x edges -> ~8x shuffled records per sweep) is measured rather
-    than claimed (tests/test_scale_rehearsal_analytics.py). ``None``
-    (default) changes nothing — same plan, same jobs.
 
     ``seeds`` switches to PERSONALIZED PageRank: teleport (and dangling
     mass) return to the seed set uniformly instead of all nodes, so
@@ -143,7 +133,7 @@ def pagerank(
         # job builds this cache while computing the init ranks — an
         # up-front count was one extra pass of |V| for nothing, and
         # failures still surface inside the try (interleaved A/B at
-        # sf0.1, scripts/mb_eagercount.py: pagerank_event_graph min
+        # sf0.1, OPTIMIZATION_r17.md §10: pagerank_event_graph min
         # 4.24 s with the count vs 3.40 s without, 75 -> 73 Spark jobs)
 
         if seeds is None:
@@ -206,9 +196,6 @@ def pagerank(
         else:
             init = F.when(is_seed, F.lit(1.0 / n_tele)).otherwise(F.lit(0.0))
             ranks = base.select("node", init.alias("rank"), "deg")
-        is_init = True  # first loop checkpoint materializes the init
-        # relation (projection / warm-start join, no sweep join) —
-        # excluded from sweep_stats
         tele_col = F.when(is_seed, F.lit((1.0 - damping) / n_tele)).otherwise(
             F.lit(0.0)
         )
@@ -222,7 +209,6 @@ def pagerank(
             # executors and restarts the plan from them; swap for
             # checkpoint() on a reliable FS when executor loss must be
             # survivable mid-computation.
-            prev = ranks
             ranks = ranks.localCheckpoint(eager=True)
             # this eager checkpoint just materialized FROM the previous
             # sweep's checkpoint — that snapshot can never be read again,
@@ -233,13 +219,6 @@ def pagerank(
             if last_cp is not None:
                 last_cp.unpersist(False)
             last_cp = checkpoint_rdd_handle(ranks)
-            if sweep_stats is not None and not is_init:
-                from hazelcast_jet_contrib_spark.plans.audit import (
-                    executed_shuffle_stats_with_live,
-                )
-
-                sweep_stats.append(executed_shuffle_stats_with_live(prev))
-            is_init = False
             # Total rank sitting on dangling nodes: a one-row aggregate of
             # the CHECKPOINTED relation, broadcast into the sweep — no
             # collect(), no driver state at all, and one Spark job per
@@ -280,12 +259,6 @@ def pagerank(
         # computed from is now superseded too
         if last_cp is not None:
             last_cp.unpersist(False)
-        if sweep_stats is not None:
-            from hazelcast_jet_contrib_spark.plans.audit import (
-                executed_shuffle_stats_with_live,
-            )
-
-            sweep_stats.append(executed_shuffle_stats_with_live(final))
     finally:
         base_df = locals().get("base")
         for df in (e, nodes) + ((base_df,) if base_df is not None else ()):

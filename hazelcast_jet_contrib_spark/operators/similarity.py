@@ -269,7 +269,7 @@ def _write_ivf_cells(indexed: DataFrame, path: str) -> None:
     cell. Cell skew is the kmeans cluster-size spread — bounded by the
     training that chose the centroids, and probe cost is unaffected
     (partition pruning reads whole cells either way). Measured locally
-    A/B (scripts/mb_ivfwrite.py): build-neutral, probe slightly faster
+    A/B (OPTIMIZATION_r17.md §20): build-neutral, probe slightly faster
     (fewer files per pruned cell)."""
     indexed.repartition("cell").write.mode("overwrite").partitionBy(
         "cell"

@@ -255,9 +255,10 @@ def executed_shuffle_stats_with_live(df: DataFrame) -> dict[str, int]:
     ``executed_shuffle_stats`` totals plus ``live_*`` keys that exclude
     exchanges nested inside cached relations' build plans (frozen at
     materialization, re-reported verbatim by every later execution that
-    scans the cache). The shape every iterative operator's
-    round/sweep-stats diagnostic appends (pagerank, connected
-    components, kmeans, the classifier GD loop)."""
+    scans the cache). The per-round view of an iterative operator
+    (pagerank, connected components, kmeans, the classifier GD loop),
+    read from each round's materialized frame by the rehearsal tests'
+    collector (tests/test_scale_rehearsal_analytics.py)."""
     totals = {
         "shuffle_records": 0,
         "shuffle_bytes": 0,

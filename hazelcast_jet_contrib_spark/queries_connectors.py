@@ -680,7 +680,7 @@ def media_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # m0.unionByName(pert) (r17 change #9 family, guide §6): the union
     # re-read the documents parquet once per branch. Same measured
     # family as video_near_dup_frames / dedup_exact_keepfirst
-    # (scripts/mb_videounion.py: union vs plain explode a local wash,
+    # (OPTIMIZATION_r17.md §11: union vs plain explode a local wash,
     # _spread rejected) — the persisted signature relation below means
     # the corpus subtree runs once either way, so the one-scan shape is
     # a pure corpus-read win at scale.
@@ -779,7 +779,7 @@ def video_near_dup_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One-scan conditional explode instead of the former 2-way
     # unionByName (r17 change #9 family, guide §6): the union re-read
     # the documents parquet once per branch. Interleaved A/B at sf0.1
-    # (scripts/mb_videounion.py, noop sink, row-set equality asserted):
+    # (OPTIMIZATION_r17.md §11, noop sink, row-set equality asserted):
     # union min 0.668 s vs explode min 0.684 s — a local wash, so the
     # one-scan shape wins on the corpus-read count at scale. _spread
     # REJECTED here (min 0.937 s): the signature relation downstream is

@@ -82,7 +82,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy + broadcast-join-back referenced the offers subtree twice
     # (fact scan + 4 broadcast joins, both evaluated — the canonical
     # plans differ so no exchange reuse). One pass, one exchange. r17
-    # A/B (scripts/mb_subq.py, sf0.1, 4 interleaved noop reps): shipped
+    # A/B (OPTIMIZATION_r17.md §14, sf0.1, 4 interleaved noop reps): shipped
     # min 0.431 s vs window min 0.239 s; rows identical.
     w = Window.partitionBy("p_partkey")
     return (
@@ -390,7 +390,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the exchange was NOT reused — lineitem+orders scanned and
     # joined twice). size(collect_set(x)) == COUNT(DISTINCT x) (both
     # drop NULLs; the nlate CASE is NULL on on-time rows). r17 A/B
-    # (scripts/mb_q21.py, sf0.1, 4 interleaved noop reps): groupjoin
+    # (OPTIMIZATION_r17.md §13, sf0.1, 4 interleaved noop reps): groupjoin
     # min 1.037 s vs window min 0.707 s; at scale 1 fact scan/join/
     # exchange instead of 2 each.
     w = Window.partitionBy("l_orderkey")

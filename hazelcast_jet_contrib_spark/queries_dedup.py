@@ -809,9 +809,9 @@ def minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py build_minhash_index, probe_minhash_index)."""
     import shutil
     import tempfile
-    import time as _time
 
-    from hazelcast_jet_contrib_spark.bench_hooks import record_leg
+    # imported in the body, not at module top: bench.py times the legs
+    # by wrapping these operators.dedup attributes while the query runs
     from hazelcast_jet_contrib_spark.operators.dedup import (
         build_minhash_index,
         probe_minhash_index,
@@ -824,20 +824,13 @@ def minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = tempfile.mkdtemp(prefix="minhash_index_q_")
     try:
-        # build vs probe recorded separately (VERDICT r09 item 5): the
-        # build is once-per-corpus and amortizes across probe runs, so
-        # the bench drift tripwire watches the probe leg on its own
-        t0 = _time.perf_counter()
         build_minhash_index(docs, path, num_hashes=64, bands=32)
-        record_leg("minhash_index_probe", "build", _time.perf_counter() - t0)
-        t1 = _time.perf_counter()
         rows = [
             (r["probe_id"], r["corpus_id"], r["jaccard"])
             for r in probe_minhash_index(
                 spark, path, probes, threshold=0.6
             ).collect()
         ]
-        record_leg("minhash_index_probe", "probe", _time.perf_counter() - t1)
     finally:
         shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(
@@ -863,9 +856,8 @@ def minhash_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SCALE.md). Eager compute + temp-index cleanup."""
     import shutil
     import tempfile
-    import time as _time
 
-    from hazelcast_jet_contrib_spark.bench_hooks import record_leg
+    # imported in the body: bench.py's leg capture wraps these names
     from hazelcast_jet_contrib_spark.operators.dedup import (
         append_to_minhash_index,
         build_minhash_index,
@@ -880,32 +872,22 @@ def minhash_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = tempfile.mkdtemp(prefix="minhash_lifecycle_q_")
     try:
-        # every maintenance leg timed separately (the minhash_index_probe
-        # precedent): build/append/compact amortize across probe runs
-        t = _time.perf_counter()
         build_minhash_index(
             docs.filter(F.col("doc_id") % 2 == 0), path,
             num_hashes=64, bands=32,
         )
-        record_leg("minhash_index_lifecycle", "build", _time.perf_counter() - t)
-        t = _time.perf_counter()
         append_to_minhash_index(docs.filter(F.col("doc_id") % 2 == 1), path)
-        record_leg("minhash_index_lifecycle", "append", _time.perf_counter() - t)
-        t = _time.perf_counter()
         stats = compact_minhash_index(spark, path)
-        record_leg("minhash_index_lifecycle", "compact", _time.perf_counter() - t)
         if stats["files_after"] > stats["files_before"]:
             # ValueError, not assert: the invariant must survive -O and
             # surface as a per-query driver error, not vanish
             raise ValueError(f"compaction grew the index file count: {stats}")
-        t = _time.perf_counter()
         rows = [
             (r["probe_id"], r["corpus_id"], r["jaccard"])
             for r in probe_minhash_index(
                 spark, path, probes, threshold=0.6
             ).collect()
         ]
-        record_leg("minhash_index_lifecycle", "probe", _time.perf_counter() - t)
     finally:
         shutil.rmtree(path, ignore_errors=True)
     return spark.createDataFrame(

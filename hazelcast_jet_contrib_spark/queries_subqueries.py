@@ -292,7 +292,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluated the pruned subtree twice (no exchange reuse — different
     # downstream filters) and broadcast a |brand parts|-sized thresholds
     # relation, which does not fit a broadcast at 100 TB. One pass, one
-    # exchange. r17 A/B (scripts/mb_subq.py, sf0.1, 4 interleaved noop
+    # exchange. r17 A/B (OPTIMIZATION_r17.md §14, sf0.1, 4 interleaved noop
     # reps): shipped min 0.509 s vs window min 0.430 s; rows identical.
     pruned = li.join(F.broadcast(brand_parts), F.col("l_partkey") == F.col("p_partkey"))
     w = Window.partitionBy("l_partkey")

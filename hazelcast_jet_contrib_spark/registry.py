@@ -214,117 +214,12 @@ from hazelcast_jet_contrib_spark import queries_retrieval  # noqa: E402,F401
 #      allowance) — shipping without rotating fails pytest BEFORE the
 #      driver runs, not one round later (VERDICT r06 item 8).
 # ---------------------------------------------------------------------------
-_ROTATION_ROUND = 17
+_ROTATION_ROUND = 19
 _PRIORITY = [
-    # --- round-17 rotation (window = exactly 50; VERDICT r16 §Next
-    # round #1/#4/#7, re-derived under the red reality).
-    # CORRECTNESS_r16 proved 47/50 hash-green; the three red rows were
-    # NOT an engine defect and NOT the r15 "message loss under
-    # driver-host load" hypothesis — that narrative is RETRACTED
-    # (VERDICT r16 #3): the in-query per-message audits PASSED on the
-    # driver both rounds (err null — delivery was byte-exact there),
-    # and the actual root cause was the ORACLES' result type. The
-    # three red rows were exactly the three oracles whose
-    # SUM(CAST(...AS BIGINT)) produced a DuckDB HUGEINT column, which
-    # the driver's Arrow-path value hash renders as decimal128 !=
-    # Spark's int64 while fetchall-based local gates coerce it to a
-    # plain int (proven by the r14 DOUBLE-oracle green / post-43d1425
-    # red A/B). Fixed r17 with CAST(...AS BIGINT) on the outer sum in
-    # all five carriers (three live + the two staged), guarded
-    # structurally by tests/test_correctness_oracle.py's oracle-type +
-    # fetchall/Arrow-parity sweeps, and reproduced locally by
-    # driver_sim's new Arrow leg. The audit instrumentation stays — as
-    # diagnostics, not as an open flake hunt.
-    #
-    # Window demand: 48 aging r15-greens + the 3 oracle-changed
-    # re-proofs = 51 > 50, so ONE retirement was required before any
-    # registration (VERDICT r16 #4). TWO genuine subsumptions fund the
-    # deficit AND one registration (reasons in full at their
-    # @retired_query sites):
-    #   ngram_vocab_top100    ⊂ repetition_dup_ngrams +
-    #                           contamination_ngram_overlap (the
-    #                           n-gram explode/count kernel) +
-    #                           sketch_topk_event_types / bm25_topk_docs
-    #                           (exact bounded top-k)
-    #   rolling_running_total ⊂ pack_token_budget_shards (the same
-    #                           per-key ROWS UNBOUNDED PRECEDING sum
-    #                           window is the packing kernel) +
-    #                           rolling_zscore_anomaly (bounded-frame
-    #                           window aggregation)
-    # The freed slot registers stream_sink_2pc_roundtrip — the
-    # XA-analog exactly-once proof through a REAL StreamingQuery, the
-    # most reference-meaningful staged capability (VERDICT r16 #7).
-    # ws_push_roundtrip stays staged for round 18 per VERDICT r16 #4
-    # ("register ws only if a second retirement keeps the cap
-    # arithmetic sustainable; otherwise hold") — r18's window holds
-    # the 47 r16-greens + 3 spare slots, so it promotes there with no
-    # retirement. Registry lands at 97 (50 window + 47 demoted), cap
-    # headroom 3.
-    #
-    # In-window plan changes this round (re-proof rule c): the three
-    # roundtrip rows carry the oracle CAST fix (+ the SSE row's
-    # object-only sentinel guard, ADVICE r16 #5), and the two staged
-    # cache-flip reverts execute — bigram_lm_quality
-    # cache_counts=False, tfidf_salient_terms cache_tf=False (both
-    # refuted by the r16 1×/8× laws, SCALE.md; both rows re-enter by
-    # aging so the re-proof is free).
-    "mqtt_subscribe_spool_roundtrip",
-    "http_listener_spool_roundtrip",
-    "sse_push_roundtrip",
-    "stream_sink_2pc_roundtrip",
-    "webdataset_roundtrip",
-    "neardup_keep_best",
-    "pagerank_event_graph",
-    "bpe_encode_pinned",
-    "classifier_holdout_accuracy",
-    "rrf_fusion_hybrid",
-    "quality_ensemble_scores",
-    "leakage_safe_split_census",
-    "cohort_retention_weekly",
-    "corpus_mix_to_target",
-    "bigram_lm_quality",
-    "znorm_subseq_topk",
-    "training_shards_roundtrip",
-    "curation_pipeline_end2end",
-    "minhash_lsh_near_dup",
-    "neardup_clusters",
-    "semantic_dedup_pairs",
-    "decontamination_near_dup",
-    "ivf_recall_at_nprobe",
-    "doc_chunking_overlap",
-    "tfidf_salient_terms",
-    "asof_last_purchase_before_click",
-    "range_join_value_bands",
-    "window_session_30m",
-    "window_sliding_12h",
-    "text_quality_scores",
-    "token_length_profile",
-    "paged_rest_parts",
-    "dedup_exact_keepfirst",
-    "q2_min_cost_supplier",
-    "q4_priority_with_returns",
-    "q7_nation_pair_volume",
-    "q8_market_share",
-    "q13_customer_order_distribution",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q20_concentrated_suppliers",
-    "q21_waiting_suppliers",
-    "service_token_stats",
-    "pack_token_budget_shards",
-    "pii_redaction_stats",
-    "contamination_ngram_overlap",
-    "repetition_dup_ngrams",
-    "snapshot_diff_statuses",
-    "json_props_extraction",
-]
-_DEMOTED = [
-    # green in CORRECTNESS_r16 (the 47 hash-green rows of the round-16
-    # window; its three hash-RED rows re-enter the r17 window above).
-    # 47 entries -> the round-18 window holds them all with THREE
-    # spare slots (ws_push_roundtrip promotion + two free), registry
-    # at 97 leaves three cap slots.
+    # --- round-19 rotation (window = exactly 50). The last rotation
+    # was built for round 17, and CORRECTNESS_r17/r18 both checked its
+    # window, so the 47 queries demoted then are green in neither file
+    # and lead this window (staleness invariant b).
     "salted_join_priority_revenue",
     "mmr_rerank_diverse",
     "kmeans_cluster_profile",
@@ -372,6 +267,64 @@ _DEMOTED = [
     "cube_status_priority",
     "setop_building_urgent_customers",
     "hll_customers_accuracy",
+    # re-proof (rule c): their operators lost the diagnostic-only
+    # per-round shuffle-stats parameter this round (pagerank,
+    # connected_components, the classifier GD loop; kmeans_lloyd's
+    # query kmeans_cluster_profile is already in the window above)
+    "pagerank_event_graph",
+    "neardup_clusters",
+    "classifier_holdout_accuracy",
+]
+_DEMOTED = [
+    # green in CORRECTNESS_r18 (the round-17 window, checked in both
+    # r17 and r18) and untouched since.
+    "mqtt_subscribe_spool_roundtrip",
+    "http_listener_spool_roundtrip",
+    "sse_push_roundtrip",
+    "stream_sink_2pc_roundtrip",
+    "webdataset_roundtrip",
+    "neardup_keep_best",
+    "bpe_encode_pinned",
+    "rrf_fusion_hybrid",
+    "quality_ensemble_scores",
+    "leakage_safe_split_census",
+    "cohort_retention_weekly",
+    "corpus_mix_to_target",
+    "bigram_lm_quality",
+    "znorm_subseq_topk",
+    "training_shards_roundtrip",
+    "curation_pipeline_end2end",
+    "minhash_lsh_near_dup",
+    "semantic_dedup_pairs",
+    "decontamination_near_dup",
+    "ivf_recall_at_nprobe",
+    "doc_chunking_overlap",
+    "tfidf_salient_terms",
+    "asof_last_purchase_before_click",
+    "range_join_value_bands",
+    "window_session_30m",
+    "window_sliding_12h",
+    "text_quality_scores",
+    "token_length_profile",
+    "paged_rest_parts",
+    "dedup_exact_keepfirst",
+    "q2_min_cost_supplier",
+    "q4_priority_with_returns",
+    "q7_nation_pair_volume",
+    "q8_market_share",
+    "q13_customer_order_distribution",
+    "q15_top_supplier",
+    "q17_small_quantity_revenue",
+    "q18_large_volume_customers",
+    "q20_concentrated_suppliers",
+    "q21_waiting_suppliers",
+    "service_token_stats",
+    "pack_token_budget_shards",
+    "pii_redaction_stats",
+    "contamination_ngram_overlap",
+    "repetition_dup_ngrams",
+    "snapshot_diff_statuses",
+    "json_props_extraction",
 ]
 
 # ---------------------------------------------------------------------------

@@ -46,10 +46,9 @@ def get_spark(
         # sweeps, GD iterations, CC rounds) paid 32 tasks of fixed cost.
         # `false` makes AQE respect advisoryPartitionSizeInBytes at every
         # scale: a 100 TB shuffle still gets ~bytes/64MB partitions, a
-        # kilobyte sweep gets 1. Env-overridable for A/B measurement.
+        # kilobyte sweep gets 1.
         .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
         )
         # Cached-plan output partitioning stays PINNED (the upstream
         # default). Re-planning it (canChange...=true) was measured and
@@ -61,11 +60,10 @@ def get_spark(
         # fail (pagerank per-sweep live shuffle ≥ |E|). The caches'
         # partition counts are instead sized from DATA BYTES in code
         # (cache.adaptive_repartition), which keeps an explicit
-        # HashPartitioning the sweep joins can reuse. Env seam kept for
-        # A/B only.
+        # HashPartitioning the sweep joins can reuse.
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_AQE_CACHED_REPLAN", "false"),
+            "false",
         )
         # --- shuffle sizing ------------------------------------------------
         .config(

@@ -3,7 +3,8 @@ plans/$PLANS_ROUND/<query>_<tag>.txt (PLANS_ROUND defaults to r18) —
 the before/after plan evidence for the optimization rounds.
 
 Usage: python scripts/capture_plans.py <tag> <query-name> [...]
-       (tag is e.g. "before" or "after"; query names are exact)
+       (tag is e.g. "before" or "after"; query names are exact, live or
+       retired)
 
 Notes: EAGER queries (local-k collect, lineage-cut loops) return a frame
 whose plan is only the final leg; the captured plan is still the right
@@ -29,12 +30,12 @@ def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
     from hazelcast_jet_contrib_spark import get_spark
-    from hazelcast_jet_contrib_spark.registry import QUERIES
+    from hazelcast_jet_contrib_spark.registry import QUERIES, RETIRED_QUERIES
 
     spark = get_spark(app_name=f"capture_plans_{tag}")
     OUT.mkdir(parents=True, exist_ok=True)
     for name in names:
-        fn = QUERIES[name]
+        fn = QUERIES[name] if name in QUERIES else RETIRED_QUERIES[name]
         df = fn(spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

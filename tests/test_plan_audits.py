@@ -186,7 +186,7 @@ def test_no_headline_query_uses_row_at_a_time_python(spark):
         "webdataset_roundtrip": 1,
         # r17: SimHash vote counting moved from a 128-column JVM sum
         # aggregate to one vectorized Arrow kernel (guide §4.2 —
-        # measured 3.45s -> 0.78s at sf0.1, scripts/mb_simhash.py;
+        # measured 3.45s -> 0.78s at sf0.1, OPTIMIZATION_r17.md §5;
         # value-equality pinned by
         # test_simhash_arrow_kernel_matches_sum_formulation)
         "simhash128_near_dup": 1,

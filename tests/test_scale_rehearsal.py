@@ -149,9 +149,13 @@ def test_minhash_lsh_scales_linearly(spark, tmp_path):
 @pytest.mark.slow
 def test_decontamination_corpus_cost_linear_probe_fixed(spark, tmp_path):
     """The asymmetric probe's growth law: with a FIXED eval set, an 8x
-    corpus must cost ~8x shuffle (the corpus-side signature aggregation)
-    — and the match count must stay exactly the planted overlap at both
-    scales, because only planted probe copies clear the 0.6 threshold."""
+    corpus costs ~8x in what it reads and nothing more in what it
+    shuffles — the corpus-side signature pass is row-local with no
+    exchange (OPTIMIZATION_r17.md §16), so only the fixed probe side
+    shuffles. A corpus-side exchange coming back grows the shuffle with
+    the corpus and fails the second bound. The match count must stay
+    exactly the planted overlap at both scales, because only planted
+    probe copies clear the 0.6 threshold."""
     from hazelcast_jet_contrib_spark.operators.dedup import minhash_decontaminate
 
     keys = [
@@ -161,7 +165,7 @@ def test_decontamination_corpus_cost_linear_probe_fixed(spark, tmp_path):
     saved = [spark.conf.get(k, None) for k in keys]
     # unlike the self-join rehearsal, the probe side is SUPPOSED to
     # broadcast — keep defaults so the asymmetric plan shape is the one
-    # measured; only the corpus-side aggregation shuffles.
+    # measured.
     results = {}
     try:
         for tag, n in (("c1", N1), ("c8", N1 * 8)):
@@ -178,12 +182,18 @@ def test_decontamination_corpus_cost_linear_probe_fixed(spark, tmp_path):
             flagged = minhash_decontaminate(corpus, probes, "id", "text", 0.6)
             rows = flagged.collect()
             from hazelcast_jet_contrib_spark.plans.audit import (
+                executed_scan_stats,
                 executed_shuffle_stats,
             )
 
             stats = executed_shuffle_stats(flagged)
+            scan = executed_scan_stats(flagged)
             spark.catalog.clearCache()
-            results[tag] = {"rows": rows, "shuffle": stats["shuffle_records"]}
+            results[tag] = {
+                "rows": rows,
+                "shuffle": stats["shuffle_records"],
+                "scan_bytes": scan["bytes"],
+            }
     finally:
         for k, v in zip(keys, saved):
             spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
@@ -196,10 +206,17 @@ def test_decontamination_corpus_cost_linear_probe_fixed(spark, tmp_path):
         hits = results[tag]["rows"]
         assert len(hits) == n_probes, (tag, len(hits))
         assert all(pid - 10_000_000 == cid for cid, pid, _ in hits)
+    scan_ratio = results["c8"]["scan_bytes"] / max(1, results["c1"]["scan_bytes"])
+    assert 4 <= scan_ratio <= 16, f"corpus scan grew {scan_ratio:.1f}x for 8x docs"
     ratio = results["c8"]["shuffle"] / max(1, results["c1"]["shuffle"])
-    assert 4 <= ratio <= 16, f"corpus shuffle grew {ratio:.1f}x for 8x docs"
+    assert ratio <= 2, (
+        f"shuffle grew {ratio:.1f}x for 8x docs: the corpus side is "
+        f"transiting an exchange"
+    )
     print(
         f"decontamination rehearsal: probes={n_probes} "
+        f"1x_scan={results['c1']['scan_bytes']} 8x_scan={results['c8']['scan_bytes']} "
+        f"scan_ratio={scan_ratio:.2f} "
         f"1x_shuffle={results['c1']['shuffle']} 8x_shuffle={results['c8']['shuffle']} "
         f"ratio={ratio:.2f}"
     )

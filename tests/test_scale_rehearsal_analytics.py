@@ -11,6 +11,8 @@ word/value choice), deterministic and scale-independent.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,11 +21,43 @@ from hazelcast_jet_contrib_spark.operators.retrieval import bm25_score_all
 from hazelcast_jet_contrib_spark.operators.timeseries import (
     rolling_zscore_anomalies,
 )
-from hazelcast_jet_contrib_spark.plans.audit import executed_shuffle_stats
+from hazelcast_jet_contrib_spark.plans.audit import (
+    executed_shuffle_stats,
+    executed_shuffle_stats_with_live,
+)
 
 N1 = 4_000
 WORDS = 40
 VOCAB = 500
+
+
+@contextmanager
+def materialized_shuffle_stats(method: str = "localCheckpoint"):
+    """Per-round shuffle records of an iterative operator, read from
+    outside it: while the block runs, every frame that
+    ``DataFrame.<method>`` materializes (the per-round localCheckpoint,
+    or the classifier's per-iteration gradient ``collect``) gets its
+    executed-plan shuffle stats appended, in call order, in the
+    ``executed_shuffle_stats_with_live`` shape — the ``live_*`` keys
+    exclude cached build plans' frozen exchange metrics. The operator's
+    returned relation has its lineage cut, so per-round shuffle is not
+    visible on the result; the caller slices off the non-round
+    materializations (an init checkpoint, a returned-frame one)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    records: list[dict] = []
+    original = getattr(DataFrame, method)
+
+    def materialize(self, *args, **kwargs):
+        out = original(self, *args, **kwargs)
+        records.append(executed_shuffle_stats_with_live(self))
+        return out
+
+    setattr(DataFrame, method, materialize)
+    try:
+        yield records
+    finally:
+        setattr(DataFrame, method, original)
 
 
 def _docs(spark, tmp_path, n_docs: int):
@@ -295,10 +329,12 @@ def test_pagerank_sweep_shuffle_linear_in_edges(spark, tmp_path):
     sweep identical. The returned relation's lineage is cut by the
     final checkpoint (so its own executed plan shows zero shuffle —
     correct, and useless for measurement); per-sweep shuffle is read
-    through the operator's sweep_stats diagnostic, which captures each
-    sweep's executed-plan metrics right after its checkpoint
-    materializes it. Measured over a deterministic synthetic edge
-    list; re-recorded post-2551711: growth ~8x, constant exchanges."""
+    through materialized_shuffle_stats, which captures each sweep's
+    executed-plan metrics right after its checkpoint materializes it
+    (the first checkpoint is the init relation, not a sweep; the last
+    is the returned frame, computed by the final sweep). Measured over
+    a deterministic synthetic edge list; re-recorded post-2551711:
+    growth ~8x, constant exchanges."""
     from hazelcast_jet_contrib_spark.operators.graph import pagerank
 
     def edges(n_edges):
@@ -312,9 +348,10 @@ def test_pagerank_sweep_shuffle_linear_in_edges(spark, tmp_path):
         return spark.read.parquet(path)
 
     def run(n_edges):
-        sweeps: list[dict] = []
-        out = pagerank(edges(n_edges), iterations=3, sweep_stats=sweeps)
+        with materialized_shuffle_stats() as cps:
+            out = pagerank(edges(n_edges), iterations=3)
         out.collect()
+        sweeps = cps[1:]
         assert len(sweeps) == 3, f"expected one stats dict per sweep: {sweeps}"
         # the last sweep is representative (every sweep's plan is
         # identical by lineage-cut construction); exchange count must
@@ -348,10 +385,10 @@ def test_pagerank_edges_stay_out_of_the_per_sweep_shuffle(spark, tmp_path):
     the |E|-row edge relation. Locally AQE broadcasts the tiny ranks
     side and hides this entirely, so the test FORCES the at-scale join
     shape by disabling broadcast and asserts per-sweep LIVE shuffled
-    records (sweep_stats' live_* view, which excludes the cached build
-    plans' frozen exchange metrics) stay well under |E|. Dropping either
-    repartition() in graph.py puts the edge relation back through the
-    shuffle every sweep and blows the bound."""
+    records (materialized_shuffle_stats' live_* view, which excludes the
+    cached build plans' frozen exchange metrics) stay well under |E|.
+    Dropping either repartition() in graph.py puts the edge relation
+    back through the shuffle every sweep and blows the bound."""
     from hazelcast_jet_contrib_spark.operators.graph import pagerank
 
     n_edges, n_nodes = 40_000, 500
@@ -373,8 +410,9 @@ def test_pagerank_edges_stay_out_of_the_per_sweep_shuffle(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        sweeps: list[dict] = []
-        pagerank(edges, iterations=3, sweep_stats=sweeps).collect()
+        with materialized_shuffle_stats() as cps:
+            pagerank(edges, iterations=3).collect()
+        sweeps = cps[1:]
     finally:
         for k, v in saved.items():
             if v is None:
@@ -408,7 +446,8 @@ def test_cc_edges_stay_out_of_the_per_round_shuffle(spark, tmp_path):
     disabled — locally AQE broadcasts the tiny label side and hides
     everything) each min-label round re-shuffles only the |V|-row label
     relation and the aggregation partials, NOT the 2|E| edge rows.
-    Asserted through the round_stats live_* view; removing the
+    Asserted through the materialized_shuffle_stats live_* view (every
+    checkpoint after the init labels is one round); removing the
     repartition+persist in connected_components puts the edges back
     through the shuffle every round and blows the bound."""
     from hazelcast_jet_contrib_spark.operators.dedup import connected_components
@@ -432,8 +471,9 @@ def test_cc_edges_stay_out_of_the_per_round_shuffle(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        rounds: list[dict] = []
-        connected_components(pairs, max_iter=4, round_stats=rounds).collect()
+        with materialized_shuffle_stats() as cps:
+            connected_components(pairs, max_iter=4).collect()
+        rounds = cps[1:]
     finally:
         for k, v in saved.items():
             if v is None:
@@ -497,11 +537,13 @@ def test_kmeans_prepartition_keeps_points_out_of_the_per_round_shuffle(
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        rounds: list[dict] = []
-        pre = kmeans_lloyd(
-            pts, "doc_id", "emb", k=10, iters=3, prepartition=True,
-            round_stats=rounds,
-        ).collect()
+        # every checkpoint but the last (the returned assignment) is
+        # one Lloyd round's centroid recomputation
+        with materialized_shuffle_stats() as cps:
+            pre = kmeans_lloyd(
+                pts, "doc_id", "emb", k=10, iters=3, prepartition=True,
+            ).collect()
+        rounds = cps[:-1]
         plain = kmeans_lloyd(pts, "doc_id", "emb", k=10, iters=3).collect()
     finally:
         for k, v in saved.items():
@@ -575,11 +617,11 @@ def test_classifier_iteration_pays_one_live_exchange(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        rounds: list[dict] = []
-        train_quality_classifier(
-            docs, "label", num_features=1 << 10, iterations=3, lr=1.0,
-            round_stats=rounds,
-        )
+        # one collect per GD iteration: its gradient query
+        with materialized_shuffle_stats("collect") as rounds:
+            train_quality_classifier(
+                docs, "label", num_features=1 << 10, iterations=3, lr=1.0,
+            )
     finally:
         for k, v in saved.items():
             if v is None:
