@@ -240,27 +240,6 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     return shingles_of_tokens(tokens(col), n)
 
 
-def shingles(col: Column | str, n: int = 5) -> Column:
-    """Distinct character n-grams of lower(trim(text)) — the MinHash/
-    Jaccard input set. Empty array when the text is shorter than n.
-    SQL mirror: list_distinct([substr(t, i, n) for i in range(1,
-    len(t)-n+2)])."""
-    c = F.lower(F.trim(_c(col)))
-    chars = F.split(c, "")
-    width = F.length(c) - F.lit(n - 1)
-    zipped = F.arrays_zip(
-        *[F.slice(chars, j + 1, width).alias(f"c{j}") for j in range(n)]
-    )
-    return F.when(F.length(c) < n, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                zipped,
-                lambda s: F.concat_ws("", *[s.getField(f"c{j}") for j in range(n)]),
-            )
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Gopher-style quality rules
 # ---------------------------------------------------------------------------

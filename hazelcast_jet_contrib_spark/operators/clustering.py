@@ -87,7 +87,6 @@ def kmeans_lloyd(
     vec_col: str,
     k: int = 10,
     iters: int = 2,
-    prepartition: bool = False,
 ) -> DataFrame:
     """Final assignment (id, cidx, dist) after `iters` Lloyd rounds from
     the deterministic k-lowest-id initialization.
@@ -105,44 +104,39 @@ def kmeans_lloyd(
     k-row side (not the assignment) keeps the materialization cost
     negligible while still severing the recurrence.
 
-    ``prepartition=True`` caches the points relation hash-partitioned
-    on id (the pagerank / connected-components loop-invariant pattern):
-    the recompute join (assign ⋈ points on id) then satisfies its
-    clustering from cache on BOTH sides — assign is a narrow map over
-    the same cached relation, so it inherits the partitioning — and
-    once sort-merge join engages (at scale, past any broadcast
-    threshold) each Lloyd round shuffles only the k·d mean partials
-    instead of the full |N|-row VECTOR relation twice. Value-neutral by
-    construction: kmeans_recompute's 9-dp mean rounding exists exactly
-    to erase partition-order accumulation differences (asserted by
-    tests/test_dedup_similarity.py). Default False for parameter
-    stability, but the registry query kmeans_cluster_profile runs with
-    it ON since round 14 (staged r13, flipped inside the r14 re-prove
-    window — ROUND14_PLAN.md item 1, the mmr_rerank_multi precedent)."""
-    points = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    if prepartition:
-        from pyspark import StorageLevel
+    The points relation is cached hash-partitioned on id (the pagerank /
+    connected-components loop-invariant pattern): the recompute join
+    (assign ⋈ points on id) then satisfies its clustering from cache on
+    BOTH sides — assign is a narrow map over the same cached relation,
+    so it inherits the partitioning — and once sort-merge join engages
+    (at scale, past any broadcast threshold) each Lloyd round shuffles
+    only the k·d mean partials instead of the full |N|-row vector
+    relation twice (tests/test_scale_rehearsal_analytics.py NOBC law).
+    Value-neutral: kmeans_recompute's 9-dp mean rounding erases
+    partition-order accumulation differences. The returned assignment
+    is checkpointed before the cache releases."""
+    from pyspark import StorageLevel
 
-        from hazelcast_jet_contrib_spark.cache import adaptive_repartition
+    from hazelcast_jet_contrib_spark.cache import adaptive_repartition
 
-        # partition count from the vector relation's size estimate
-        # (r18, cache.adaptive_repartition): the Lloyd loop re-scans
-        # this cache every round, so a static core-count-sized cache is
-        # a per-round fixed cost; the explicit size-derived count keeps
-        # the hash(id) clustering the recompute join reuses.
-        points = adaptive_repartition(points, "id").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    # partition count from the vector relation's size estimate
+    # (cache.adaptive_repartition): the Lloyd loop re-scans this cache
+    # every round, so a static core-count-sized cache is a per-round
+    # fixed cost; the explicit size-derived count keeps the hash(id)
+    # clustering the recompute join reuses.
+    points = adaptive_repartition(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        ),
+        "id",
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     # try from the first action on: a failure while building the cache
     # must not orphan the persisted relation (the pagerank/CC loop-abort
-    # discipline, VERDICT r08 item 8). No materializing count (r17): the
-    # first Lloyd job builds the cache while computing the init
-    # centroids/assignment — an up-front count was one extra pass of the
-    # vector relation for nothing (interleaved A/B at sf0.1,
-    # OPTIMIZATION_r17.md §10: kmeans_cluster_profile min 1.74 s with
-    # the count vs 1.49 s without).
+    # discipline). No materializing count: the first Lloyd job builds
+    # the cache while computing the init centroids/assignment — an
+    # up-front count was one extra pass of the vector relation for
+    # nothing (OPTIMIZATION_r17.md §10).
     try:
         centroids = (
             points.orderBy("id")
@@ -157,15 +151,12 @@ def kmeans_lloyd(
             recomputed = kmeans_recompute(points, assign)
             centroids = recomputed.localCheckpoint(eager=True)
             assign = kmeans_assign(points, centroids)
-        if prepartition:
-            # materialize the returned assignment before the points
-            # cache releases, so callers never recompute the Lloyd
-            # chain against an unpersisted input
-            assign = assign.localCheckpoint(eager=True)
-        return assign
+        # materialize the returned assignment before the points cache
+        # releases, so callers never recompute the Lloyd chain against
+        # an unpersisted input
+        return assign.localCheckpoint(eager=True)
     finally:
-        if prepartition:
-            points.unpersist()
+        points.unpersist()
 
 
 def semantic_dedup_pairs(
@@ -174,7 +165,6 @@ def semantic_dedup_pairs(
     vec_col: str,
     k: int = 16,
     min_cosine: float = 0.999,
-    prepartition_cells: bool = False,
 ) -> DataFrame:
     """Semantic near-duplicate pairs via k-means-cell bucketing — the
     IVF-style companion to MinHash-LSH: instead of joining all pairs,
@@ -190,26 +180,23 @@ def semantic_dedup_pairs(
     exactly in SQL. Scale: the join is Σ C(|cell|, 2) over cells of
     ~n/k vectors, not C(n, 2); the centroid relation broadcasts.
 
-    ``prepartition_cells=True`` caches the assigned-cell relation
-    hash-partitioned on cidx (the LSH/simhash banded-relation pattern,
-    operators/dedup.py round 13/14): without it, BOTH sides of the
-    in-cell pair join recompute the whole upstream — scan → broadcast
-    argmin assignment → assign⋈points join → norm fold — and, once
-    sort-merge join engages past any broadcast threshold, each side
-    also transits the shuffle separately (exchange-reuse does not
-    engage under AQE, measured — SCALE.md §MinHash). With the cache
-    the upstream runs ONCE and the join satisfies both sides'
-    clustering from it. Value-neutral by the same argument as the
-    default path: assignments are argmins over 6-dp-rounded distances
-    with index tie-break and cos is rounded to 6 dp (equality with the
-    default path pinned in tests/test_scale_rehearsal.py). Default
-    False — STAGED for round 15: the registry query
-    semantic_dedup_pairs is r13-green and outside the round-14
-    re-prove window (ROUND14_PLAN.md §Round-15), the
-    kmeans/simhash staged-flip precedent.
+    The assigned-cell relation is cached hash-partitioned on cidx (the
+    LSH/simhash banded-relation pattern, operators/dedup.py): uncached,
+    BOTH sides of the in-cell pair join would recompute the whole
+    upstream — scan → broadcast argmin assignment → assign⋈points join
+    → norm fold — and, once sort-merge join engages past any broadcast
+    threshold, each side would also transit the shuffle separately
+    (exchange-reuse does not engage under AQE, measured — SCALE.md
+    §MinHash). From the cache the upstream runs ONCE and the join
+    satisfies both sides' clustering (tests/test_scale_rehearsal.py
+    NOBC law). The cache stays alive for the returned lazy plan —
+    long-lived sessions call ``cache.release_tracked()`` between
+    stages.
 
     Output: (id_a, id_b, cos) with cos rounded to 6 dp.
     """
+    from hazelcast_jet_contrib_spark.cache import tracked_persist
+
     points = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
@@ -230,17 +217,15 @@ def semantic_dedup_pairs(
             F.transform("v", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
         )
     )
-    cells = assign.join(points, "id").withColumn("nrm", nrm)
-    if prepartition_cells:
-        from hazelcast_jet_contrib_spark.cache import tracked_persist
-
-        # DELIBERATELY static partitioning (r18): unlike the Lloyd-loop
-        # cache above this is a one-shot cache, and its downstream is
-        # the quadratic-in-cell pair join — CPU per PAIR, which a
-        # bytes-derived partition count cannot see (the minhash_lsh
-        # banded-cache lesson: byte-based coalescing serialized the
-        # verify chain, OPTIMIZATION_r18.md §1).
-        cells = tracked_persist(cells.repartition("cidx"))
+    # DELIBERATELY static partitioning: unlike the Lloyd-loop cache
+    # above this is a one-shot cache, and its downstream is the
+    # quadratic-in-cell pair join — CPU per PAIR, which a bytes-derived
+    # partition count cannot see (the minhash_lsh banded-cache lesson:
+    # byte-based coalescing serialized the verify chain,
+    # OPTIMIZATION_r18.md §1).
+    cells = tracked_persist(
+        assign.join(points, "id").withColumn("nrm", nrm).repartition("cidx")
+    )
     a = cells.select(
         F.col("cidx"), F.col("id").alias("id_a"),
         F.col("v").alias("va"), F.col("nrm").alias("na"),

@@ -121,6 +121,8 @@ def ngram_vocab(
     that survives a 100 TB corpus because the reduce side only carries
     distinct n-grams. Ties break lexicographically for determinism.
     Output: (ngram string, n bigint)."""
+    from hazelcast_jet_contrib_spark.functions.text import tokens
+
     # materialize the token array as its own column BEFORE the lambda:
     # referencing the split() expression inside transform would re-split
     # the text once per element (the HOF re-evaluation pitfall
@@ -136,7 +138,7 @@ def ngram_vocab(
         lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)]),
     )
     return (
-        df.select(F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("__t__"))
+        df.select(tokens(text_col).alias("__t__"))
         .select(F.explode(grams).alias("ngram"))
         .filter(F.length("ngram") > 0)
         .groupBy("ngram")
@@ -500,7 +502,6 @@ def bigram_lm_score(
     text_col: str,
     alpha: float = 0.5,
     interp: float = 0.7,
-    cache_counts: bool = False,
 ) -> DataFrame:
     """Interpolated bigram-LM quality scoring — the context-aware step
     up from ``unigram_lm_score`` toward the n-gram-KenLM filters CCNet
@@ -525,7 +526,10 @@ def bigram_lm_score(
     bigram table outgrows any broadcast and the join degrades
     gracefully to a hash join on the bigram key — still linear, and
     AQE skew-splits stopword-pair hot keys. Driver-side scalars are
-    O(1) (N, V).
+    O(1) (N, V). The count relations are not cached: materializing them
+    measured +60% on 8×-longer documents (4.68 s uncached vs 7.48 s
+    cached) and never won on the corpus-count axis (SCALE.md
+    §Bigram-LM scoring).
     """
     toks_arr = F.filter(
         F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda t: t != ""
@@ -550,19 +554,6 @@ def bigram_lm_score(
 
     ucounts = uni.groupBy("tok").agg(F.count(F.lit(1)).alias("cu"))
     bcounts = big.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("cb"))
-    if cache_counts:
-        # the unigram count relation is VOCABULARY-sized and feeds FOUR
-        # consumers (the scalar totals action + three scoring joins);
-        # the bigram counts feed one join but their build is its own
-        # corpus pass. Cached, the corpus tokenize kernel runs ~3x per
-        # run instead of ~6x. Default OFF — STAGED for round 15
-        # (bigram_lm_quality is r13-green, outside the r14 re-prove
-        # window; ROUND14_PLAN.md §Round-15), the tfidf/semantic
-        # staging precedent. Released via cache.release_tracked().
-        from hazelcast_jet_contrib_spark.cache import tracked_persist
-
-        ucounts = tracked_persist(ucounts)
-        bcounts = tracked_persist(bcounts)
     tot = ucounts.agg(F.sum("cu").alias("n"), F.count(F.lit(1)).alias("v")).collect()[0]
     n_total, vocab = int(tot["n"] or 0), int(tot["v"] or 0)
     udenom = float(n_total) + alpha * vocab or 1.0
@@ -668,7 +659,6 @@ def crossdoc_duplicate_blocks(
     id_col: str,
     text_col: str,
     block_tokens: int = 20,
-    prepartition_blocks: bool = False,
 ) -> DataFrame:
     """Cross-document duplicated-block detection — the distributed
     approximation of exact-substring dedup (Lee et al., "Deduplicating
@@ -679,24 +669,16 @@ def crossdoc_duplicate_blocks(
     the boilerplate signature (shared headers/footers/license blocks)
     that document-level dedup cannot see.
 
-    Scale shape (round 14): the block fingerprint relation feeds TWO
-    consumers — the distinct-doc count and the join back — so it is
-    CACHED: the tokenize/chunk/fingerprint kernel runs ONCE, not once
-    per consumer (a strict win at every scale — measured interleaved
-    at sf0.1: kernel dedup alone beats the recompute shape). Only
-    8-byte fingerprints shuffle after that. ``prepartition_blocks=True``
-    additionally lays the cache out hash-partitioned on bh (the LSH
-    banded-relation pattern) so the count, the join, and both sides'
-    clustering satisfy from one build exchange — the block relation
-    then transits the shuffle ONCE instead of once per consumer
-    (measured under forced no-broadcast: live shuffle = the per-doc
-    rollup only, tests/test_scale_rehearsal.py). It stays opt-in
-    because the extra cache-materialization exchange costs ~0.3 s at
-    local scale where AQE broadcasts the count side anyway — turn it
-    on for corpus-scale runs where the join stops broadcasting
-    (exchange-reuse does not engage under AQE — measured, SCALE.md
-    §MinHash — so the laid-out cache is the only single-shuffle
-    mechanism). The cache stays alive for the returned lazy plan —
+    Scale shape: the block fingerprint relation feeds TWO consumers —
+    the distinct-doc count and the join back — so it is CACHED: the
+    tokenize/chunk/fingerprint kernel runs ONCE, not once per consumer
+    (a strict win at every scale — measured interleaved at sf0.1:
+    kernel dedup alone beats the recompute shape). Only 8-byte
+    fingerprints shuffle after that. The cache is not laid out on bh:
+    that extra materialization exchange measured ~0.3 s at local
+    scale, where AQE broadcasts the count side anyway (SCALE.md
+    §Cross-document duplicated blocks). The cache stays alive for the
+    returned lazy plan —
     long-lived sessions call ``cache.release_tracked()`` between
     stages. A 64-bit fingerprint collision merges two blocks with
     probability ~(#blocks)²/2⁶⁴ — negligible below ~10¹² blocks; at
@@ -707,12 +689,11 @@ def crossdoc_duplicate_blocks(
     """
     from hazelcast_jet_contrib_spark.cache import tracked_persist
 
-    blocks = chunk_documents(
-        df, id_col, text_col, chunk_tokens=block_tokens, stride=block_tokens
-    ).select("id", F.xxhash64("chunk_text").alias("bh"))
-    if prepartition_blocks:
-        blocks = blocks.repartition("bh")
-    blocks = tracked_persist(blocks)
+    blocks = tracked_persist(
+        chunk_documents(
+            df, id_col, text_col, chunk_tokens=block_tokens, stride=block_tokens
+        ).select("id", F.xxhash64("chunk_text").alias("bh"))
+    )
     counts = blocks.groupBy("bh").agg(
         F.count_distinct("id").alias("nd")
     )
@@ -886,7 +867,6 @@ def rarity_weighted_terms(
     id_col: str,
     text_col: str,
     top_k: int = 5,
-    cache_tf: bool = False,
 ) -> DataFrame:
     """Per-document top-k salient terms by tf x corpus-rarity — the
     tf-idf-style keyword extraction used for corpus exploration and
@@ -900,16 +880,11 @@ def rarity_weighted_terms(
     (one shuffle), aggregate term document-frequencies from that (one
     more shuffle over distinct terms — already reduced, tiny next to
     the corpus), broadcast-join the term weights back, per-doc top-k via
-    window. Ties break by term for determinism.
-
-    ``cache_tf=True`` persists the (id, term, tf) relation, which feeds
-    BOTH the document-frequency aggregate and the scoring join —
-    without it the tokenize → explode → count lineage (the dominant
-    linear kernel) runs once per consumer. Value-neutral (same plan
-    below the cache); default False — STAGED for round 15: the
-    registry query tfidf_salient_terms is r13-green and outside the
-    round-14 re-prove window (ROUND14_PLAN.md §Round-15), the
-    semantic_dedup_pairs staging precedent.
+    window. Ties break by term for determinism. The (id, term, tf)
+    relation is not cached for its two consumers: materializing it
+    measured slower than re-running the tokenize kernel on both the
+    corpus-count and document-length axes (0.83/1.01 s and 1.31/1.48 s
+    uncached/cached, SCALE.md §Salient terms).
 
     Output: (id, term, tf bigint, score double, rank int).
     """
@@ -918,10 +893,6 @@ def rarity_weighted_terms(
         F.explode(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+")).alias("term"),
     ).filter(F.col("term") != "")
     tf = terms.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    if cache_tf:
-        from hazelcast_jet_contrib_spark.cache import tracked_persist
-
-        tf = tracked_persist(tf)
     n_docs = df.select(F.col(id_col)).distinct().count()
     # tf rows are unique per (id, term) by construction, so document
     # frequency is a plain count — no distinct-aggregate expansion

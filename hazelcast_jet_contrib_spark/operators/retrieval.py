@@ -23,7 +23,11 @@ Scale shape (how this survives 100 TB):
     Spark executes as TakeOrderedAndProject — per-partition heaps, one
     bounded merge, never a global sort. The bulk variant
     (``bm25_score_all``) skips ranking entirely, so no single-partition
-    window ever materializes the full corpus.
+    window ever materializes the full corpus. ``bm25_topk_multi`` runs
+    the same weight body for a whole query batch in one corpus pass.
+  * MMR reranking (``mmr_rerank_multi``) runs per query group in one
+    Arrow batch over the top-N-bounded shortlist, for a whole lambda
+    sweep at once; nothing corpus-sized moves.
   * Nothing is collected to the driver; the stats join broadcasts one
     row.
 
@@ -36,17 +40,77 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hazelcast_jet_contrib_spark.functions.text import tokens
+
 # the Lucene/ES default BM25 parameters
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
 
-_TOKEN_SPLIT = r"\s+"
 
+def _bm25_weights(toks: DataFrame, qarr, k1: float, b: float) -> DataFrame:
+    """(term, __id__, w): the BM25 weight of every (document, query
+    term) match. ``toks`` carries (__id__, __t__ token array) plus
+    whatever ``qarr`` — the array<string> of query terms — reads.
 
-def _tokens(text_col: str):
-    """Whitespace tokens of lower-cased trimmed text (the corpus-wide
-    tokenizer shared with functions/text.py token counting)."""
-    return F.split(F.lower(F.trim(F.col(text_col))), _TOKEN_SPLIT)
+    ONE corpus tokenize pass: the narrow projection below is one row
+    per doc — (id, dl, <= |terms| (term, tf) structs), never the token
+    array — so persisting it is O(n_docs x |terms|) small and both the
+    corpus-stats aggregate and the tf relation read it from cache
+    instead of re-running the regex tokenizer (OPTIMIZATION_r17.md)."""
+    from hazelcast_jet_contrib_spark.cache import tracked_persist
+
+    narrow = tracked_persist(
+        toks.select(
+            "__id__",
+            F.size("__t__").alias("dl"),
+            # restrict to query terms BEFORE exploding: the downstream
+            # relation is <= |terms| rows/doc regardless of document
+            # size; tf per hit via a HOF filter so the full token array
+            # never explodes
+            F.transform(
+                F.array_intersect("__t__", qarr),
+                lambda h: F.struct(
+                    h.alias("term"),
+                    F.size(F.filter("__t__", lambda x: x == h))
+                    .cast("double")
+                    .alias("tf"),
+                ),
+            ).alias("__ht__"),
+        )
+    )
+    # corpus stats: one global partial agg -> a single broadcast row
+    stats = narrow.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+    )
+    # (doc, term, tf) for query terms only, matches-sized
+    tf = narrow.select(
+        "__id__", "dl", F.explode("__ht__").alias("__h__")
+    ).select(
+        "__id__",
+        "dl",
+        F.col("__h__.term").alias("term"),
+        F.col("__h__.tf").alias("tf"),
+    )
+    # document frequency per query term: aggregates the tiny relation
+    df_per_term = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    )
+    w = (
+        idf
+        * F.col("tf")
+        * F.lit(k1 + 1.0)
+        / (
+            F.col("tf")
+            + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+        )
+    )
+    return (
+        tf.join(F.broadcast(df_per_term), "term")
+        .join(F.broadcast(stats))
+        .select("term", "__id__", w.alias("w"))
+    )
 
 
 def bm25_score_all(
@@ -75,77 +139,11 @@ def bm25_score_all(
     terms = sorted({t.lower() for t in query_terms})
     qarr = F.array(*[F.lit(t) for t in terms])
 
-    # ONE corpus tokenize pass (r17 optimization, guide §1.2/§2.3): the
-    # former shape ran scan+regex-tokenize TWICE (a dl-only stats pass
-    # and the term-bounded tf pass). The narrow projection below is one
-    # row per doc — (id, dl, <= |terms| (term, tf) structs), never the
-    # token array — so persisting it is O(n_docs x |terms|) small and
-    # both the stats aggregate and the tf relation read it from cache.
-    from hazelcast_jet_contrib_spark.cache import tracked_persist
-
     toks = docs.select(
-        F.col(id_col).alias("__id__"), _tokens(text_col).alias("__t__")
+        F.col(id_col).alias("__id__"), tokens(text_col).alias("__t__")
     )
-    narrow = tracked_persist(
-        toks.select(
-            "__id__",
-            F.size("__t__").alias("dl"),
-            # restrict to query terms BEFORE exploding: the downstream
-            # relation is <= |terms| rows/doc regardless of document
-            # size; tf per hit via a HOF filter so the full token array
-            # never explodes
-            F.transform(
-                F.array_intersect("__t__", qarr),
-                lambda h: F.struct(
-                    h.alias("term"),
-                    F.size(F.filter("__t__", lambda x: x == h))
-                    .cast("double")
-                    .alias("tf"),
-                ),
-            ).alias("__ht__"),
-        )
-    )
-
-    # corpus stats: one global partial agg -> a single broadcast row
-    stats = narrow.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-
-    # (doc, term, tf) for query terms only, matches-sized
-    tf = narrow.select(
-        "__id__", "dl", F.explode("__ht__").alias("__h__")
-    ).select(
-        "__id__",
-        "dl",
-        F.col("__h__.term").alias("term"),
-        F.col("__h__.tf").alias("tf"),
-    )
-
-    # document frequency per query term: aggregates the tiny relation
-    df_per_term = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
     return (
-        tf.join(F.broadcast(df_per_term), "term")
-        .join(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "w",
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(k1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-            ),
-        )
+        _bm25_weights(toks, qarr, k1, b)
         .groupBy("__id__")
         .agg(F.round(F.sum("w"), 6).alias("score"))
         .select(F.col("__id__").alias(id_col), "score")
@@ -246,17 +244,17 @@ def rrf_fuse(
     )
 
 
-__all__ = ["bm25_topk", "bm25_topk_multi", "bm25_score_all", "rrf_fuse", "mmr_rerank", "mmr_rerank_multi", "DEFAULT_K1", "DEFAULT_B"]
+__all__ = ["bm25_topk", "bm25_topk_multi", "bm25_score_all", "rrf_fuse", "mmr_rerank_multi", "DEFAULT_K1", "DEFAULT_B"]
 
 
 def _mmr_greedy(vecs, rel, k: int, lam: float):
-    """The per-query greedy MMR core, shared by `mmr_rerank` and
-    `mmr_rerank_multi` so a multi-lam run is provably the same
-    selection per lam (pytest asserts row-level equality). Inputs:
-    L2-normalized embedding rows + relevance, BOTH already sorted
-    (rel desc, doc id asc) — argmax over the 9dp-rounded scores then
-    resolves ties to the highest-relevance, smallest-id candidate.
-    Returns (chosen positional indices, 6dp mmr scores)."""
+    """The per-query, per-lam greedy MMR core of `mmr_rerank_multi`
+    (checked per lam against an in-test reference greedy in
+    tests/test_analytics.py). Inputs: L2-normalized embedding rows +
+    relevance, BOTH already sorted (rel desc, doc id asc) — argmax
+    over the 9dp-rounded scores then resolves ties to the
+    highest-relevance, smallest-id candidate. Returns (chosen
+    positional indices, 6dp mmr scores)."""
     import numpy as np
 
     n = len(rel)
@@ -287,11 +285,11 @@ def _mmr_greedy(vecs, rel, k: int, lam: float):
     return chosen, mmr_vals
 
 
-def mmr_rerank(
+def mmr_rerank_multi(
     candidates: DataFrame,
     embeddings: DataFrame,
     k: int = 10,
-    lam: float = 0.7,
+    lams: list[float] | tuple[float, ...] = (0.7,),
     query_col: str = "query_id",
     doc_col: str = "neighbor_id",
     score_col: str = "score",
@@ -299,7 +297,8 @@ def mmr_rerank(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal Marginal Relevance diversification of a per-query
-    candidate shortlist: greedily pick k results maximizing
+    candidate shortlist, for one or more lambda values: per lam, greedily
+    pick k results maximizing
 
         lam * relevance(d) - (1 - lam) * max cosine(d, already picked)
 
@@ -315,105 +314,19 @@ def mmr_rerank(
     embarrassingly parallel ACROSS queries — one join attaches
     embeddings to the (top-N-bounded) shortlist, then applyInPandas
     runs the O(N*k) greedy selection per query group as one Arrow
-    batch. Nothing corpus-sized moves: the per-group input is the
-    shortlist, so cost is queries x N x k regardless of corpus size.
+    batch, once per lam inside the same batch: the join, the group
+    shuffle and the Python worker round-trip are paid once for a whole
+    lam sweep (a degenerate-exact leg plus a diverse leg in
+    `mmr_rerank_diverse`; lam grid searches in evaluation harnesses).
+    Nothing corpus-sized moves: cost is queries x N x k x |lams|
+    regardless of corpus size.
 
     Determinism: ties by doc id; relevance scores are taken as given
-    (already 6-dp-rounded by the upstream operators).
+    (already 6-dp-rounded by the upstream operators). Output id types
+    follow the caller's shortlist schema.
 
-    Output: (query_col, doc_col, mmr double, rank int), rank 1 first
-    picked.
-    """
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError("lam must be in [0, 1]")
-    import numpy as np
-
-    cand = candidates.select(
-        F.col(query_col).alias("q"),
-        F.col(doc_col).alias("d"),
-        F.col(score_col).cast("double").alias("rel"),
-    ).join(
-        embeddings.select(
-            F.col(id_col).alias("d"), F.col(vec_col).alias("v")
-        ),
-        "d",
-    )
-
-    def pick(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(["rel", "d"], ascending=[False, True])
-        vecs = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        norms = np.maximum(np.linalg.norm(vecs, axis=1), 1e-12)
-        vecs = vecs / norms[:, None]
-        rel = pdf["rel"].to_numpy()
-        ids = pdf["d"].to_numpy()
-        chosen, mmr_vals = _mmr_greedy(vecs, rel, k, lam)
-        return pd.DataFrame(
-            {
-                "q": pdf["q"].iloc[0],
-                "d": ids[chosen],
-                "mmr": mmr_vals,
-                "rank": list(range(1, len(chosen) + 1)),
-            }
-        )
-
-    # Output id types follow the caller's shortlist schema — string or
-    # int ids alike, per the "any bounded shortlist" contract.
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("q", candidates.schema[query_col].dataType),
-            StructField("d", candidates.schema[doc_col].dataType),
-            StructField("mmr", DoubleType()),
-            StructField("rank", IntegerType()),
-        ]
-    )
-    return (
-        cand.groupBy("q")
-        .applyInPandas(pick, schema=out_schema)
-        .select(
-            F.col("q").alias(query_col),
-            F.col("d").alias(doc_col),
-            "mmr",
-            "rank",
-        )
-    )
-
-
-def mmr_rerank_multi(
-    candidates: DataFrame,
-    embeddings: DataFrame,
-    k: int = 10,
-    lams: list[float] | tuple[float, ...] = (0.7,),
-    query_col: str = "query_id",
-    doc_col: str = "neighbor_id",
-    score_col: str = "score",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """`mmr_rerank` for SEVERAL lambda values in ONE Arrow pass: the
-    shortlist-embedding join, the group shuffle, and the Python worker
-    round-trip happen once, and the (cheap, O(N*k)) greedy core runs
-    per lam inside the same batch — for the lam-sweep shape every MMR
-    consumer actually has (a degenerate-exact leg plus a diverse leg in
-    `mmr_rerank_diverse`; lam grid searches in evaluation harnesses).
-    Per-lam results are row-identical to separate `mmr_rerank` calls
-    (shared `_mmr_greedy`, asserted in tests/test_analytics.py).
-
-    Output: (query_col, doc_col, lam double, mmr double 6dp, rank int).
-
-    Staged round 11 for the round-12 rotation: `mmr_rerank_diverse` is
-    a frozen r10-green row this round, so the registered query keeps
-    its two-call plan until it re-enters the proof window.
+    Output: (query_col, doc_col, lam double, mmr double 6dp, rank int),
+    rank 1 first picked.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -503,7 +416,7 @@ def bm25_topk_multi(
     """Batched BM25: score MANY queries against the corpus in ONE
     corpus pass — the retrieval-evaluation / RAG-serving shape
     (hundreds of queries per batch), and the per-query contract
-    `rrf_fuse`/`mmr_rerank` consume directly.
+    `rrf_fuse`/`mmr_rerank_multi` consume directly.
 
     ``queries`` is (query_id_col, terms_col array<string>). The corpus
     pass restricts each document's tokens to the UNION of all query
@@ -554,71 +467,11 @@ def bm25_topk_multi(
             "__qterms__ array<string>",
         )
     )
-    qarr = F.col("__qterms__")
-
-    # ONE corpus tokenize pass (r17 optimization, guide §1.2/§2.3: the
-    # regex tokenize over the text column dominates the corpus pass, and
-    # the former shape ran it TWICE — a dl-only stats pass plus the
-    # term-match pass). The narrow projection below carries one row per
-    # doc: (id, dl, <= |terms| (term, tf) structs) — NOT the token
-    # array — so persisting it is O(n_docs x |terms|) small, and both
-    # the stats aggregate and the hit relation read it from cache.
-    # (The old comment's caching objection was about token-array-sized
-    # relations; this one is keys-and-counts only.)
-    from hazelcast_jet_contrib_spark.cache import tracked_persist
 
     toks = docs.select(
-        F.col(id_col).alias("__id__"), _tokens(text_col).alias("__t__")
+        F.col(id_col).alias("__id__"), tokens(text_col).alias("__t__")
     ).crossJoin(term_df)
-    narrow = tracked_persist(
-        toks.select(
-            "__id__",
-            F.size("__t__").alias("dl"),
-            F.transform(
-                F.array_intersect("__t__", qarr),
-                lambda h: F.struct(
-                    h.alias("term"),
-                    F.size(F.filter("__t__", lambda x: x == h))
-                    .cast("double")
-                    .alias("tf"),
-                ),
-            ).alias("__ht__"),
-        )
-    )
-    stats = narrow.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    # (doc, term, tf) for matching terms only — matches-sized, read
-    # from the cached narrow relation instead of a second corpus pass
-    hits = narrow.select(
-        "__id__", "dl", F.explode("__ht__").alias("__h__")
-    ).select(
-        "__id__",
-        "dl",
-        F.col("__h__.term").alias("term"),
-        F.col("__h__.tf").alias("tf"),
-    )
-    df_per_term = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    weighted = (
-        hits.join(F.broadcast(df_per_term), "term")
-        .join(F.broadcast(stats))
-        .withColumn(
-            "w",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            )
-            * F.col("tf")
-            * F.lit(k1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-            ),
-        )
-        .select("term", "__id__", "w")
-    )
+    weighted = _bm25_weights(toks, F.col("__qterms__"), k1, b)
     scored = (
         weighted.join(F.broadcast(qt), "term")
         .groupBy("qid", "__id__")

@@ -784,13 +784,7 @@ def tfidf_salient_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hazelcast_jet_contrib_spark.operators.curation import rarity_weighted_terms
 
     docs = table(spark, sf_dir, "documents")
-    # cache_tf=False (reverted r17, executing the r16 staged plan): the
-    # r15 flip to True was refuted by the measured 1×/8× law on both
-    # the corpus-count and document-length axes (0.83/1.01 and
-    # 1.31/1.48 s off/on — SCALE.md §Salient terms): materializing the
-    # (id, term, tf) relation costs more than re-running the tokenize
-    # kernel for the second consumer.
-    return rarity_weighted_terms(docs, "doc_id", "text", top_k=5, cache_tf=False)
+    return rarity_weighted_terms(docs, "doc_id", "text", top_k=5)
 
 
 @query(

@@ -406,15 +406,7 @@ def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     emb = table(spark, sf_dir, "embeddings")
-    # prepartition=True (flipped r14, staged+proven r13): the points
-    # relation is cached hash-partitioned on id, keeping the |N|-row
-    # vector relation OUT of the per-round recompute shuffle at scale
-    # (650 live records/round vs 4,000 points under forced SMJ,
-    # tests/test_scale_rehearsal_analytics.py); value-neutral by the
-    # 9-dp mean rounding (operators/clustering.py).
-    assign = kmeans_lloyd(
-        emb, "vec_id", "embedding", k=10, iters=2, prepartition=True
-    )
+    assign = kmeans_lloyd(emb, "vec_id", "embedding", k=10, iters=2)
     # persist: the full 2-iteration DAG feeds BOTH the majority-label
     # window and the size/inertia aggregate — without it the most
     # expensive lineage in the query executes twice
@@ -645,14 +637,7 @@ def semantic_dedup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("id") + 100000).alias("id"), "embedding"
         )
     )
-    # prepartition_cells=True (flipped r15; staged+proven r14): the
-    # assigned-cell relation is cached hash-partitioned on cidx, so the
-    # in-cell pair join satisfies both sides from one cache instead of
-    # recomputing scan -> argmin -> join -> norm fold per side
-    # (tests/test_scale_rehearsal.py NOBC law + equality pin).
-    return semantic_dedup_pairs(
-        aug, "id", "embedding", k=16, min_cosine=0.999, prepartition_cells=True
-    )
+    return semantic_dedup_pairs(aug, "id", "embedding", k=16, min_cosine=0.999)
 
 
 @query(

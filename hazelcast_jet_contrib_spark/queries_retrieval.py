@@ -208,10 +208,9 @@ def mmr_rerank_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-query greedy over a bounded shortlist via ONE Arrow
     batch per query group for BOTH lam values (operators/retrieval.py
-    mmr_rerank_multi — flipped round 12 from two separate mmr_rerank
-    calls, halving the shortlist-embedding join + Python round-trip;
-    per-lam rows proven identical to separate calls in
-    tests/test_analytics.py)."""
+    mmr_rerank_multi — half the shortlist-embedding join + Python
+    round-trip of one call per lam; each lam's picks and values are
+    checked against a reference greedy in tests/test_analytics.py)."""
     from hazelcast_jet_contrib_spark.operators.retrieval import (
         bm25_topk_multi,
         mmr_rerank_multi,

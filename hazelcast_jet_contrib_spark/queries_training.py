@@ -189,14 +189,8 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hazelcast_jet_contrib_spark.operators.curation import bigram_lm_score
 
     docs = table(spark, sf_dir, "documents")
-    # cache_counts=False (reverted r17, executing the r16 staged plan):
-    # the r15 flip to True was refuted by the measured 1×/8× law —
-    # +60% on 8×-longer documents (4.68 s off vs 7.48 s on), never a
-    # win on the corpus-count axis (SCALE.md §Bigram-LM) — because the
-    # cached vocabulary relations cost more to materialize than the
-    # tokenize kernels they deduplicate once documents are long.
     return bigram_lm_score(
-        docs, "doc_id", "text", alpha=0.5, interp=0.7, cache_counts=False
+        docs, "doc_id", "text", alpha=0.5, interp=0.7
     ).select("id", "n_tokens", F.round("mean_inv_p", 4).alias("mean_inv_p"))
 
 

@@ -2,23 +2,25 @@
 registry queries are eager / lineage-cut (so the query-level plan shows
 only the final leg). Usage:
 
-    PLANS_ROUND=r19 python scripts/capture_op_plans.py <tag> <op> [...]
+    python scripts/capture_op_plans.py <tag> <op> [...]
 
 ops: jaccard_pairs, index_rows, bm25_topk_multi. Files land in
-plans/$PLANS_ROUND/OP_<op>_<tag>.txt (same rule as capture_plans.py).
+plans/r<N>/OP_<op>_<tag>.txt, N being ``registry._ROTATION_ROUND``
+(same rule as capture_plans.py).
 """
 
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from hazelcast_jet_contrib_spark.registry import _ROTATION_ROUND  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.01"
-OUT = REPO / "plans" / os.environ.get("PLANS_ROUND", "r18")
+OUT = REPO / "plans" / f"r{_ROTATION_ROUND}"
 
 
 def main() -> None:

@@ -1,6 +1,7 @@
 """Capture .explain("formatted") for named registry queries into
-plans/$PLANS_ROUND/<query>_<tag>.txt (PLANS_ROUND defaults to r18) —
-the before/after plan evidence for the optimization rounds.
+plans/r<N>/<query>_<tag>.txt, N being the registry's rotation round
+(``registry._ROTATION_ROUND``) — the before/after plan evidence for the
+optimization rounds.
 
 Usage: python scripts/capture_plans.py <tag> <query-name> [...]
        (tag is e.g. "before" or "after"; query names are exact, live or
@@ -20,10 +21,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-import os
+from hazelcast_jet_contrib_spark.registry import _ROTATION_ROUND  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-OUT = REPO / "plans" / os.environ.get("PLANS_ROUND", "r18")
+OUT = REPO / "plans" / f"r{_ROTATION_ROUND}"
 
 
 def main() -> None:

@@ -425,11 +425,11 @@ def _mmr_fixture(spark):
 
 
 def test_mmr_penalizes_redundancy(spark):
-    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank
+    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank_multi
 
     cand, emb = _mmr_fixture(spark)
-    out = [r["neighbor_id"] for r in mmr_rerank(
-        cand, emb, k=3, lam=0.5
+    out = [r["neighbor_id"] for r in mmr_rerank_multi(
+        cand, emb, k=3, lams=[0.5]
     ).orderBy("rank").collect()]
     # pick 1 (top rel); doc 2 is ~duplicate of 1 -> diverse doc 3 wins
     assert out[0] == 1 and out[1] == 3, out
@@ -437,19 +437,24 @@ def test_mmr_penalizes_redundancy(spark):
 
 
 def test_mmr_lambda_one_is_pure_relevance(spark):
-    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank
+    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank_multi
 
     cand, emb = _mmr_fixture(spark)
-    out = [r["neighbor_id"] for r in mmr_rerank(
-        cand, emb, k=4, lam=1.0
+    out = [r["neighbor_id"] for r in mmr_rerank_multi(
+        cand, emb, k=4, lams=[1.0]
     ).orderBy("rank").collect()]
     assert out == [1, 2, 3, 4], "lam=1 must reduce to relevance order"
 
 
 def test_mmr_matches_reference_greedy(spark):
+    """One mmr_rerank_multi call over a lambda sweep must emit, per lam,
+    exactly the reference greedy's picks (ids by rank) and their 6-dp
+    MMR values — the one-Arrow-pass sweep can never change a selection
+    (random multi-query shortlist)."""
     import numpy as np
+    import pytest as _pytest
 
-    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank
+    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank_multi
 
     rng = np.random.default_rng(5)
     vecs = rng.normal(size=(30, 8))
@@ -457,58 +462,53 @@ def test_mmr_matches_reference_greedy(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(30)],
         "vec_id long, embedding array<double>",
     )
-    rows, lam, k = [], 0.6, 6
-    for q in (0, 1):
+    rows, lams, k = [], [1.0, 0.7, 0.3], 6
+    for q in (0, 1, 2):
         for d in range(30):
             rows.append((q, d, round(float(rng.uniform(0, 1)), 6)))
     cand = spark.createDataFrame(rows, "query_id long, neighbor_id long, score double")
     got = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in mmr_rerank(cand, emb, k=k, lam=lam).collect()
+        (r["lam"], r["query_id"], r["rank"]): (r["neighbor_id"], r["mmr"])
+        for r in mmr_rerank_multi(cand, emb, k=k, lams=lams).collect()
     }
+    assert len(got) == len(lams) * 3 * k
     # reference greedy
     V = vecs / np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
     rel_by_q = {}
     for q, d, s in rows:
         rel_by_q.setdefault(q, {})[d] = s
-    for q, rels in rel_by_q.items():
-        order = sorted(rels, key=lambda d: (-rels[d], d))
-        rel = np.array([rels[d] for d in order])
-        ids = np.array(order)
-        max_sim = np.zeros(len(order))
-        picked = np.zeros(len(order), dtype=bool)
-        for rank in range(1, k + 1):
-            mmr = lam * rel - (1 - lam) * max_sim
-            mmr[picked] = -np.inf
-            best = int(np.argmax(np.round(mmr, 9)))
-            assert got[(q, rank)] == ids[best], (q, rank)
-            picked[best] = True
-            max_sim = np.maximum(max_sim, V[ids] @ V[ids[best]])
-
-
-def test_mmr_validation(spark):
-    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank
-
-    cand, emb = _mmr_fixture(spark)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        mmr_rerank(cand, emb, k=0)
-    with _pytest.raises(ValueError):
-        mmr_rerank(cand, emb, lam=1.5)
+    for lam in lams:
+        for q, rels in rel_by_q.items():
+            order = sorted(rels, key=lambda d: (-rels[d], d))
+            rel = np.array([rels[d] for d in order])
+            ids = np.array(order)
+            max_sim = np.zeros(len(order))
+            picked = np.zeros(len(order), dtype=bool)
+            chosen: list[int] = []
+            for rank in range(1, k + 1):
+                mmr = lam * rel - (1 - lam) * max_sim
+                mmr[picked] = -np.inf
+                best = int(np.argmax(np.round(mmr, 9)))
+                got_id, got_mmr = got[(lam, q, rank)]
+                assert got_id == ids[best], (lam, q, rank)
+                # the reported value is the documented formula: max
+                # cosine to the already-picked set, 0 for the first pick
+                sim = float(np.max(V[ids[chosen]] @ V[ids[best]])) if chosen else 0.0
+                want = round(float(lam * rel[best] - (1 - lam) * sim), 6)
+                assert got_mmr == _pytest.approx(want, abs=1e-6), (lam, q, rank)
+                chosen.append(best)
+                picked[best] = True
+                max_sim = np.maximum(max_sim, V[ids] @ V[ids[best]])
 
 
 def test_mmr_multi_rowlevel_equal_to_separate_calls(spark):
-    """mmr_rerank_multi(lams=[a, b]) must emit, per lam, EXACTLY the
-    rows (ids, 6dp scores, ranks) of mmr_rerank(lam=...) — the
-    one-Arrow-pass fusion can never change a selection (shared
-    _mmr_greedy core; random multi-query shortlist)."""
+    """mmr_rerank_multi(lams=[a, b, ...]) must emit, per lam, EXACTLY the
+    rows (ids, 6dp scores, ranks) of a separate one-lam call — the
+    one-Arrow-pass sweep can never change a selection (random
+    multi-query shortlist)."""
     import numpy as np
 
-    from hazelcast_jet_contrib_spark.operators.retrieval import (
-        mmr_rerank,
-        mmr_rerank_multi,
-    )
+    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank_multi
 
     rng = np.random.default_rng(11)
     vecs = rng.normal(size=(25, 6))
@@ -532,10 +532,23 @@ def test_mmr_multi_rowlevel_equal_to_separate_calls(spark):
     assert len(fused) == len(lams) * 3 * k
     for lam in lams:
         single = {
-            (lam, r["query_id"], r["rank"]): (r["neighbor_id"], r["mmr"])
-            for r in mmr_rerank(cand, emb, k=k, lam=lam).collect()
+            (r["lam"], r["query_id"], r["rank"]): (r["neighbor_id"], r["mmr"])
+            for r in mmr_rerank_multi(cand, emb, k=k, lams=[lam]).collect()
         }
+        assert len(single) == 3 * k
         assert {kk: v for kk, v in fused.items() if kk[0] == lam} == single
+
+
+def test_mmr_validation(spark):
+    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank_multi
+
+    cand, emb = _mmr_fixture(spark)
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError):
+        mmr_rerank_multi(cand, emb, k=0)
+    with _pytest.raises(ValueError):
+        mmr_rerank_multi(cand, emb, lams=[1.5])
 
 
 def test_mmr_multi_validation(spark):

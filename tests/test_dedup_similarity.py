@@ -468,8 +468,15 @@ def test_kmeans_plan_size_is_iteration_invariant(spark):
     round's final plan is points x checkpointed-centroids, so the 8-iter
     plan is the same size as the 2-iter plan; and because the checkpoint
     only materializes (never alters) the centroid values, the final
-    assignment is byte-identical across iteration-count-matched runs."""
+    assignment is byte-identical across iteration-count-matched runs.
+
+    The returned frame is always checkpointed, so its own plan is short
+    whether or not the rounds cut lineage; the plan measured is the
+    last round's assignment as handed to that final ``localCheckpoint``
+    (read from outside, as materialized_shuffle_stats does)."""
     import random
+
+    from pyspark.sql.classic.dataframe import DataFrame
 
     from hazelcast_jet_contrib_spark.operators.clustering import kmeans_lloyd
 
@@ -478,16 +485,26 @@ def test_kmeans_plan_size_is_iteration_invariant(spark):
         [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(60)],
         "vec_id long, embedding array<double>",
     )
-    plan_short = (
-        kmeans_lloyd(pts, "vec_id", "embedding", k=5, iters=2)
-        ._jdf.queryExecution()
-        .toString()
-    )
-    plan_long = (
-        kmeans_lloyd(pts, "vec_id", "embedding", k=5, iters=8)
-        ._jdf.queryExecution()
-        .toString()
-    )
+
+    def last_round_plan(iters: int) -> str:
+        plans: list[str] = []
+        original = DataFrame.localCheckpoint
+
+        def checkpoint(self, *args, **kwargs):
+            plans.append(self._jdf.queryExecution().toString())
+            return original(self, *args, **kwargs)
+
+        DataFrame.localCheckpoint = checkpoint
+        try:
+            kmeans_lloyd(pts, "vec_id", "embedding", k=5, iters=iters)
+        finally:
+            DataFrame.localCheckpoint = original
+        # one checkpoint per recompute round plus the returned frame's
+        assert len(plans) == iters, (iters, len(plans))
+        return plans[-1]
+
+    plan_short = last_round_plan(2)
+    plan_long = last_round_plan(8)
     # lineage is cut: the long run's centroids are a materialized
     # checkpoint scan, not 7 rounds of recompute joins
     assert "ExistingRDD" in plan_long or "LogicalRDD" in plan_long

@@ -51,15 +51,6 @@ def test_word_shingles_edges(spark):
     assert got[4] == ["one two three"]
 
 
-def test_char_shingles(spark):
-    df = spark.createDataFrame([(1, "abcdef"), (2, "abc")], "id long, text string")
-    got = {
-        r["id"]: r["sh"] for r in df.select("id", TX.shingles("text", 5).alias("sh")).collect()
-    }
-    assert got[1] == ["abcde", "bcdef"]
-    assert got[2] == []
-
-
 def test_quality_score_orders_sensibly(spark):
     df = spark.createDataFrame(
         [
