@@ -44,15 +44,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hazelcast_jet_contrib_spark.functions.text import tokens
+
 END = "</w>"  # end-of-word sentinel (classic BPE)
 
 
 def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
     return (
         docs.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("word")
+            F.explode(tokens(text_col)).alias("word")
         )
         .filter(F.col("word") != "")
         .groupBy("word")

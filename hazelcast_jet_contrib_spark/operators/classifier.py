@@ -36,6 +36,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hazelcast_jet_contrib_spark.functions.text import tokens
+
 BIAS_IDX = -1  # bias term rides the feature relation with val=1.0
 
 
@@ -62,7 +64,7 @@ def featurize(
 
     toks = docs.select(
         F.col(id_col).alias("id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"),
+        F.explode(tokens(text_col)).alias("tok"),
     ).filter(F.col("tok") != "")
     tf = (
         toks.select("id", F.pmod(F.xxhash64("tok"), F.lit(num_features)).alias("idx"))

@@ -587,9 +587,7 @@ def simhash_signature128(df: DataFrame, id_col: str, text_col: str) -> DataFrame
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text__"))
     ).select(
         "id",
-        F.array_distinct(F.split(F.lower(F.trim(F.col("__text__"))), r"\s+")).alias(
-            "__toks__"
-        ),
+        F.array_distinct(tokens("__text__")).alias("__toks__"),
     ).select(
         "id",
         F.transform("__toks__", lambda t: F.xxhash64(t)).alias("a0"),

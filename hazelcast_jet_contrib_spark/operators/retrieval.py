@@ -253,35 +253,29 @@ def _mmr_greedy(vecs, rel, k: int, lam: float):
     tests/test_analytics.py). Inputs: L2-normalized embedding rows +
     relevance, BOTH already sorted (rel desc, doc id asc) — argmax
     over the 9dp-rounded scores then resolves ties to the
-    highest-relevance, smallest-id candidate. Returns (chosen
-    positional indices, 6dp mmr scores)."""
+    highest-relevance, smallest-id candidate. The greedy maximizes
+    the documented formula: no penalty for the first pick, then the
+    unclamped max cosine to the picked set (an anti-correlated doc
+    earns a bonus). Returns (chosen positional indices, the 6dp mmr
+    score each pick maximized)."""
     import numpy as np
 
     n = len(rel)
     chosen: list[int] = []
-    max_sim = np.zeros(n)
+    mmr_vals: list[float] = []
+    max_sim = np.zeros(n)  # nothing picked yet: no penalty
     picked = np.zeros(n, dtype=bool)
-    for _ in range(min(k, n)):
+    for i in range(min(k, n)):
         mmr = lam * rel - (1.0 - lam) * max_sim
         mmr[picked] = -np.inf
         # ties -> smaller doc id (stable because the input is sorted by
         # id within equal rel and argmax takes the first maximum)
         best = int(np.argmax(np.round(mmr, 9)))
         chosen.append(best)
+        mmr_vals.append(round(float(mmr[best]), 6))
         picked[best] = True
-        max_sim = np.maximum(max_sim, vecs @ vecs[best])
-    mmr_vals = [
-        round(float(lam * rel[c] - (1 - lam) * 0), 6)
-        if i == 0
-        else round(
-            float(
-                lam * rel[c]
-                - (1 - lam) * float(np.max(vecs[chosen[:i]] @ vecs[c]))
-            ),
-            6,
-        )
-        for i, c in enumerate(chosen)
-    ]
+        sim = vecs @ vecs[best]
+        max_sim = sim if i == 0 else np.maximum(max_sim, sim)
     return chosen, mmr_vals
 
 

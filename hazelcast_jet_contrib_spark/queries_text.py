@@ -112,9 +112,7 @@ def fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     reordered = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat_ws(" ", F.reverse(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))).alias(
-            "text"
-        ),
+        F.concat_ws(" ", F.reverse(TX.tokens("text"))).alias("text"),
     )
     aug = docs.unionByName(reordered)
     return aug.groupBy(TX.fingerprint("text").alias("fp")).agg(

@@ -15,8 +15,12 @@ directory* as a per-subscription ack marker, not in Spark's checkpoint.
 committed — advances the marker (the broker-side cumulative ack). A
 restarted query (fresh checkpoint, same subscription) resumes from the
 marker: acknowledged segments are never redelivered, in-flight ones are
-— at-least-once, exactly the reference's contract. Pair the sink with
-`exactly_once.idempotent_foreach_batch` to absorb redelivery.
+— at-least-once, exactly the reference's contract. Redelivered messages
+arrive in NEW epochs of the restarted query, so absorb them with a sink
+that upserts on the message identity (stream, seq, key), not on the
+epoch: `exactly_once.idempotent_foreach_batch` absorbs only a replay of
+the same epoch, and raises when epoch ids restart behind its marker, so
+each checkpoint needs its own commit_dir.
 
 QoS per topic (stream): **QoS 1/2** topics ack on commit as above
 (at-least-once; the 1-vs-2 dedup half of QoS 2 is the idempotent-sink

@@ -9,15 +9,16 @@ supplies that downstream half on Spark, with the exactly-once story the
 reference builds from snapshots + resume tokens.
 
 Design (no lakehouse format required):
-- state is **versioned**: batch N writes `state/v{N}/` derived from
-  `v{N-1}` ∪ batch — a pure, deterministic function, fully distributed
-  (union + window dedup; no driver materialization);
-- a replayed epoch rewrites the same version directory and re-points
-  the marker — idempotent, so at-least-once foreachBatch becomes
-  exactly-once (same discipline as exactly_once.py, probed by
-  delivery_probe.py);
-- `current_state()` reads the newest *committed* version (marker file),
-  so readers never observe a half-written merge.
+- state is **versioned**: batch N writes `versions/e{N}/` derived from
+  the committed version ∪ batch — a pure, deterministic function, fully
+  distributed (union + window dedup; no driver materialization);
+- the epoch commit record is exactly_once.EpochCommitLog, the one
+  protocol of every exactly-once state directory (probed by
+  delivery_probe.py): a replayed committed epoch is a no-op, a crash
+  before the marker replays into the same version directory, and an
+  epoch that rewinds behind the marker raises;
+- `current_state()` reads the newest *committed* version, so readers
+  never observe a half-written merge.
 
 Change record contract: (key string, op in {'I','U','D'}, value, seq) —
 seq is the total order within a key (the resume-token/clusterTime
@@ -36,29 +37,22 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hazelcast_jet_contrib_spark.streaming.exactly_once import EpochCommitLog
+
 STATE_SCHEMA = "key string, value string, seq long"
+_VERSIONS = "versions"
 
 
-def _marker(state_dir: str) -> str:
-    return os.path.join(state_dir, "_CURRENT")
-
-
-def _read_current_version(state_dir: str) -> int | None:
-    try:
-        with open(_marker(state_dir)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
+def _newest(spark: SparkSession, log: EpochCommitLog, kind: str) -> DataFrame:
+    dirs = log.epoch_dirs(kind)
+    if not dirs:
+        return spark.createDataFrame([], STATE_SCHEMA)
+    return spark.read.parquet(dirs[-1]).select("key", "value", "seq")
 
 
 def current_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The newest committed materialization (empty frame before any)."""
-    v = _read_current_version(state_dir)
-    if v is None:
-        return spark.createDataFrame([], STATE_SCHEMA)
-    return spark.read.parquet(os.path.join(state_dir, f"v{v}")).select(
-        "key", "value", "seq"
-    )
+    return _newest(spark, EpochCommitLog(state_dir, "cdc_apply"), _VERSIONS)
 
 
 def _merge(prev: DataFrame, changes: DataFrame) -> DataFrame:
@@ -75,32 +69,13 @@ def _merge(prev: DataFrame, changes: DataFrame) -> DataFrame:
     )
 
 
-def _versions_of(coll_dir: str) -> list[int]:
-    try:
-        return sorted(
-            int(d[1:])
-            for d in os.listdir(coll_dir)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-    except FileNotFoundError:
-        return []
-
-
 def database_state(spark: SparkSession, root_dir: str, collection: str) -> DataFrame:
     """Newest committed materialization of one collection in a
     database-scoped CDC apply (empty frame before any). A collection
-    untouched since epoch K serves vK as long as the database marker has
-    advanced past K; version dirs beyond the marker (crash leftovers)
-    are never served."""
-    committed = _read_current_version(root_dir)
-    if committed is None:
-        return spark.createDataFrame([], STATE_SCHEMA)
-    vs = [v for v in _versions_of(os.path.join(root_dir, collection)) if v <= committed]
-    if not vs:
-        return spark.createDataFrame([], STATE_SCHEMA)
-    return spark.read.parquet(
-        os.path.join(root_dir, collection, f"v{vs[-1]}")
-    ).select("key", "value", "seq")
+    untouched since epoch K serves its epoch-K version as long as the
+    database marker has advanced past K; version dirs beyond the marker
+    (crash leftovers) are never served."""
+    return _newest(spark, EpochCommitLog(root_dir, "cdc_apply_database"), collection)
 
 
 def cdc_apply_database_foreach_batch(root_dir: str, keep_versions: int = 2):
@@ -110,11 +85,11 @@ def cdc_apply_database_foreach_batch(root_dir: str, keep_versions: int = 2):
 
     Change records carry ``collection`` alongside (key, op, value, seq).
     State materializes per collection under ``root_dir/<collection>/
-    v{epoch}`` but the commit marker is one file for the whole scope:
+    e{epoch}`` but the commit marker is one file for the whole scope:
     every collection touched by an epoch is rewritten first, then the
     marker flips — all collections advance atomically, exactly the
     one-resume-token semantics. A crash mid-epoch leaves some
-    collections with an uncommitted v{epoch} dir that readers ignore
+    collections with an uncommitted version dir that readers ignore
     (``database_state`` serves only versions <= marker) and the replay
     rewrites deterministically.
 
@@ -122,20 +97,11 @@ def cdc_apply_database_foreach_batch(root_dir: str, keep_versions: int = 2):
     (bounded by the number of collections in the database, not data
     volume). Same epoch no-op / rewind guards as the single-table apply.
     """
-    os.makedirs(root_dir, exist_ok=True)
+    log = EpochCommitLog(root_dir, "cdc_apply_database")
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        committed = _read_current_version(root_dir)
-        if committed is not None and committed == epoch_id:
+        if not log.begin(epoch_id):
             return
-        if committed is not None and committed > epoch_id:
-            raise RuntimeError(
-                f"cdc_apply_database: epoch {epoch_id} rewinds behind committed "
-                f"version {committed} in {root_dir!r} — the streaming query "
-                "restarted with a fresh checkpoint against existing state. "
-                "Resume with the original checkpointLocation, or use a new "
-                "root_dir."
-            )
         spark = batch_df.sparkSession
         batch_df = batch_df.select("collection", "key", "op", "value", "seq").persist()
         try:
@@ -150,75 +116,38 @@ def cdc_apply_database_foreach_batch(root_dir: str, keep_versions: int = 2):
                         "key", "op", "value", "seq"
                     ),
                 )
-                merged.write.mode("overwrite").parquet(
-                    os.path.join(root_dir, coll, f"v{epoch_id}")
-                )
+                merged.write.mode("overwrite").parquet(log.epoch_dir(coll, epoch_id))
         finally:
             batch_df.unpersist()
-        tmp = _marker(root_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(epoch_id))
-        os.replace(tmp, _marker(root_dir))
-        import shutil
-
+        log.commit(epoch_id)
         for coll in os.listdir(root_dir):
-            cdir = os.path.join(root_dir, coll)
-            if not os.path.isdir(cdir):
-                continue
-            for v in _versions_of(cdir)[:-keep_versions]:
-                shutil.rmtree(os.path.join(cdir, f"v{v}"), ignore_errors=True)
+            if os.path.isdir(os.path.join(root_dir, coll)):
+                log.prune(coll, keep_versions)
 
     return fn
 
 
 def cdc_apply_foreach_batch(state_dir: str, keep_versions: int = 2):
     """foreachBatch adapter: maintain the state table from a stream of
-    change records (cols: key, op, value, seq). Idempotent per epoch:
-    a replay of an already-committed epoch is a no-op (the marker is the
-    commit record — never read the version being rewritten); a replay
-    after a crash-before-marker rewrites the version from the intact
-    previous one. Committed versions older than `keep_versions` are
-    pruned.
-
-    Epoch-rewind guard: Spark's recovery replays at most the last
-    uncommitted epoch, so a legitimate replay always has
-    ``epoch_id == committed``. An ``epoch_id < committed`` means the
-    stream was restarted against this state_dir with a FRESH checkpoint
-    (epoch ids restart at 0) — silently skipping those batches until the
-    new epochs catch up would be silent data loss, so it raises instead:
-    resume with the original checkpointLocation, or point the restarted
-    query at a fresh state_dir."""
-    os.makedirs(state_dir, exist_ok=True)
+    change records (cols: key, op, value, seq). Idempotent per epoch
+    through the commit record (exactly_once.EpochCommitLog): a replay of
+    an already-committed epoch is a no-op (the marker is the commit
+    record — never read the version being rewritten); a replay after a
+    crash-before-marker rewrites the version from the intact previous
+    one; an epoch below the marker (the stream restarted against this
+    state_dir with a FRESH checkpoint) raises instead of silently
+    skipping batches: resume with the original checkpointLocation, or
+    point the restarted query at a fresh state_dir. Committed versions
+    older than `keep_versions` are pruned."""
+    log = EpochCommitLog(state_dir, "cdc_apply")
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        committed = _read_current_version(state_dir)
-        if committed is not None and committed == epoch_id:
-            return  # epoch already fully committed: replay is a no-op
-        if committed is not None and committed > epoch_id:
-            raise RuntimeError(
-                f"cdc_apply: epoch {epoch_id} rewinds behind committed version "
-                f"{committed} in {state_dir!r} — the streaming query restarted "
-                "with a fresh checkpoint against existing state. Resume with "
-                "the original checkpointLocation, or use a new state_dir."
-            )
-        spark = batch_df.sparkSession
-        prev = current_state(spark, state_dir)
+        if not log.begin(epoch_id):
+            return
+        prev = current_state(batch_df.sparkSession, state_dir)
         merged = _merge(prev, batch_df.select("key", "op", "value", "seq"))
-        out = os.path.join(state_dir, f"v{epoch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        tmp = _marker(state_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(epoch_id))
-        os.replace(tmp, _marker(state_dir))
-        # prune old committed versions (keep the newest `keep_versions`)
-        import shutil
-
-        versions = sorted(
-            int(d[1:])
-            for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-        for v in versions[:-keep_versions]:
-            shutil.rmtree(os.path.join(state_dir, f"v{v}"), ignore_errors=True)
+        merged.write.mode("overwrite").parquet(log.epoch_dir(_VERSIONS, epoch_id))
+        log.commit(epoch_id)
+        log.prune(_VERSIONS, keep_versions)
 
     return fn

@@ -7,13 +7,15 @@ The batch operators (operators/dedup.py) answer "which pairs in this
 corpus are near-dups"; this module answers the incremental question a
 streaming corpus build needs, with the index surviving restarts.
 
-Design (same idempotence discipline as streaming/cdc.py):
+Design (the epoch commit record is exactly_once.EpochCommitLog, the one
+protocol of every exactly-once state directory):
 - the index is an append-only store under ``state_dir``:
   ``bands/e{N}/`` (id, band, bh) and ``sets/e{N}/`` (id, hs) parquet
-  per epoch, plus ``accepted/e{N}/`` holding the admitted rows; a
-  ``_CURRENT`` marker commits an epoch atomically AFTER its three
-  directories are written. Crash leftovers above the marker are
-  invisible and a replay rewrites them deterministically.
+  per epoch, plus ``accepted/e{N}/`` holding the admitted rows; the
+  epoch commits AFTER its three directories are written. Crash
+  leftovers above the marker are invisible and a replay rewrites them
+  deterministically; a replayed committed epoch is a no-op and an
+  epoch that rewinds behind the marker raises.
 - admission = two LSH probes, both candidate-bounded: the batch's band
   keys self-join (within-batch dedup, min-id wins) and join the
   committed band index (history dedup); only candidate pairs are
@@ -21,11 +23,10 @@ Design (same idempotence discipline as streaming/cdc.py):
   the join touches is (band, bh, id) — ~24-byte rows, never documents.
 - at scale the per-epoch directory count grows with trigger count and
   the history probe degrades into a small-files scan; :meth:`compact`
-  rewrites all committed epochs into one size-targeted generation under
-  ``compacted/g{N}/`` and commits it by atomically replacing a
-  ``_COMPACTED`` marker holding ``(floor_epoch, generation)``. Readers
-  take the referenced generation plus epochs above the floor, so a
-  crash mid-compaction leaves an unreferenced generation that is simply
+  rewrites all committed epochs into one size-targeted generation and
+  commits it through the log's compaction record. Readers take the
+  referenced generation plus epochs above its floor, so a crash
+  mid-compaction leaves an unreferenced generation that is simply
   invisible — admission decisions are identical before, during, and
   after (tests/test_dedup_index.py).
 
@@ -46,6 +47,9 @@ from hazelcast_jet_contrib_spark.operators.dedup import (
     hashed_shingle_sets,
     minhash_signatures,
 )
+from hazelcast_jet_contrib_spark.streaming.exactly_once import EpochCommitLog
+
+_KINDS = ("bands", "sets", "accepted")
 
 
 class StreamingNearDupIndex:
@@ -70,73 +74,16 @@ class StreamingNearDupIndex:
         bands: int = 32,
         shingle_words: int = 3,
     ):
-        self.state_dir = state_dir
         self._id_col = id_col
         self._text_col = text_col
         self.threshold = threshold
         self.num_hashes = num_hashes
         self.bands = bands
         self.shingle_words = shingle_words
-        os.makedirs(state_dir, exist_ok=True)
-
-    # -- marker -------------------------------------------------------------
-    def _marker_path(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _committed(self) -> int | None:
-        try:
-            with open(self._marker_path()) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def _compaction_marker_path(self) -> str:
-        return os.path.join(self.state_dir, "_COMPACTED")
-
-    def _compaction_state(self) -> tuple[int, int] | None:
-        """(floor_epoch, generation) of the live compacted snapshot, or
-        None. Epochs <= floor live in ``compacted/g{generation}``."""
-        try:
-            with open(self._compaction_marker_path()) as f:
-                floor_s, gen_s = f.read().split()
-                return int(floor_s), int(gen_s)
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def _epoch_dirs(self, kind: str, up_to: int | None = None) -> list[str]:
-        """Directories visible for `kind`. `up_to` caps the epoch range
-        at a caller-captured commit snapshot — compact() passes its
-        snapshot so ALL kinds see the same epoch set even if a batch
-        commits mid-compaction (re-reading the marker per kind would
-        bake a newer epoch into the generation while the recorded floor
-        stays below it: duplicate rows forever after)."""
-        committed = self._committed() if up_to is None else up_to
-        if committed is None:
-            return []
-        comp = self._compaction_state()
-        floor = -1
-        dirs: list[str] = []
-        if comp is not None:
-            floor, gen = comp
-            gdir = os.path.join(self.state_dir, "compacted", f"g{gen}", kind)
-            if os.path.isdir(gdir):
-                dirs.append(gdir)
-        root = os.path.join(self.state_dir, kind)
-        try:
-            listing = os.listdir(root)
-        except FileNotFoundError:
-            return dirs
-        dirs += [
-            os.path.join(root, d)
-            for d in sorted(listing)
-            if d.startswith("e")
-            and d[1:].isdigit()
-            and floor < int(d[1:]) <= committed
-        ]
-        return dirs
+        self.commit_log = EpochCommitLog(state_dir, "neardup index")
 
     def _read(self, spark: SparkSession, kind: str, schema: str) -> DataFrame:
-        dirs = self._epoch_dirs(kind)
+        dirs = self.commit_log.epoch_dirs(kind)
         if not dirs:
             return spark.createDataFrame([], schema)
         return spark.read.parquet(*dirs)
@@ -145,17 +92,10 @@ class StreamingNearDupIndex:
     def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Admit the batch's non-near-dup rows and extend the index.
         Replay of a committed epoch is a no-op; an epoch below the
-        marker with a FRESH checkpoint raises (silent loss guard, same
-        contract as cdc.py)."""
-        committed = self._committed()
-        if committed is not None and committed == epoch_id:
+        marker (a FRESH checkpoint) raises — the commit log's guards."""
+        log = self.commit_log
+        if not log.begin(epoch_id):
             return
-        if committed is not None and committed > epoch_id:
-            raise RuntimeError(
-                f"neardup index: epoch {epoch_id} rewinds behind committed "
-                f"{committed} in {self.state_dir!r} — restart with the original "
-                "checkpointLocation or use a fresh state_dir."
-            )
         spark = batch_df.sparkSession
         from pyspark import StorageLevel
 
@@ -221,24 +161,19 @@ class StreamingNearDupIndex:
                 dropped.withColumnRenamed("id", id_col), id_col, "left_anti"
             )
 
-            e = f"e{epoch_id:09d}"
             survivors.write.mode("overwrite").parquet(
-                os.path.join(self.state_dir, "accepted", e)
+                log.epoch_dir("accepted", epoch_id)
             )
             surv_sig = sig.join(survivor_ids, "id")
             band_keys(surv_sig, self.num_hashes, self.bands).write.mode(
                 "overwrite"
-            ).parquet(os.path.join(self.state_dir, "bands", e))
+            ).parquet(log.epoch_dir("bands", epoch_id))
             surv_sig.select("id", "hs").write.mode("overwrite").parquet(
-                os.path.join(self.state_dir, "sets", e)
+                log.epoch_dir("sets", epoch_id)
             )
         finally:
             sig.unpersist()
-
-        tmp = self._marker_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(epoch_id))
-        os.replace(tmp, self._marker_path())
+        log.commit(epoch_id)
 
     def foreach_batch(self):
         """The ``foreachBatch`` callable."""
@@ -249,33 +184,16 @@ class StreamingNearDupIndex:
         self, spark: SparkSession, target_file_bytes: int = 128 << 20
     ) -> bool:
         """Rewrite all committed epochs (and any prior compacted
-        generation) into one size-targeted generation, then atomically
-        point the ``_COMPACTED`` marker at it. Returns False if there is
-        nothing new to compact (idempotent re-run).
-
-        Safe to run between micro-batches: epochs ABOVE the captured
-        floor are untouched and stay visible; a crash before the marker
-        swap leaves an unreferenced generation (invisible, rewritten by
-        the next run); cleanup of superseded directories is best-effort
-        because readers never look at epochs at or below the floor nor
-        at non-referenced generations. Bands are repartitioned on
-        (band, bh) so a probe join's shuffle reads clustered files."""
+        generation) into one size-targeted generation committed through
+        the log's compaction record (exactly_once.EpochCommitLog.compact:
+        one captured snapshot for all three kinds, crash-invisible until
+        the record swaps). Returns False if there is nothing new to
+        compact (idempotent re-run). Safe to run between micro-batches.
+        Bands are repartitioned on (band, bh) so a probe join's shuffle
+        reads clustered files."""
         import math
-        import shutil
 
-        committed = self._committed()
-        if committed is None:
-            return False
-        comp = self._compaction_state()
-        if comp is not None and comp[0] >= committed:
-            return False  # everything committed is already compacted
-        next_gen = comp[1] + 1 if comp is not None else 0
-
-        repart = {"bands": ("band", "bh")}
-        for kind in ("bands", "sets", "accepted"):
-            dirs = self._epoch_dirs(kind, up_to=committed)
-            if not dirs:
-                continue
+        def write(kind: str, dirs: list[str], out: str) -> None:
             n_bytes = 0
             for d in dirs:
                 for root, _, files in os.walk(d):
@@ -286,38 +204,19 @@ class StreamingNearDupIndex:
                     )
             n_files = max(1, math.ceil(n_bytes / target_file_bytes))
             df = spark.read.parquet(*dirs)
-            cols = repart.get(kind)
-            df = df.repartition(n_files, *cols) if cols else df.coalesce(n_files)
-            df.write.mode("overwrite").parquet(
-                os.path.join(self.state_dir, "compacted", f"g{next_gen}", kind)
-            )
+            if kind == "bands":
+                df = df.repartition(n_files, "band", "bh")
+            else:
+                df = df.coalesce(n_files)
+            df.write.mode("overwrite").parquet(out)
 
-        tmp = self._compaction_marker_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{committed} {next_gen}")
-        os.replace(tmp, self._compaction_marker_path())
-
-        # best-effort cleanup of superseded storage (invisible either way)
-        for kind in ("bands", "sets", "accepted"):
-            root = os.path.join(self.state_dir, kind)
-            try:
-                listing = os.listdir(root)
-            except FileNotFoundError:
-                continue
-            for d in listing:
-                if d.startswith("e") and d[1:].isdigit() and int(d[1:]) <= committed:
-                    shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        croot = os.path.join(self.state_dir, "compacted")
-        for d in os.listdir(croot):
-            if d.startswith("g") and d[1:].isdigit() and int(d[1:]) != next_gen:
-                shutil.rmtree(os.path.join(croot, d), ignore_errors=True)
-        return True
+        return self.commit_log.compact(_KINDS, write)
 
     # -- readers ------------------------------------------------------------
     def accepted(self, spark: SparkSession, schema: str | None = None) -> DataFrame:
         """All rows admitted by committed epochs (empty frame before
         any). ``schema`` is required only for the empty case."""
-        dirs = self._epoch_dirs("accepted")
+        dirs = self.commit_log.epoch_dirs("accepted")
         if not dirs:
             if schema is None:
                 raise ValueError("no committed epochs yet; pass schema")

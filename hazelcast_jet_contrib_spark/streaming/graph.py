@@ -5,14 +5,14 @@ iteration from the previous epoch's ranks (operators/graph.py
 ``pagerank(init_ranks=...)``), so a handful of sweeps absorbs the
 delta instead of a full cold iteration count.
 
-Design (the StreamingNearDupIndex / cdc.py idempotence discipline):
+Design (the epoch commit record is exactly_once.EpochCommitLog, the one
+protocol of every exactly-once state directory):
 - state under ``state_dir``: ``edges/e{N}/`` (src, dst parquet) and
-  ``ranks/e{N}/`` (node, rank parquet) per epoch, committed by
-  atomically replacing a ``_CURRENT`` marker AFTER both directories
-  are written. A replayed epoch (foreachBatch redelivery after crash)
-  with id <= the marker is skipped — leftovers above the marker are
-  invisible and get rewritten deterministically, so delivery is
-  exactly-once in effect.
+  ``ranks/e{N}/`` (node, rank parquet) per epoch, committed AFTER both
+  directories are written. A replayed committed epoch (foreachBatch
+  redelivery after crash) is a no-op, an epoch that rewinds behind the
+  marker raises, and leftovers above the marker are invisible and get
+  rewritten deterministically, so delivery is exactly-once in effect.
 - per epoch: ranks = pagerank(committed ∪ delta edges,
   iterations=delta_iterations, init_ranks=previous ranks). Nodes new
   to the graph enter at 1/N before mass normalization (the operator's
@@ -30,14 +30,13 @@ Scale shape: per epoch exactly ``delta_iterations`` sweeps of the
 |V|-row warm-start join; epoch state on disk is the edge set + one
 rank vector — no driver-side graph state. The accumulated ``edges/``
 epoch directories are re-read each epoch; :meth:`compact` rewrites
-them into one marker-committed ``edges/g{N}`` generation (new dir,
-atomic marker flip, THEN cleanup — at no instant is the only copy of
-any edge unreachable). Edge sets are append-only under this contract
-(no retractions).
+them into one generation committed through the log's compaction record
+(new dir, atomic record swap, THEN cleanup — at no instant is the only
+copy of any edge unreachable). Edge sets are append-only under this
+contract (no retractions).
 
 Reference lineage: the reference ships no graph operators (this
-extends the engine's pipeline family); the epoch-commit mechanics
-mirror streaming/dedup_index.py:51.
+extends the engine's pipeline family).
 """
 
 from __future__ import annotations
@@ -48,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hazelcast_jet_contrib_spark.operators.graph import pagerank
+from hazelcast_jet_contrib_spark.streaming.exactly_once import EpochCommitLog
 
 
 class StreamingPageRank:
@@ -70,111 +70,39 @@ class StreamingPageRank:
     ) -> None:
         if delta_iterations < 1:
             raise ValueError("delta_iterations must be >= 1")
-        self.state_dir = state_dir
         self.src_col, self.dst_col = src_col, dst_col
         self.damping = damping
         self.iterations = iterations
         self.delta_iterations = delta_iterations
-        # marker/listing I/O is driver-local; creating a literal
-        # "s3a:/..." directory for a remote URI would silently split
-        # state between filesystems
-        if "://" in state_dir and not state_dir.startswith("file:"):
-            raise ValueError(
-                "StreamingPageRank state_dir must be a driver-local path "
-                "(the commit marker and epoch listing use local file I/O, "
-                "like the message-log and MinHash-index maintainers)"
-            )
-        os.makedirs(state_dir, exist_ok=True)
-
-    # -- commit marker (atomic replace, the message_log/cdc pattern).
-    # Format: "epoch" or "epoch g<gen>" — the optional generation names
-    # a compacted edge base (edges/g{gen}) that supersedes every epoch
-    # dir with id <= gen, exactly dedup_index's (floor, generation)
-    # compaction marker specialized to this layout.
-    def _marker(self) -> str:
-        return os.path.join(self.state_dir, "_CURRENT")
-
-    def _committed_state(self) -> tuple[int, int | None] | None:
-        try:
-            with open(self._marker()) as f:
-                parts = f.read().split()
-            epoch = int(parts[0])
-            gen = int(parts[1][1:]) if len(parts) > 1 else None
-            return epoch, gen
-        except (OSError, ValueError, IndexError):
-            return None
-
-    def _committed(self) -> int | None:
-        st = self._committed_state()
-        return None if st is None else st[0]
-
-    def _commit(self, epoch: int, gen: int | None) -> None:
-        tmp = self._marker() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(epoch) if gen is None else f"{epoch} g{gen}")
-        os.replace(tmp, self._marker())
-
-    def _epoch_dirs(self, kind: str, up_to: int, floor: int | None = None) -> list[str]:
-        root = os.path.join(self.state_dir, kind)
-        if not os.path.isdir(root):
-            return []
-        out = []
-        for d in sorted(os.listdir(root)):
-            if d.startswith("e") and d[1:].isdigit():
-                n = int(d[1:])
-                if n <= up_to and (floor is None or n > floor):
-                    out.append(os.path.join(root, d))
-        return out
-
-    def _edge_dirs(self, up_to: int) -> list[str]:
-        """The committed edge layout: the generation base (if any) plus
-        every epoch dir ABOVE the generation floor — epochs at or below
-        the floor are superseded duplicates awaiting cleanup."""
-        st = self._committed_state()
-        gen = st[1] if st else None
-        dirs = []
-        if gen is not None:
-            gdir = os.path.join(self.state_dir, "edges", f"g{gen}")
-            if os.path.isdir(gdir):
-                dirs.append(gdir)
-        dirs += self._epoch_dirs("edges", up_to, floor=gen)
-        return dirs
+        self.commit_log = EpochCommitLog(state_dir, "StreamingPageRank")
 
     # -- readers --------------------------------------------------------
     def edges(self, spark: SparkSession) -> DataFrame | None:
         """The accumulated committed edge set (distinct src, dst)."""
-        cur = self._committed()
-        if cur is None:
-            return None
-        dirs = self._edge_dirs(cur)
+        dirs = self.commit_log.epoch_dirs("edges")
         return spark.read.parquet(*dirs).distinct() if dirs else None
 
     def ranks(self, spark: SparkSession) -> DataFrame | None:
         """The latest committed rank vector (node, rank)."""
-        cur = self._committed()
+        cur = self.commit_log.committed()
         if cur is None:
             return None
-        root = os.path.join(self.state_dir, "ranks", f"e{cur}")
+        root = self.commit_log.epoch_dir("ranks", cur)
         return spark.read.parquet(root) if os.path.isdir(root) else None
 
     # -- the foreachBatch body -------------------------------------------
     def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        st = self._committed_state()
-        cur = st[0] if st else None
-        gen = st[1] if st else None
-        if cur is not None and epoch_id <= cur:
-            return  # replayed epoch: already folded in, skip (idempotent)
+        log = self.commit_log
+        if not log.begin(epoch_id):
+            return
         spark = batch_df.sparkSession
         delta = batch_df.select(
             F.col(self.src_col).alias("src"), F.col(self.dst_col).alias("dst")
         ).distinct()
         # write the delta FIRST (uncommitted until the marker moves)
-        delta.write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, "edges", f"e{epoch_id}")
-        )
-        all_dirs = self._edge_dirs(cur) if cur is not None else []
-        all_dirs.append(os.path.join(self.state_dir, "edges", f"e{epoch_id}"))
-        all_edges = spark.read.parquet(*all_dirs).distinct()
+        delta_dir = log.epoch_dir("edges", epoch_id)
+        delta.write.mode("overwrite").parquet(delta_dir)
+        all_edges = spark.read.parquet(*log.epoch_dirs("edges"), delta_dir).distinct()
         prev = self.ranks(spark)
         if prev is None:
             out = pagerank(
@@ -187,10 +115,8 @@ class StreamingPageRank:
                 iterations=self.delta_iterations,
                 init_ranks=prev,
             )
-        out.write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, "ranks", f"e{epoch_id}")
-        )
-        self._commit(epoch_id, gen)  # carry the generation floor forward
+        out.write.mode("overwrite").parquet(log.epoch_dir("ranks", epoch_id))
+        log.commit(epoch_id)
 
     def foreach_batch(self):
         return self.apply_batch
@@ -200,60 +126,29 @@ class StreamingPageRank:
         """Rewrite the accumulated per-epoch edge dirs into one
         committed GENERATION and drop superseded rank vectors — the
         small-files bound for a long-running stream (one dir per
-        trigger otherwise; the dedup-index compaction concern).
+        trigger otherwise).
 
-        Crash safety is marker-committed, never in-place (the
-        dedup_index generation pattern): the consolidated edge set is
-        written to a NEW ``edges/g{cur}`` dir that no reader sees,
-        then the marker atomically flips to ``"{cur} g{cur}"`` —
-        readers switch from (old gen + epochs) to the new generation
-        in one os.replace — and only THEN are the superseded epoch
-        dirs and the old generation deleted. A crash before the flip
-        leaves the old layout fully intact (the new generation is
-        invisible); a crash after the flip leaves superseded dirs the
-        reader already excludes by the generation floor; re-running
-        compaction finishes the cleanup. At no instant is the only
-        copy of any edge unreachable. Rank history: only the marker's
+        Crash safety is the log's compaction record, never in-place
+        (exactly_once.EpochCommitLog.compact): the consolidated edge set
+        is written to a NEW generation dir that no reader sees, the
+        record swaps atomically, and only THEN are the superseded epoch
+        dirs and the old generation deleted; re-running compaction
+        finishes a crashed cleanup. Rank history: only the marker's
         epoch is ever read, so older ``ranks/e*`` dirs delete freely.
 
-        Returns {"dirs_before": n, "dirs_after": m} for observability.
-        Driver-local FS only (os walk/rmtree), like the message-log
-        and MinHash-index compactors."""
-        import shutil
+        Returns {"dirs_before": n, "dirs_after": m} for observability."""
+        log = self.commit_log
 
-        st = self._committed_state()
-        if st is None:
-            return {"dirs_before": 0, "dirs_after": 0}
-        cur, old_gen = st
-        edge_dirs = self._edge_dirs(cur)
-        rank_dirs = self._epoch_dirs("ranks", cur)
-        before = len(edge_dirs) + len(rank_dirs)
-        if old_gen != cur:
-            # the write target g{cur} is OUTSIDE the read set (readers
-            # use g{old_gen} + epochs), so no in-place overwrite; a
-            # stale g{cur} from a crashed previous attempt is
-            # uncommitted and safe to rewrite
-            self.edges(spark).write.mode("overwrite").parquet(
-                os.path.join(self.state_dir, "edges", f"g{cur}")
-            )
-            self._commit(cur, cur)  # atomic reader switch
-        # cleanup: epochs <= the (new) generation floor and the old
-        # generation are superseded duplicates; any crash here leaves
-        # them for the next run, readers unaffected
-        for d in self._epoch_dirs("edges", cur):
-            shutil.rmtree(d, ignore_errors=True)
-        if old_gen is not None and old_gen != cur:
-            shutil.rmtree(
-                os.path.join(self.state_dir, "edges", f"g{old_gen}"),
-                ignore_errors=True,
-            )
-        for d in rank_dirs:
-            if not d.endswith(f"e{cur}"):
-                shutil.rmtree(d, ignore_errors=True)
-        after = len(self._edge_dirs(cur)) + len(
-            self._epoch_dirs("ranks", cur)
-        )
-        return {"dirs_before": before, "dirs_after": after}
+        def n_dirs() -> int:
+            return len(log.epoch_dirs("edges")) + len(log.epoch_dirs("ranks"))
+
+        def write(_kind: str, dirs: list[str], out: str) -> None:
+            spark.read.parquet(*dirs).distinct().write.mode("overwrite").parquet(out)
+
+        before = n_dirs()
+        log.compact(("edges",), write)
+        log.prune("ranks", keep=1)
+        return {"dirs_before": before, "dirs_after": n_dirs()}
 
 
 __all__ = ["StreamingPageRank"]

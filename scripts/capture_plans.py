@@ -8,9 +8,10 @@ Usage: python scripts/capture_plans.py <tag> <query-name> [...]
        retired)
 
 Notes: EAGER queries (local-k collect, lineage-cut loops) return a frame
-whose plan is only the final leg; the captured plan is still the right
-artifact for the *returned* computation, and for those queries the file
-additionally records the query's executed shuffle stats when available.
+whose plan is only the final leg — often just a scan of the collected
+result, which shows nothing of the operators that built it. The script
+warns when a captured plan is only such a scan; dump the operator-level
+relation with scripts/capture_op_plans.py instead.
 """
 
 from __future__ import annotations
@@ -25,6 +26,15 @@ from hazelcast_jet_contrib_spark.registry import _ROTATION_ROUND  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 OUT = REPO / "plans" / f"r{_ROTATION_ROUND}"
+_RESULT_SCANS = ("Scan ExistingRDD", "LocalTableScan")
+
+
+def _is_result_scan(plan: str) -> bool:
+    """True when the physical plan tree is a lone scan of an already
+    computed result (an eager query's collected rows or checkpoint)."""
+    tree = plan.split("== Physical Plan ==", 1)[-1].strip().split("\n\n", 1)[0]
+    nodes = [line.lstrip(" :+-*") for line in tree.splitlines()]
+    return len(nodes) == 1 and nodes[0].startswith(_RESULT_SCANS)
 
 
 def main() -> None:
@@ -44,6 +54,12 @@ def main() -> None:
         out = OUT / f"{name}_{tag}.txt"
         out.write_text(plan)
         print(f"wrote {out.relative_to(REPO)} ({len(plan)} chars)")
+        if _is_result_scan(plan):
+            print(
+                f"WARNING: {name}'s plan is only a scan of its computed "
+                "result; dump its operator relation with "
+                "scripts/capture_op_plans.py"
+            )
         spark.catalog.clearCache()
     spark.stop()
 

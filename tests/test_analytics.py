@@ -482,23 +482,51 @@ def test_mmr_matches_reference_greedy(spark):
             order = sorted(rels, key=lambda d: (-rels[d], d))
             rel = np.array([rels[d] for d in order])
             ids = np.array(order)
-            max_sim = np.zeros(len(order))
             picked = np.zeros(len(order), dtype=bool)
             chosen: list[int] = []
             for rank in range(1, k + 1):
+                # the documented formula: max cosine to the already-
+                # picked set (unclamped), 0 for the first pick
+                max_sim = (
+                    np.max(V[ids[chosen]] @ V[ids].T, axis=0)
+                    if chosen
+                    else np.zeros(len(order))
+                )
                 mmr = lam * rel - (1 - lam) * max_sim
                 mmr[picked] = -np.inf
                 best = int(np.argmax(np.round(mmr, 9)))
                 got_id, got_mmr = got[(lam, q, rank)]
                 assert got_id == ids[best], (lam, q, rank)
-                # the reported value is the documented formula: max
-                # cosine to the already-picked set, 0 for the first pick
-                sim = float(np.max(V[ids[chosen]] @ V[ids[best]])) if chosen else 0.0
-                want = round(float(lam * rel[best] - (1 - lam) * sim), 6)
+                want = round(float(mmr[best]), 6)
                 assert got_mmr == _pytest.approx(want, abs=1e-6), (lam, q, rank)
                 chosen.append(best)
                 picked[best] = True
-                max_sim = np.maximum(max_sim, V[ids] @ V[ids[best]])
+
+
+def test_mmr_anti_correlated_candidate_earns_its_bonus(spark):
+    """The greedy selects on the score it reports: a candidate whose
+    cosine to the picked set is negative gains (1 - lam) * |cos| and
+    can overtake a higher-relevance orthogonal one. Doc 2 is the
+    antipode of doc 1 (cos -1), doc 3 is orthogonal to both; at lam
+    0.5 the second pick is doc 2 (0.25 + 0.5 = 0.75 > 0.3) — a
+    penalty clamped at 0 would pick doc 3 instead."""
+    from hazelcast_jet_contrib_spark.operators.retrieval import mmr_rerank_multi
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [-1.0, 0.0]), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cand = spark.createDataFrame(
+        [(7, 1, 0.9), (7, 2, 0.5), (7, 3, 0.6)],
+        "query_id long, neighbor_id long, score double",
+    )
+    got = [
+        (r["neighbor_id"], r["mmr"])
+        for r in mmr_rerank_multi(cand, emb, k=3, lams=[0.5])
+        .orderBy("rank")
+        .collect()
+    ]
+    assert got == [(1, 0.45), (2, 0.75), (3, 0.3)], got
 
 
 def test_mmr_multi_rowlevel_equal_to_separate_calls(spark):

@@ -87,7 +87,7 @@ def test_streaming_neardup_index_across_batches_and_restart(spark, tmp_path):
     assert got2 == {1, 3, 12}, f"history dedup must reject 10 and 11: {got2}"
 
     # committed-epoch replay is a no-op (idempotence half)
-    committed = index._committed()
+    committed = index.commit_log.committed()
     replay = spark.createDataFrame([(99, BASE)], "doc_id long, text string")
     index.apply_batch(replay, committed)
     got3 = {r["doc_id"] for r in index.accepted(spark).collect()}
@@ -168,8 +168,8 @@ def test_compaction_preserves_admission_and_bounds_files(spark, tmp_path):
     assert index.compact(spark) is True
     # accepted corpus identical, band dirs collapsed to the generation
     assert {r["doc_id"] for r in index.accepted(spark).collect()} == before
-    assert index._epoch_dirs("bands") == [
-        os.path.join(state, "compacted", "g0", "bands")
+    assert index.commit_log.epoch_dirs("bands") == [
+        os.path.join(state, "compacted", "g2", "bands")
     ]
     assert index.compact(spark) is False  # idempotent re-run: no-op
 
@@ -188,13 +188,13 @@ def test_compaction_preserves_admission_and_bounds_files(spark, tmp_path):
 
     # a second compaction folds the new epoch in; file count stays bounded
     assert index.compact(spark) is True
-    assert len(index._epoch_dirs("bands")) == 1
+    assert len(index.commit_log.epoch_dirs("bands")) == 1
     assert {r["doc_id"] for r in index.accepted(spark).collect()} == after
 
     # crash simulation: an unreferenced generation directory is invisible
     ghost = os.path.join(state, "compacted", "g99", "bands")
     os.makedirs(ghost)
-    assert ghost not in index._epoch_dirs("bands")
+    assert ghost not in index.commit_log.epoch_dirs("bands")
 
 
 def test_streaming_curation_pipeline_gates_then_index(spark, tmp_path):
@@ -237,7 +237,7 @@ def test_streaming_curation_pipeline_gates_then_index(spark, tmp_path):
     assert got2 == {1, 3, 12}, got2
 
     # replaying the committed epoch with gated input is still a no-op
-    committed = index._committed()
+    committed = index.commit_log.committed()
     replay = spark.createDataFrame(
         [(99, BASE), (98, soup)], "doc_id long, text string"
     )
@@ -292,11 +292,11 @@ def test_epoch_dirs_snapshot_cap_excludes_later_commits(spark, tmp_path):
     )
     b1 = spark.createDataFrame([(1, BASE)], "doc_id long, text string")
     index.apply_batch(b1, 0)
-    snap = index._committed()
+    snap = index.commit_log.committed()
     b2 = spark.createDataFrame([(2, OTHER)], "doc_id long, text string")
     index.apply_batch(b2, snap + 1)
-    assert index._committed() == snap + 1
-    capped = index._epoch_dirs("accepted", up_to=snap)
-    uncapped = index._epoch_dirs("accepted")
+    assert index.commit_log.committed() == snap + 1
+    capped = index.commit_log.epoch_dirs("accepted", up_to=snap)
+    uncapped = index.commit_log.epoch_dirs("accepted")
     assert len(uncapped) == len(capped) + 1
     assert all(f"e{snap + 1}" not in d for d in capped)

@@ -7,12 +7,9 @@ from __future__ import annotations
 
 import json
 import os
-from glob import glob
 
-from hazelcast_jet_contrib_spark.streaming.delivery_probe import (
-
-    probe_exactly_once_target,
-)
+from hazelcast_jet_contrib_spark.streaming.delivery_probe import probe_exactly_once_target
+from hazelcast_jet_contrib_spark.streaming.exactly_once import idempotent_foreach_batch
 
 import pytest
 
@@ -26,29 +23,29 @@ pytestmark = pytest.mark.slow
 
 
 def _epoch_store(root: str):
-    """File-backed sink target using the commit-marker discipline of
-    exactly_once.idempotent_foreach_batch."""
+    """File-backed sink target behind the shipping
+    exactly_once.idempotent_foreach_batch (its EpochCommitLog is the
+    commit record of every exactly-once state directory). The writer
+    itself blindly appends, so only the commit record can make a replay
+    a no-op; each connect() is a new writer incarnation over the same
+    commit directory."""
+    data = os.path.join(root, "data.jsonl")
+
+    def append(rows, epoch_id):
+        with open(data, "a") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
 
     def connect():
         os.makedirs(root, exist_ok=True)
-        return root
+        return idempotent_foreach_batch(append, os.path.join(root, "commits"))
 
     def write_epoch(client, epoch_id, rows):
-        marker = os.path.join(client, f"epoch-{epoch_id}.committed")
-        if os.path.exists(marker):
-            return  # already delivered: replay must be a no-op
-        with open(os.path.join(client, f"epoch-{epoch_id}.jsonl"), "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        with open(marker, "w") as f:
-            f.write("committed")
+        client(rows, epoch_id)
 
     def read_all(client):
-        out = []
-        for p in sorted(glob(os.path.join(client, "epoch-*.jsonl"))):
-            with open(p) as f:
-                out.extend(json.loads(line) for line in f)
-        return out
+        with open(data) as f:
+            return [json.loads(line) for line in f]
 
     return connect, write_epoch, read_all
 

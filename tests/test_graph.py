@@ -279,7 +279,7 @@ def test_streaming_pagerank_tracks_fixpoint_across_restart(spark, tmp_path):
 
 def test_streaming_pagerank_crash_before_commit_replays_cleanly(spark, tmp_path):
     """The epoch-commit discipline under a crash INSIDE the window:
-    edges/ranks written but the _CURRENT marker not yet moved. The
+    edges/ranks written but the commit marker not yet moved. The
     leftovers are invisible (readers take the marker), and the
     replayed epoch rewrites them deterministically — same final state
     as the crash-free run; a second replay of a COMMITTED epoch is a
@@ -297,12 +297,8 @@ def test_streaming_pagerank_crash_before_commit_replays_cleanly(spark, tmp_path)
     committed0 = {r["node"]: r["rank"] for r in spr.ranks(spark).collect()}
 
     # crash simulation: epoch 1's dirs land but the marker never moves
-    import shutil
-
     spr.apply_batch(df1, 1)
-    shutil.copyfile(spr._marker(), str(tmp_path / "m"))
-    with open(spr._marker(), "w") as f:
-        f.write("0")  # marker still points at epoch 0
+    spr.commit_log.commit(0)  # marker still points at epoch 0
     # readers see ONLY epoch 0 state
     assert {r["node"]: r["rank"] for r in spr.ranks(spark).collect()} == committed0
     assert {(r["src"], r["dst"]) for r in spr.edges(spark).collect()} == set(edges0)
@@ -310,7 +306,7 @@ def test_streaming_pagerank_crash_before_commit_replays_cleanly(spark, tmp_path)
     # replayed epoch rewrites the leftovers and commits
     spr.apply_batch(df1, 1)
     after_replay = {r["node"]: r["rank"] for r in spr.ranks(spark).collect()}
-    assert spr._committed() == 1
+    assert spr.commit_log.committed() == 1
     # identical to the crash-free reference run
     ref = StreamingPageRank(str(tmp_path / "s2"), delta_iterations=4)
     ref.apply_batch(df0, 0)
@@ -320,6 +316,22 @@ def test_streaming_pagerank_crash_before_commit_replays_cleanly(spark, tmp_path)
     # committed-epoch replay is a no-op
     spr.apply_batch(df1, 1)
     assert {r["node"]: r["rank"] for r in spr.ranks(spark).collect()} == want
+
+
+def test_streaming_pagerank_rewound_epoch_raises(spark, tmp_path):
+    """A query restarted with a FRESH checkpoint replays epoch ids from 0
+    against existing state: an epoch below the marker must raise, not be
+    skipped as if it were a replay (the batch would be lost)."""
+    from hazelcast_jet_contrib_spark.streaming.graph import StreamingPageRank
+
+    spr = StreamingPageRank(str(tmp_path / "s"), delta_iterations=2)
+    spr.apply_batch(spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long"), 0)
+    spr.apply_batch(spark.createDataFrame([(2, 3)], "src long, dst long"), 1)
+    fresh = spark.createDataFrame([(3, 4)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="rewinds behind"):
+        spr.apply_batch(fresh, 0)
+    assert spr.commit_log.committed() == 1
+    assert (3, 4) not in {(r["src"], r["dst"]) for r in spr.edges(spark).collect()}
 
 
 def test_streaming_pagerank_compaction_preserves_state(spark, tmp_path):
@@ -382,11 +394,11 @@ def test_streaming_pagerank_compaction_crash_windows_lose_nothing(spark, tmp_pat
 
     # (a) crash before the flip: generation dir exists, marker unchanged
     spr.edges(spark).write.mode("overwrite").parquet(
-        os.path.join(state, "edges", "g1")
+        spr.commit_log.generation_dir("edges", 1)
     )
     assert {(r["src"], r["dst"]) for r in spr.edges(spark).collect()} == all_edges
     stats = spr.compact(spark)  # converges: rewrites g1, flips, cleans
-    assert spr._committed_state() == (1, 1)
+    assert spr.commit_log.compaction() == (1, 1)
     assert {(r["src"], r["dst"]) for r in spr.edges(spark).collect()} == all_edges
 
     # (b) crash after the flip: plant a superseded epoch dir; the

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hazelcast_jet_contrib_spark.streaming import message_log
 from hazelcast_jet_contrib_spark.streaming.exactly_once import (
+    EpochCommitLog,
     epoch_keyed_parquet_writer,
     idempotent_foreach_batch,
 )
@@ -71,6 +72,72 @@ def test_message_log_exactly_once_across_restart(spark, tmp_path):
     assert result.select("stream", "seq", "key").distinct().count() == total
     streams = {r["stream"] for r in result.select("stream").distinct().collect()}
     assert streams == {f"stream-{s}" for s in range(N_STREAMS)}
+
+
+def test_idempotent_foreach_batch_rewound_epoch_raises(tmp_path):
+    """A query restarted with a FRESH checkpoint replays epoch ids from 0:
+    an epoch below the marker must raise, not be skipped as if it were a
+    replay (the batch would be lost). A replay of the committed epoch
+    stays a no-op."""
+    written = []
+    fn = idempotent_foreach_batch(
+        lambda batch, epoch_id: written.append((batch, epoch_id)),
+        str(tmp_path / "commits"),
+    )
+    fn("b0", 0)
+    fn("b1", 1)
+    fn("b1-replay", 1)
+    assert written == [("b0", 0), ("b1", 1)]
+    with pytest.raises(RuntimeError, match="rewinds behind"):
+        fn("fresh-b0", 0)
+    assert written == [("b0", 0), ("b1", 1)]
+
+
+def test_epoch_commit_log_guards_and_snapshot_listing(tmp_path):
+    """The one commit record of every exactly-once state directory: a
+    replayed committed epoch is a no-op, an epoch below the marker
+    raises, a URI state_dir is refused, and a listing capped at a
+    captured snapshot excludes epochs committed after it."""
+    state = str(tmp_path / "state")
+    log = EpochCommitLog(state, "probe")
+    assert log.committed() is None and log.epoch_dirs("rows") == []
+    for epoch_id in (0, 1):
+        assert log.begin(epoch_id)
+        os.makedirs(log.epoch_dir("rows", epoch_id))
+        log.commit(epoch_id)
+    assert log.begin(1) is False  # replay of the committed epoch
+    with pytest.raises(RuntimeError, match="rewinds behind"):
+        log.begin(0)
+    # a fresh incarnation reads the same record
+    assert EpochCommitLog(state, "probe").committed() == 1
+    for uri in ("s3a://bucket/state", "file:///tmp/state", "hdfs://nn/state"):
+        with pytest.raises(ValueError, match="driver-local"):
+            EpochCommitLog(uri, "probe")
+
+    snap = log.committed()
+    os.makedirs(log.epoch_dir("rows", 2))
+    assert log.epoch_dirs("rows") == [log.epoch_dir("rows", 0), log.epoch_dir("rows", 1)]
+    log.commit(2)
+    assert log.epoch_dirs("rows", up_to=snap) == [
+        log.epoch_dir("rows", 0),
+        log.epoch_dir("rows", 1),
+    ]
+    assert log.epoch_dirs("rows")[-1] == log.epoch_dir("rows", 2)
+
+    # compaction: one generation + the epochs above its floor
+    def write(kind, dirs, out):
+        os.makedirs(out)
+
+    assert log.compact(("rows",), write) is True
+    assert log.compaction() == (2, 2)
+    assert log.epoch_dirs("rows") == [log.generation_dir("rows", 2)]
+    assert log.compact(("rows",), write) is False  # nothing new
+    os.makedirs(log.epoch_dir("rows", 3))
+    log.commit(3)
+    assert log.epoch_dirs("rows") == [
+        log.generation_dir("rows", 2),
+        log.epoch_dir("rows", 3),
+    ]
 
 
 def test_message_log_offsets_are_replayable(spark, tmp_path):
