@@ -41,6 +41,27 @@ from hazelcast_jet_contrib_spark.streaming.exactly_once import EpochCommitLog
 
 STATE_SCHEMA = "key string, value string, seq long"
 _VERSIONS = "versions"
+# version dirs were once named v{N} (state_dir/v{N}, root_dir/<collection>/
+# v{N}); such a directory is refused rather than served as empty state
+_FORMER = r"v\d+"
+
+
+def _table_log(state_dir: str) -> EpochCommitLog:
+    log = EpochCommitLog(state_dir, "cdc_apply")
+    log.refuse_former("", _FORMER, f"{_VERSIONS}/e{{N}}")
+    return log
+
+
+def _collections(root_dir: str) -> list[str]:
+    names = os.listdir(root_dir) if os.path.isdir(root_dir) else []
+    return [c for c in names if os.path.isdir(os.path.join(root_dir, c))]
+
+
+def _database_log(root_dir: str, collections: list[str]) -> EpochCommitLog:
+    log = EpochCommitLog(root_dir, "cdc_apply_database")
+    for coll in collections:
+        log.refuse_former(coll, _FORMER, f"{coll}/e{{N}}")
+    return log
 
 
 def _newest(spark: SparkSession, log: EpochCommitLog, kind: str) -> DataFrame:
@@ -52,7 +73,7 @@ def _newest(spark: SparkSession, log: EpochCommitLog, kind: str) -> DataFrame:
 
 def current_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The newest committed materialization (empty frame before any)."""
-    return _newest(spark, EpochCommitLog(state_dir, "cdc_apply"), _VERSIONS)
+    return _newest(spark, _table_log(state_dir), _VERSIONS)
 
 
 def _merge(prev: DataFrame, changes: DataFrame) -> DataFrame:
@@ -75,7 +96,7 @@ def database_state(spark: SparkSession, root_dir: str, collection: str) -> DataF
     untouched since epoch K serves its epoch-K version as long as the
     database marker has advanced past K; version dirs beyond the marker
     (crash leftovers) are never served."""
-    return _newest(spark, EpochCommitLog(root_dir, "cdc_apply_database"), collection)
+    return _newest(spark, _database_log(root_dir, [collection]), collection)
 
 
 def cdc_apply_database_foreach_batch(root_dir: str, keep_versions: int = 2):
@@ -97,7 +118,7 @@ def cdc_apply_database_foreach_batch(root_dir: str, keep_versions: int = 2):
     (bounded by the number of collections in the database, not data
     volume). Same epoch no-op / rewind guards as the single-table apply.
     """
-    log = EpochCommitLog(root_dir, "cdc_apply_database")
+    log = _database_log(root_dir, _collections(root_dir))
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         if not log.begin(epoch_id):
@@ -120,9 +141,8 @@ def cdc_apply_database_foreach_batch(root_dir: str, keep_versions: int = 2):
         finally:
             batch_df.unpersist()
         log.commit(epoch_id)
-        for coll in os.listdir(root_dir):
-            if os.path.isdir(os.path.join(root_dir, coll)):
-                log.prune(coll, keep_versions)
+        for coll in _collections(root_dir):
+            log.prune(coll, keep_versions)
 
     return fn
 
@@ -139,7 +159,7 @@ def cdc_apply_foreach_batch(state_dir: str, keep_versions: int = 2):
     skipping batches: resume with the original checkpointLocation, or
     point the restarted query at a fresh state_dir. Committed versions
     older than `keep_versions` are pruned."""
-    log = EpochCommitLog(state_dir, "cdc_apply")
+    log = _table_log(state_dir)
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         if not log.begin(epoch_id):

@@ -17,9 +17,9 @@ PageRank (graph.py).
 from __future__ import annotations
 
 import os
+import re
 import shutil
 from collections.abc import Callable
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
@@ -40,7 +40,15 @@ class EpochCommitLog:
     - ``_COMPACTED`` holds ``floor gen``: the epochs <= floor of every
       kind compacted into ``compacted/g{gen}/<kind>/`` are read from
       there, so readers see that generation plus the epochs in
-      (floor, committed].
+      (floor, committed]. New compactions name the generation after
+      its floor; the record keeps both numbers because the near-dup
+      index once numbered generations 0, 1, 2, ... and its state
+      directories still read.
+
+    State is never reinterpreted: a marker that does not parse, or
+    entries a writer recognizes as its former layout
+    (:meth:`refuse_former`), raise instead of being read as an empty
+    state directory, which would silently drop every committed epoch.
 
     Marker and listing I/O is driver-local file I/O, so a URI is
     refused: a literal ``s3a:/...`` directory would silently split the
@@ -48,7 +56,7 @@ class EpochCommitLog:
     """
 
     def __init__(self, state_dir: str, owner: str) -> None:
-        if urlparse(state_dir).scheme:
+        if "://" in state_dir or state_dir.startswith("file:"):
             raise ValueError(
                 f"{owner}: state_dir must be a driver-local path, not "
                 f"{state_dir!r} (the commit marker and epoch listing use "
@@ -56,13 +64,24 @@ class EpochCommitLog:
             )
         self.state_dir = state_dir
         self._owner = owner
+        self.committed()  # a record that does not parse fails here, up front
+        self.compaction()
 
-    def _read(self, name: str) -> list[int] | None:
+    def _read(self, name: str, n: int) -> list[int] | None:
+        path = os.path.join(self.state_dir, name)
         try:
-            with open(os.path.join(self.state_dir, name)) as f:
-                return [int(v) for v in f.read().split()]
-        except (FileNotFoundError, ValueError):
+            with open(path) as f:
+                text = f.read()
+        except FileNotFoundError:
             return None
+        values = text.split()
+        if len(values) != n or not all(v.isdigit() for v in values):
+            raise RuntimeError(
+                f"{self._owner}: commit record {path!r} holds {text!r}, not "
+                f"{n} epoch number(s): it is corrupt or in a former layout. "
+                "Refusing to read the state directory as empty."
+            )
+        return [int(v) for v in values]
 
     def _replace(self, name: str, *values: int) -> None:
         os.makedirs(self.state_dir, exist_ok=True)
@@ -71,11 +90,28 @@ class EpochCommitLog:
             f.write(" ".join(map(str, values)))
         os.replace(path + ".tmp", path)
 
+    def refuse_former(self, subdir: str, pattern: str, now: str) -> None:
+        """Raise if ``state_dir/subdir`` holds entries whose names fully
+        match the regex ``pattern``: the epoch naming of a layout the
+        caller wrote before this record, which it now names ``now``.
+        Read through this record, such a directory would look empty."""
+        d = os.path.join(self.state_dir, subdir)
+        try:
+            old = sorted(e for e in os.listdir(d) if re.fullmatch(pattern, e))
+        except FileNotFoundError:
+            return
+        if old:
+            raise RuntimeError(
+                f"{self._owner}: {d!r} holds {old[:3]} in a former on-disk "
+                f"layout (now {now}); convert it or use a new state "
+                "directory. Refusing to read the state directory as empty."
+            )
+
     # -- the epoch marker ---------------------------------------------------
     def committed(self) -> int | None:
         """The last committed epoch, or None before the first."""
-        v = self._read(_CURRENT)
-        return v[0] if v else None
+        v = self._read(_CURRENT, 1)
+        return None if v is None else v[0]
 
     def begin(self, epoch_id: int) -> bool:
         """Whether ``epoch_id`` still has to be applied. A replay of the
@@ -103,7 +139,7 @@ class EpochCommitLog:
 
     # -- epoch directories --------------------------------------------------
     def epoch_dir(self, kind: str, epoch_id: int) -> str:
-        return os.path.join(self.state_dir, kind, f"e{epoch_id:09d}")
+        return os.path.join(self.state_dir, kind, f"e{epoch_id}")
 
     def generation_dir(self, kind: str, gen: int) -> str:
         return os.path.join(self.state_dir, "compacted", f"g{gen}", kind)
@@ -152,8 +188,8 @@ class EpochCommitLog:
     # -- generation compaction ----------------------------------------------
     def compaction(self) -> tuple[int, int] | None:
         """(floor, generation) of the live compacted snapshot, or None."""
-        v = self._read(_COMPACTED)
-        return (v[0], v[1]) if v and len(v) == 2 else None
+        v = self._read(_COMPACTED, 2)
+        return None if v is None else (v[0], v[1])
 
     def compact(
         self, kinds: tuple[str, ...], write: Callable[[str, list[str], str], None]
@@ -206,8 +242,10 @@ def idempotent_foreach_batch(
     the write, which ``write_fn`` must tolerate by overwriting (e.g.
     write files named by epoch, upsert by key). This is the Spark
     analog of the prepared-transaction recovery the XA probes verify
-    (JdbcXaTest.java:28-33)."""
+    (JdbcXaTest.java:28-33). A ``commit_dir`` of per-epoch ``epoch-N``
+    files, the wrapper's former record, is refused."""
     log = EpochCommitLog(commit_dir, "idempotent_foreach_batch")
+    log.refuse_former("", r"epoch-\d+", f"one {_CURRENT} file holding the highest N")
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         if log.begin(epoch_id):

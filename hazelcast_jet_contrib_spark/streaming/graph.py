@@ -33,7 +33,9 @@ epoch directories are re-read each epoch; :meth:`compact` rewrites
 them into one generation committed through the log's compaction record
 (new dir, atomic record swap, THEN cleanup — at no instant is the only
 copy of any edge unreachable). Edge sets are append-only under this
-contract (no retractions).
+contract (no retractions). A state directory compacted under the former
+layout (generation packed into the marker as ``"N gG"``) is refused by
+the log rather than read as empty; uncompacted ones read unchanged.
 
 Reference lineage: the reference ships no graph operators (this
 extends the engine's pipeline family).

@@ -334,6 +334,40 @@ def test_streaming_pagerank_rewound_epoch_raises(spark, tmp_path):
     assert (3, 4) not in {(r["src"], r["dst"]) for r in spr.edges(spark).collect()}
 
 
+def test_streaming_pagerank_reads_state_written_before_the_shared_record(
+    spark, tmp_path
+):
+    """An uncompacted state directory keeps its layout (``_CURRENT`` N,
+    ``edges/e{N}``, ``ranks/e{N}``): it is read, and the next epoch
+    warm-starts from its ranks instead of cold-starting over the delta."""
+    from hazelcast_jet_contrib_spark.streaming.graph import StreamingPageRank
+
+    state = tmp_path / "s"
+    e0, e1 = [(1, 2), (2, 1)], [(2, 3), (3, 1)]
+    spark.createDataFrame(e0, "src long, dst long").write.parquet(str(state / "edges" / "e0"))
+    spark.createDataFrame(e1, "src long, dst long").write.parquet(str(state / "edges" / "e1"))
+    ranks1 = pagerank(spark.createDataFrame(e0 + e1, "src long, dst long"), iterations=10)
+    ranks1.write.parquet(str(state / "ranks" / "e1"))
+    (state / "_CURRENT").write_text("1")
+
+    spr = StreamingPageRank(str(state), delta_iterations=2)
+    assert {(r["src"], r["dst"]) for r in spr.edges(spark).collect()} == set(e0 + e1)
+    want = {r["node"]: r["rank"] for r in ranks1.collect()}
+    assert {r["node"]: r["rank"] for r in spr.ranks(spark).collect()} == want
+    spr.apply_batch(spark.createDataFrame([(3, 4)], "src long, dst long"), 2)
+    assert {(r["src"], r["dst"]) for r in spr.edges(spark).collect()} == set(
+        e0 + e1 + [(3, 4)]
+    )
+    all_edges = spark.createDataFrame(e0 + e1 + [(3, 4)], "src long, dst long")
+    warm = {
+        r["node"]: r["rank"]
+        for r in pagerank(all_edges, iterations=2, init_ranks=ranks1).collect()
+    }
+    got = {r["node"]: r["rank"] for r in spr.ranks(spark).collect()}
+    assert set(got) == set(warm)
+    assert all(abs(got[n] - warm[n]) < 1e-9 for n in warm), (got, warm)
+
+
 def test_streaming_pagerank_compaction_preserves_state(spark, tmp_path):
     """Edge-epoch compaction: dirs collapse to one edges + one ranks
     epoch; the edge set, the committed ranks, and subsequent epochs'

@@ -113,6 +113,8 @@ def test_epoch_commit_log_guards_and_snapshot_listing(tmp_path):
     for uri in ("s3a://bucket/state", "file:///tmp/state", "hdfs://nn/state"):
         with pytest.raises(ValueError, match="driver-local"):
             EpochCommitLog(uri, "probe")
+    # a relative local path may contain a colon (e.g. a timestamp)
+    assert EpochCommitLog("ckpt-2026-10-18T12:00/state", "probe").committed() is None
 
     snap = log.committed()
     os.makedirs(log.epoch_dir("rows", 2))
@@ -138,6 +140,77 @@ def test_epoch_commit_log_guards_and_snapshot_listing(tmp_path):
         log.generation_dir("rows", 2),
         log.epoch_dir("rows", 3),
     ]
+
+
+def test_state_dirs_in_a_former_layout_are_refused_or_read(spark, tmp_path):
+    """State written before the shared commit record is either read as
+    it was or refused loudly, never served as an empty state directory
+    (which would merge the next batch into nothing and commit it)."""
+    from hazelcast_jet_contrib_spark.streaming.cdc import (
+        cdc_apply_database_foreach_batch,
+        cdc_apply_foreach_batch,
+        current_state,
+        database_state,
+    )
+    from hazelcast_jet_contrib_spark.streaming.graph import StreamingPageRank
+
+    def layout(name: str, marker: str | None, *entries: str) -> str:
+        d = tmp_path / name
+        d.mkdir()
+        if marker is not None:
+            (d / "_CURRENT").write_text(marker)
+        for e in entries:
+            if e.startswith("dir:"):
+                (d / e[4:]).mkdir(parents=True)
+            else:
+                (d / e).write_text("committed")
+        return str(d)
+
+    # a marker that exists but does not parse is refused up front
+    for marker in ("", "x", "1 2"):
+        with pytest.raises(RuntimeError, match="corrupt or in a former layout"):
+            EpochCommitLog(layout(f"bad{len(marker)}", marker, "dir:rows/e0"), "probe")
+
+    # StreamingPageRank once carried its generation in the marker: "N gG"
+    graph = layout("graph", "3 g3", "dir:edges/g3", "dir:edges/e3", "dir:ranks/e3")
+    with pytest.raises(RuntimeError, match="corrupt or in a former layout"):
+        StreamingPageRank(graph)
+
+    # the CDC applies once named their version dirs v{N}
+    table = layout("table", "1", "dir:v0", "dir:v1")
+    with pytest.raises(RuntimeError, match="former on-disk layout"):
+        cdc_apply_foreach_batch(table)
+    with pytest.raises(RuntimeError, match="former on-disk layout"):
+        current_state(spark, table)
+    db = layout("db", "0", "dir:users/v0")
+    with pytest.raises(RuntimeError, match="former on-disk layout"):
+        cdc_apply_database_foreach_batch(db)
+    with pytest.raises(RuntimeError, match="former on-disk layout"):
+        database_state(spark, db, "users")
+    # ... but a collection that is itself named like a version dir is fine
+    cdc_apply_database_foreach_batch(layout("db_v1", "0", "dir:v1/e0"))
+
+    # idempotent_foreach_batch once wrote one epoch-N file per epoch
+    with pytest.raises(RuntimeError, match="former on-disk layout"):
+        idempotent_foreach_batch(lambda b, e: None, layout("sink", None, "epoch-0", "epoch-1"))
+
+    # the near-dup index layout is unchanged: its generations were
+    # numbered 0, 1, ... apart from their floor, and still read
+    dedup = layout("dedup", "3", "dir:compacted/g0/bands", "dir:bands/e3", "dir:bands/e2")
+    (tmp_path / "dedup" / "_COMPACTED").write_text("2 0")
+    log = EpochCommitLog(dedup, "probe")
+    assert log.epoch_dirs("bands") == [
+        os.path.join(dedup, "compacted", "g0", "bands"),
+        os.path.join(dedup, "bands", "e3"),
+    ]
+
+    def write(kind, dirs, out):
+        os.makedirs(out)
+
+    assert log.compact(("bands",), write) is True
+    assert log.compaction() == (3, 3)
+    assert os.listdir(os.path.join(dedup, "compacted")) == ["g3"]
+    assert log.epoch_dirs("bands") == [os.path.join(dedup, "compacted", "g3", "bands")]
 
 
 def test_message_log_offsets_are_replayable(spark, tmp_path):
