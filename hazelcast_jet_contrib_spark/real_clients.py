@@ -41,12 +41,19 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
-from datetime import timezone
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hazelcast_jet_contrib_spark.sinks.builder import RetryStrategy, SinkBuilder
+from hazelcast_jet_contrib_spark.sinks.builder import (
+    CLIENT_RETRY,
+    RetryStrategy,
+    SinkBuilder,
+)
+from hazelcast_jet_contrib_spark.sinks.connectors import (
+    message_record_fn,
+    point_record_fn,
+)
 from hazelcast_jet_contrib_spark.sources.builder import BatchSourceBuilder
 
 
@@ -202,24 +209,14 @@ def redis_hash_sink(
     def create(writer_id: str) -> dict:
         redis = _require("redis", "redis")
         client = redis.Redis.from_url(url, socket_timeout=socket_timeout)
-        return {"client": client, "buf": {}}
+        return {"client": client}
 
-    def receive(ctx: dict, row) -> None:
-        ctx["buf"][field_fn(row)] = value_fn(row)
-
-    def flush(ctx: dict) -> None:
-        if not ctx["buf"]:
-            return
-        # the buffer is cleared only AFTER execute() succeeds: a
-        # transient failure leaves it intact so the retry strategy's
-        # re-invocation re-sends the same mapping (HSET is idempotent
-        # per (key, field), so a retry after partial success is safe —
-        # clearing first would make the retried flush a silent no-op
-        # and LOSE the batch)
+    def flush(ctx: dict, items: list) -> None:
+        # a retried flush re-sends the same mapping; HSET is idempotent
+        # per (key, field), so a retry after partial success is safe
         pipe = ctx["client"].pipeline(transaction=False)
-        pipe.hset(hash_key, mapping=dict(ctx["buf"]))
+        pipe.hset(hash_key, mapping=dict(items))
         pipe.execute()
-        ctx["buf"] = {}
 
     def destroy(ctx: dict) -> None:
         ctx["client"].close()
@@ -227,11 +224,11 @@ def redis_hash_sink(
     (
         SinkBuilder("redis-hash-sink")
         .create_fn(create)
-        .receive_fn(receive)
+        .receive_fn(lambda row: (field_fn(row), value_fn(row)))
         .flush_fn(flush)
         .destroy_fn(destroy)
         .batch_size(batch_size)
-        .retry(retry if retry is not None else RetryStrategy.constant(3, 0.05))
+        .retry(retry if retry is not None else CLIENT_RETRY)
         .write(df)
     )
 
@@ -330,24 +327,17 @@ def mongo_sink(
     duplicate — give documents deterministic ``_id``s in ``doc_fn`` so
     replays collide (duplicate-key errors on an unordered insert leave
     the already-present documents in place) or dedupe downstream, the
-    same discipline the message-log sink documents. The buffer clears
-    only after a successful flush."""
+    same discipline the message-log sink documents."""
 
     def create(writer_id: str) -> dict:
         pymongo = _require("pymongo", "pymongo")
         client = pymongo.MongoClient(uri)
-        return {"client": client, "buf": []}
+        return {"client": client}
 
-    def receive(ctx: dict, row) -> None:
-        ctx["buf"].append(doc_fn(row))
-
-    def flush(ctx: dict) -> None:
-        if not ctx["buf"]:
-            return
-        n_docs = len(ctx["buf"])
+    def flush(ctx: dict, docs: list) -> None:
         try:
             ctx["client"][database][collection].insert_many(
-                list(ctx["buf"]),
+                list(docs),
                 ordered=ordered,
                 bypass_document_validation=bypass_validation,
             )
@@ -379,9 +369,8 @@ def mongo_sink(
                 # unsatisfiable combination by construction — prefer
                 # ordered=False (the default) for at-least-once sinks.
                 n_ins = details.get("nInserted")
-                if n_ins is None or n_ins + len(werrs) != n_docs:
+                if n_ins is None or n_ins + len(werrs) != len(docs):
                     raise
-        ctx["buf"] = []
 
     def destroy(ctx: dict) -> None:
         ctx["client"].close()
@@ -389,11 +378,11 @@ def mongo_sink(
     (
         SinkBuilder("mongo-sink")
         .create_fn(create)
-        .receive_fn(receive)
+        .receive_fn(doc_fn)
         .flush_fn(flush)
         .destroy_fn(destroy)
         .batch_size(batch_size)
-        .retry(retry if retry is not None else RetryStrategy.constant(3, 0.05))
+        .retry(retry if retry is not None else CLIENT_RETRY)
         .write(df)
     )
 
@@ -480,25 +469,6 @@ def influx_source(
     )
 
 
-def influx_epoch_ns(ts: Any) -> int:
-    """Timestamp → UTC epoch nanoseconds, the Influx adapters' single
-    time convention (ADVICE r12 #1): naive datetimes are UTC wall-clock
-    — the session TZ is pinned to UTC (session.py) and the read side
-    strips tzinfo off the store's UTC FluxRecord time
-    (influx_long_record_fn) — so the conversion pins tzinfo to UTC
-    explicitly instead of letting ``timestamp()`` interpret naive
-    values in the PROCESS-local zone (which would shift every point by
-    the host's UTC offset on any non-UTC executor). tz-aware values
-    keep their own zone; bare ints are epoch seconds."""
-    if hasattr(ts, "timestamp"):
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=timezone.utc)
-        return int(ts.timestamp() * 1_000_000) * 1_000
-    from hazelcast_jet_contrib_spark.sinks.connectors import _PRECISION_NS
-
-    return int(ts) * _PRECISION_NS["s"]
-
-
 def _influx_sync_write_api(ic_mod: Any, client: Any):
     """A write_api whose ``write`` RAISES on failure in the calling
     thread: the real library's default is background-batching (errors
@@ -533,18 +503,14 @@ def influx_sink(
     """Batched point writer through influxdb-client
     (InfluxDbSinks.java:44-64 live binding): each row becomes a
     ``Point(measurement).tag(...).field(...).time(epoch, precision)``
-    — the same row→Point mapping as the in-process
-    ``sinks.connectors.point_sink`` — buffered per partition writer and
-    flushed as one synchronous ``write_api.write`` call under the retry
+    — the row→Point mapping ``sinks.connectors.point_record_fn``,
+    shared with the in-process ``point_sink`` — buffered per partition
+    writer and flushed as one synchronous ``write_api.write`` call under the retry
     strategy. Replays are SAFE here, unlike insert-only stores: Influx
     upserts on (measurement, tagset, timestamp), so a retried batch
     overwrites identical points instead of duplicating — idempotent
     at-least-once by the store's own semantics."""
-    from hazelcast_jet_contrib_spark.sinks.connectors import _PRECISION_NS
-
-    if precision not in _PRECISION_NS:
-        raise ValueError(f"precision must be one of {sorted(_PRECISION_NS)}")
-    div = _PRECISION_NS[precision]
+    to_record = point_record_fn(measurement, time_col, tag_cols, field_cols, precision)
 
     def create(writer_id: str) -> dict:
         ic = _require("influxdb_client", "influxdb-client")
@@ -553,30 +519,20 @@ def influx_sink(
             "ic": ic,
             "client": client,
             "wapi": _influx_sync_write_api(ic, client),
-            "buf": [],
         }
 
-    def receive(ctx: dict, row) -> None:
-        ctx["buf"].append(row)
-
-    def flush(ctx: dict) -> None:
-        if not ctx["buf"]:
-            return
+    def flush(ctx: dict, records: list[dict]) -> None:
         ic = ctx["ic"]
         prec = getattr(ic.WritePrecision, precision.upper())
         points = []
-        for row in ctx["buf"]:
-            # naive-UTC convention pinned in influx_epoch_ns (ADVICE
-            # r12 #1) — never ts.timestamp() on a naive value here
-            epoch_ns = influx_epoch_ns(row[time_col])
-            p = ic.Point(measurement)
-            for t in tag_cols:
-                p = p.tag(t, str(row[t]))
-            for fc in field_cols:
-                p = p.field(fc, float(row[fc]))
-            points.append(p.time(epoch_ns // div, prec))
+        for r in records:
+            p = ic.Point(r["measurement"])
+            for t, v in r["tags"].items():
+                p = p.tag(t, v)
+            for fc, v in r["fields"].items():
+                p = p.field(fc, v)
+            points.append(p.time(r["time"], prec))
         ctx["wapi"].write(bucket=bucket, org=org, record=points)
-        ctx["buf"] = []
 
     def destroy(ctx: dict) -> None:
         ctx["client"].close()
@@ -584,11 +540,11 @@ def influx_sink(
     (
         SinkBuilder("influx-sink")
         .create_fn(create)
-        .receive_fn(receive)
+        .receive_fn(to_record)
         .flush_fn(flush)
         .destroy_fn(destroy)
         .batch_size(batch_size)
-        .retry(retry if retry is not None else RetryStrategy.constant(3, 0.05))
+        .retry(retry if retry is not None else CLIENT_RETRY)
         .write(df)
     )
 
@@ -693,8 +649,10 @@ def pulsar_producer_sink(
     """Producer sink through pulsar-client with the reference's three
     extractors (PulsarSinkBuilder.java:100-131): ``key_fn`` →
     partition key, ``props_fn`` → message properties, ``event_time_fn``
-    → event timestamp (epoch millis). Rows buffer per partition writer
-    and flush as sequential synchronous sends (each send raises on
+    → event timestamp (epoch millis), mapped by
+    ``sinks.connectors.message_record_fn`` as in ``producer_sink``; the
+    send coerces properties to strings and skips absent values. Records
+    buffer per partition writer and flush as sequential synchronous sends (each send raises on
     broker rejection, engaging the retry strategy — at-least-once, the
     reference's delivery level). One client+producer per writer,
     created inside the task."""
@@ -705,29 +663,18 @@ def pulsar_producer_sink(
         return {
             "client": client,
             "producer": client.create_producer(topic),
-            "buf": [],
         }
 
-    def receive(ctx: dict, row) -> None:
-        ctx["buf"].append(row)
-
-    def flush(ctx: dict) -> None:
-        if not ctx["buf"]:
-            return
-        for row in ctx["buf"]:
+    def flush(ctx: dict, msgs: list[dict]) -> None:
+        for m in msgs:
             kwargs: dict[str, Any] = {}
-            if key_fn is not None:
-                k = key_fn(row)
-                if k is not None:
-                    kwargs["partition_key"] = k
-            if props_fn is not None:
-                p = props_fn(row)
-                if p:
-                    kwargs["properties"] = {str(a): str(b) for a, b in p.items()}
-            if event_time_fn is not None:
-                kwargs["event_timestamp"] = int(event_time_fn(row))
-            ctx["producer"].send(value_fn(row), **kwargs)
-        ctx["buf"] = []
+            if m["key"] is not None:
+                kwargs["partition_key"] = m["key"]
+            if m["properties"]:
+                kwargs["properties"] = {str(a): str(b) for a, b in m["properties"].items()}
+            if m["event_time"] is not None:
+                kwargs["event_timestamp"] = int(m["event_time"])
+            ctx["producer"].send(m["value"], **kwargs)
 
     def destroy(ctx: dict) -> None:
         ctx["producer"].close()
@@ -736,11 +683,11 @@ def pulsar_producer_sink(
     (
         SinkBuilder("pulsar-producer")
         .create_fn(create)
-        .receive_fn(receive)
+        .receive_fn(message_record_fn(value_fn, key_fn, props_fn, event_time_fn))
         .flush_fn(flush)
         .destroy_fn(destroy)
         .batch_size(batch_size)
-        .retry(retry if retry is not None else RetryStrategy.constant(3, 0.05))
+        .retry(retry if retry is not None else CLIENT_RETRY)
         .write(df)
     )
 
@@ -1424,7 +1371,6 @@ __all__ = [
     "mqtt_topic_matches",
     "mqtt_topic_of_stream",
     "hash_search_fn",
-    "influx_epoch_ns",
     "influx_flux_records",
     "influx_long_record_fn",
     "influx_sink",

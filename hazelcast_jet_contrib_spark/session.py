@@ -91,23 +91,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load the driver's parquet tables from ``sf_dir`` as DataFrames.
-
-    Returns a dict name -> DataFrame. Parquet scans get predicate pushdown
-    and column pruning from Catalyst automatically.
-    """
-    all_names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in all_names}

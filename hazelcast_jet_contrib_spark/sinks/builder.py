@@ -63,21 +63,32 @@ class RetryStrategy:
         raise last  # type: ignore[misc]
 
 
+# Default for the sinks that push to a broker or store client: a
+# transient connection error is retried twice, 50 ms apart.
+CLIENT_RETRY = RetryStrategy.constant(3, 0.05)
+
+
 @dataclass
 class SinkBuilder:
     """Fluent builder for a buffered partition writer.
 
     Lifecycle per partition (mirrors SinkBuilder create/receive/flush/
-    destroy): ``ctx = create_fn(writer_id)``; ``receive_fn(ctx, row)``
-    for each row (buffering); ``flush_fn(ctx)`` every `batch_size` rows
-    and at partition end (each flush wrapped in the retry strategy);
-    ``destroy_fn(ctx)`` in a finally block.
+    destroy): ``ctx = create_fn(writer_id)``; each row is mapped by
+    ``receive_fn(row)`` to an item and appended to the batch, which the
+    builder owns; ``flush_fn(ctx, items)`` pushes the batch every
+    `batch_size` items and at partition end, under the retry strategy;
+    ``destroy_fn(ctx)`` runs in a finally block, also when a flush
+    failed for good.
+
+    The batch is cleared only after ``flush_fn`` returns, so a retried
+    flush re-sends the identical batch. A flush never owns or clears a
+    buffer of its own: that is what keeps replay at-least-once.
     """
 
     name: str
     _create_fn: Callable[[str], Any] | None = None
-    _receive_fn: Callable[[Any, Any], None] | None = None
-    _flush_fn: Callable[[Any], None] | None = None
+    _receive_fn: Callable[[Any], Any] | None = None
+    _flush_fn: Callable[[Any, list], None] | None = None
     _destroy_fn: Callable[[Any], None] | None = None
     _batch_size: int = 1024
     _retry: RetryStrategy = RetryStrategy.never()
@@ -89,11 +100,13 @@ class SinkBuilder:
         self._create_fn = fn
         return self
 
-    def receive_fn(self, fn: Callable[[Any, Any], None]) -> "SinkBuilder":
+    def receive_fn(self, fn: Callable[[Any], Any]) -> "SinkBuilder":
+        """Pure ``row -> item`` mapping."""
         self._receive_fn = fn
         return self
 
-    def flush_fn(self, fn: Callable[[Any], None]) -> "SinkBuilder":
+    def flush_fn(self, fn: Callable[[Any, list], None]) -> "SinkBuilder":
+        """``flush_fn(ctx, items)`` pushes one non-empty batch."""
         self._flush_fn = fn
         return self
 
@@ -114,23 +127,22 @@ class SinkBuilder:
         create_fn, receive_fn = self._create_fn, self._receive_fn
         flush_fn, destroy_fn = self._flush_fn, self._destroy_fn
         batch_size, retry, name = self._batch_size, self._retry, self.name
-        if receive_fn is None:
-            raise ValueError(f"sink '{name}': receive_fn is required")
+        if receive_fn is None or flush_fn is None:
+            raise ValueError(f"sink '{name}': receive_fn and flush_fn are required")
 
         def write_partition(rows) -> None:
             tc = TaskContext.get()
             writer_id = f"{name}-{tc.partitionId() if tc else 0}"
             ctx = create_fn(writer_id) if create_fn else None
-            pending = 0
+            batch: list = []
             try:
                 for row in rows:
-                    receive_fn(ctx, row)
-                    pending += 1
-                    if flush_fn is not None and pending >= batch_size:
-                        retry.run(lambda: flush_fn(ctx))
-                        pending = 0
-                if flush_fn is not None and pending > 0:
-                    retry.run(lambda: flush_fn(ctx))
+                    batch.append(receive_fn(row))
+                    if len(batch) >= batch_size:
+                        retry.run(lambda: flush_fn(ctx, batch))
+                        batch = []
+                if batch:
+                    retry.run(lambda: flush_fn(ctx, batch))
             finally:
                 if destroy_fn is not None:
                     destroy_fn(ctx)

@@ -1,7 +1,9 @@
 """Concrete sink instantiations of the buffered/flushing/retrying
 SinkBuilder framework — one per reference sink family, each writing to a
-file-backed store the test environment can host (swap the client lambdas
-for a real redis/mongo/pulsar client without touching the plan shape).
+file-backed store the test environment can host. The live-client twins
+in ``real_clients.py`` (redis/mongo/influx/pulsar) run on the same
+builder and share this module's row mappings: ``point_record_fn`` (K1)
+and ``message_record_fn`` (K6).
 
 | Here | Reference | Contract |
 |---|---|---|
@@ -22,25 +24,78 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from glob import glob
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hazelcast_jet_contrib_spark.sinks.builder import RetryStrategy, SinkBuilder
+from hazelcast_jet_contrib_spark.sinks.builder import (
+    CLIENT_RETRY,
+    RetryStrategy,
+    SinkBuilder,
+)
 from hazelcast_jet_contrib_spark.streaming.message_log import append_segment
 
 
-def _write_json(path_prefix: str, payload: Any) -> None:
-    """Atomic, uniquely-named flush file (writer id + monotonic counter
-    ride the prefix; flushes never overwrite each other)."""
-    path = f"{path_prefix}-{time.monotonic_ns()}.json"
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.replace(tmp, path)
+def _file_store(
+    path: str, kind: str, encode: Callable[[list], Iterable[Any]] = lambda items: items
+) -> tuple[Callable[[str], dict], Callable[[dict, list], None]]:
+    """``(create_fn, flush_fn)`` of a file-backed store: each flush writes
+    ``encode(items)`` as one jsonl file
+    ``<kind>-<writer id>-<flush n>-<monotonic ns>.jsonl``, atomically
+    (tmp + ``os.replace``), so a reader never sees half a batch and no
+    flush overwrites another."""
+    os.makedirs(path, exist_ok=True)
+
+    def create(writer_id: str) -> dict:
+        return {"id": writer_id, "n": 0}
+
+    def flush(ctx: dict, items: list) -> None:
+        records = encode(items)
+        name = f"{kind}-{ctx['id']}-{ctx['n']:06d}-{time.monotonic_ns()}.jsonl"
+        final = os.path.join(path, name)
+        with open(final + ".tmp", "w") as f:
+            f.writelines(json.dumps(r, default=str) + "\n" for r in records)
+        os.replace(final + ".tmp", final)
+        ctx["n"] += 1
+
+    return create, flush
+
+
+def _read_store(path: str, kind: str) -> list:
+    """Store-side read-back of a ``_file_store``: records in flush-file
+    name order (per writer, the flush counter orders them). Raises on
+    the one-JSON-document ``<kind>-*.json`` files the KV hash and sorted
+    set stores were once written as, instead of reading them as empty."""
+    if glob(os.path.join(path, f"{kind}-*.json")):
+        raise ValueError(f"{path}: {kind}-*.json flush files of a former layout")
+    out: list = []
+    for p in sorted(glob(os.path.join(path, f"{kind}-*.jsonl"))):
+        with open(p) as f:
+            out.extend(json.loads(line) for line in f)
+    return out
+
+
+def _write(
+    name: str,
+    df: DataFrame,
+    receive: Callable[[Any], Any],
+    store: tuple[Callable[[str], Any] | None, Callable[[Any, list], None]],
+    batch_size: int,
+    retry: RetryStrategy | None = None,
+) -> None:
+    create, flush = store
+    (
+        SinkBuilder(name)
+        .create_fn(create)
+        .receive_fn(receive)
+        .flush_fn(flush)
+        .batch_size(batch_size)
+        .retry(retry or RetryStrategy.never())
+        .write(df)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -56,46 +111,25 @@ def kv_hash_sink(
     batch_size: int = 1024,
     retry: RetryStrategy | None = None,
 ) -> None:
-    """Bulk KV upsert: rows accumulate into a per-writer map and flush as
-    one HMSET-style document. Repartitioning by key gives each writer a
-    disjoint key set, so last-write-wins holds globally; within a writer
-    the map naturally keeps the latest value per key
-    (RedisSinks.java:145-150 receive-into-HashMap contract)."""
-    os.makedirs(path, exist_ok=True)
-
-    def create(writer_id: str) -> dict:
-        return {"id": writer_id, "buf": {}, "n": 0}
-
-    def receive(ctx: dict, row) -> None:
-        ctx["buf"][str(row[key_col])] = str(row[value_col])
-
-    def flush(ctx: dict) -> None:
-        if ctx["buf"]:
-            _write_json(os.path.join(path, f"hmset-{ctx['id']}-{ctx['n']:06d}"), ctx["buf"])
-            ctx["n"] += 1
-            ctx["buf"] = {}
-
-    sink = (
-        SinkBuilder("kv-hash")
-        .create_fn(create)
-        .receive_fn(receive)
-        .flush_fn(flush)
-        .batch_size(batch_size)
+    """Bulk KV upsert: rows accumulate per writer and flush as one
+    HMSET-style map. Repartitioning by key gives each writer a disjoint
+    key set, so last-write-wins holds globally; within a batch the map
+    keeps the latest value per key (RedisSinks.java:145-150
+    receive-into-HashMap contract)."""
+    _write(
+        "kv-hash",
+        df.repartition(F.col(key_col)),
+        lambda row: (str(row[key_col]), str(row[value_col])),
+        _file_store(path, "hmset", lambda items: dict(items).items()),
+        batch_size,
+        retry,
     )
-    if retry is not None:
-        sink = sink.retry(retry)
-    sink.write(df.repartition(F.col(key_col)))
 
 
 def read_kv_hash(path: str) -> dict[str, str]:
-    """Store-side read-back: merge flush files in write order (file names
-    embed a monotonic flush counter per writer; keys are disjoint across
+    """Merge flush files in write order (keys are disjoint across
     writers, so order only matters within one)."""
-    out: dict[str, str] = {}
-    for p in sorted(glob(os.path.join(path, "hmset-*.json"))):
-        with open(p) as f:
-            out.update(json.load(f))
-    return out
+    return dict(_read_store(path, "hmset"))
 
 
 # ---------------------------------------------------------------------------
@@ -112,38 +146,19 @@ def sorted_set_sink(
 ) -> None:
     """ZADD per row, flushed in batches; a member re-added with a new
     score keeps the latest (Redis semantics)."""
-    os.makedirs(path, exist_ok=True)
-
-    def create(writer_id: str) -> dict:
-        return {"id": writer_id, "buf": [], "n": 0}
-
-    def receive(ctx: dict, row) -> None:
-        ctx["buf"].append([float(row[score_col]), str(row[member_col])])
-
-    def flush(ctx: dict) -> None:
-        if ctx["buf"]:
-            _write_json(os.path.join(path, f"zadd-{ctx['id']}-{ctx['n']:06d}"), ctx["buf"])
-            ctx["n"] += 1
-            ctx["buf"] = []
-
-    (
-        SinkBuilder("sorted-set")
-        .create_fn(create)
-        .receive_fn(receive)
-        .flush_fn(flush)
-        .batch_size(batch_size)
-        .write(df.repartition(F.col(member_col)))
+    _write(
+        "sorted-set",
+        df.repartition(F.col(member_col)),
+        lambda row: (float(row[score_col]), str(row[member_col])),
+        _file_store(path, "zadd"),
+        batch_size,
     )
 
 
 def read_sorted_set(path: str) -> list[tuple[float, str]]:
     """Members ordered by (score, member); last-written score per member
     wins."""
-    latest: dict[str, float] = {}
-    for p in sorted(glob(os.path.join(path, "zadd-*.json"))):
-        with open(p) as f:
-            for score, member in json.load(f):
-                latest[member] = score
+    latest = {member: score for score, member in _read_store(path, "zadd")}
     return sorted((s, m) for m, s in latest.items())
 
 
@@ -164,30 +179,15 @@ def stream_sink(
     directly readable by the `message_log` streaming source, closing the
     same loop the reference closes between RedisSinks.stream and
     RedisSources.stream."""
-
-    def create(writer_id: str) -> dict:
-        return {"buf": []}
-
-    def receive(ctx: dict, row) -> None:
-        ctx["buf"].append(
-            {
-                "key": None if key_col is None else str(row[key_col]),
-                "value": str(row[value_col]),
-            }
-        )
-
-    def flush(ctx: dict) -> None:
-        if ctx["buf"]:
-            append_segment(root, stream, ctx["buf"])
-            ctx["buf"] = []
-
-    (
-        SinkBuilder("stream-xadd")
-        .create_fn(create)
-        .receive_fn(receive)
-        .flush_fn(flush)
-        .batch_size(batch_size)
-        .write(df)
+    _write(
+        "stream-xadd",
+        df,
+        lambda row: {
+            "key": None if key_col is None else str(row[key_col]),
+            "value": str(row[value_col]),
+        },
+        (None, lambda ctx, items: append_segment(root, stream, items)),
+        batch_size,
     )
 
 
@@ -208,57 +208,58 @@ def doc_sink(
     `ordered=True` aborts the batch at the first invalid document,
     `ordered=False` skips it and continues — the InsertManyOptions
     contract (MongoDBSinkBuilder.java:169-183); `validate_fn=None` is
-    bypassValidation."""
-    os.makedirs(path, exist_ok=True)
+    bypassValidation. Validation runs in the flush, so a store-side
+    validation error is retried with the batch."""
 
-    def create(writer_id: str) -> dict:
-        return {"id": writer_id, "buf": [], "n": 0}
-
-    def receive(ctx: dict, row) -> None:
-        ctx["buf"].append(row.asDict(recursive=True))
-
-    def flush(ctx: dict) -> None:
-        if not ctx["buf"]:
-            return
-        docs = []
-        for doc in ctx["buf"]:
+    def valid_docs(docs: list[dict]) -> list[dict]:
+        out = []
+        for doc in docs:
             if validate_fn is not None and not validate_fn(doc):
                 if ordered:
-                    ctx["buf"] = []
                     raise ValueError(f"insertMany(ordered) aborted on invalid doc: {doc}")
                 continue
-            docs.append(doc)
-        tmp = os.path.join(path, f".{ctx['id']}-{ctx['n']:06d}.tmp")
-        with open(tmp, "w") as f:
-            for doc in docs:
-                f.write(json.dumps(doc, default=str) + "\n")
-        os.replace(tmp, os.path.join(path, f"docs-{ctx['id']}-{ctx['n']:06d}.jsonl"))
-        ctx["n"] += 1
-        ctx["buf"] = []
+            out.append(doc)
+        return out
 
-    sink = (
-        SinkBuilder("doc-insert")
-        .create_fn(create)
-        .receive_fn(receive)
-        .flush_fn(flush)
-        .batch_size(batch_size)
+    _write(
+        "doc-insert",
+        df,
+        lambda row: row.asDict(recursive=True),
+        _file_store(path, "docs", valid_docs),
+        batch_size,
+        retry,
     )
-    if retry is not None:
-        sink = sink.retry(retry)
-    sink.write(df)
 
 
 def read_docs(path: str) -> list[dict]:
-    out: list[dict] = []
-    for p in sorted(glob(os.path.join(path, "docs-*.jsonl"))):
-        with open(p) as f:
-            out.extend(json.loads(line) for line in f)
-    return out
+    return _read_store(path, "docs")
 
 
 # ---------------------------------------------------------------------------
 # K6 — producer with per-record extractors
 # ---------------------------------------------------------------------------
+
+
+def message_record_fn(
+    value_fn: Callable[[Any], Any],
+    key_fn: Callable[[Any], Any] | None = None,
+    props_fn: Callable[[Any], dict | None] | None = None,
+    event_time_fn: Callable[[Any], Any] | None = None,
+) -> Callable[[Any], dict]:
+    """``row -> {key, value, properties, event_time}``: the Pulsar
+    builder's extractor record (PulsarSinkBuilder.java:100-131), shared
+    by ``producer_sink`` and ``real_clients.pulsar_producer_sink``. An
+    absent extractor yields None (properties: ``{}``)."""
+
+    def record(row) -> dict:
+        return {
+            "key": key_fn(row) if key_fn is not None else None,
+            "value": value_fn(row),
+            "properties": props_fn(row) if props_fn is not None else {},
+            "event_time": event_time_fn(row) if event_time_fn is not None else None,
+        }
+
+    return record
 
 
 def producer_sink(
@@ -275,32 +276,12 @@ def producer_sink(
     every record carries (key, value, properties, eventTime) computed by
     user lambdas (PulsarSinkBuilder.java:100-131), batched and flushed
     like sendAsync + flush (:189-211). Lands in a message-log topic."""
-
-    def create(writer_id: str) -> dict:
-        return {"buf": []}
-
-    def receive(ctx: dict, row) -> None:
-        ctx["buf"].append(
-            {
-                "key": key_fn(row),
-                "value": value_fn(row),
-                "properties": props_fn(row),
-                "event_time": event_time_fn(row),
-            }
-        )
-
-    def flush(ctx: dict) -> None:
-        if ctx["buf"]:
-            append_segment(root, topic, ctx["buf"])
-            ctx["buf"] = []
-
-    (
-        SinkBuilder("producer")
-        .create_fn(create)
-        .receive_fn(receive)
-        .flush_fn(flush)
-        .batch_size(batch_size)
-        .write(df)
+    _write(
+        "producer",
+        df,
+        message_record_fn(value_fn, key_fn, props_fn, event_time_fn),
+        (None, lambda ctx, items: append_segment(root, topic, items)),
+        batch_size,
     )
 
 
@@ -309,6 +290,45 @@ def producer_sink(
 # ---------------------------------------------------------------------------
 
 _PRECISION_NS = {"ns": 1, "us": 1_000, "ms": 1_000_000, "s": 1_000_000_000}
+
+
+def point_record_fn(
+    measurement: str,
+    time_col: str,
+    tag_cols: list[str],
+    field_cols: list[str],
+    precision: str = "ms",
+) -> Callable[[Any], dict]:
+    """``row -> {measurement, time, precision, tags, fields}``: the
+    row → Point mapping shared by ``point_sink`` and
+    ``real_clients.influx_sink``. Tags serialize as strings, fields as
+    doubles (the reference's tag-vs-field split, SURVEY.md §1.1).
+
+    ``time`` is the UTC epoch in ``precision`` units. A naive datetime
+    is read in the process-local zone — the zone PySpark's
+    ``TimestampType.fromInternal`` produced it in, so the epoch is the
+    instant Spark holds on any host timezone; an aware datetime keeps
+    its own zone; a bare int is epoch seconds."""
+    if precision not in _PRECISION_NS:
+        raise ValueError(f"precision must be one of {sorted(_PRECISION_NS)}")
+    div = _PRECISION_NS[precision]
+
+    def record(row) -> dict:
+        ts = row[time_col]
+        epoch_ns = (
+            int(ts.timestamp() * 1_000_000) * 1_000  # datetime: µs resolution
+            if hasattr(ts, "timestamp")
+            else int(ts) * _PRECISION_NS["s"]
+        )
+        return {
+            "measurement": measurement,
+            "time": epoch_ns // div,
+            "precision": precision,
+            "tags": {t: str(row[t]) for t in tag_cols},
+            "fields": {fc: float(row[fc]) for fc in field_cols},
+        }
+
+    return record
 
 
 def point_sink(
@@ -330,65 +350,22 @@ def point_sink(
 
     ``time_col`` must be a TimestampType column; it is stored as an epoch
     integer in ``precision`` units ("ns"/"us"/"ms"/"s" — the Point's
-    TimeUnit). Tags serialize as strings, fields as doubles, matching the
-    reference's tag-vs-field split (SURVEY.md §1.1 InfluxDB row shape).
-    Round-trips through the ``ts_store`` DSv2 source
-    (``sources/dsv2.py``, one read per field) via ``points_to_parquet``.
+    TimeUnit); see ``point_record_fn``. Round-trips through the
+    ``ts_store`` DSv2 source (``sources/dsv2.py``, one read per field)
+    via ``points_to_parquet``.
     """
-    if precision not in _PRECISION_NS:
-        raise ValueError(f"precision must be one of {sorted(_PRECISION_NS)}")
-    os.makedirs(path, exist_ok=True)
-    div = _PRECISION_NS[precision]
-
-    def create(writer_id: str) -> dict:
-        return {"id": writer_id, "buf": [], "n": 0}
-
-    def receive(ctx: dict, row) -> None:
-        ts = row[time_col]
-        epoch_ns = (
-            int(ts.timestamp() * 1_000_000) * 1_000  # datetime: µs resolution
-            if hasattr(ts, "timestamp")
-            else int(ts) * _PRECISION_NS["s"]
-        )
-        ctx["buf"].append(
-            {
-                "measurement": measurement,
-                "time": epoch_ns // div,
-                "precision": precision,
-                "tags": {t: str(row[t]) for t in tag_cols},
-                "fields": {fc: float(row[fc]) for fc in field_cols},
-            }
-        )
-
-    def flush(ctx: dict) -> None:
-        if not ctx["buf"]:
-            return
-        tmp = os.path.join(path, f".{ctx['id']}-{ctx['n']:06d}.tmp")
-        with open(tmp, "w") as f:
-            for p in ctx["buf"]:
-                f.write(json.dumps(p) + "\n")
-        os.replace(tmp, os.path.join(path, f"points-{ctx['id']}-{ctx['n']:06d}.jsonl"))
-        ctx["n"] += 1
-        ctx["buf"] = []
-
-    sink = (
-        SinkBuilder("ts-point")
-        .create_fn(create)
-        .receive_fn(receive)
-        .flush_fn(flush)
-        .batch_size(batch_size)
+    _write(
+        "ts-point",
+        df,
+        point_record_fn(measurement, time_col, tag_cols, field_cols, precision),
+        _file_store(path, "points"),
+        batch_size,
+        retry,
     )
-    if retry is not None:
-        sink = sink.retry(retry)
-    sink.write(df)
 
 
 def read_points(path: str) -> list[dict]:
-    out: list[dict] = []
-    for p in sorted(glob(os.path.join(path, "points-*.jsonl"))):
-        with open(p) as f:
-            out.extend(json.loads(line) for line in f)
-    return out
+    return _read_store(path, "points")
 
 
 def points_to_parquet(path: str, out_file: str, tag: str, field_cols: list[str]) -> int:
@@ -443,6 +420,10 @@ def mqtt_sink(
       (at-least-once), which the acked_message_log subscription's
       idempotent-sink discipline absorbs downstream.
 
+    The builder itself never retries a flush here (its strategy stays
+    ``never()``): only the QoS >= 1 publish is retried, so a QoS 0
+    message is never re-sent.
+
     ``publish_fn(root, topic, records)`` is the broker boundary
     (defaults to message-log append; swap for a real client). Each
     record carries its qos in ``properties`` so subscription-side
@@ -450,23 +431,15 @@ def mqtt_sink(
     pub = publish_fn if publish_fn is not None else (
         lambda rt, tp, recs: append_segment(rt, tp, recs)
     )
-    retry = retry if retry is not None else RetryStrategy.constant(3, 0.05)
+    retry = retry if retry is not None else CLIENT_RETRY
 
-    def create(writer_id: str) -> dict:
-        return {"buf": []}
-
-    def receive(ctx: dict, row) -> None:
+    def receive(row) -> dict:
         qos = int(qos_fn(row)) if qos_fn is not None else int(default_qos)
-        ctx["buf"].append(
-            {"key": None, "value": value_fn(row), "properties": {"qos": qos}}
-        )
+        return {"key": None, "value": value_fn(row), "properties": {"qos": qos}}
 
-    def flush(ctx: dict) -> None:
-        if not ctx["buf"]:
-            return
-        qos0 = [r for r in ctx["buf"] if r["properties"]["qos"] == 0]
-        rest = [r for r in ctx["buf"] if r["properties"]["qos"] >= 1]
-        ctx["buf"] = []
+    def flush(ctx: Any, items: list[dict]) -> None:
+        qos0 = [r for r in items if r["properties"]["qos"] == 0]
+        rest = [r for r in items if r["properties"]["qos"] >= 1]
         if qos0:
             try:
                 pub(root, topic, qos0)
@@ -475,7 +448,7 @@ def mqtt_sink(
         if rest:
             retry.run(lambda: pub(root, topic, rest))
 
-    def destroy(ctx: dict) -> None:
+    def destroy(ctx: Any) -> None:
         # a stateful publish boundary (e.g. real_clients.paho_publish_fn
         # holding a connected client + network-loop thread) exposes
         # close(); each task deserialized its own copy of `pub`, so
@@ -487,7 +460,6 @@ def mqtt_sink(
 
     (
         SinkBuilder("mqtt")
-        .create_fn(create)
         .receive_fn(receive)
         .flush_fn(flush)
         .destroy_fn(destroy)

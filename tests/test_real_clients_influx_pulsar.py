@@ -96,33 +96,34 @@ def test_influx_long_record_fn_maps_flux_record_and_strips_tz():
     assert isinstance(row["val"], float)
 
 
-def test_influx_epoch_ns_is_host_tz_independent():
-    """ADVICE r12 #1: the read side emits naive-UTC datetimes
-    (influx_long_record_fn strips tzinfo off the store's UTC time), so
-    the write side must pin naive values to UTC too — a bare
-    ts.timestamp() interprets them in the PROCESS-local zone and a
-    source->Spark->sink round-trip on any non-UTC host silently shifts
-    every point by the UTC offset. Force a non-UTC process TZ and
-    assert the conversion still lands on the UTC epoch (computed
-    without any local-time call)."""
+def test_point_record_is_host_tz_independent():
+    """The row -> point mapping shared by point_sink and influx_sink
+    writes the instant Spark holds on any host timezone. A
+    foreachPartition row carries ``TimestampType.fromInternal(us)``, a
+    naive datetime in the PROCESS-local zone, so reading a naive value
+    as UTC shifts every point by the host's UTC offset. Force a non-UTC
+    process TZ, feed the mapping the value Spark hands a sink, and
+    assert the UTC epoch (computed without any local-time call)."""
     import time as _time
 
-    from hazelcast_jet_contrib_spark.real_clients import influx_epoch_ns
+    from pyspark.sql.types import TimestampType
 
-    naive = datetime(2024, 1, 2, 3, 4, 5)
-    expect_ns = int(
-        datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc).timestamp() * 1e6
-    ) * 1_000
+    from hazelcast_jet_contrib_spark.sinks.connectors import point_record_fn
+
+    def epoch_ns(ts):
+        return point_record_fn("cpu", "ts", [], [], precision="ns")({"ts": ts})["time"]
+
+    us = 1704164645 * 1_000_000  # 2024-01-02 03:04:05 UTC
     old = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"  # UTC-5: the bug would shift 5h
     _time.tzset()
     try:
-        assert influx_epoch_ns(naive) == expect_ns
+        assert epoch_ns(TimestampType().fromInternal(us)) == us * 1_000
         # tz-aware values keep their own zone
         aware = datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc)
-        assert influx_epoch_ns(aware) == expect_ns
+        assert epoch_ns(aware) == us * 1_000
         # bare ints are epoch seconds
-        assert influx_epoch_ns(1704164645) == 1704164645 * 1_000_000_000
+        assert epoch_ns(1704164645) == 1704164645 * 1_000_000_000
     finally:
         if old is None:
             os.environ.pop("TZ", None)
@@ -565,9 +566,10 @@ def test_influx_sink_e2e_points_batched_synchronous_with_retry(
     assert all(p["tags"] == {"host": "h1"} and p["precision"] == "ms" for p in pts)
     assert sorted(p["fields"]["usage"] for p in pts) == [0.0, 1.0, 2.0, 3.0, 4.0, 5.0]
     # ms epoch of the literal computed WITHOUT any local-time call: the
-    # session TZ is UTC, so the naive timestamp Spark hands the sink is
-    # UTC wall-clock, and the sink pins the conversion to UTC (ADVICE
-    # r12 #1) — the expectation must hold on any host TZ.
+    # session TZ is UTC, so the literal is that UTC instant. The naive
+    # timestamp Spark hands the sink is process-local wall-clock
+    # (TimestampType.fromInternal), and the sink reads it in that same
+    # zone — the expectation must hold on any host TZ.
     expect_ms = int(
         datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc).timestamp() * 1000
     )

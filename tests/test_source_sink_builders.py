@@ -109,26 +109,23 @@ def _spool_sink(spool_dir: str, batch_size: int = 32, retry=None, fail_times: in
     the test stand-in for an external store."""
 
     def create(writer_id):
-        return {"id": writer_id, "buf": [], "flushes": 0}
+        return {"id": writer_id, "flushes": 0}
 
-    def receive(ctx, row):
-        ctx["buf"].append(row.asDict() if hasattr(row, "asDict") else dict(row))
+    def receive(row):
+        return row.asDict() if hasattr(row, "asDict") else dict(row)
 
-    def flush(ctx):
+    def flush(ctx, items):
         # transient failure injection (MqttSinkTest retry contract)
         fail_marker = os.path.join(spool_dir, f"fails-{ctx['id']}")
         n_failed = len(glob.glob(fail_marker + "-*"))
         if n_failed < fail_times:
             open(f"{fail_marker}-{n_failed}", "w").close()
             raise IOError("transient")
-        if not ctx["buf"]:
-            return
         path = os.path.join(spool_dir, f"{ctx['id']}-{ctx['flushes']}.jsonl")
         with open(path, "w") as f:
-            for r in ctx["buf"]:
+            for r in items:
                 f.write(json.dumps(r, default=str) + "\n")
         ctx["flushes"] += 1
-        ctx["buf"] = []
 
     b = (
         SinkBuilder("spool")
