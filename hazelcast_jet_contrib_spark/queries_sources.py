@@ -45,12 +45,11 @@ def zset_range_catalyst_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # S6 MongoDBSources.batch — find(filter, projection) executed inside the
-# store (MongoDBSourceTest.java:97-123). The Mongo-ish filter
-# document is BUILT from plain .filter() predicates by pushFilters —
-# $gte/$lte/$eq execute inside the store; the startswith predicate has
-# no counterpart in the find language and comes back as a residual that
-# Spark re-checks post-scan (both halves audited in
-# tests/test_plan_audits.py).
+# store (MongoDBSourceTest.java:97-123). The find filter comes from plain
+# .filter() predicates via pushFilters — the >=/<=/= comparisons execute
+# inside the store; the startswith predicate has no counterpart in the
+# find language and comes back as a residual that Spark re-checks
+# post-scan (both halves audited in tests/test_plan_audits.py).
 @query(
     "docstore_catalyst_pushdown",
     oracle="""
@@ -84,10 +83,10 @@ def docstore_catalyst_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # S1 InfluxDbSources.influxDb — measurement read with time-range
 # pushdown: the window arrives as a plain .filter() that Catalyst pushes
-# into the client read — the fourth and last store family on the
-# pushFilters pattern. The tag
-# equality has no counterpart in the reader's time-range language and
-# returns as a residual Spark re-checks post-scan.
+# into the client read, through the same store reader as the other three
+# sources. The tag inequality has no counterpart in the store's
+# time-range language and returns as a residual Spark re-checks
+# post-scan.
 @query(
     "timeseries_catalyst_pushdown",
     oracle="""
@@ -123,9 +122,9 @@ def timeseries_catalyst_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # S3 RedisSources.hash — KV read emitting (key, value) entries. With no
 # key predicate the read is HGETALL (full snapshot); here a plain
-# .filter() on the key column narrows the store read to the server-side key ops a hash
-# store has — startswith becomes a SCAN MATCH "p*" cursor scan executed
-# inside the client (row-group stats pruning + arrow mask), while the
+# .filter() on the key column narrows the store read to the server-side
+# key ops a hash store has — startswith becomes a SCAN MATCH "p*" cursor
+# scan executed inside the client (row-group pruning + row mask), while the
 # contains predicate on the VALUE has no key-op counterpart and comes
 # back as a residual Spark re-checks post-scan (both halves audited in
 # tests/test_plan_audits.py).

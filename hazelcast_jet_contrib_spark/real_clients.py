@@ -411,16 +411,15 @@ def influx_long_record_fn(tag_key: str) -> Callable[[Any], dict]:
     one Flux stream carries every field of a measurement. The
     typed/POJO path (InfluxDbSources.java:167-221)
     is any other ``record_fn`` returning dicts matching the caller's
-    explicit StructType."""
+    explicit StructType. The time stays the store's tz-aware UTC
+    instant: Spark reads a naive one in the session time zone, which
+    would shift every point by that zone's UTC offset."""
 
     def rec_fn(r: Any) -> dict:
-        t = r.get_time()
-        if getattr(t, "tzinfo", None) is not None:
-            t = t.replace(tzinfo=None)  # stores are UTC; Spark wants naive
         return {
             "measurement": r.get_measurement(),
             "tag": str(r.values.get(tag_key)),
-            "time": t,
+            "time": r.get_time(),
             "field": r.get_field(),
             "val": float(r.get_value()),
         }

@@ -29,7 +29,6 @@ from glob import glob
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from hazelcast_jet_contrib_spark.sinks.builder import (
     CLIENT_RETRY,
@@ -39,22 +38,43 @@ from hazelcast_jet_contrib_spark.sinks.builder import (
 from hazelcast_jet_contrib_spark.streaming.message_log import append_segment
 
 
+def _flush_files(path: str, kind: str) -> list[tuple[int, str]]:
+    """``(run number, file)`` of each flush file of a ``_file_store``, in
+    read order. Raises on a directory of a former layout — the
+    one-JSON-document ``<kind>-*.json`` files the KV hash and sorted set
+    stores were once written as, or flush files without a run number —
+    instead of reading it as empty or out of order."""
+    if glob(os.path.join(path, f"{kind}-*.json")):
+        raise ValueError(f"{path}: {kind}-*.json flush files of a former layout")
+    files = []
+    for p in glob(os.path.join(path, f"{kind}-*.jsonl")):
+        run = os.path.basename(p)[len(kind) + 1 :].split("-", 1)[0]
+        if not run.isdigit():
+            raise ValueError(f"{path}: {kind} flush files of a former layout (no run number)")
+        files.append((int(run), p))
+    return sorted(files)
+
+
 def _file_store(
     path: str, kind: str, encode: Callable[[list], Iterable[Any]] = lambda items: items
 ) -> tuple[Callable[[str], dict], Callable[[dict, list], None]]:
     """``(create_fn, flush_fn)`` of a file-backed store: each flush writes
     ``encode(items)`` as one jsonl file
-    ``<kind>-<writer id>-<flush n>-<monotonic ns>.jsonl``, atomically
-    (tmp + ``os.replace``), so a reader never sees half a batch and no
-    flush overwrites another."""
+    ``<kind>-<run>-<writer id>-<flush n>-<monotonic ns>.jsonl``,
+    atomically (tmp + ``os.replace``), so a reader never sees half a
+    batch and no flush overwrites another. The run number is taken here,
+    on the driver, once per sink call: one more than the highest in the
+    directory, so every flush of a later call reads after every flush of
+    an earlier one."""
     os.makedirs(path, exist_ok=True)
+    run = 1 + max((r for r, _ in _flush_files(path, kind)), default=0)
 
     def create(writer_id: str) -> dict:
         return {"id": writer_id, "n": 0}
 
     def flush(ctx: dict, items: list) -> None:
         records = encode(items)
-        name = f"{kind}-{ctx['id']}-{ctx['n']:06d}-{time.monotonic_ns()}.jsonl"
+        name = f"{kind}-{run:06d}-{ctx['id']}-{ctx['n']:06d}-{time.monotonic_ns()}.jsonl"
         final = os.path.join(path, name)
         with open(final + ".tmp", "w") as f:
             f.writelines(json.dumps(r, default=str) + "\n" for r in records)
@@ -65,14 +85,11 @@ def _file_store(
 
 
 def _read_store(path: str, kind: str) -> list:
-    """Store-side read-back of a ``_file_store``: records in flush-file
-    name order (per writer, the flush counter orders them). Raises on
-    the one-JSON-document ``<kind>-*.json`` files the KV hash and sorted
-    set stores were once written as, instead of reading them as empty."""
-    if glob(os.path.join(path, f"{kind}-*.json")):
-        raise ValueError(f"{path}: {kind}-*.json flush files of a former layout")
+    """Store-side read-back of a ``_file_store``: records in run order,
+    then flush-file name order (per writer, the flush counter orders
+    them)."""
     out: list = []
-    for p in sorted(glob(os.path.join(path, f"{kind}-*.jsonl"))):
+    for _, p in _flush_files(path, kind):
         with open(p) as f:
             out.extend(json.loads(line) for line in f)
     return out
@@ -118,7 +135,7 @@ def kv_hash_sink(
     receive-into-HashMap contract)."""
     _write(
         "kv-hash",
-        df.repartition(F.col(key_col)),
+        df.repartition(key_col),
         lambda row: (str(row[key_col]), str(row[value_col])),
         _file_store(path, "hmset", lambda items: dict(items).items()),
         batch_size,
@@ -127,8 +144,9 @@ def kv_hash_sink(
 
 
 def read_kv_hash(path: str) -> dict[str, str]:
-    """Merge flush files in write order (keys are disjoint across
-    writers, so order only matters within one)."""
+    """Merge flush files in write order: a later sink call's value wins;
+    within one call keys are disjoint across writers, so order only
+    matters within one writer."""
     return dict(_read_store(path, "hmset"))
 
 
@@ -148,7 +166,7 @@ def sorted_set_sink(
     score keeps the latest (Redis semantics)."""
     _write(
         "sorted-set",
-        df.repartition(F.col(member_col)),
+        df.repartition(member_col),
         lambda row: (float(row[score_col]), str(row[member_col])),
         _file_store(path, "zadd"),
         batch_size,

@@ -12,6 +12,11 @@ PulsarReaderBuilder.java:156-199). Here those contracts become:
   reference's searchFn;
 - replayable streaming sources (streaming/message_log.py, the generic
   `connector_host`) — offset-range readers checkpointed by Spark's WAL.
+
+The four in-process stores (Redis sorted set and hash, MongoDB find,
+InfluxDB) are Python DataSource V2 sources instead (`dsv2.py`): each
+declares its output projection and the filters it absorbs, and one
+reader executes the predicates Catalyst pushes into it.
 """
 
 from hazelcast_jet_contrib_spark.sources.builder import BatchSourceBuilder, batch_source

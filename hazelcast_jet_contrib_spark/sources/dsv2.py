@@ -2,18 +2,42 @@
 DataSource V2 path (SURVEY.md §7 "Custom Catalyst/DSv2, optional") for
 the paper's Redis sorted-set, Redis hash, MongoDB find and InfluxDB
 sources. The reference passes the range or filter to the source
-builder by hand (manual pushdown); here the OPTIMIZER does it. The
-user writes a plain ``.filter(col("score") >= x)``; Spark hands the
-predicates to ``pushFilters()`` during planning; each source absorbs
-the comparisons its store can execute into the client read (parquet
-row-group statistics pruning + arrow filter — for the sorted set the
-ZRANGEBYSCORE analog, RedisSources.java:200-256,479) and returns only
-the predicates it cannot execute for Spark to re-check.
+builder by hand (manual pushdown: RedisSources.java:200-256,
+MongoDBSources.java:85-93, InfluxDbSources.java:79-221); here the
+OPTIMIZER does it. The user writes a plain ``.filter(col("score") >= x)``
+and Spark hands the predicates to ``pushFilters()`` during planning.
+
+One reader, ``StoreReader``, serves the four stores. A store source
+declares only two things:
+
+- its output projection: output column → store column. The reader
+  reads the bare field where the store already holds the output type
+  and casts it otherwise (``safe=False``, so a nanosecond time
+  truncates toward zero to Spark's microseconds, like the batch
+  reader's ``ts div 1000``);
+- which filter classes it absorbs on which output column.
+
+``pushFilters`` compiles each absorbed filter to ``projection[col] <op>
+literal`` (``In`` to an OR of equalities, a prefix to ``>= p AND
+starts_with``) and yields every filter it cannot compile back to Spark,
+which re-checks it post-scan. ``read`` hands the conjunction to pyarrow,
+which prunes row groups on their statistics and masks the rows inside
+the client: the "query executes in the external system" contract.
+Spark never re-checks an absorbed predicate, and each one is evaluated
+on the projected value, so the store keeps exactly the rows Spark would.
+
+pyarrow 16 prunes a row group only through a bare field or a same-type
+numeric cast; it does not prune through a string cast, an unsafe cast
+or ``isin`` — hence the bare fields and the OR of equalities. A
+comparison on a cast timestamp is also ANDed with its raw-column form
+widened by 1 µs (``t > lo - 1µs``, ``t < hi + 1µs``): the exact
+predicate implies it whichever way the truncation rounds, and pyarrow
+prunes on it.
 
 At 100 TB the difference matters: manual pushdown couples query shape
 to call sites; optimizer pushdown composes — any view/join/subquery
-that narrows the score range narrows the store read, with zero changes
-to reading code.
+that narrows a predicate narrows the store read, with zero changes to
+reading code.
 
 The bundled store clients read a parquet file with pyarrow as the
 stand-in external system (no Redis, MongoDB or InfluxDB server is
@@ -24,22 +48,32 @@ the reference round-robinning streams across members×threads
 
 from __future__ import annotations
 
-import math
+import datetime
+import functools
+import operator
 from dataclasses import dataclass
-from typing import Any
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     EqualTo,
-    Filter,
     GreaterThan,
     GreaterThanOrEqual,
     In,
     InputPartition,
     LessThan,
     LessThanOrEqual,
+    StringStartsWith,
 )
+
+_CMP = {
+    EqualTo: operator.eq,
+    GreaterThan: operator.gt,
+    GreaterThanOrEqual: operator.ge,
+    LessThan: operator.lt,
+    LessThanOrEqual: operator.le,
+}
+_RANGE = tuple(_CMP)
 
 
 @dataclass
@@ -47,112 +81,129 @@ class _RowGroup(InputPartition):
     index: int
 
 
-def _attr_name(f: Filter) -> str:
-    """Column name of a simple comparison filter; "" for compound
-    filters (Not/And/...) that carry no single attribute — every reader
-    treats "" as not-pushable and yields the filter back to Spark."""
-    a = getattr(f, "attribute", None)
-    if a is None:
-        return ""
-    return a[-1] if isinstance(a, (tuple, list)) else str(a)
+def _literal(value, typ):
+    """``value`` as a pyarrow scalar of the output type ``typ``. Raises
+    when it is not exactly a value of that type (a bool, a fraction for
+    an integer column, a string or an int for a time), so the filter
+    goes back to Spark."""
+    import pyarrow as pa
+
+    s = pa.scalar(value, typ)
+    if isinstance(value, bool) or (
+        not isinstance(value, datetime.datetime) and s.as_py() != value
+    ):
+        raise TypeError(f"{value!r} is not a {typ} value")
+    return s
 
 
-class ZSetStoreReader(DataSourceReader):
-    """Sorted-set store reader with optimizer-driven range pushdown.
+class StoreReader(DataSourceReader):
+    """The one store reader: the declared projection and the absorbed
+    filters become one pyarrow scan per row group."""
 
-    Bounds state: [lo, hi] with per-end strictness; pushFilters absorbs
-    >, >=, <, <=, = comparisons on the score column and KEEPS everything
-    else (returned filters are re-evaluated by Spark — correctness never
-    depends on what the store can do)."""
+    def __init__(self, path: str, schema, columns: dict[str, str], absorbs: dict):
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-    def __init__(self, path: str, score_col: str, member_col: str):
         self.path = path
-        self.score_col = score_col
-        self.member_col = member_col
-        self.lo = -math.inf
-        self.hi = math.inf
-        self.lo_strict = False
-        self.hi_strict = False
+        self.absorbs = absorbs
+        self.filter = None
+        self.types: dict = {}
+        self.projection: dict = {}
+        self.raw_times: dict = {}  # output column -> (raw field, tz) of a cast time
+        stored = ds.dataset(path, format="parquet").schema
+        for out in to_arrow_schema(schema):
+            raw = stored.field(columns[out.name])
+            f = ds.field(raw.name)
+            cast = raw.type != out.type
+            self.types[out.name] = out.type
+            self.projection[out.name] = f.cast(out.type, safe=False) if cast else f
+            if cast and pa.types.is_timestamp(raw.type) and pa.types.is_timestamp(out.type):
+                self.raw_times[out.name] = (f, raw.type.tz)
 
     # -- planning ----------------------------------------------------------
     def pushFilters(self, filters):  # noqa: N802 (Spark API name)
+        import pyarrow as pa
+
         for f in filters:
-            if _attr_name(f) == "score" and isinstance(
-                f, (GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, EqualTo)
-            ) and isinstance(f.value, (int, float)) and not isinstance(f.value, bool):
-                v = float(f.value)
-                if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    strict = isinstance(f, GreaterThan)
-                    if v > self.lo or (v == self.lo and strict):
-                        self.lo, self.lo_strict = v, strict
-                elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    strict = isinstance(f, LessThan)
-                    if v < self.hi or (v == self.hi and strict):
-                        self.hi, self.hi_strict = v, strict
-                else:  # EqualTo
-                    # Tighten only — never relax strictness at an equal
-                    # value: after GreaterThan(v) set lo=(v, strict), an
-                    # EqualTo(v) must keep the strict bound so the
-                    # unsatisfiable conjunction (score > v AND score = v)
-                    # stays an empty range regardless of filter order.
-                    if v > self.lo:
-                        self.lo, self.lo_strict = v, False
-                    if v < self.hi:
-                        self.hi, self.hi_strict = v, False
+            try:
+                expr = self._compile(f)
+            except (pa.ArrowException, TypeError, OverflowError):
+                expr = None  # a literal the column cannot hold exactly
+            if expr is None:
+                yield f  # not absorbed: Spark re-checks it post-scan
             else:
-                yield f  # not pushable: Spark evaluates it post-scan
+                self.filter = expr if self.filter is None else self.filter & expr
+
+    def _compile(self, f):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        col = ".".join(getattr(f, "attribute", ()))
+        if not isinstance(f, self.absorbs.get(col, ())):
+            return None
+        x, typ = self.projection[col], self.types[col]
+        if isinstance(f, In):
+            return functools.reduce(operator.or_, [x == _literal(v, typ) for v in f.value])
+        lit = _literal(f.value, typ)
+        if isinstance(f, StringStartsWith):
+            return (x >= lit) & pc.starts_with(x, pattern=f.value)
+        expr = _CMP[type(f)](x, lit)
+        if col in self.raw_times:
+            raw, tz = self.raw_times[col]
+            if not isinstance(f, (LessThan, LessThanOrEqual)):
+                expr &= raw > pa.scalar(lit.value - 1, pa.timestamp("us", tz))
+            if not isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+                expr &= raw < pa.scalar(lit.value + 1, pa.timestamp("us", tz))
+        return expr
 
     def partitions(self):
-        import pyarrow.parquet as pq
-
-        n = max(1, pq.ParquetFile(self.path).metadata.num_row_groups)
-        return [_RowGroup(i) for i in range(n)]
+        return [_RowGroup(i) for i in range(max(1, self._fragment().num_row_groups))]
 
     # -- execution ---------------------------------------------------------
     def read(self, partition: _RowGroup):
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+        i = partition.index
+        # a slice, not an index: a store file with no row groups reads empty
+        for group in self._fragment().split_by_row_group()[i : i + 1]:
+            yield from group.to_table(columns=self.projection, filter=self.filter).to_batches()
 
-        pf = pq.ParquetFile(self.path)
-        md = pf.metadata
-        col_idx = md.schema.names.index(self.score_col)
-        stats = md.row_group(partition.index).column(col_idx).statistics
-        # conservative stats pruning (non-strict bounds are safe for
-        # strict predicates too)
-        if (
-            stats is not None
-            and stats.has_min_max
-            and (stats.min > self.hi or stats.max < self.lo)
-        ):
-            return
-        tbl = pf.read_row_group(
-            partition.index, columns=[self.score_col, self.member_col]
-        )
-        score = tbl[self.score_col]
-        mask = None
-        if self.lo != -math.inf:
-            m = (pc.greater if self.lo_strict else pc.greater_equal)(score, self.lo)
-            mask = m
-        if self.hi != math.inf:
-            m = (pc.less if self.hi_strict else pc.less_equal)(score, self.hi)
-            mask = m if mask is None else pc.and_(mask, m)
-        if mask is not None:
-            tbl = tbl.filter(mask)
-        for s, m in zip(
-            tbl[self.score_col].to_pylist(), tbl[self.member_col].to_pylist()
-        ):
-            yield (float(s), str(m))
+    def _fragment(self):
+        import pyarrow.dataset as ds
+
+        return next(iter(ds.dataset(self.path, format="parquet").get_fragments()))
 
 
-class ZSetStoreDataSource(DataSource):
+class _StoreSource(DataSource):
+    """A store source: ``columns`` (output column → store column, typed
+    by ``schema()``) and ``absorbs`` (output column → filter classes the
+    store executes). Everything else is ``StoreReader``'s."""
+
+    column_options: dict[str, tuple[str, str]] = {}  # output -> (option, default)
+
+    def columns(self, schema) -> dict[str, str]:
+        return {
+            out: self.options.get(opt, default)
+            for out, (opt, default) in self.column_options.items()
+        }
+
+    def reader(self, schema) -> StoreReader:
+        path = self.options.get("path")
+        if not path:
+            raise ValueError(f"{self.name()} requires option 'path'")
+        return StoreReader(path, schema, self.columns(schema), self.absorbs(schema))
+
+
+class ZSetStoreDataSource(_StoreSource):
     """``spark.read.format("zset_store").option("path", p)
     .option("score_col", c).option("member_col", m).load()`` →
-    ``(score double, member string)`` with score comparisons pushed into
-    the store read by the optimizer.
+    ``(score double, member string)``; score comparisons become the
+    store's ZRANGEBYSCORE (RedisSources.java:200-256,479).
 
     Register once per session:
         spark.dataSource.register(ZSetStoreDataSource)
     """
+
+    column_options = {"score": ("score_col", "score"), "member": ("member_col", "member")}
 
     @classmethod
     def name(cls) -> str:
@@ -161,118 +212,24 @@ class ZSetStoreDataSource(DataSource):
     def schema(self) -> str:
         return "score double, member string"
 
-    def reader(self, schema) -> ZSetStoreReader:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("zset_store requires option 'path'")
-        return ZSetStoreReader(
-            path,
-            self.options.get("score_col", "score"),
-            self.options.get("member_col", "member"),
-        )
+    def absorbs(self, schema):
+        return {"score": _RANGE}
 
 
-class KVStoreReader(DataSourceReader):
-    """KV/hash-store reader with optimizer-driven key pushdown — the
-    third store to adopt the pushFilters pattern (after zset and
-    docstore). With no key predicate the read is the reference's
-    HGETALL snapshot (RedisSources.java:100-183); otherwise Catalyst
-    narrows the read to the server-side key operations a hash store
-    actually has:
-
-      * ``EqualTo(key, k)``        → single-field HGET
-      * ``In(key, [k...])``        → HMGET
-      * ``StringStartsWith(key,p)``→ SCAN MATCH "p*" cursor scan
-
-    Conjunction semantics: absorbed key filters INTERSECT (an
-    ``EqualTo`` after an ``In`` narrows the key set; every absorbed
-    prefix must match). Filters on the value column or with non-string
-    operands are returned for Spark to re-check — correctness never
-    depends on what the store can do. The parquet stand-in executes the
-    absorbed filters server-side as row-group statistics pruning + an
-    arrow mask, mirroring the zset reader."""
-
-    def __init__(self, path: str, key_col: str, value_col: str):
-        self.path = path
-        self.key_col = key_col
-        self.value_col = value_col
-        self.keys: set[str] | None = None  # None = unconstrained (HGETALL)
-        self.prefixes: list[str] = []
-
-    # -- planning ----------------------------------------------------------
-    def pushFilters(self, filters):  # noqa: N802 (Spark API name)
-        from pyspark.sql.datasource import StringStartsWith
-
-        for f in filters:
-            if _attr_name(f) != "key":
-                yield f
-            elif isinstance(f, EqualTo) and isinstance(f.value, str):
-                ks = {f.value}
-                self.keys = ks if self.keys is None else self.keys & ks
-            elif isinstance(f, In) and all(isinstance(v, str) for v in f.value):
-                ks = set(f.value)
-                self.keys = ks if self.keys is None else self.keys & ks
-            elif isinstance(f, StringStartsWith) and isinstance(f.value, str):
-                self.prefixes.append(f.value)
-            else:
-                yield f  # not a server-side key op: Spark re-checks it
-
-    def partitions(self):
-        import pyarrow.parquet as pq
-
-        n = max(1, pq.ParquetFile(self.path).metadata.num_row_groups)
-        return [_RowGroup(i) for i in range(n)]
-
-    # -- execution ---------------------------------------------------------
-    def _prune(self, stats) -> bool:
-        """True if the row group's key statistics exclude every absorbed
-        key/prefix (safe-only: string stats, conservative bounds)."""
-        if stats is None or not stats.has_min_max:
-            return False
-        mn, mx = stats.min, stats.max
-        if not (isinstance(mn, str) and isinstance(mx, str)):
-            return False  # non-string physical key column: no pruning
-        if self.keys is not None and all(k < mn or k > mx for k in self.keys):
-            return True
-        # a key matching prefix p is >= p; if the group max sorts below
-        # p no key in it can carry the prefix
-        return any(mx < p for p in self.prefixes)
-
-    def read(self, partition: _RowGroup):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        if self.keys is not None and not self.keys:
-            return  # intersected to the empty key set: no store I/O at all
-        pf = pq.ParquetFile(self.path)
-        md = pf.metadata
-        col_idx = md.schema.names.index(self.key_col)
-        if self._prune(md.row_group(partition.index).column(col_idx).statistics):
-            return
-        tbl = pf.read_row_group(partition.index, columns=[self.key_col, self.value_col])
-        key = pc.cast(tbl[self.key_col], pa.string())
-        val = pc.cast(tbl[self.value_col], pa.string())
-        mask = None
-        if self.keys is not None:
-            mask = pc.is_in(key, value_set=pa.array(sorted(self.keys), pa.string()))
-        for p in self.prefixes:
-            m = pc.starts_with(key, p)
-            mask = m if mask is None else pc.and_(mask, m)
-        if mask is not None:
-            key, val = pc.filter(key, mask), pc.filter(val, mask)
-        yield from zip(key.to_pylist(), val.to_pylist())
-
-
-class KVStoreDataSource(DataSource):
+class KVStoreDataSource(_StoreSource):
     """``spark.read.format("kv_store").option("path", p)
     .option("key_col", k).option("value_col", v).load()`` →
-    ``(key string, value string)`` with key equality / membership /
-    prefix predicates pushed into the store read by the optimizer.
+    ``(key string, value string)``. With no key predicate the read is
+    the reference's HGETALL snapshot (RedisSources.java:100-183);
+    otherwise the key operations a hash store has narrow it:
+    ``EqualTo`` is HGET, ``In`` HMGET, ``StringStartsWith`` a SCAN MATCH
+    "p*" cursor scan. Value predicates return to Spark.
 
     Register once per session:
         spark.dataSource.register(KVStoreDataSource)
     """
+
+    column_options = {"key": ("key_col", "key"), "value": ("value_col", "value")}
 
     @classmethod
     def name(cls) -> str:
@@ -281,123 +238,17 @@ class KVStoreDataSource(DataSource):
     def schema(self) -> str:
         return "key string, value string"
 
-    def reader(self, schema) -> KVStoreReader:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("kv_store requires option 'path'")
-        return KVStoreReader(
-            path,
-            self.options.get("key_col", "key"),
-            self.options.get("value_col", "value"),
-        )
+    def absorbs(self, schema):
+        return {"key": (EqualTo, In, StringStartsWith)}
 
 
-_OPS = {"$gt", "$gte", "$lt", "$lte", "$eq", "$ne", "$in"}
-
-
-def _compile_filter(flt: dict[str, Any]):
-    """Compile a Mongo-ish find() filter document — {field: value}
-    equality and {field: {"$gt"|"$gte"|"$lt"|"$lte"|"$eq"|"$ne"|"$in":
-    v}}, the operator subset the reference's own tests use
-    (MongoDBSourceTest.java:97-123) — to a pyarrow dataset expression,
-    evaluated during the parquet read (row-group stats pruning +
-    filter): the "query executes in the external system" contract."""
-    import pyarrow.dataset as ds
-
-    expr = None
-    for field, cond in flt.items():
-        f = ds.field(field)
-        if isinstance(cond, dict):
-            for op, v in cond.items():
-                if op not in _OPS:
-                    raise ValueError(f"unsupported operator {op!r}")
-                e = {
-                    "$gt": lambda: f > v,
-                    "$gte": lambda: f >= v,
-                    "$lt": lambda: f < v,
-                    "$lte": lambda: f <= v,
-                    "$eq": lambda: f == v,
-                    "$ne": lambda: f != v,
-                    "$in": lambda: f.isin(list(v)),
-                }[op]()
-                expr = e if expr is None else (expr & e)
-        else:
-            e = f == cond
-            expr = e if expr is None else (expr & e)
-    return expr
-
-
-_FIND_OPS: dict[type, str] = {
-    EqualTo: "$eq",
-    GreaterThan: "$gt",
-    GreaterThanOrEqual: "$gte",
-    LessThan: "$lt",
-    LessThanOrEqual: "$lte",
-    In: "$in",
-}
-
-
-class DocStoreReader(DataSourceReader):
-    """Document-store reader with optimizer-driven find() pushdown.
-
-    Where the reference takes the Mongo-ish filter document as a manual
-    argument (MongoDBSources.java:80-96), this reader BUILDS that
-    document from the predicates Catalyst hands to ``pushFilters()``:
-    the declared DDL is the projection, and each absorbed
-    comparison becomes a `{field: {$op: value}}` entry executed inside
-    the store client (row-group stats pruning + arrow filter), and
-    everything else is returned for Spark to re-check. One op per
-    (field, op) slot — a duplicate (e.g. two `$gte` on one field from a
-    non-folded conjunction) is yielded back rather than merged, so there
-    is no bound arithmetic to get wrong; Spark re-checking an absorbed
-    predicate is always safe, only the reverse is not."""
-
-    def __init__(self, path: str, columns: list[str]):
-        self.path = path
-        self.columns = columns
-        self.find: dict[str, dict[str, object]] = {}
-
-    def pushFilters(self, filters):  # noqa: N802 (Spark API name)
-        for f in filters:
-            op = _FIND_OPS.get(type(f))
-            name = _attr_name(f)
-            if op is None or name not in self.columns:
-                yield f
-                continue
-            v = list(f.value) if isinstance(f, In) else f.value
-            if isinstance(v, bool) or not isinstance(v, (int, float, str, list)):
-                yield f
-                continue
-            slot = self.find.setdefault(name, {})
-            if op in slot:
-                yield f
-            else:
-                slot[op] = v
-
-    def partitions(self):
-        import pyarrow.parquet as pq
-
-        n = max(1, pq.ParquetFile(self.path).metadata.num_row_groups)
-        return [_RowGroup(i) for i in range(n)]
-
-    def read(self, partition: _RowGroup):
-        import pyarrow.dataset as ds
-
-        dataset = ds.dataset(self.path, format="parquet")
-        expr = _compile_filter(self.find) if self.find else None
-        fragment = next(iter(dataset.get_fragments())).split_by_row_group()[
-            partition.index
-        ]
-        tbl = fragment.to_table(columns=self.columns, filter=expr)
-        yield from tbl.to_batches()
-
-
-class DocStoreDataSource(DataSource):
+class DocStoreDataSource(_StoreSource):
     """``spark.read.format("doc_store").option("path", p)
     .option("ddl", "doc_id long, lang string").load()`` — the declared
     DDL is both the projection (only those columns are read from the
-    store) and the pushdown surface (comparisons on those columns are
-    absorbed into the find document).
+    store) and the pushdown surface: comparisons and ``In`` on those
+    columns are the find() filter (MongoDBSources.java:80-96) the store
+    executes.
 
     Register once per session:
         spark.dataSource.register(DocStoreDataSource)
@@ -413,156 +264,30 @@ class DocStoreDataSource(DataSource):
             raise ValueError("doc_store requires option 'ddl'")
         return ddl
 
-    def reader(self, schema) -> DocStoreReader:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("doc_store requires option 'path'")
-        return DocStoreReader(path, list(schema.fieldNames()))
+    def columns(self, schema):
+        return {c: c for c in schema.fieldNames()}
+
+    def absorbs(self, schema):
+        return {c: (*_RANGE, In) for c in schema.fieldNames()}
 
 
-class TimeSeriesStoreReader(DataSourceReader):
-    """Time-series store reader with optimizer-driven time-range
-    pushdown — the fourth and last store family on the pushFilters
-    pattern. The reference takes the time range inside the caller's
-    query string (InfluxDbSources.java:79-221); here a plain
-    ``.filter(col("time") >= x)`` reaches the store via Catalyst,
-    composing with any view or join that narrows the window. One field
-    is read per source (option ``field_col``), so a multi-field
-    measurement is one read per field.
-
-    Bounds are kept in integer epoch MICROSECONDS — Spark timestamp
-    precision, which is also the precision of the emitted `time`
-    column. A nanosecond-native store column is truncated to micros
-    BEFORE the absorbed bounds are evaluated, so a row whose ns-time
-    exceeds a strict bound by less than 1 us is excluded exactly as
-    Spark itself would exclude its truncated value (Spark never
-    re-checks absorbed predicates — the mask must see the same values
-    the output carries). Integer bounds mean no float rounding
-    surface, and the same tighten-never-relax rules as the zset reader
-    apply, including EqualTo never relaxing a strict bound at an equal
-    value. Absorbed predicates execute inside the client as row-group
-    statistics pruning + an arrow timestamp mask; everything else
-    returns to Spark."""
-
-    def __init__(self, path: str, time_col: str, tag_col: str, field_col: str):
-        self.path = path
-        self.time_col = time_col
-        self.tag_col = tag_col
-        self.field_col = field_col
-        self.lo: float = -math.inf  # epoch us (int) or ±inf sentinel
-        self.hi: float = math.inf
-        self.lo_strict = False
-        self.hi_strict = False
-
-    @staticmethod
-    def _us(value) -> int | None:
-        import datetime
-
-        import pandas as pd
-
-        if isinstance(value, datetime.datetime):
-            ts = pd.Timestamp(value)
-            if ts.tzinfo is not None:
-                ts = ts.tz_convert("UTC").tz_localize(None)
-            return ts.value // 1000  # ns -> us floor; catalyst literals are whole us
-        return None
-
-    def pushFilters(self, filters):  # noqa: N802 (Spark API name)
-        for f in filters:
-            v = (
-                self._us(f.value)
-                if _attr_name(f) == "time"
-                and isinstance(
-                    f,
-                    (GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, EqualTo),
-                )
-                else None
-            )
-            if v is None:
-                yield f  # not a pushable time comparison: Spark re-checks
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                strict = isinstance(f, GreaterThan)
-                if v > self.lo or (v == self.lo and strict):
-                    self.lo, self.lo_strict = v, strict
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                strict = isinstance(f, LessThan)
-                if v < self.hi or (v == self.hi and strict):
-                    self.hi, self.hi_strict = v, strict
-            else:  # EqualTo: tighten only, never relax strictness
-                if v > self.lo:
-                    self.lo, self.lo_strict = v, False
-                if v < self.hi:
-                    self.hi, self.hi_strict = v, False
-
-    def partitions(self):
-        import pyarrow.parquet as pq
-
-        n = max(1, pq.ParquetFile(self.path).metadata.num_row_groups)
-        return [_RowGroup(i) for i in range(n)]
-
-    def read(self, partition: _RowGroup):
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(self.path)
-        md = pf.metadata
-        col_idx = md.schema.names.index(self.time_col)
-        stats = md.row_group(partition.index).column(col_idx).statistics
-        if stats is not None and stats.has_min_max:
-            try:
-                # floor-truncate stats to us so pruning compares in the
-                # same domain as the mask — conservative at both edges
-                mn = pd.Timestamp(stats.min).value // 1000
-                mx = pd.Timestamp(stats.max).value // 1000
-                if mn > self.hi or mx < self.lo:
-                    return
-            except (TypeError, ValueError):
-                pass  # un-interpretable stats: read the group
-        tbl = pf.read_row_group(
-            partition.index, columns=[self.tag_col, self.time_col, self.field_col]
-        )
-        # truncate to MICROS (Spark timestamp precision) BEFORE masking:
-        # the absorbed bounds must see exactly the values the output
-        # carries, since Spark never re-checks them. safe=False permits
-        # the ns->us data loss (floor for the non-negative epochs a
-        # store holds), mirroring the batch reader's
-        # timestamp_micros(ts div 1000) conversion.
-        t_us = pc.cast(
-            pc.cast(tbl[self.time_col], pa.timestamp("ns")),
-            pa.timestamp("us"),
-            safe=False,
-        )
-        mask = None
-        if self.lo != -math.inf:
-            s = pa.scalar(int(self.lo), pa.timestamp("us"))
-            mask = (pc.greater if self.lo_strict else pc.greater_equal)(t_us, s)
-        if self.hi != math.inf:
-            s = pa.scalar(int(self.hi), pa.timestamp("us"))
-            m = (pc.less if self.hi_strict else pc.less_equal)(t_us, s)
-            mask = m if mask is None else pc.and_(mask, m)
-        out = pa.table(
-            {
-                "tag": pc.cast(tbl[self.tag_col], pa.string()),
-                "time": t_us,
-                "val": pc.cast(tbl[self.field_col], pa.float64()),
-            }
-        )
-        if mask is not None:
-            out = out.filter(mask)
-        yield from out.to_batches()
-
-
-class TimeSeriesStoreDataSource(DataSource):
+class TimeSeriesStoreDataSource(_StoreSource):
     """``spark.read.format("ts_store").option("path", p)
     .option("time_col", t).option("tag_col", g).option("field_col", f)
-    .load()`` → ``(tag string, time timestamp, val double)`` with time
-    comparisons pushed into the store read by the optimizer.
+    .load()`` → ``(tag string, time timestamp, val double)``; time
+    comparisons become the time range the reference writes into the
+    caller's query string (InfluxDbSources.java:79-221). One field is
+    read per source, so a multi-field measurement is one read per field.
 
     Register once per session:
         spark.dataSource.register(TimeSeriesStoreDataSource)
     """
+
+    column_options = {
+        "tag": ("tag_col", "tag"),
+        "time": ("time_col", "time"),
+        "val": ("field_col", "value"),
+    }
 
     @classmethod
     def name(cls) -> str:
@@ -571,16 +296,8 @@ class TimeSeriesStoreDataSource(DataSource):
     def schema(self) -> str:
         return "tag string, time timestamp, val double"
 
-    def reader(self, schema) -> TimeSeriesStoreReader:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("ts_store requires option 'path'")
-        return TimeSeriesStoreReader(
-            path,
-            self.options.get("time_col", "time"),
-            self.options.get("tag_col", "tag"),
-            self.options.get("field_col", "value"),
-        )
+    def absorbs(self, schema):
+        return {"time": _RANGE}
 
 
 def register(spark) -> None:

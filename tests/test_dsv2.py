@@ -1,77 +1,144 @@
-"""DSv2 optimizer-pushdown source: bound-tightening semantics of
-pushFilters and the safety contract that unsupported predicates are
-returned to Spark and still enforced."""
+"""DSv2 optimizer-pushdown sources (``sources/dsv2.py``): which filters
+each store absorbs, the rows its reader returns under them, the safety
+contract that every other predicate is returned to Spark and still
+enforced, and row-group pruning on the store's statistics.
+
+The reader tests run without a JVM: a source is built from its options
+and an explicit schema, ``pushFilters`` returns the residual filters,
+and ``read`` is drained over every partition."""
 
 from __future__ import annotations
 
-import math
+import datetime
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
+    In,
     LessThan,
     LessThanOrEqual,
     StringStartsWith,
 )
 
-from hazelcast_jet_contrib_spark.sources.dsv2 import ZSetStoreReader
+from hazelcast_jet_contrib_spark.sources.dsv2 import (
+    DocStoreDataSource,
+    KVStoreDataSource,
+    TimeSeriesStoreDataSource,
+    ZSetStoreDataSource,
+)
+
+_UTC = datetime.timezone.utc
+_BASE_NS = 1_704_844_800_000_000_000  # 2024-01-10T00:00:00Z
 
 
-def _reader() -> ZSetStoreReader:
-    return ZSetStoreReader("/dev/null", "value", "event_id")
+def _schema(**fields) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in fields.items()])
 
 
-def test_pushfilters_tightens_bounds_and_keeps_strictness():
-    r = _reader()
-    residual = list(
-        r.pushFilters(
-            [
-                GreaterThanOrEqual(("score",), 10.0),
-                GreaterThan(("score",), 10.0),  # tighter: strict wins at same value
-                LessThan(("score",), 80.0),
-                LessThanOrEqual(("score",), 50.0),  # tighter value wins
-            ]
-        )
+_ZSET = _schema(score=T.DoubleType(), member=T.StringType())
+_KV = _schema(key=T.StringType(), value=T.StringType())
+_TS = _schema(tag=T.StringType(), time=T.TimestampType(), val=T.DoubleType())
+
+
+def _pushdown(source, schema, filters):
+    """``(residual filters, rows read)`` of one reader after
+    ``pushFilters(filters)``, its partitions drained in order."""
+    r = source.reader(schema)
+    residual = list(r.pushFilters(filters))
+    rows = [row for p in r.partitions() for b in r.read(p) for row in b.to_pylist()]
+    return residual, rows
+
+
+@pytest.fixture
+def store(tmp_path):
+    """A 10-row-group parquet store: row i has score i, member/key
+    ``k<i:03d>``, value ``i * 7``, a tag and a nanosecond time at
+    ``2024-01-10 + i s``."""
+    n = 100
+    path = str(tmp_path / "store.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "score": pa.array([float(i) for i in range(n)]),
+                "key": [f"k{i:03d}" for i in range(n)],
+                "value": pa.array([i * 7 for i in range(n)], pa.int64()),
+                "tag": [("click", "view")[i % 2] for i in range(n)],
+                "ts": pa.array([_BASE_NS + i * 10**9 for i in range(n)], pa.timestamp("ns")),
+            }
+        ),
+        path,
+        row_group_size=10,
+    )
+    return path
+
+
+def _zset(store):
+    return ZSetStoreDataSource({"path": store, "member_col": "key"})
+
+
+def _kv(store):
+    return KVStoreDataSource({"path": store})
+
+
+def _ts(store):
+    return TimeSeriesStoreDataSource(
+        {"path": store, "time_col": "ts", "tag_col": "tag", "field_col": "score"}
+    )
+
+
+def _at(second: int) -> datetime.datetime:
+    return datetime.datetime(2024, 1, 10, tzinfo=_UTC) + datetime.timedelta(seconds=second)
+
+
+def test_pushfilters_tightens_bounds_and_keeps_strictness(store):
+    residual, rows = _pushdown(
+        _zset(store),
+        _ZSET,
+        [
+            GreaterThanOrEqual(("score",), 10.0),
+            GreaterThan(("score",), 10.0),  # tighter: strict wins at same value
+            LessThan(("score",), 80.0),
+            LessThanOrEqual(("score",), 50.0),  # tighter value wins
+        ],
     )
     assert residual == []
-    assert (r.lo, r.lo_strict) == (10.0, True)
-    assert (r.hi, r.hi_strict) == (50.0, False)
+    assert [r["score"] for r in rows] == [float(i) for i in range(11, 51)]
+    assert rows[0] == {"score": 11.0, "member": "k011"}
 
 
-def test_pushfilters_equal_to_pins_both_bounds():
-    r = _reader()
-    assert list(r.pushFilters([EqualTo(("score",), 42.0)])) == []
-    assert (r.lo, r.lo_strict) == (42.0, False)
-    assert (r.hi, r.hi_strict) == (42.0, False)
+def test_pushfilters_equal_to_pins_both_bounds(store):
+    residual, rows = _pushdown(_zset(store), _ZSET, [EqualTo(("score",), 42.0)])
+    assert residual == []
+    assert rows == [{"score": 42.0, "member": "k042"}]
 
 
-def test_pushfilters_equal_to_never_relaxes_strict_bound():
-    """GreaterThan(v) then EqualTo(v) is unsatisfiable (score > v AND
-    score = v); both are absorbed, so the reader's range must stay
-    EMPTY — EqualTo must not rewrite the strict lower bound to
-    non-strict. Order-independence: the reverse order already worked."""
-    r = _reader()
-    assert list(r.pushFilters([GreaterThan(("score",), 5.0), EqualTo(("score",), 5.0)])) == []
-    assert (r.lo, r.lo_strict) == (5.0, True)  # strict kept → (5,5] empty
-    assert (r.hi, r.hi_strict) == (5.0, False)
-    # empty-range check: lo==hi with one strict end admits nothing
-    assert r.lo == r.hi and (r.lo_strict or r.hi_strict)
-
-    r2 = _reader()
-    assert list(r2.pushFilters([LessThan(("score",), 5.0), EqualTo(("score",), 5.0)])) == []
-    assert (r2.hi, r2.hi_strict) == (5.0, True)
-    assert (r2.lo, r2.lo_strict) == (5.0, False)
+def test_pushfilters_equal_to_never_relaxes_strict_bound(store):
+    """``score > v AND score = v`` is unsatisfiable: both filters are
+    absorbed, so the store must return no row, in either order and from
+    either side."""
+    for filters in (
+        [GreaterThan(("score",), 5.0), EqualTo(("score",), 5.0)],
+        [EqualTo(("score",), 5.0), GreaterThan(("score",), 5.0)],
+        [LessThan(("score",), 5.0), EqualTo(("score",), 5.0)],
+    ):
+        assert _pushdown(_zset(store), _ZSET, filters) == ([], []), filters
 
 
-def test_pushfilters_returns_unsupported_predicates():
-    r = _reader()
+def test_pushfilters_returns_unsupported_predicates(store):
     other = StringStartsWith(("member",), "a")
-    residual = list(r.pushFilters([GreaterThan(("score",), 1.0), other]))
-    assert residual == [other]
-    assert (r.lo, r.lo_strict) == (1.0, True)
-    assert r.hi == math.inf
+    a_bool = EqualTo(("score",), True)  # not a double literal
+    residual, rows = _pushdown(
+        _zset(store), _ZSET, [GreaterThan(("score",), 97.0), other, a_bool]
+    )
+    assert residual == [other, a_bool]
+    assert [r["score"] for r in rows] == [98.0, 99.0]
 
 
 def test_unsupported_filter_still_enforced_end_to_end(spark):
@@ -102,104 +169,108 @@ def test_unsupported_filter_still_enforced_end_to_end(spark):
     assert got == truth and len(got) > 0
 
 
-def test_docstore_pushfilters_builds_find_document():
-    from hazelcast_jet_contrib_spark.sources.dsv2 import DocStoreReader
+_DOC = _schema(key=T.StringType(), value=T.LongType(), tag=T.StringType())
 
-    r = DocStoreReader("/dev/null", ["doc_id", "lang", "n_chars"])
-    other = StringStartsWith(("lang",), "e")  # no find-language counterpart
-    residual = list(
-        r.pushFilters(
-            [
-                GreaterThanOrEqual(("n_chars",), 100),
-                LessThanOrEqual(("n_chars",), 400),
-                EqualTo(("lang",), "en"),
-                other,
-            ]
-        )
+
+def _doc(store):
+    return DocStoreDataSource({"path": store, "ddl": "key string, value long, tag string"})
+
+
+def _doc_rows(keep) -> list[dict]:
+    return [
+        {"key": f"k{i:03d}", "value": i * 7, "tag": ("click", "view")[i % 2]}
+        for i in range(100)
+        if keep(i)
+    ]
+
+
+def test_docstore_pushfilters_builds_find_document(store):
+    """Comparisons on declared columns are the find() filter the store
+    executes; a prefix has no find-language counterpart and returns."""
+    other = StringStartsWith(("key",), "k0")
+    residual, rows = _pushdown(
+        _doc(store),
+        _DOC,
+        [
+            GreaterThanOrEqual(("value",), 100),
+            LessThanOrEqual(("value",), 400),
+            EqualTo(("tag",), "view"),
+            other,
+        ],
     )
     assert residual == [other]
-    assert r.find == {
-        "n_chars": {"$gte": 100, "$lte": 400},
-        "lang": {"$eq": "en"},
-    }
+    assert rows == _doc_rows(lambda i: 100 <= i * 7 <= 400 and i % 2)
 
 
-def test_docstore_pushfilters_duplicate_slot_and_unknown_column_yielded():
-    from pyspark.sql.datasource import In
-
-    from hazelcast_jet_contrib_spark.sources.dsv2 import DocStoreReader
-
-    r = DocStoreReader("/dev/null", ["doc_id", "lang"])
-    dup = GreaterThanOrEqual(("doc_id",), 20)
+def test_docstore_pushfilters_duplicate_absorbed_and_unknown_column_yielded(store):
+    """A second comparison with the same field and operator is absorbed
+    too (the conjunction keeps the tighter); a column outside the DDL is
+    returned for Spark to re-check."""
     off_schema = EqualTo(("other_col",), 1)
-    residual = list(
-        r.pushFilters(
-            [
-                GreaterThanOrEqual(("doc_id",), 10),
-                dup,  # second $gte on the same field: re-checked by Spark
-                off_schema,  # not a declared column: re-checked by Spark
-                In(("lang",), ("en", "de")),
-            ]
-        )
+    residual, rows = _pushdown(
+        _doc(store),
+        _DOC,
+        [
+            GreaterThanOrEqual(("value",), 70),
+            GreaterThanOrEqual(("value",), 140),
+            off_schema,
+            In(("tag",), ("view", "none")),
+        ],
     )
-    assert residual == [dup, off_schema]
-    assert r.find == {"doc_id": {"$gte": 10}, "lang": {"$in": ["en", "de"]}}
+    assert residual == [off_schema]
+    assert rows == _doc_rows(lambda i: i * 7 >= 140 and i % 2)
 
 
-def test_kv_pushfilters_intersects_key_sets():
-    """Conjunction semantics: EqualTo after In must INTERSECT (narrow),
-    never union; disjoint sets intersect to empty and read() emits
-    nothing without touching the store."""
-    from pyspark.sql.datasource import In
-
-    from hazelcast_jet_contrib_spark.sources.dsv2 import KVStoreReader
-
-    r = KVStoreReader("/dev/null", "k", "v")
-    assert list(r.pushFilters([In(("key",), ("a", "b", "c")), EqualTo(("key",), "b")])) == []
-    assert r.keys == {"b"}
-
-    r2 = KVStoreReader("/dev/null", "k", "v")
-    assert list(r2.pushFilters([EqualTo(("key",), "a"), EqualTo(("key",), "z")])) == []
-    assert r2.keys == set()
-    assert list(r2.read(type("P", (), {"index": 0})())) == []  # no store I/O
+def test_kv_pushfilters_intersects_key_sets(store):
+    """Conjunction semantics: EqualTo after In narrows the key set,
+    never widens it; disjoint keys read no row."""
+    residual, rows = _pushdown(
+        _kv(store), _KV, [In(("key",), ("k001", "k002", "k003")), EqualTo(("key",), "k002")]
+    )
+    assert residual == []
+    assert rows == [{"key": "k002", "value": "14"}]
+    disjoint = [EqualTo(("key",), "k001"), EqualTo(("key",), "k099")]
+    assert _pushdown(_kv(store), _KV, disjoint) == ([], [])
 
 
-def test_kv_pushfilters_prefixes_conjoin_and_value_filters_return():
-    from hazelcast_jet_contrib_spark.sources.dsv2 import KVStoreReader
-
-    r = KVStoreReader("/dev/null", "k", "v")
+def test_kv_pushfilters_prefixes_conjoin_and_value_filters_return(store):
     on_value = StringStartsWith(("value",), "x")
     not_a_key_op = GreaterThan(("key",), "m")
-    residual = list(
-        r.pushFilters(
-            [StringStartsWith(("key",), "ab"), StringStartsWith(("key",), "abc"),
-             on_value, not_a_key_op]
-        )
+    residual, rows = _pushdown(
+        _kv(store),
+        _KV,
+        [
+            StringStartsWith(("key",), "k0"),
+            StringStartsWith(("key",), "k04"),
+            on_value,
+            not_a_key_op,
+        ],
     )
     assert residual == [on_value, not_a_key_op]
-    assert r.prefixes == ["ab", "abc"] and r.keys is None
+    assert [r["key"] for r in rows] == [f"k{i:03d}" for i in range(40, 50)]
 
 
-def test_kv_prune_is_conservative():
-    """Row-group stats pruning: prune only when the key range provably
-    excludes every absorbed key/prefix; non-string stats never prune."""
-    from hazelcast_jet_contrib_spark.sources.dsv2 import KVStoreReader
+def test_pushdown_prunes_row_groups_on_statistics(store):
+    """pyarrow keeps only the row groups whose statistics can hold a
+    match under each compiled filter: a bare double score, a bare string
+    key under =, In and a prefix, and a nanosecond time cast to Spark's
+    microseconds (pruned through its widened raw-column form)."""
+    fragment = next(iter(ds.dataset(store, format="parquet").get_fragments()))
 
-    class S:
-        has_min_max = True
+    def kept(source, schema, filters):
+        r = source.reader(schema)
+        assert list(r.pushFilters(filters)) == []
+        return [g.row_groups[0].id for g in fragment.split_by_row_group(r.filter)]
 
-        def __init__(self, mn, mx):
-            self.min, self.max = mn, mx
-
-    r = KVStoreReader("/dev/null", "k", "v")
-    r.keys = {"mm"}
-    assert r._prune(S("aa", "cc")) is True  # mm > max
-    assert r._prune(S("ma", "mz")) is False  # in range
-    assert r._prune(S(1, 9)) is False  # non-string stats: keep
-    r2 = KVStoreReader("/dev/null", "k", "v")
-    r2.prefixes = ["zz"]
-    assert r2._prune(S("aa", "cc")) is True  # max sorts below prefix
-    assert r2._prune(S("aa", "zz9")) is False
+    zset, kv, ts = _zset(store), _kv(store), _ts(store)
+    score = [GreaterThanOrEqual(("score",), 35.0), LessThan(("score",), 52.0)]
+    assert kept(zset, _ZSET, score) == [3, 4, 5]
+    assert kept(kv, _KV, [EqualTo(("key",), "k035")]) == [3]
+    assert kept(kv, _KV, [In(("key",), ("k035", "k071"))]) == [3, 7]
+    assert kept(kv, _KV, [StringStartsWith(("key",), "k09")]) == [9]
+    time = [GreaterThanOrEqual(("time",), _at(35)), LessThan(("time",), _at(52))]
+    assert kept(ts, _TS, time) == [3, 4, 5]
+    assert kept(ts, _TS, [EqualTo(("time",), _at(71))]) == [7]
 
 
 def test_kv_store_end_to_end_matches_ground_truth(spark):
@@ -224,52 +295,44 @@ def test_kv_store_end_to_end_matches_ground_truth(spark):
     assert got == {("Customer#000000007", "7"), ("Customer#000000011", "11")}
 
 
-def test_ts_pushfilters_converts_bounds_to_epoch_ns():
-    """Time comparisons become integer epoch-us bounds (Spark timestamp
-    precision, the domain the emitted column lives in — no float
-    rounding surface); tag/val predicates have no time-range
-    counterpart and return to Spark."""
-    import datetime
-
-    from hazelcast_jet_contrib_spark.sources.dsv2 import TimeSeriesStoreReader
-
-    r = TimeSeriesStoreReader("/dev/null", "ts", "event_type", "value")
-    lo = datetime.datetime(2024, 1, 10)
-    hi = datetime.datetime(2024, 1, 12)
+def test_ts_pushfilters_converts_bounds_to_epoch_ns(store):
+    """Time comparisons select the window on the emitted microsecond
+    time; a naive literal reads as UTC. The tag predicate has no
+    time-range counterpart and returns to Spark."""
     on_tag = EqualTo(("tag",), "click")
-    residual = list(
-        r.pushFilters([GreaterThanOrEqual(("time",), lo), LessThan(("time",), hi), on_tag])
+    residual, rows = _pushdown(
+        _ts(store),
+        _TS,
+        [
+            GreaterThanOrEqual(("time",), datetime.datetime(2024, 1, 10, 0, 0, 10)),
+            LessThan(("time",), _at(13)),
+            on_tag,
+        ],
     )
     assert residual == [on_tag]
-    assert (r.lo, r.lo_strict) == (1704844800000000, False)
-    assert (r.hi, r.hi_strict) == (1705017600000000, True)
+    assert [(r["tag"], r["time"], r["val"]) for r in rows] == [
+        ("click", _at(10), 10.0),
+        ("view", _at(11), 11.0),
+        ("click", _at(12), 12.0),
+    ]
 
 
-def test_ts_pushfilters_equal_to_never_relaxes_strict_bound():
+def test_ts_pushfilters_equal_to_never_relaxes_strict_bound(store):
     """time > v then time = v is unsatisfiable; both absorbed, so the
-    range must stay empty — same tighten-only rule as the zset reader."""
-    import datetime
-
-    from hazelcast_jet_contrib_spark.sources.dsv2 import TimeSeriesStoreReader
-
-    r = TimeSeriesStoreReader("/dev/null", "ts", "event_type", "value")
-    v = datetime.datetime(2024, 3, 1, 12, 0, 0)
-    assert list(r.pushFilters([GreaterThan(("time",), v), EqualTo(("time",), v)])) == []
-    assert r.lo == r.hi and r.lo_strict  # (v, v] admits nothing
+    store returns no row — the same rule as the sorted set's."""
+    filters = [GreaterThan(("time",), _at(5)), EqualTo(("time",), _at(5))]
+    assert _pushdown(_ts(store), _TS, filters) == ([], [])
 
 
-def test_ts_pushfilters_non_datetime_value_is_yielded():
-    """A time comparison whose literal isn't a datetime (e.g. a string
-    that Catalyst didn't fold) cannot be converted to ns — it must come
-    back for Spark to re-check, not be silently dropped."""
-    import math as _math
-
-    from hazelcast_jet_contrib_spark.sources.dsv2 import TimeSeriesStoreReader
-
-    r = TimeSeriesStoreReader("/dev/null", "ts", "event_type", "value")
-    f = GreaterThan(("time",), "2024-01-10")
-    assert list(r.pushFilters([f])) == [f]
-    assert r.lo == -_math.inf and r.hi == _math.inf
+def test_ts_pushfilters_non_datetime_value_is_yielded(store):
+    """A time comparison whose literal is not a datetime (a string that
+    Catalyst did not fold, an int) cannot become a time bound: it comes
+    back for Spark to re-check, and the store reads every row."""
+    as_str = GreaterThan(("time",), "2024-01-10")
+    as_int = LessThan(("time",), 5)
+    residual, rows = _pushdown(_ts(store), _TS, [as_str, as_int])
+    assert residual == [as_str, as_int]
+    assert len(rows) == 100
 
 
 def test_ts_store_end_to_end_matches_ground_truth(spark):
@@ -348,3 +411,38 @@ def test_ts_store_ns_precision_truncates_before_masking(spark, tmp_path):
     # base+500 truncates to X (excluded by strict >); base+1000 is X+1us
     # (included); base+1500 truncates to X+1us (included)
     assert got == [("b", 2.0), ("c", 3.0), ("d", 4.0)], got
+
+
+def test_ts_store_pre_1970_row_is_kept(spark, tmp_path):
+    """A row at -500 ns truncates toward zero to an emitted time of
+    1970-01-01 00:00:00, which satisfies ``time >= 1970-01-01``: the
+    store evaluates the absorbed filter on the emitted value, so it
+    returns the row (Spark never re-checks an absorbed predicate). A row
+    at -1500 ns emits -1 us and is excluded."""
+    from hazelcast_jet_contrib_spark.sources import dsv2
+
+    path = str(tmp_path / "pre1970.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "tag": ["a", "b", "c"],
+                "ts": pa.array([-500, -1_500, 2_000], pa.timestamp("ns")),
+                "v": [1.0, 2.0, 3.0],
+            }
+        ),
+        path,
+        row_group_size=1,  # each row alone, so its group's statistics are its own
+    )
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    dsv2.register(spark)
+    df = (
+        spark.read.format("ts_store")
+        .option("path", path)
+        .option("time_col", "ts")
+        .option("tag_col", "tag")
+        .option("field_col", "v")
+        .load()
+        .filter(F.col("time") >= F.lit("1970-01-01 00:00:00").cast("timestamp"))
+    )
+    got = sorted(df.select("tag", F.unix_micros("time")).collect())
+    assert [tuple(r) for r in got] == [("a", 0), ("c", 2)], got

@@ -79,20 +79,19 @@ class _FakeInfluxClient:
         return _FakeQueryApi(self._recs, self.queries)
 
 
-def test_influx_long_record_fn_maps_flux_record_and_strips_tz():
-    from datetime import timezone
-
-    rec = _FluxRec(
-        "cpu", "h1", datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc), "usage", 7
-    )
-    row = influx_long_record_fn("host")(rec)
+def test_influx_long_record_fn_maps_flux_record_and_keeps_tz():
+    """The store's UTC time stays tz-aware: Spark would read a naive
+    value in the session time zone."""
+    t = datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone.utc)
+    row = influx_long_record_fn("host")(_FluxRec("cpu", "h1", t, "usage", 7))
     assert row == {
         "measurement": "cpu",
         "tag": "h1",
-        "time": datetime(2024, 1, 2, 3, 4, 5),
+        "time": t,
         "field": "usage",
         "val": 7.0,
     }
+    assert row["time"].tzinfo is not None
     assert isinstance(row["val"], float)
 
 
@@ -255,7 +254,7 @@ url's ?dir= names a directory of rows.jsonl; query_stream parses the
 server-side (the pushdown the adapter promises). write_api records
 points + the requested write_options to disk."""
 import json, os, re, urllib.parse
-from datetime import datetime
+from datetime import datetime, timezone
 
 SYNCHRONOUS = "SYNCHRONOUS"
 
@@ -269,7 +268,8 @@ class _Rec:
         return self._d["measurement"]
 
     def get_time(self):
-        return datetime.fromtimestamp(self._d["epoch"])
+        # the real FluxRecord's time is a tz-aware UTC datetime
+        return datetime.fromtimestamp(self._d["epoch"], tz=timezone.utc)
 
     def get_field(self):
         return self._d["field"]
@@ -527,6 +527,39 @@ def test_influx_source_e2e_range_sharded_fluxes_push_down(
     assert df.rdd.getNumPartitions() == 2
     rows = sorted((r["val"], r["tag"]) for r in df.collect())
     assert rows == [(float(i), f"h{i % 3}") for i in range(20)]
+
+
+def test_influx_source_reads_the_utc_instant_in_a_non_utc_session(
+    fake_influx_on_executors, tmp_path
+):
+    """A point at 2024-01-02T03:04:05Z reads back as that instant with
+    the session time zone at America/New_York (a naive time would read
+    5 h late)."""
+    from pyspark.sql import functions as F
+
+    spark = fake_influx_on_executors
+    store = tmp_path / "influx_tz"
+    store.mkdir()
+    epoch = 1704164645  # 2024-01-02T03:04:05Z
+    rec = {"measurement": "cpu", "tags": {"host": "h1"}, "epoch": epoch,
+           "field": "usage", "val": 1.0}
+    (store / "rows.jsonl").write_text(json.dumps(rec) + "\n")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = influx_source(
+            spark,
+            f"http://fake:8086/?dir={store}",
+            token="tk",
+            org="o",
+            partition_fluxes=['from(bucket:"b") |> range(start: 0, stop: 2000000000)'],
+            schema="measurement string, tag string, time timestamp, field string, val double",
+            record_fn=influx_long_record_fn("host"),
+        )
+        got = [r[0] for r in df.select(F.unix_micros("time")).collect()]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert got == [epoch * 1_000_000]
 
 
 def test_influx_sink_e2e_points_batched_synchronous_with_retry(

@@ -7,8 +7,8 @@ identical batch after a failed flush, clear after success, destroy on a
 flush that fails for good — and the sinks that depend on it: the
 ordered ``doc_sink`` abort under retry, the ``mqtt_sink`` QoS 0 single
 attempt, the row -> point mapping ``point_sink`` and ``influx_sink``
-share, on a non-UTC host, and the file stores' refusal of a former
-layout.
+share, on a non-UTC host, the file stores' refusal of a former
+layout, and a later sink call's flushes reading after an earlier one's.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from hazelcast_jet_contrib_spark.real_clients import influx_sink
 from hazelcast_jet_contrib_spark.sinks.builder import RetryStrategy, SinkBuilder
 from hazelcast_jet_contrib_spark.sinks.connectors import (
     doc_sink,
+    kv_hash_sink,
     mqtt_sink,
     point_sink,
     read_kv_hash,
@@ -44,6 +45,9 @@ class _Frame:
 
     def foreachPartition(self, fn):
         fn(iter(self.rows))
+
+    def repartition(self, *cols):
+        return self
 
 
 def _recording_sink(batch_size, fail_first=0, retry=RetryStrategy.never()):
@@ -140,6 +144,22 @@ def test_store_of_the_former_json_layout_is_refused(tmp_path):
         read_kv_hash(str(tmp_path))
     with pytest.raises(ValueError, match="former layout"):
         read_sorted_set(str(tmp_path))
+
+
+def test_second_kv_hash_sink_run_wins_over_the_first(tmp_path):
+    """A second sink call into the same store restarts its flush
+    counter; its flushes must still read after every flush of the first
+    call, so its value for a key wins. Flush files without a run number
+    (a former layout) are refused, not read out of order."""
+    path = str(tmp_path / "kv")
+    first = [Row(k="a", v="1"), Row(k="k", v="old")]
+    kv_hash_sink(_Frame(first), path, "k", "v", batch_size=1)
+    kv_hash_sink(_Frame([Row(k="k", v="new")]), path, "k", "v", batch_size=1)
+    assert read_kv_hash(path) == {"a": "1", "k": "new"}
+
+    (tmp_path / "kv" / "hmset-kv-hash-0-000000-1.jsonl").write_text('["k", "v0"]\n')
+    with pytest.raises(ValueError, match="former layout"):
+        read_kv_hash(path)
 
 
 def test_mqtt_qos0_is_published_once_and_qos1_retried():
