@@ -136,12 +136,14 @@ def main() -> None:
     # one-time Janino compilation. Warm EVERY query IMMEDIATELY before
     # its timed run against the SMALLEST scale factor: the generated
     # Java is keyed by expression structure, not input path, so the
-    # ~100-row warmup compiles exactly the classes the timed run needs —
-    # and doing it just-in-time (not up front) stops other queries'
-    # codegen from evicting the warmed classes out of the bounded
-    # codegen cache. The timed number is therefore steady-state
-    # execution at SF_DIR, which is the quantity that scales to a real
-    # cluster (where JIT cost amortizes to zero over a 100 TB scan).
+    # ~100-row warmup compiles exactly the classes the timed run needs.
+    # get_spark sizes the compiled-class cache to hold every class of a
+    # whole registry window (session.py), so other queries' codegen no
+    # longer evicts the warmed classes; warming just-in-time keeps that
+    # true under a session with Spark's 100-entry default. The timed
+    # number is therefore steady-state execution at SF_DIR, which is the
+    # quantity that scales to a real cluster (where JIT cost amortizes
+    # to zero over a 100 TB scan).
     warm_dir = str(Path(SF_DIR).parent / "sf0.001")
     can_warm = Path(warm_dir).is_dir() and warm_dir != SF_DIR
 

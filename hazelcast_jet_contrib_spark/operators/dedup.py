@@ -696,12 +696,15 @@ def connected_components(
     neighbors' labels, until a fixpoint. Iterations needed = graph
     diameter, and near-dup components are shallow (copies of a common
     ancestor), so this converges in a handful of rounds; each round is
-    one shuffle join + one aggregation, all JVM-side.
+    one join (edges ⋈ labels on v) and ONE aggregation over the
+    neighbor messages ∪ the current labels, all JVM-side: the
+    aggregate yields the new label and the old one together, so
+    nothing joins back to the labels.
 
     Lineage is CUT each round with ``localCheckpoint`` (the pagerank
     loop's pattern, operators/graph.py): each iteration's plan
-    references the previous labels both through the join and through
-    the convergence probe, so a cache-only loop keeps a logical plan
+    references the previous labels both through the join and as the
+    carried state, so a cache-only loop keeps a logical plan
     that compounds per round (at max_iter=25 the old persist version
     planned 496 broadcast nodes — execution was cached, but planning
     time grew superlinearly with rounds). The checkpoint restarts every
@@ -717,8 +720,9 @@ def connected_components(
     tests/test_scale_rehearsal_analytics.py).
     Swap localCheckpoint for checkpoint() on a reliable FS when
     executor loss must be survivable mid-computation. The convergence
-    check is an aggregate over the checkpointed step (no driver-side
-    data collection).
+    check is an ``Observation`` on the round's checkpoint job: the
+    changed-label count rides back with the job that materializes the
+    round, so a round runs no count job and collects no data.
 
     Storage is bounded too, not just plans: a SUPERSEDED round's
     checkpoint blocks are freed deterministically (the checkpoint RDD
@@ -733,6 +737,7 @@ def connected_components(
     nondeterministic upstream detector (ADVICE r13 #1).
     """
     from pyspark import StorageLevel
+    from pyspark.sql import Observation
 
     # the input pair relation is typically expensive (a near-dup
     # detector); persist it so the two-direction edge union doesn't
@@ -794,27 +799,23 @@ def connected_components(
             .localCheckpoint(eager=True)
         )
         labels_h = _checkpoint_rdd_handle(labels)
+        label_type = labels.schema["l"].dataType
         for _ in range(max_iter):
-            neighbor_min = (
-                edges.join(
-                    labels.select(F.col("u").alias("v"), F.col("l").alias("lv")), "v"
-                )
+            # neighbor labels (old NULL) ∪ current labels (old = l)
+            messages = edges.join(
+                labels.select(F.col("u").alias("v"), F.col("l").alias("x")), "v"
+            ).select("u", "x", F.lit(None).cast(label_type).alias("old"))
+            state = labels.select("u", F.col("l").alias("x"), F.col("l").alias("old"))
+            changes = Observation()
+            stepped = (
+                messages.unionByName(state)
                 .groupBy("u")
-                .agg(F.min("lv").alias("nl"))
+                .agg(F.min("x").alias("l"), F.max("old").alias("old"))
+                .observe(changes, F.count_if(F.col("l") != F.col("old")).alias("changed"))
+                .localCheckpoint(eager=True)
             )
-            # one join carries both the new label and the old one, so the
-            # convergence probe below doesn't need a second join per round
-            stepped_plan = labels.join(neighbor_min, "u", "left").select(
-                "u",
-                F.col("l").alias("old"),
-                F.least("l", F.coalesce("nl", "l")).alias("l"),
-            )
-            stepped = stepped_plan.localCheckpoint(eager=True)
             stepped_h = _checkpoint_rdd_handle(stepped)
-            # the count runs against the already-materialized checkpoint
-            # partitions — later rounds and the returned relation never
-            # fall back to recomputing a deep lineage
-            changed = stepped.filter(F.col("l") != F.col("old")).count()
+            changed = changes.get["changed"]
             # stepped is fully materialized now, so the previous round's
             # snapshot can never be read again — free its blocks
             if labels_h is not None:

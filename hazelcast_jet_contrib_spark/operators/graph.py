@@ -8,18 +8,16 @@ canonical "importance over detected relationships" follow-up (rank
 canonical documents inside a link/citation/near-dup graph, weight
 sources by reference structure before sampling).
 
-Scale shape: one out-degree aggregation up front, then per iteration
-exactly ONE exchange (the dst inflow aggregation) — the edge and base
-relations persist pre-partitioned on their sweep join keys and the
-checkpointed ranks inherit hash(node) partitioning, so the sweep joins
-satisfy their clustering from cache — the same bounded-lineage loop as
-the k-means and label-
-propagation operators (per-iteration lineage cut, ZERO driver-side
-data: the dangling-mass scalar is a one-row broadcast aggregate of the
-checkpointed ranks, never a collect). Ranks relation is |V| rows,
-edges |E| rows; nothing quadratic anywhere. Iterations are FIXED
-(default 10), not convergence-polled, so the result is deterministic
-and replayable — at web scale you run the standard 10-50 sweeps.
+Scale shape: one out-degree aggregation up front, then per sweep one
+join (ranks ⋈ edges on src) and ONE aggregation by node over the
+contributions ∪ the previous state, so nothing joins back to a node
+table. Lineage is cut per sweep by an eager ``localCheckpoint`` (the
+k-means and label-propagation loop), and the dangling-mass scalar is an
+``Observation`` on that checkpoint job: no broadcast aggregate, no
+extra job, no collect. Ranks relation is |V| rows, edges |E| rows;
+nothing quadratic anywhere. Iterations are FIXED (default 10), not
+convergence-polled, so the result is deterministic and replayable — at
+web scale you run the standard 10-50 sweeps.
 
 Semantics (the standard formulation): uniform init 1/N, dangling-node
 mass redistributed uniformly each sweep, rank = (1-d)/N + d*(inflow +
@@ -81,30 +79,22 @@ def pagerank(
     if seeds is not None and init_ranks is not None:
         raise ValueError("init_ranks warm start and seeds are mutually exclusive")
     from pyspark import StorageLevel
+    from pyspark.sql import Observation
 
-    # Both loop-invariant relations persist PRE-PARTITIONED on their
-    # sweep join key (the classifier GD-loop pattern, classifier.py):
-    # e clustered on src satisfies the sweep join's right side, base
-    # clustered on node satisfies the rank-update join. Locally AQE
-    # broadcasts the tiny ranks side and neither matters; at 100 TB,
-    # where |V| is far past any broadcast threshold and sort-merge join
-    # engages, this is O(1) passes of the |E|-row edge relation through
-    # the shuffle system instead of O(iterations) — each sweep then
+    # The edge relation persists PRE-PARTITIONED on its sweep join key
+    # (the classifier GD-loop pattern, classifier.py). Locally AQE
+    # broadcasts the tiny ranks side and it does not matter; at 100 TB,
+    # where sort-merge join engages, the |E|-row edge relation passes
+    # through the shuffle O(1) times instead of O(iterations): each sweep
     # re-shuffles only the checkpointed ranks (localCheckpoint yields
-    # UnknownPartitioning) and the inflow partial aggregates. Measured
-    # under a forced no-broadcast plan in
-    # tests/test_scale_rehearsal_analytics.py (live per-sweep shuffle
-    # ~|V| + partials, an order of magnitude under |E|).
-    from hazelcast_jet_contrib_spark.cache import adaptive_repartition
+    # UnknownPartitioning) and the inflow partials (measured under a
+    # forced no-broadcast plan in tests/test_scale_rehearsal_analytics.py).
+    # The partition count derives from BYTES (cache.adaptive_repartition,
+    # r18): a core-count-sized cache re-scanned every sweep was the
+    # measured 32c>8c anti-scaling; at 100 TB the count is bytes/advisory,
+    # clamped at spark.sql.shuffle.partitions.
+    from hazelcast_jet_contrib_spark.cache import adaptive_repartition, checkpoint_rdd_handle
 
-    # Cache partition counts derive from BYTES (r18, VERDICT r17 item
-    # 7): these relations are re-scanned every sweep, so a static
-    # core-count-sized cache is a per-sweep fixed cost of `cores` tasks
-    # for kilobyte graphs — the measured 32c>8c anti-scaling. The
-    # explicit size-derived count keeps the HashPartitioning the sweep
-    # joins reuse (see cache.adaptive_repartition; at 100 TB the count
-    # is bytes/advisory, clamped at the deployment's
-    # spark.sql.shuffle.partitions — behavior there is unchanged).
     e = adaptive_repartition(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct(),
         "src",
@@ -116,25 +106,18 @@ def pagerank(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # Everything from the first action on runs under try/finally: a
-    # failure in ANY sweep's job must not orphan the three persisted
-    # relations in a long-lived session (VERDICT r08 item 8; asserted
-    # by tests/test_cache.py loop-abort tests).
+    # failure in ANY sweep's job must not orphan the persisted relations
+    # in a long-lived session (VERDICT r08 item 8; asserted by
+    # tests/test_cache.py loop-abort tests).
     try:
         n = nodes.count()
         if n == 0:
             return nodes.select("node", F.lit(0.0).alias("rank"))
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        # out-degree attached once; deg NULL marks a dangling node
-        base = adaptive_repartition(
-            nodes.join(deg, nodes.node == deg.src, "left").select("node", "deg"),
-            "node",
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # no materializing count (r17): the first sweep's checkpoint
-        # job builds this cache while computing the init ranks — an
-        # up-front count was one extra pass of |V| for nothing, and
-        # failures still surface inside the try (interleaved A/B at
-        # sf0.1, OPTIMIZATION_r17.md §10: pagerank_event_graph min
-        # 4.24 s with the count vs 3.40 s without, 75 -> 73 Spark jobs)
+        # out-degree attached once; deg NULL marks a dangling node. Read
+        # only to build the initial ranks: every sweep carries deg in
+        # its checkpointed state, so nothing joins this back.
+        base = nodes.join(deg, nodes.node == deg.src, "left").select("node", "deg")
 
         if seeds is None:
             is_seed = F.lit(True)
@@ -202,51 +185,51 @@ def pagerank(
         last_cp = None  # previous sweep's checkpoint handle, freed once superseded
         for _ in range(iterations):
             # Lineage MUST be cut each sweep, not just cached: the next
-            # plan references `base` both directly and through the previous
-            # ranks, so an uncut logical plan doubles per iteration
-            # (2^iters nodes — OOMs the driver before any data moves).
-            # localCheckpoint materializes the iteration's |V| rows on the
-            # executors and restarts the plan from them; swap for
-            # checkpoint() on a reliable FS when executor loss must be
-            # survivable mid-computation.
-            ranks = ranks.localCheckpoint(eager=True)
+            # plan reads the previous ranks twice (the edge join and the
+            # carried state), so an uncut logical plan doubles per
+            # iteration (2^iters nodes — OOMs the driver before any data
+            # moves). Swap for checkpoint() on a reliable FS when executor
+            # loss must be survivable mid-computation. The rank sitting on
+            # dangling nodes is OBSERVED on this checkpoint job and enters
+            # the sweep below as a literal.
+            dangling = Observation()
+            ranks = ranks.observe(
+                dangling,
+                F.coalesce(
+                    F.sum(F.when(F.col("deg").isNull(), F.col("rank"))), F.lit(0.0)
+                ).alias("dm"),
+            ).localCheckpoint(eager=True)
             # this eager checkpoint just materialized FROM the previous
             # sweep's checkpoint — that snapshot can never be read again,
             # so free its executor storage now instead of at driver GC
             # (at most two |V| snapshots resident at any moment)
-            from hazelcast_jet_contrib_spark.cache import checkpoint_rdd_handle
-
             if last_cp is not None:
                 last_cp.unpersist(False)
             last_cp = checkpoint_rdd_handle(ranks)
-            # Total rank sitting on dangling nodes: a one-row aggregate of
-            # the CHECKPOINTED relation, broadcast into the sweep — no
-            # collect(), no driver state at all, and one Spark job per
-            # sweep instead of two (the aggregate evaluates inside the next
-            # sweep's plan against the materialized checkpoint partitions).
-            dang_df = ranks.filter(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm__")
-            )
+            dm = float(dangling.get["dm"])
+            # One aggregate per sweep over the contributions ∪ the state
+            # (each node with c = 0 and its deg): every node keeps its row
+            # and its out-degree without a join back to a node table.
             contrib = (
                 ranks.filter(F.col("deg").isNotNull())
                 .join(e, ranks.node == e.src)
-                .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") / F.col("deg")).alias("c"),
+                    F.lit(None).cast("long").alias("deg"),
+                )
             )
-            dang_col = F.when(is_seed, F.col("__dm__") / F.lit(float(n_tele))).otherwise(
-                F.lit(0.0)
-            )
+            state = ranks.select("node", F.lit(0.0).alias("c"), "deg")
+            dang_col = F.when(is_seed, F.lit(dm / n_tele)).otherwise(F.lit(0.0))
             ranks = (
-                base.join(contrib, "node", "left")
-                .crossJoin(F.broadcast(dang_df))
+                contrib.unionByName(state)
+                .groupBy("node")
+                .agg(F.sum("c").alias("inflow"), F.max("deg").alias("deg"))
                 .select(
                     "node",
-                    (
-                        tele_col
-                        + F.lit(damping)
-                        * (F.coalesce(F.col("inflow"), F.lit(0.0)) + dang_col)
-                    ).alias("rank"),
+                    (tele_col + F.lit(damping) * (F.col("inflow") + dang_col)).alias(
+                        "rank"
+                    ),
                     "deg",
                 )
             )
@@ -260,8 +243,7 @@ def pagerank(
         if last_cp is not None:
             last_cp.unpersist(False)
     finally:
-        base_df = locals().get("base")
-        for df in (e, nodes) + ((base_df,) if base_df is not None else ()):
+        for df in (e, nodes):
             try:
                 df.unpersist()
             except Exception:

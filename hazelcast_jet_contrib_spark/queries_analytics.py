@@ -210,10 +210,13 @@ def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Damped PageRank (d=0.85, 10 fixed sweeps) over the deterministic
     events graph above, proven exact against 10 unrolled power-iteration
     CTEs — ranks sum to ~1 and round at output only. Scale: one
-    out-degree aggregate up front, then per sweep exactly ONE shuffle
-    join (ranks ⋈ edges) + one dst aggregation, lineage cut per sweep,
-    O(1) driver state (the dangling-mass scalar); growth law measured
-    in tests/test_scale_rehearsal_analytics.py (operators/graph.py
+    out-degree aggregate up front, then per sweep ONE shuffle join
+    (ranks ⋈ edges) + ONE aggregation over the contributions ∪ the
+    previous state, lineage cut per sweep by its checkpoint job, which
+    also carries the one driver-side value (the dangling-mass scalar,
+    an Observation); 41 Spark jobs at sf0.01 once the events schema is
+    read, pinned in tests/test_graph.py; growth law measured in
+    tests/test_scale_rehearsal_analytics.py (operators/graph.py
     pagerank)."""
     from hazelcast_jet_contrib_spark.operators.graph import pagerank
 

@@ -65,6 +65,17 @@ def get_spark(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "false",
         )
+        # --- generated code: the compiled-class cache holds a whole pass ---
+        # Spark's default of 100 entries is smaller than what one pass
+        # of the registry's queries compiles, so every class was evicted
+        # before its query ran again: the benchmark's batch pass (5 TPC-H
+        # queries, neardup_clusters, pagerank_event_graph,
+        # kmeans_cluster_profile) compiled the same 263 classes in every
+        # pass after warm-up. A whole driver_sim window (all 97 queries
+        # at sf0.01) compiles 1477 distinct classes; 2000 holds it, and
+        # the benchmark's second pass then compiles ~0. A static conf: it
+        # is fixed when the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # --- shuffle sizing ------------------------------------------------
         .config(
             "spark.sql.shuffle.partitions",

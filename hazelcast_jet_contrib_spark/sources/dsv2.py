@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import datetime
 import functools
+import math
 import operator
 from dataclasses import dataclass
 
@@ -124,16 +125,38 @@ class StoreReader(DataSourceReader):
     # -- planning ----------------------------------------------------------
     def pushFilters(self, filters):  # noqa: N802 (Spark API name)
         import pyarrow as pa
+        import pyarrow.compute as pc
 
+        residual, absorbed, lower, nan_closed = [], [], [], set()
         for f in filters:
             try:
                 expr = self._compile(f)
             except (pa.ArrowException, TypeError, OverflowError):
                 expr = None  # a literal the column cannot hold exactly
             if expr is None:
-                yield f  # not absorbed: Spark re-checks it post-scan
+                residual.append(f)  # not absorbed: Spark re-checks it post-scan
+                continue
+            col = ".".join(f.attribute)
+            if not pa.types.is_floating(self.types[col]):
+                absorbed.append(expr)
+            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+                lower.append((col, expr))
             else:
-                self.filter = expr if self.filter is None else self.filter & expr
+                absorbed.append(expr)
+                nan_closed.add(col)
+        # Spark orders NaN above every value, so a NaN row satisfies a
+        # lower bound, where pyarrow's comparison is false. Such a bound
+        # keeps NaN rows explicitly, unless another absorbed filter on
+        # the column (an upper bound, =, In) already excludes them: the
+        # bare comparison then prunes row groups on statistics as before.
+        # (Not ~(x < v): min/max statistics skip NaN, so it would prune
+        # the row groups that hold them.)
+        for col, expr in lower:
+            x = self.projection[col]
+            absorbed.append(expr if col in nan_closed else expr | pc.is_nan(x))
+        if absorbed:
+            self.filter = functools.reduce(operator.and_, absorbed)
+        return residual
 
     def _compile(self, f):
         import pyarrow as pa
@@ -143,8 +166,13 @@ class StoreReader(DataSourceReader):
         if not isinstance(f, self.absorbs.get(col, ())):
             return None
         x, typ = self.projection[col], self.types[col]
+        values = f.value if isinstance(f, In) else (f.value,)
+        if any(isinstance(v, float) and math.isnan(v) for v in values):
+            # Spark's NaN = NaN is true and x < NaN is true for every
+            # other x; pyarrow's are false, so Spark keeps these
+            return None
         if isinstance(f, In):
-            return functools.reduce(operator.or_, [x == _literal(v, typ) for v in f.value])
+            return functools.reduce(operator.or_, [x == _literal(v, typ) for v in values])
         lit = _literal(f.value, typ)
         if isinstance(f, StringStartsWith):
             return (x >= lit) & pc.starts_with(x, pattern=f.value)

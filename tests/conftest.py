@@ -104,6 +104,22 @@ def compare_with_oracle(
     )
 
 
+def spark_jobs(spark, fn):
+    """``(fn(), the number of Spark jobs fn ran)``, counted under a job
+    group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

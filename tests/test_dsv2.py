@@ -446,3 +446,85 @@ def test_ts_store_pre_1970_row_is_kept(spark, tmp_path):
     )
     got = sorted(df.select("tag", F.unix_micros("time")).collect())
     assert [tuple(r) for r in got] == [("a", 0), ("c", 2)], got
+
+
+def _nan_filters():
+    v = F.col("v")
+    return [
+        v >= 10.0,
+        v > 5.0,
+        (v >= 10.0) & (v <= 50.0),
+        v < 10.0,
+        v <= float("inf"),
+        v == 0.0,
+        v == float("nan"),
+        v > float("nan"),
+        v < float("nan"),
+        v >= float("nan"),
+        v.isin(5.0, float("nan")),
+        v.isin(5.0, 20.0),
+    ]
+
+
+@pytest.fixture
+def nan_store(tmp_path):
+    """One row per row group, so each group's statistics are its own:
+    NaN, ±inf, ±0.0, NULL and ordinary values under a float column."""
+    path = str(tmp_path / "nan.parquet")
+    vals = [float("nan"), 5.0, 20.0, None, float("inf"), float("-inf"), -0.0, 0.0]
+    pq.write_table(
+        pa.table({"k": [f"m{i}" for i in range(len(vals))], "v": pa.array(vals, pa.float64())}),
+        path,
+        row_group_size=1,
+    )
+    return path
+
+
+@pytest.mark.parametrize("store_kind", ["zset_store", "doc_store"])
+def test_float_filters_keep_nan_rows_like_spark(spark, nan_store, store_kind):
+    """Spark orders NaN above every value and treats NaN = NaN as true,
+    and never re-checks an absorbed filter: under each filter the store
+    returns exactly the rows ``spark.read.parquet`` returns (``score >=
+    10`` over NaN, 5, 20 keeps the NaN row)."""
+    from hazelcast_jet_contrib_spark.sources import dsv2
+
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    dsv2.register(spark)
+    reader = spark.read.format(store_kind).option("path", nan_store)
+    if store_kind == "zset_store":
+        src = reader.option("score_col", "v").option("member_col", "k").load()
+        src = src.select(F.col("member").alias("k"), F.col("score").alias("v"))
+    else:
+        src = reader.option("ddl", "k string, v double").load()
+    truth = spark.read.parquet(nan_store)
+    # Spark evaluates the filter itself: its parquet reader's own
+    # statistics pruning drops the -0.0 row group under = 0.0, which
+    # Spark's evaluation keeps (-0.0 = 0.0 is true)
+    saved = spark.conf.get("spark.sql.parquet.filterPushdown")
+    spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+    try:
+        for cond in _nan_filters():
+            got = sorted(r["k"] for r in src.filter(cond).collect())
+            want = sorted(r["k"] for r in truth.filter(cond).collect())
+            assert got == want, (str(cond), got, want)
+    finally:
+        spark.conf.set("spark.sql.parquet.filterPushdown", saved)
+
+
+def test_nan_literal_is_yielded_and_lone_lower_bound_keeps_nan(nan_store):
+    """A comparison or ``In`` with a NaN literal goes back to Spark; a
+    lower bound with no NaN-excluding filter beside it keeps the NaN
+    row, and one with an upper bound beside it prunes as before."""
+    zset = ZSetStoreDataSource({"path": nan_store, "score_col": "v", "member_col": "k"})
+    nan = float("nan")
+    for f in (EqualTo(("score",), nan), LessThan(("score",), nan), In(("score",), (1.0, nan))):
+        residual, _ = _pushdown(zset, _ZSET, [f])
+        assert residual == [f]
+    _, rows = _pushdown(zset, _ZSET, [GreaterThanOrEqual(("score",), 10.0)])
+    assert sorted(r["member"] for r in rows) == ["m0", "m2", "m4"]
+    fragment = next(iter(ds.dataset(nan_store, format="parquet").get_fragments()))
+    r = zset.reader(_ZSET)
+    assert list(r.pushFilters([GreaterThanOrEqual(("score",), 10.0), LessThan(("score",), 30.0)])) == []
+    # the NULL group (3) and the +inf group (4) prune; the NaN group (0)
+    # has no min/max statistics, so no filter can prune it
+    assert [g.row_groups[0].id for g in fragment.split_by_row_group(r.filter)] == [0, 2]

@@ -4,14 +4,25 @@ random graphs, dangling-node mass conservation, and determinism."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from hazelcast_jet_contrib_spark.operators.graph import pagerank
+from tests.conftest import CORRECTNESS_SF, spark_jobs
+
+# Spark jobs per run, measured (see test_sweep_job_counts_are_pinned)
+PAGERANK_JOBS = 26
+CC_JOBS = 16
+EVENT_GRAPH_JOBS = 41
 
 
-def _numpy_pagerank(edges, d=0.85, iters=10):
+def _numpy_pagerank(edges, d=0.85, iters=10, init=None):
+    """Dense power iteration; ``init`` ({node: rank}) is the warm start,
+    unseen nodes at 1/N and the vector normalized to sum 1, as
+    ``pagerank(init_ranks=...)`` defines it."""
     nodes = sorted({u for u, _ in edges} | {v for _, v in edges})
     idx = {v: i for i, v in enumerate(nodes)}
     n = len(nodes)
@@ -19,6 +30,9 @@ def _numpy_pagerank(edges, d=0.85, iters=10):
     for u, v in edges:
         adj.setdefault(idx[u], set()).add(idx[v])
     r = np.full(n, 1.0 / n)
+    if init is not None:
+        r = np.array([init.get(x, 1.0 / n) for x in nodes])
+        r = r / r.sum()
     for _ in range(iters):
         dangling = sum(r[i] for i in range(n) if i not in adj)
         new = np.full(n, (1.0 - d) / n) + d * dangling / n
@@ -45,6 +59,18 @@ def test_pagerank_matches_numpy_on_structured_graph(spark):
         assert abs(got[k] - want[k]) <= 1e-7, (k, got[k], want[k])
     # node 6 is dangling: its mass must recirculate, ranks sum to 1
     assert abs(sum(got.values()) - 1.0) < 1e-6
+    # the same dangling-mass path from a warm start: a skewed init
+    # vector (node 4 absent, so it starts at 1/N) before normalization
+    init = {1: 0.5, 2: 0.1, 3: 0.1, 5: 0.05, 6: 0.4}
+    warm = _run(
+        spark,
+        edges,
+        iterations=4,
+        init_ranks=spark.createDataFrame(list(init.items()), "node long, rank double"),
+    )
+    want = _numpy_pagerank(edges, iters=4, init=init)
+    for k in want:
+        assert abs(warm[k] - want[k]) <= 1e-7, (k, warm[k], want[k])
 
 
 def test_pagerank_matches_numpy_on_random_graph(spark):
@@ -114,6 +140,13 @@ def test_personalized_pagerank_matches_numpy_and_localizes(spark):
     seeds = [0, 1]
     got = _run(spark, edges, seeds=seeds, iterations=12)
     want = _numpy_ppr(edges, seeds, iters=12)
+    for k in want:
+        assert abs(got[k] - want[k]) <= 1e-7, (k, got[k], want[k])
+    # dangling nodes 30 and 31 (no out-edges) return their mass to the
+    # seed set only, never to all nodes
+    dang = edges + [(0, 30), (5, 30), (1, 31)]
+    got = _run(spark, dang, seeds=seeds, iterations=12)
+    want = _numpy_ppr(dang, seeds, iters=12)
     for k in want:
         assert abs(got[k] - want[k]) <= 1e-7, (k, got[k], want[k])
     # localization: on two disconnected triangles, seeding one leaves
@@ -463,3 +496,41 @@ def test_warm_start_rejects_degenerate_mass(spark):
     )
     with pytest.raises(ValueError, match="positive total mass"):
         pagerank(df, iterations=1, init_ranks=withnull)
+
+
+def _jobs(spark, fn) -> int:
+    spark.catalog.clearCache()
+    return spark_jobs(spark, fn)[1]
+
+
+def test_sweep_job_counts_are_pinned(spark):
+    """A PageRank sweep and a connected-components round each run one
+    Spark job (plus the query stages AQE submits on their own): the
+    dangling mass and the changed-label count are observed on the
+    checkpoint job, and the state folds into the sweep's one aggregate.
+    The counts repeat exactly, so a broadcast aggregate, a count job or
+    a join back to the state shows here as a larger count."""
+    from hazelcast_jet_contrib_spark.operators.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 1), (3, 1), (4, 5), (5, 6)], "src long, dst long"
+    )
+    assert _jobs(spark, lambda: pagerank(edges, iterations=5).collect()) == PAGERANK_JOBS
+    chain = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)], "id_a long, id_b long"
+    )
+    assert _jobs(spark, lambda: connected_components(chain).collect()) == CC_JOBS
+
+
+@pytest.mark.skipif(
+    not os.path.exists(f"{CORRECTNESS_SF}/events.parquet"),
+    reason="sf0.01 fixture not on disk",
+)
+def test_pagerank_event_graph_job_count_is_pinned(spark):
+    from hazelcast_jet_contrib_spark.registry import QUERIES, table
+
+    # the events schema is inferred once per file (registry.table), so
+    # read it first: the count is then the same whatever ran before
+    table(spark, CORRECTNESS_SF, "events")
+    q = QUERIES["pagerank_event_graph"]
+    assert _jobs(spark, lambda: q(spark, CORRECTNESS_SF).collect()) == EVENT_GRAPH_JOBS

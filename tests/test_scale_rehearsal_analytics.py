@@ -376,18 +376,18 @@ def test_pagerank_sweep_shuffle_linear_in_edges(spark, tmp_path):
 
 @pytest.mark.slow
 def test_pagerank_edges_stay_out_of_the_per_sweep_shuffle(spark, tmp_path):
-    """The loop-invariant relations (edges on src, base on node) persist
-    PRE-PARTITIONED on their sweep join keys (graph.py, the classifier
-    GD-loop pattern), so once sort-merge join engages — the 100 TB
-    regime, where |V| is far past any broadcast threshold — each sweep
-    re-shuffles only the checkpointed ranks (|V| rows, localCheckpoint
-    yields UnknownPartitioning) and the inflow partial aggregates, NOT
-    the |E|-row edge relation. Locally AQE broadcasts the tiny ranks
+    """The loop-invariant edge relation persists PRE-PARTITIONED on its
+    sweep join key, src (graph.py, the classifier GD-loop pattern), so
+    once sort-merge join engages — the 100 TB regime, where |V| is far
+    past any broadcast threshold — each sweep re-shuffles only the
+    checkpointed ranks (|V| rows, localCheckpoint yields
+    UnknownPartitioning) and the inflow partial aggregates, NOT the
+    |E|-row edge relation. Locally AQE broadcasts the tiny ranks
     side and hides this entirely, so the test FORCES the at-scale join
     shape by disabling broadcast and asserts per-sweep LIVE shuffled
     records (materialized_shuffle_stats' live_* view, which excludes the
     cached build plans' frozen exchange metrics) stay well under |E|.
-    Dropping either repartition() in graph.py puts the edge relation
+    Dropping the edge repartition in graph.py puts the edge relation
     back through the shuffle every sweep and blows the bound."""
     from hazelcast_jet_contrib_spark.operators.graph import pagerank
 
