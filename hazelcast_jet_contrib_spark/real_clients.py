@@ -55,6 +55,7 @@ from hazelcast_jet_contrib_spark.sinks.connectors import (
     point_record_fn,
 )
 from hazelcast_jet_contrib_spark.sources.builder import BatchSourceBuilder
+from hazelcast_jet_contrib_spark.streaming.message_log import SpoolAppender
 
 
 def _require(module: str, pip_name: str):
@@ -995,8 +996,9 @@ class PahoSubscribeSource:
     """Live subscribe-side MQTT source: a real Paho client subscribes to
     wildcard topic filters with per-topic QoS and spools arriving
     messages into a message-log directory that Spark then consumes with
-    the acked reader — callback → bounded queue → spool → ``readStream``
-    (the SURVEY §7 push-source pattern, same as the webhook listener).
+    the acked reader — callback → bounded ``SpoolAppender`` → spool →
+    ``readStream`` (the SURVEY §7 push-source pattern, same as the
+    webhook listener).
 
     Reference parity (MqttSourceBuilder.java:42-180,
     Subscription.java:85-127, impl/SourceContext.java:58-124):
@@ -1020,13 +1022,14 @@ class PahoSubscribeSource:
     - The arrival queue is BOUNDED at ``queue_capacity`` (the
       reference's ``ArrayBlockingQueue(CAPACITY=1024)``,
       SourceContext.java:70) and the message callback BLOCKS when it is
-      full (``queue.put``) — backpressure propagates into paho's
-      network thread and from there to the broker's in-flight window,
-      the same stall-the-producer shape as the reference. A stalled
-      network loop also stalls keepalive pings, so size the queue and
-      flusher for the expected burst rate; the flusher drains to disk
-      (append-only jsonl segments), which is orders of magnitude faster
-      than any broker delivers.
+      full (``SpoolAppender.put``) — backpressure propagates into
+      paho's network thread and from there to the broker's in-flight
+      window, the same stall-the-producer shape as the reference. A
+      stalled network loop also stalls keepalive pings, so size the
+      queue and flusher (it writes every ``flush_seconds`` or at
+      ``flush_records`` messages) for the expected burst rate. Paho
+      has already PUBACKed QoS>=1 messages, so a failed write is
+      retried, and stop() raises if messages are left unspooled.
 
     Spool records carry the full message surface: ``key`` = concrete
     topic, ``value`` = payload (UTF-8, surrogateescape), ``properties``
@@ -1077,28 +1080,28 @@ class PahoSubscribeSource:
         self.username, self.password = username, password
         self.tls, self.keepalive = tls, keepalive
         self.keep_session = keep_session
-        self.flush_records = flush_records
-        self.flush_seconds = flush_seconds
         self.reconnect_min, self.reconnect_max = reconnect_min, reconnect_max
         self._mqtt_module = mqtt_module
-        import queue as _queue
-
-        self._queue: Any = _queue.Queue(maxsize=queue_capacity)
+        self.appender = SpoolAppender(
+            spool_root,
+            lambda rec: mqtt_stream_name(rec["key"]),
+            capacity=queue_capacity,
+            segment_records=flush_records,
+            flush_interval=flush_seconds,
+        )
         self._client: Any = None
-        self._flusher: Any = None
-        self._stop: Any = None
-        self._retry_batch: list[dict] | None = None
-        self.last_spool_error: Exception | None = None
-        #: observability counters: connects (incl. reconnects),
-        #: resubscribes attempted/failed, messages received/spooled,
-        #: spool-write failures (each = one held-for-retry batch)
-        self.stats = {
-            "connects": 0,
-            "resubscribes": 0,
-            "subscribe_errors": 0,
-            "received": 0,
-            "spooled": 0,
-            "spool_errors": 0,
+        self._counters = {"connects": 0, "resubscribes": 0, "subscribe_errors": 0}
+
+    @property
+    def stats(self) -> dict:
+        """Connects (incl. reconnects), resubscribes, subscribe errors,
+        and the spool's: messages received and spooled, failed writes."""
+        m = self.appender.metrics()
+        return {
+            **self._counters,
+            "received": m["records_in"],
+            "spooled": m["records_written"],
+            "spool_errors": m["failed_writes"],
         }
 
     # -- callbacks (accept both paho 1.x and 2.x signatures) ----------
@@ -1112,16 +1115,16 @@ class PahoSubscribeSource:
         tuple WITHOUT raising (e.g. MQTT_ERR_NO_CONN), so a non-zero
         return code is treated exactly like the exception path
         (ADVICE r14 #2)."""
-        self.stats["connects"] += 1
+        self._counters["connects"] += 1
         try:
             rc = client.subscribe([(tf, qos) for tf, qos in self.subscriptions])
             # paho returns (rc, mid); rc == 0 (MQTT_ERR_SUCCESS) is the
             # only success. Tolerate clients returning None (older fakes).
             if rc is not None and rc[0] != 0:
                 raise ConnectionError(f"subscribe failed rc={rc[0]}")
-            self.stats["resubscribes"] += 1
+            self._counters["resubscribes"] += 1
         except Exception:
-            self.stats["subscribe_errors"] += 1
+            self._counters["subscribe_errors"] += 1
             try:
                 client.disconnect()  # let the loop's backoff retry
             except Exception:
@@ -1145,86 +1148,11 @@ class PahoSubscribeSource:
             "event_time": int(time.time() * 1000),
         }
         # BLOCKING put — the bounded-queue backpressure contract
-        self._queue.put(rec)
-        self.stats["received"] += 1
-
-    # -- spool flusher ------------------------------------------------
-
-    def _drain_once(self) -> int:
-        """Drain up to flush_records pending messages into per-topic
-        spool segments; returns how many were spooled. A spool-write
-        failure (disk full, spool dir unwritable) must NOT kill the
-        flusher or drop the dequeued batch — paho has already PUBACKed
-        QoS>=1 messages, so the broker will never redeliver them; the
-        batch is held for retry. Topics whose append_segment already
-        succeeded are DROPPED from the held batch, so a retry after a
-        partial per-topic failure is duplicate-free (ADVICE r14 #3) —
-        the at-least-once contract still holds (a topic's segment could
-        in principle land durably yet raise, and the idempotent-sink
-        discipline absorbs that), but the common partial-failure shape
-        no longer manufactures duplicates."""
-        import queue as _queue
-
-        batch: list[dict] = self._retry_batch or []
-        self._retry_batch = None
-        if not batch:
-            try:
-                batch.append(self._queue.get(timeout=self.flush_seconds))
-                while len(batch) < self.flush_records:
-                    batch.append(self._queue.get_nowait())
-            except _queue.Empty:
-                pass
-        if not batch:
-            return 0
-        from hazelcast_jet_contrib_spark.streaming.message_log import append_segment
-
-        by_topic: dict[str, list[dict]] = {}
-        for r in batch:
-            by_topic.setdefault(r["key"], []).append(r)
-        spooled = 0
-        for topic in list(by_topic):
-            try:
-                append_segment(
-                    self.spool_root, mqtt_stream_name(topic), by_topic[topic]
-                )
-            except Exception as ex:
-                self.stats["spool_errors"] += 1
-                self.last_spool_error = ex
-                # hold ONLY the not-yet-written topics for retry — the
-                # topics already popped below wrote durably and must not
-                # be re-appended (duplicate-free partial-failure retry)
-                self._retry_batch = [
-                    r for recs in by_topic.values() for r in recs
-                ]
-                # backoff so a persistent failure doesn't spin the
-                # thread; bounded above so recovery (space freed, dir
-                # restored) is picked up within a second
-                self._stop.wait(min(1.0, self.flush_seconds * 4))
-                return spooled
-            recs = by_topic.pop(topic)
-            self.stats["spooled"] += len(recs)
-            spooled += len(recs)
-        return spooled
-
-    def _flush_loop(self) -> None:
-        while not self._stop.is_set():
-            self._drain_once()
-        # final drain after stop: keep retrying a failing spool a
-        # bounded number of times, then give up — stop() raises loudly
-        # if messages were left behind (never a silent drop)
-        failures = 0
-        while self._retry_batch or not self._queue.empty():
-            before = self.stats["spool_errors"]
-            self._drain_once()
-            failures = failures + 1 if self.stats["spool_errors"] > before else 0
-            if failures >= 3:
-                break
+        self.appender.put(rec)
 
     # -- lifecycle ----------------------------------------------------
 
     def start(self) -> "PahoSubscribeSource":
-        import threading
-
         mqtt = (
             self._mqtt_module
             if self._mqtt_module is not None
@@ -1246,11 +1174,7 @@ class PahoSubscribeSource:
             c.reconnect_delay_set(
                 min_delay=self.reconnect_min, max_delay=self.reconnect_max
             )
-        self._stop = threading.Event()
-        self._flusher = threading.Thread(
-            target=self._flush_loop, name="mqtt-spool-flusher", daemon=True
-        )
-        self._flusher.start()
+        self.appender.start()
         try:
             c.connect(self.host, self.port, self.keepalive)
             c.loop_start()
@@ -1267,8 +1191,7 @@ class PahoSubscribeSource:
                 c.disconnect()
             except Exception:
                 pass
-            self._stop.set()
-            self._flusher.join(timeout=30)
+            self.appender.close()
             raise
         self._client = c
         return self
@@ -1281,21 +1204,10 @@ class PahoSubscribeSource:
                 c.disconnect()
             except Exception:
                 pass
-        if self._stop is not None:
-            self._stop.set()
-            self._flusher.join(timeout=30)
-            leftover = (len(self._retry_batch) if self._retry_batch else 0) + (
-                self._queue.qsize()
-            )
-            if leftover:
-                # NEVER a silent drop: the broker has already PUBACKed
-                # these (QoS>=1 won't redeliver), so an unspoolable
-                # remainder is data loss the caller must hear about
-                raise RuntimeError(
-                    f"mqtt subscribe source stopped with {leftover} "
-                    f"received-but-unspooled messages (spool_errors="
-                    f"{self.stats['spool_errors']})"
-                ) from self.last_spool_error
+        # NEVER a silent drop: the broker has already PUBACKed these
+        # (QoS>=1 won't redeliver), so close() raises on an unspoolable
+        # remainder
+        self.appender.close()
 
     # -- Spark side ---------------------------------------------------
 

@@ -11,9 +11,10 @@ source takes no snapshots — restart starts from "now"
 (`TwitterSources.java:85-146`).
 
 Spark-first re-expression: the push side is a ``FirehoseClient`` that
-spools payloads into message-log segments (the bounded-queue →
-durable-spool mapping of SURVEY.md §7 risk 3 — a pull engine needs a
-buffer owned by neither the client thread nor the query); the read side
+spools payloads into message-log segments through a
+``message_log.SpoolAppender`` (the bounded-queue → durable-spool
+mapping of SURVEY.md §7 risk 3 — a pull engine needs a buffer owned by
+neither the client thread nor the query); the read side
 is the ``message_log`` streaming DataSource. Event time is an explicit
 column: ``timestamped_stream`` compiles the timestamp_ms extraction to
 Catalyst expressions (``get_json_object`` + cast — no Python in the
@@ -23,8 +24,6 @@ matching the warn-and-drop semantics.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,13 +32,16 @@ from hazelcast_jet_contrib_spark.streaming.timestamps import with_timestamps
 
 
 class FirehoseClient:
-    """Push-side spool: payloads buffer in a bounded in-memory queue and
-    flush to message-log segments in drain-sized chunks.
+    """Push-side spool: payloads buffer in a bounded
+    ``SpoolAppender`` and flush to message-log segments in drain-sized
+    chunks.
 
     ``capacity`` is the bounded queue (reference: 1000); a push into a
     full queue triggers an inline flush — the blocking-producer behavior
     of ``queue.put`` re-expressed as "the producer pays the flush cost"
-    rather than unbounded memory. ``drain_max`` bounds records per
+    rather than unbounded memory. A failed flush raises from ``push``
+    (that payload is not accepted) and keeps every accepted payload
+    buffered for the next flush. ``drain_max`` bounds records per
     segment (reference: ≤250 per fill), which in turn bounds records per
     micro-batch task on the read side.
     """
@@ -50,31 +52,22 @@ class FirehoseClient:
         if drain_max > capacity:
             raise ValueError("drain_max must be <= capacity")
         self.root, self.topic = root, topic
-        self.capacity, self.drain_max = capacity, drain_max
-        self._buf: list[str] = []
-        self._lock = threading.Lock()
-        self.pushed = 0
+        self.appender = message_log.SpoolAppender(
+            root, lambda rec: topic, capacity=capacity, segment_records=drain_max
+        )
+
+    @property
+    def pushed(self) -> int:
+        return self.appender.metrics()["records_in"]
 
     def push(self, payload: str) -> None:
-        with self._lock:
-            if len(self._buf) >= self.capacity:
-                self._flush_locked()
-            self._buf.append(payload)
-            self.pushed += 1
+        self.appender.put({"key": None, "value": payload})
 
     def flush(self) -> None:
-        with self._lock:
-            self._flush_locked()
-
-    def _flush_locked(self) -> None:
-        while self._buf:
-            chunk, self._buf = self._buf[: self.drain_max], self._buf[self.drain_max :]
-            message_log.append_segment(
-                self.root, self.topic, [{"key": None, "value": p} for p in chunk]
-            )
+        self.appender.flush()
 
     def close(self) -> None:
-        self.flush()
+        self.appender.close()
 
 
 def stream(spark: SparkSession, root: str, topic: str) -> DataFrame:

@@ -21,12 +21,13 @@ The sink side pushes results to connected WebSocket or SSE clients
 while nobody is connected (HttpListenerSinkContext.java:128-152).
 
 Push-based sources don't fit Spark's replayable pull model (SURVEY.md
-§7 risk 3), so the listener spools accepted payloads into a message-log
-directory (the bounded-queue analog, but durable + replayable) and the
-pipeline reads it with the `message_log` streaming source — giving the
-webhook path the same exactly-once restart semantics the reference
-reserves for its offset-snapshotting sources. JSON-bean mapping becomes
-`from_json(schema)` downstream.
+§7 risk 3), so the listener hands accepted payloads to a
+``message_log.SpoolAppender`` (the bounded-queue analog, but durable +
+replayable; it owns the buffer, the group commit and the flusher) and
+the pipeline reads the spool with the `message_log` streaming source —
+giving the webhook path the same exactly-once restart semantics the
+reference reserves for its offset-snapshotting sources. JSON-bean
+mapping becomes `from_json(schema)` downstream.
 
 The push sinks serve the latest results from a single endpoint — the
 analog of forceTotalParallelismOne (HttpListenerSinkBuilder.java:253-263):
@@ -129,16 +130,15 @@ class HttpListenerSource:
     Durability vs throughput: with ``durable_ack=True`` (default) every
     request's body is appended to the spool BEFORE the HTTP 200 goes out
     — an acknowledged webhook is never lost to a crash. Concurrent
-    requests GROUP-COMMIT (WAL-style, round 15): one leader writes every
-    body buffered for the current generation as a single segment while
-    the followers wait on its durability, so N racing producers cost
-    ~N/batch segment files and fsync-path writes instead of N — without
-    weakening the contract (a 200 still never precedes the write, and a
-    failed write errors EVERY request of that generation so producers
-    retry). ``durable_ack=False``
-    buffers up to `batch_size` bodies and a background thread flushes
-    every `flush_interval` seconds; an acknowledged payload can then be
-    lost in that window — choose it only when the producer retries.
+    requests group-commit through ``SpoolAppender.append``: one request
+    thread writes every body buffered for its generation as a single
+    segment while the others wait for its verdict, and a failed write
+    errors every request it covered so producers retry.
+    ``durable_ack=False`` buffers bodies (``SpoolAppender.put``) and a
+    flusher thread writes them every `flush_interval` seconds or at
+    `batch_size` bodies, retrying a failed write; an acknowledged payload
+    can then be lost to a crash in that window — choose it only when the
+    producer retries. ``appender.metrics()`` counts what was spooled.
     """
 
     def __init__(
@@ -165,32 +165,13 @@ class HttpListenerSource:
         self.spool_dir = spool_dir
         self.stream_name = stream_name
         self.require_json = require_json
-        self.batch_size = batch_size
         self.durable_ack = durable_ack
-        self.flush_interval = flush_interval
-        self._buf: list[dict] = []
-        self._lock = threading.Lock()
-        # group-commit state (durable_ack mode): generation g = the set
-        # of bodies buffered between two leader claims; a request's 200
-        # may only follow _flushed_gen >= its generation
-        self._cv = threading.Condition(self._lock)
-        self._gen = 0
-        self._flushed_gen = -1
-        self._flushing = False
-        # next-segment hint for append_segment: this source is the sole
-        # producer of its spool stream and its leaders serialize on
-        # _flushing, so "last committed seq + 1" skips the per-append
-        # directory scan (O(n_segments) per append — ~40% of protocol
-        # wall at ~500 segments, r18). A collision (external producer)
-        # just falls back to the scan inside append_segment.
-        self._next_seq: int | None = None
-        self._flush_errors: dict[int, Exception] = {}
-        # per-generation count of threads that may still need that
-        # generation's error verdict: an error entry is dropped only
-        # when its last reader leaves, never by age (review r15 #3 — a
-        # descheduled follower must not lose a failure verdict and 200
-        # an unwritten body, no matter how long it slept)
-        self._gen_readers: dict[int, int] = {}
+        self.appender = message_log.SpoolAppender(
+            spool_dir,
+            lambda rec: stream_name,
+            segment_records=None if durable_ack else batch_size,
+            flush_interval=None if durable_ack else flush_interval,
+        )
         self._server = ThreadingHTTPServer((host, port), self._handler_class())
         self._tls = tls is not None
         if tls is not None:
@@ -207,8 +188,6 @@ class HttpListenerSource:
                 ctx.load_verify_locations(cafile=client_ca)
             self._server.socket = ctx.wrap_socket(self._server.socket, server_side=True)
         self._thread: threading.Thread | None = None
-        self._flusher: threading.Timer | None = None
-        self._stopping = False
 
     @property
     def address(self) -> str:
@@ -251,9 +230,9 @@ class HttpListenerSource:
                         self.end_headers()
                         self.wfile.write(msg)
                         return
-                # durable_ack: the spool append happens inside _enqueue,
+                # durable_ack: the spool append happens inside _spool,
                 # so the 200 below is only ever sent for a durable payload
-                source._enqueue(body)
+                source._spool(body)
                 self.send_response(200)
                 self.send_header("Content-Length", "0")
                 self.end_headers()
@@ -271,7 +250,7 @@ class HttpListenerSource:
                         json.loads(text)
                     except json.JSONDecodeError:
                         return 400, b"malformed JSON"
-                source._enqueue(text)
+                source._spool(text)
                 return 200, b""
 
             def log_message(self, *args):  # quiet
@@ -279,125 +258,15 @@ class HttpListenerSource:
 
         return Handler
 
-    def _enqueue(self, body: str) -> None:
+    def _spool(self, body: str) -> None:
         rec = {"key": None, "value": body}
-        if not self.durable_ack:
-            with self._lock:
-                self._buf.append(rec)
-                if len(self._buf) >= self.batch_size:
-                    self._flush_locked()
-            return
-        # durable-ack group commit: append, then either become the
-        # leader that writes the whole buffered generation or wait for
-        # that leader's durability verdict
-        with self._cv:
-            self._buf.append(rec)
-            my_gen = self._gen
-            self._gen_readers[my_gen] = self._gen_readers.get(my_gen, 0) + 1
-            try:
-                batch = self._claim_or_wait_locked(my_gen)
-            finally:
-                self._release_reader_locked(my_gen)
-            if batch is None:
-                return  # flushed durably by another leader
-        self._lead_flush(batch, my_gen)
-
-    def _claim_or_wait_locked(self, my_gen: int) -> list[dict] | None:
-        """Group-commit arbitration (call with the lock held): returns
-        the batch to write if this thread becomes generation
-        ``my_gen``'s flush leader, or None once the generation is
-        durable — re-raising the leader's write error so a failed
-        flush errors EVERY request it covered (no 200 without a
-        write)."""
-        while True:
-            if self._flushed_gen >= my_gen:
-                err = self._flush_errors.get(my_gen)
-                if err is not None:
-                    raise err
-                return None
-            if not self._flushing:
-                self._flushing = True
-                batch, self._buf = self._buf, []
-                self._gen += 1
-                return batch
-            self._cv.wait()
-
-    def _release_reader_locked(self, gen: int) -> None:
-        """Drop one reader reference for ``gen``; the last one out
-        deletes the generation's error entry (if any) — exact-lifetime
-        cleanup instead of age-based pruning."""
-        left = self._gen_readers.get(gen, 1) - 1
-        if left > 0:
-            self._gen_readers[gen] = left
+        if self.durable_ack:
+            self.appender.append([rec])  # raises unless written
         else:
-            self._gen_readers.pop(gen, None)
-            self._flush_errors.pop(gen, None)
-
-    def _lead_flush(self, batch: list[dict], my_gen: int) -> None:
-        """Write one generation as ONE segment, publish the verdict,
-        wake the followers. Leaders serialize on _flushing, so
-        _flushed_gen advances monotonically and segment order follows
-        generation order."""
-        err: Exception | None = None
-        seq: int | None = None
-        try:
-            seq = message_log.append_segment(
-                self.spool_dir, self.stream_name, batch,
-                seq_hint=self._next_seq,
-            )
-        except Exception as ex:  # durable-ack: the error must reach
-            err = ex  # every covered request, not kill this thread only
-        with self._cv:
-            if seq is not None:
-                self._next_seq = seq + 1  # leaders serialize on _flushing
-            self._flushing = False
-            self._flushed_gen = my_gen
-            # store the verdict only if a follower may still read it
-            # (the leader re-raises directly below); the last reader
-            # out pops it — no age-based pruning, no verdict loss
-            if err is not None and self._gen_readers.get(my_gen):
-                self._flush_errors[my_gen] = err
-            self._cv.notify_all()
-        if err is not None:
-            raise err
-
-    def _flush_locked(self) -> None:
-        if self._buf:
-            seq = message_log.append_segment(
-                self.spool_dir, self.stream_name, self._buf,
-                seq_hint=self._next_seq,
-            )
-            self._next_seq = seq + 1
-            self._buf = []
+            self.appender.put(rec)
 
     def flush(self) -> None:
-        if not self.durable_ack:
-            with self._lock:
-                self._flush_locked()
-            return
-        # durable mode: any buffered bodies belong to a generation with
-        # waiting requesters — drain through the group-commit protocol
-        # so their durability signal still fires (never steal the buf)
-        with self._cv:
-            if not self._buf:
-                return
-            my_gen = self._gen
-            self._gen_readers[my_gen] = self._gen_readers.get(my_gen, 0) + 1
-            try:
-                batch = self._claim_or_wait_locked(my_gen)
-            finally:
-                self._release_reader_locked(my_gen)
-            if batch is None:
-                return
-        self._lead_flush(batch, my_gen)
-
-    def _schedule_flush(self) -> None:
-        if self._stopping:
-            return
-        self.flush()
-        self._flusher = threading.Timer(self.flush_interval, self._schedule_flush)
-        self._flusher.daemon = True
-        self._flusher.start()
+        self.appender.flush()
 
     def start(self) -> "HttpListenerSource":
         # poll_interval bounds how long shutdown() blocks (the default
@@ -411,22 +280,16 @@ class HttpListenerSource:
         self._thread.start()
         if not self.durable_ack:
             # time-based flush bounds the ack-before-durability window
-            self._flusher = threading.Timer(self.flush_interval, self._schedule_flush)
-            self._flusher.daemon = True
-            self._flusher.start()
+            self.appender.start()
         return self
 
     def stop(self) -> None:
-        self._stopping = True
-        if self._flusher is not None:
-            self._flusher.cancel()
         try:
-            # may re-raise a group-commit write error (callers must
-            # hear about unspooled bodies) — but the server must come
-            # down either way: without the finally, a full disk at
-            # stop() leaked the accept thread and the bound port
-            # (review r15 #5)
-            self.flush()
+            # raises if bodies are left unspooled (callers must hear
+            # about them) — but the server must come down either way:
+            # without the finally, a full disk at stop() leaked the
+            # accept thread and the bound port
+            self.appender.close()
         finally:
             self._server.shutdown()
             self._server.server_close()

@@ -40,12 +40,15 @@ its tasks replay offset ranges executor-side under Spark's WAL. This
 host is the driver-side parallelism-one half, exactly like the
 reference's (fillBuffer runs on one member), and pairs with
 ``spool_to`` + the acked message-log reader for distributed consumption
-(the same spool bridge every push adapter here uses).
+(the same ``SpoolAppender`` bridge every push adapter here uses; its
+``after_durable`` hook folds the offsets of written records only).
 """
 
 from __future__ import annotations
 
 from typing import Any
+
+from hazelcast_jet_contrib_spark.streaming import message_log
 
 #: One URLClassLoader per (absolute jar paths) tuple, for the JVM's
 #: lifetime. Two loaders over the same jars would create twin Class
@@ -120,8 +123,8 @@ def _stream_name(topic: Any) -> str:
 
 
 def _spool_record(r: dict) -> dict:
-    """Record dict → message-log entry (shared by spool_to and the
-    continuous spooler), bytes-safe on key and value."""
+    """Record dict → message-log entry (the ``encode`` of both spool
+    paths' appenders), bytes-safe on key and value."""
     import json as _json
 
     key = r["key"]
@@ -144,6 +147,18 @@ def _spool_record(r: dict) -> dict:
             ),
         },
     }
+
+
+def _spool_appender(root: str, stream: str | None, fold_offsets_of):
+    """Topic → sanitized stream (a jar's topic must not traverse the
+    spool root, ADVICE r16 #2) unless overridden; offsets fold only
+    once written."""
+    return message_log.SpoolAppender(
+        root,
+        lambda r: _stream_name(stream or r["topic"]),
+        encode=_spool_record,
+        after_durable=fold_offsets_of,
+    )
 
 
 class JvmConnectorHost:
@@ -320,12 +335,14 @@ class JvmConnectorHost:
                     _json.dumps(_json_safe(part), sort_keys=True)
                 ] = off if isinstance(off, dict) else {"offset": off}
 
-    def poll_until_idle(self, max_polls: int = 1000) -> list[dict]:
+    def poll_until_idle(
+        self, max_polls: int = 1000, fold_offsets: bool = True
+    ) -> list[dict]:
         """Drain: poll until an empty/None batch (bounded by
         ``max_polls`` so a misbehaving task cannot spin forever)."""
         out: list[dict] = []
         for _ in range(max_polls):
-            batch = self.poll()
+            batch = self.poll(fold_offsets)
             if not batch:
                 return out
             out.extend(batch)
@@ -350,28 +367,12 @@ class JvmConnectorHost:
         }
 
     def spool_to(self, root: str, stream: str | None = None) -> int:
-        """Drain the task into message-log segments (topic → stream
-        unless overridden) so the distributed half — the acked reader,
-        Spark scans, the delivery contract — takes over exactly as with
-        every push adapter here. Returns records spooled.
-
-        Stream names are sanitized (percent-encoded) — an arbitrary
-        jar's topic string must not become a path traversal through
-        append_segment's os.path.join (ADVICE r16 #2); records are
-        bytes-safe via _spool_record."""
-        from hazelcast_jet_contrib_spark.streaming.message_log import (
-            append_segment,
-        )
-
-        records = self.poll_until_idle()
-        by_stream: dict[str, list[dict]] = {}
-        for r in records:
-            target = (
-                _stream_name(stream) if stream else _stream_name(r["topic"])
-            )
-            by_stream.setdefault(target, []).append(_spool_record(r))
-        for target, recs in by_stream.items():
-            append_segment(root, target, recs)
+        """Drain the task into message-log segments so the distributed
+        half — the acked reader, Spark scans, the delivery contract —
+        takes over. Returns records spooled; a failed append raises with
+        the offset snapshot unchanged, so a restart re-polls."""
+        records = self.poll_until_idle(fold_offsets=False)
+        _spool_appender(root, stream, self.fold_offsets_of).append(records)
         return len(records)
 
 
@@ -384,18 +385,13 @@ class JvmConnectorSpooler:
     reference's fillBuffer loop (AbstractKafkaConnectSource.java:68-90)
     as the poll driver.
 
-    Delivery contract: a batch is spooled BEFORE the host's offset
-    snapshot advances past it — the spooler polls with
-    ``fold_offsets=False`` and folds via ``host.fold_offsets_of``
-    only after ``append_segment`` returns (ADVICE r16 #3 fixed the
-    earlier version, which folded during poll and could skip an
-    unspooled batch on a spool failure), so a crash between poll and
-    spool re-polls from the connector's own position — at-least-once,
-    absorbed downstream by the idempotent-sink discipline like every
-    adapter here. Spool failures (serialization, segment I/O) record
-    as last_error exactly like poll failures — stop() never reports
-    success over a dead loop (ADVICE r16 #1). stop() drains: the loop
-    exits only after a final poll returns empty."""
+    Delivery contract: the poll thread puts each batch into the
+    appender and flushes; an offset folds only once its record is
+    written, and a failed write is retried ahead of later batches, so
+    a crash re-polls from the connector's own position — at-least-once,
+    absorbed by the idempotent-sink discipline. Poll and spool failures
+    record as last_error, raised by stop() (ADVICE r16 #1). stop()
+    drains until a poll returns empty, then closes the appender."""
 
     def __init__(
         self,
@@ -405,71 +401,40 @@ class JvmConnectorSpooler:
         idle_seconds: float = 0.25,
     ) -> None:
         self.host = host
-        self.spool_root = spool_root
-        self.stream = stream
         self.idle_seconds = idle_seconds
-        self.spooled = 0
+        self.appender = _spool_appender(spool_root, stream, host.fold_offsets_of)
         self.last_error: Exception | None = None
         self._thread = None
         self._stop = None
 
-    def _spool_batch(self, records: list[dict]) -> None:
-        from hazelcast_jet_contrib_spark.streaming.message_log import (
-            append_segment,
-        )
+    @property
+    def spooled(self) -> int:
+        return self.appender.metrics()["records_written"]
 
-        by_stream: dict[str, list[dict]] = {}
-        for r in records:
-            target = (
-                _stream_name(self.stream)
-                if self.stream
-                else _stream_name(r["topic"])
-            )
-            by_stream.setdefault(target, []).append(_spool_record(r))
-        for target, recs in by_stream.items():
-            append_segment(self.spool_root, target, recs)
-        # durable — only now may the offset snapshot pass this batch
-        self.host.fold_offsets_of(records)
-        self.spooled += len(records)
+    def _spool_next(self) -> list[dict]:
+        """One poll, spooled: its records join the appender's buffer
+        (behind any held from a failed write) and the buffer is flushed."""
+        batch = self.host.poll(fold_offsets=False) or []
+        for r in batch:
+            self.appender.put(r)
+        self.appender.flush()
+        return batch
 
     def _loop(self) -> None:
         while not self._stop.is_set():
-            self._run_once(idle_wait=True)
-        # final drain: keep polling until the task reports empty, so
-        # records the connector already produced are never abandoned;
-        # a drain-time failure — poll OR spool — records as last_error
-        # (raised by stop()) instead of dying unhandled in this thread
-        while True:
             try:
-                batch = self.host.poll(fold_offsets=False)
-                if not batch:
-                    return
-                self._spool_batch(batch)
-            except Exception as ex:
-                self.last_error = ex
-                return
-
-    def _run_once(self, idle_wait: bool) -> None:
-        try:
-            batch = self.host.poll(fold_offsets=False)
-        except Exception as ex:  # task failure: surface on stop(), back off
-            self.last_error = ex
-            self._stop.wait(min(1.0, self.idle_seconds * 4))
-            return
-        if batch:
-            try:
-                self._spool_batch(batch)
-            except Exception as ex:
-                # spool failure (serialization, segment I/O): same
-                # surface-and-back-off contract as a poll failure —
-                # never a silent thread death with stop() reporting
-                # success (ADVICE r16 #1). Offsets did not advance
-                # (fold happens after append), so a restart from the
-                # snapshot replays the unspooled batch.
+                if not self._spool_next():
+                    self._stop.wait(self.idle_seconds)
+            except Exception as ex:  # poll or spool failure: surface on stop(), back off
                 self.last_error = ex
                 self._stop.wait(min(1.0, self.idle_seconds * 4))
-        elif idle_wait:
-            self._stop.wait(self.idle_seconds)
+        # final drain: keep polling until the task reports empty, so
+        # records the connector already produced are never abandoned
+        try:
+            while self._spool_next():
+                pass
+        except Exception as ex:
+            self.last_error = ex
 
     def start(self) -> "JvmConnectorSpooler":
         import threading
@@ -482,13 +447,18 @@ class JvmConnectorSpooler:
         return self
 
     def stop(self) -> None:
-        """Signal, join (the loop drains first), then raise the last
-        poll error if one occurred — never a silent failure."""
+        """Signal, join (the loop drains first), close the appender,
+        then raise the last poll or spool error if one occurred — never
+        a silent failure."""
         self._stop.set()
         if self._thread is not None:
             self._thread.join(timeout=60)
             if self._thread.is_alive():
                 raise RuntimeError("jvm connector spooler hung past 60s")
+        try:
+            self.appender.close()
+        except RuntimeError as ex:
+            self.last_error = ex
         if self.last_error is not None:
             raise RuntimeError(
                 f"jvm connector spooler saw a poll failure "

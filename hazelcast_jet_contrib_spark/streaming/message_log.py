@@ -23,8 +23,10 @@ engine's task scheduling.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import threading
 import time
 from dataclasses import dataclass
 
@@ -441,8 +443,8 @@ def append_segment(
     claimed with os.link, which atomically fails if another producer won
     the slot — then we re-scan and retry.
 
-    ``seq_hint`` lets a SOLE producer (the HTTP listener's group-commit
-    leader, which serializes its own appends) skip the per-append
+    ``seq_hint`` lets a SOLE producer (a ``SpoolAppender``, which
+    serializes its own appends) skip the per-append
     directory scan: the hint (its last committed seq + 1) is tried
     first, and any collision — another producer slipped in — falls back
     to the scan-and-retry loop, so correctness never depends on the
@@ -473,6 +475,263 @@ def append_segment(
     finally:
         if tmp is not None and os.path.exists(tmp):
             os.unlink(tmp)
+
+
+class _Verdict:
+    """One ``append`` call's records not yet settled, and the error of
+    the write that failed any of them."""
+
+    __slots__ = ("pending", "error")
+
+    def __init__(self, pending: int):
+        self.pending = pending
+        self.error: Exception | None = None
+
+
+class SpoolAppender:
+    """The write side of every push source's spool (SURVEY.md §7 risk 3:
+    bounded queue → durable spool → ``message_log`` stream), so each
+    source keeps only its transport. The sink loop's rule applies: the
+    appender owns the buffer and a record leaves it only once written.
+
+    * ``put(rec)``: the appender owns the record; a failed write keeps
+      it for the next write. At ``capacity`` unwritten records ``put``
+      blocks until the flusher makes room (``flush_interval`` set), or
+      the caller pays the flush inline and a failed flush raises, the
+      record not accepted.
+    * ``append(recs)``: buffer ``recs`` (no capacity wait: the caller
+      waits for their write anyway), then wait for the verdict of the
+      write covering them (the durable ack). Appends GROUP-COMMIT: the
+      caller that finds no write in progress leads and writes everything
+      buffered on its own thread while the others wait. A failed write
+      raises in EVERY append caller it covered and hands their records
+      back to them, so no caller is acknowledged for an unwritten record.
+
+    One write routine serves both: a claimed batch (at most
+    ``segment_records``) becomes one segment per stream (``route(rec)``;
+    ``encode(rec)`` is the line written); after a partial failure only
+    the streams not yet written are retried, so a retry adds no
+    duplicates. ``after_durable(recs)`` runs with a batch, in put order,
+    once all of it is written. As the sole writer of its streams the
+    appender passes a ``seq_hint`` per stream (a collision falls back to
+    the scan). ``append_segment`` is resolved through this module, so a
+    patched ``message_log.append_segment`` sees every write.
+
+    ``start()`` runs a flusher thread that writes at ``segment_records``
+    buffered or every ``flush_interval``; a failed write is counted,
+    backed off and retried. ``close()`` drains (three failed attempts
+    give up) and raises if any record is unwritten."""
+
+    def __init__(
+        self,
+        root: str,
+        route,
+        *,
+        encode=None,
+        capacity: int | None = None,
+        segment_records: int | None = None,
+        flush_interval: float | None = None,
+        after_durable=None,
+    ):
+        self.root = root
+        self.route = route
+        self.encode = encode
+        self.capacity = capacity
+        self.segment_records = segment_records
+        self.flush_interval = flush_interval
+        self.after_durable = after_durable
+        self.last_error: Exception | None = None
+        self._cv = threading.Condition()
+        self._closed = threading.Event()
+        # (record, verdict) pairs not yet claimed by a write; the
+        # verdict is None for a put record, which the appender owns
+        self._buf: list[tuple] = []
+        # (put records, streams already written) of failed batches,
+        # claimed ahead of the buffer by the next write
+        self._held: list[tuple[list, set]] = []
+        self._unwritten = 0
+        self._writing = False
+        self._seq_hint: dict[str, int] = {}
+        self._counts = dict.fromkeys(
+            ("records_in", "records_written", "segments", "failed_writes", "retries"), 0
+        )
+        # the buffer size that wakes the flusher before its interval
+        self._wake_at = min(n for n in (segment_records, capacity, float("inf")) if n)
+        self._flusher = None
+
+    def metrics(self) -> dict:
+        """The spool counters; ``buffered`` = accepted, not yet written."""
+        with self._cv:
+            return {**self._counts, "buffered": self._unwritten}
+
+    def _accept(self, recs, verdict) -> None:
+        if self._closed.is_set():
+            raise RuntimeError(f"spool appender for {self.root} is closed")
+        self._buf.extend((r, verdict) for r in recs)
+        self._unwritten += len(recs)
+        self._counts["records_in"] += len(recs)
+        if self._flusher is not None and len(self._buf) >= self._wake_at:
+            self._cv.notify_all()
+
+    def put(self, rec) -> None:
+        while True:
+            with self._cv:
+                if self.capacity is None or self._unwritten < self.capacity:
+                    self._accept((rec,), None)
+                    return
+                if self.flush_interval is not None:
+                    self._cv.wait()  # the flusher makes room
+                    continue
+            self.flush()  # no flusher: the caller pays; raises on failure
+
+    def append(self, recs: list) -> None:
+        if not recs:
+            return
+        verdict = _Verdict(len(recs))
+        with self._cv:
+            self._accept(recs, verdict)
+        while True:
+            with self._cv:
+                while self._writing and verdict.pending:
+                    self._cv.wait()
+                if not verdict.pending:
+                    break
+                parts = self._claim()
+            self._write(parts)
+        if verdict.error is not None:
+            raise verdict.error
+
+    def flush(self) -> int:
+        """Write everything buffered on this thread (after any write in
+        progress); returns the records written. Raises a failed write's
+        error, with its put records still buffered."""
+        written = 0
+        while True:
+            with self._cv:
+                while self._writing:
+                    self._cv.wait()
+                if not (self._buf or self._held):
+                    return written
+                parts = self._claim()
+            n, err = self._write(parts)
+            written += n
+            if err is not None:
+                raise err
+
+    def _claim(self) -> list[tuple[list, set]]:
+        # lock held: the held batches, then the buffer's next batch;
+        # one writer at a time keeps segment order = claim order
+        parts, self._held = self._held, []
+        self._counts["retries"] += len(parts)
+        if self._buf:
+            n = self.segment_records or len(self._buf)
+            parts.append((self._buf[:n], set()))
+            del self._buf[:n]
+        self._writing = True
+        return parts
+
+    def _write(self, parts: list[tuple[list, set]]) -> tuple[int, Exception | None]:
+        """The one write routine: each part as one segment per stream not
+        yet written, then ``after_durable``. Stops at the first failure;
+        the failed and unattempted parts keep their put records (and
+        the streams already written) for the next claim, and every
+        append caller they covered gets the error."""
+        written, segments, ok, err = 0, 0, 0, None
+        for entries, done in parts:
+            by_stream: dict[str, list] = {}
+            for e in entries:
+                by_stream.setdefault(self.route(e[0]), []).append(e)
+            try:
+                for stream, es in by_stream.items():
+                    if stream in done:
+                        continue
+                    recs = [r for r, _ in es]
+                    seq = append_segment(
+                        self.root, stream,
+                        [self.encode(r) for r in recs] if self.encode else recs,
+                        seq_hint=self._seq_hint.get(stream),
+                    )
+                    self._seq_hint[stream] = seq + 1
+                    done.add(stream)
+                    written += len(es)
+                    segments += 1
+                if self.after_durable is not None:
+                    self.after_durable([r for r, _ in entries])
+            except Exception as ex:
+                err = ex
+                break
+            ok += 1
+        with self._cv:
+            self._writing = False
+            c = self._counts
+            c["records_written"] += written
+            c["segments"] += segments
+            self._unwritten -= written
+            for entries, done in parts[ok:]:
+                owned = [e for e in entries if e[1] is None]
+                if owned:
+                    self._held.append((owned, done))
+                for r, v in entries:
+                    if v is not None:
+                        v.error = err
+                        if self.route(r) not in done:
+                            self._unwritten -= 1  # handed back to the caller
+            for entries, _ in parts:
+                for _, v in entries:
+                    if v is not None:
+                        v.pending -= 1
+            if err is not None:
+                c["failed_writes"] += 1
+                self.last_error = err
+            self._cv.notify_all()
+        return written, err
+
+    def start(self) -> "SpoolAppender":
+        if self.flush_interval is None:
+            raise ValueError("a flusher thread needs flush_interval")
+        self._closed.clear()
+        self._flusher = threading.Thread(
+            target=self._flush_loop, name=f"spool-flusher-{self.root}", daemon=True
+        )
+        self._flusher.start()
+        return self
+
+    def _flush_loop(self) -> None:
+        while not self._closed.is_set():
+            with self._cv:
+                self._cv.wait_for(
+                    lambda: self._closed.is_set() or len(self._buf) >= self._wake_at,
+                    self.flush_interval,
+                )
+            if self._closed.is_set():
+                return
+            try:
+                self.flush()
+            except Exception:
+                # counted by the write routine; back off, bounded so a
+                # recovered spool is picked up within a second
+                self._closed.wait(min(1.0, self.flush_interval * 4))
+
+    def close(self) -> None:
+        with self._cv:
+            self._closed.set()
+            self._cv.notify_all()
+        if self._flusher is not None:
+            self._flusher.join(timeout=60)
+            self._flusher = None
+        for _ in range(3):
+            with contextlib.suppress(Exception):
+                self.flush()
+                break
+        with self._cv:
+            left = self._unwritten
+        if left:
+            # never a silent drop: a push source has already acknowledged
+            # these records to its producer
+            raise RuntimeError(
+                f"spool appender for {self.root} closed with {left} unspooled "
+                f"records (failed_writes={self._counts['failed_writes']})"
+            ) from self.last_error
 
 
 def compact_stream(root: str, stream: str) -> dict:

@@ -483,7 +483,9 @@ def test_spooler_topic_path_traversal_is_sanitized(tmp_path):
     assert _stream_name("") not in ("", ".", "..")
     root = tmp_path / "spool"
     sp = JvmConnectorSpooler(_FakeHost(), str(root))
-    sp._spool_batch([_rec("../escape/x", "v1"), _rec("a/b", "v2")])
+    for r in (_rec("../escape/x", "v1"), _rec("a/b", "v2")):
+        sp.appender.put(r)
+    sp.appender.flush()
     # everything landed one level under root, nothing escaped
     streams = sorted(p.name for p in root.iterdir())
     assert streams == sorted(

@@ -184,15 +184,20 @@ def test_failed_initial_connect_does_not_leak_the_flusher(tmp_path):
             return c
 
     src = _source(tmp_path, _RefusingModule())
+
+    def flushers():
+        name = f"spool-flusher-{src.spool_root}"
+        return [t for t in threading.enumerate() if t.name == name]
+
     with pytest.raises(ConnectionRefusedError):
         src.start()
-    assert not src._flusher.is_alive()
+    assert not flushers()
     # a later retry owns a fresh flusher and works normally
     src._mqtt_module = _FakeSubModule()
     mod = src._mqtt_module
     src.start()
     try:
-        assert src._flusher.is_alive()
+        assert len(flushers()) == 1
         mod.clients[0].deliver("log", b"up", 0)
     finally:
         src.stop()
@@ -289,9 +294,9 @@ def test_bounded_queue_blocks_callback_until_drained(tmp_path):
     t.start()
     time.sleep(0.1)
     assert not done.is_set(), "callback must block while the bounded queue is full"
-    assert src._drain_once() >= 1  # flusher drains -> the blocked put completes
+    assert src.appender.flush() >= 1  # flusher drains -> the blocked put completes
     assert done.wait(timeout=5)
-    while src._drain_once():
+    while src.appender.flush():
         pass
     assert [r["value"] for r in _spooled(src.spool_root, "log")] == ["1", "2", "3"]
 
@@ -488,23 +493,23 @@ def test_spool_write_failure_holds_batch_and_retries(tmp_path, monkeypatch):
     src = _source(tmp_path, mod)
     c = _FakeSubClient()
     src._on_message(c, None, _FakeMessage("log", b"precious", 1))
-    src._stop = __import__("threading").Event()  # drain uses its wait()
 
     real_append = ml.append_segment
     calls = {"n": 0}
 
-    def flaky_append(root, stream, records, seq=None):
+    def flaky_append(root, stream, records, seq=None, **kw):
         calls["n"] += 1
         if calls["n"] == 1:
             raise OSError(28, "No space left on device (injected)")
         return real_append(root, stream, records, seq)
 
     monkeypatch.setattr(ml, "append_segment", flaky_append)
-    assert src._drain_once() == 0  # write failed, batch held
+    with pytest.raises(OSError):
+        src.appender.flush()  # write failed, batch held
     assert src.stats["spool_errors"] == 1
-    assert src._retry_batch and src._retry_batch[0]["value"] == "precious"
-    assert src._drain_once() == 1  # retry drains the held batch
-    assert src._retry_batch is None
+    assert src.appender.metrics()["buffered"] == 1 and not _spooled(src.spool_root, "log")
+    assert src.appender.flush() == 1  # retry drains the held batch
+    assert src.appender.metrics()["buffered"] == 0
     assert [r["value"] for r in _spooled(src.spool_root, "log")] == ["precious"]
 
 
@@ -564,24 +569,24 @@ def test_partial_spool_failure_retry_is_duplicate_free(tmp_path, monkeypatch):
     src._on_message(c, None, _FakeMessage("house/kitchen", b"k1", 1))
     src._on_message(c, None, _FakeMessage("house/hall", b"h1", 1))
     src._on_message(c, None, _FakeMessage("log", b"l1", 0))
-    src._stop = threading.Event()  # drain uses its wait()
 
     real_append = ml.append_segment
     state = {"failed": False}
 
-    def fail_second_topic(root, stream, records, seq=None):
+    def fail_second_topic(root, stream, records, seq=None, **kw):
         if not state["failed"] and len(glob(os.path.join(root, "*"))) == 1:
             state["failed"] = True  # exactly one topic dir written so far
             raise OSError(28, "No space left on device (injected)")
         return real_append(root, stream, records, seq)
 
     monkeypatch.setattr(ml, "append_segment", fail_second_topic)
-    first = src._drain_once()  # one topic lands, the second fails
-    assert first == 1 and src.stats["spool_errors"] == 1
-    held_topics = {r["key"] for r in src._retry_batch}
-    assert len(held_topics) == 2, "written topic must leave the retry batch"
-    assert src._drain_once() == 2  # retry writes ONLY the held topics
-    assert src._retry_batch is None
+    with pytest.raises(OSError):
+        src.appender.flush()  # one topic lands, the second fails
+    m = src.appender.metrics()
+    assert m["records_written"] == 1 and src.stats["spool_errors"] == 1
+    assert m["buffered"] == 2, "written topic must leave the retry batch"
+    assert src.appender.flush() == 2  # retry writes ONLY the held topics
+    assert src.appender.metrics()["buffered"] == 0
     spooled = [
         r["value"]
         for t in ("house/kitchen", "house/hall", "log")
@@ -611,14 +616,14 @@ def test_spool_exact_under_injected_scheduling_jitter(tmp_path, monkeypatch):
     rng = random.Random(0xBEEF)
     delay_lock = threading.Lock()
 
-    def slow_append(root, stream, records, seq=None):
+    def slow_append(root, stream, records, seq=None, **kw):
         with delay_lock:
             d = rng.uniform(0, 0.008)
         _time.sleep(d)
         return real_append(root, stream, records, seq)
 
-    # the flusher imports append_segment INSIDE _drain_once, so patch
-    # the module attribute it resolves at call time
+    # the appender resolves append_segment through message_log at call
+    # time, so patch the module attribute
     monkeypatch.setattr(ml, "append_segment", slow_append)
     mod = _FakeSubModule()
     src = _source(tmp_path, mod, flush_records=16)
