@@ -13,6 +13,12 @@ only to the candidate set.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import shutil
+from functools import reduce
+
 import pandas as pd  # noqa: F401 — resolves the Arrow kernels' stringified type hints
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -27,6 +33,7 @@ from hazelcast_jet_contrib_spark.cache import (
     checkpoint_rdd_handle as _checkpoint_rdd_handle,
 )
 from hazelcast_jet_contrib_spark.functions.text import shingles_of_tokens, tokens
+from hazelcast_jet_contrib_spark.streaming.exactly_once import EpochCommitLog
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -1024,10 +1031,10 @@ def band_probe_pairs_64(
 # hash over this many exchange buckets so the corpus-sized hs volume
 # never funnels into one reduce task at scale, while AQE's size-based
 # coalescing folds the tiny buckets back together locally — nothing
-# here is tuned to a core count. The default 4096 buckets keep
-# per-bucket sets volume ≤ ~0.5 GB up to ~2 TB of raw verification sets
-# (≈ tens of TB of corpus text); past that, raise the conf below
-# (VERDICT r17 item 9 — the bound is recorded in SCALE.md). This salt
+# here is tuned to a core count. 4096 buckets keep per-bucket sets
+# volume ≤ ~0.5 GB up to ~2 TB of raw verification sets (≈ tens of TB
+# of corpus text); past that, raise this constant (the bound is
+# recorded in SCALE.md). This salt
 # covers the sets rows ONLY: each BAND's rows keep salt 0 and land in
 # one reduce task per band (~24 B/doc × N docs per task, linear in the
 # corpus) — an explicit residual (ADVICE r17 #4): splitting a band
@@ -1035,16 +1042,15 @@ def band_probe_pairs_64(
 # ranges that probe row-group pruning relies on, and range-splitting
 # costs a sampling pass per epoch; revisit if a single band's rows
 # outgrow one task before the sets volume outgrows this salt space.
-_SETS_SHARD_SPACE_DEFAULT = 4096
-_SETS_SHARD_SPACE_CONF = "spark.jetcontrib.dedup.setsShardSpace"
+_SETS_SHARD_SPACE = 4096
 _SETS_BAND = -1  # the sets rows' partition value; band=* globs match it
-
-
-def _sets_shard_space(spark) -> int:
-    n = int(spark.conf.get(_SETS_SHARD_SPACE_CONF, str(_SETS_SHARD_SPACE_DEFAULT)))
-    if n < 1:
-        raise ValueError(f"{_SETS_SHARD_SPACE_CONF} must be >= 1 (got {n})")
-    return n
+# Both MinHash indexes (this module's and streaming/dedup_index.py's)
+# are EpochCommitLog state directories holding this one kind: each
+# epoch dir is one write_index_epoch output.
+INDEX_KIND = "index"
+_PARAMS = "_minhash_params.json"
+_LAYOUT = "epochs-v3"
+_OWNER = "minhash index"
 
 
 def index_rows(
@@ -1071,7 +1077,13 @@ def index_rows(
     row + each ``hs`` once — records linear in corpus, constant
     exchanges) IS the index build's cost law."""
     sh = hashed_shingle_sets(corpus, id_col, text_col, shingle_words)
-    sig = minhash_signatures(sh, num_hashes)
+    return signature_index_rows(minhash_signatures(sh, num_hashes), num_hashes, bands)
+
+
+def signature_index_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """:func:`index_rows` from an already-computed
+    ``minhash_signatures`` frame (the streaming index passes its
+    persisted survivor signatures)."""
     rows = num_hashes // bands
     structs = [
         F.struct(
@@ -1119,7 +1131,7 @@ def _route_index_epoch(rel: DataFrame) -> DataFrame:
         "__shard__",
         F.when(
             F.col("band") < 0,
-            F.pmod(F.xxhash64("id"), F.lit(_sets_shard_space(rel.sparkSession))),
+            F.pmod(F.xxhash64("id"), F.lit(_SETS_SHARD_SPACE)),
         ).otherwise(F.lit(0)),
     )
     # EXPLICIT partition count (r18): the session now lets AQE coalesce
@@ -1139,30 +1151,59 @@ def _route_index_epoch(rel: DataFrame) -> DataFrame:
     )
 
 
-def _write_index_epoch(
-    corpus: DataFrame,
-    path: str,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_words: int,
-    mode: str,
-) -> None:
-    """Write one index epoch (full build: mode=overwrite; delta append:
-    mode=append): ONE action — scan → row-local signatures → unpivot →
-    one exchange → sorted band-partitioned parquet; the sets rows ride
-    the same write as the ``band=-1`` partition, so there is no second
-    job, no persist barrier, and the compaction/crash protocol covers
-    them as just another band."""
-    (
-        _route_index_epoch(
-            index_rows(corpus, id_col, text_col, num_hashes, bands, shingle_words)
-        )
-        .write.mode(mode)
-        .partitionBy("band")
-        .parquet(path)
+def write_index_epoch(rel: DataFrame, out: str) -> None:
+    """Write an index relation (one epoch's :func:`index_rows`, or a
+    compaction's :func:`read_index_epochs`) to ``out`` as sorted
+    ``band=N`` partitions: ONE action — one exchange → sorted
+    band-partitioned parquet; the sets rows ride the same write as the
+    ``band=-1`` partition, so there is no second job and no persist
+    barrier. Overwrite mode: rewriting an uncommitted epoch dir replaces
+    its crash leftovers. The one writer of both MinHash indexes."""
+    _route_index_epoch(rel).write.mode("overwrite").partitionBy("band").parquet(out)
+
+
+def read_index_epochs(spark, dirs: list[str], id_type: str) -> DataFrame:
+    """The index relation (id, bh, hs, band) over the committed
+    ``dirs`` of :data:`INDEX_KIND` (``EpochCommitLog.epoch_dirs``): one
+    scan per dir, unioned. One parquet read over several dirs that
+    each hold ``band=N`` fails partition discovery
+    (CONFLICTING_DIRECTORY_STRUCTURES); a scan per dir keeps both the
+    ``band`` partition pruning and the ``bh``/``id`` pushdowns in every
+    scan. The explicit schema (``id_type``: the corpus id column's SQL
+    type) spares a schema-inference job per dir and reads an epoch with
+    no rows as empty. The one reader of both MinHash indexes."""
+    schema = f"id {id_type}, bh bigint, hs array<bigint>, band int"
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return reduce(
+        DataFrame.unionByName, (spark.read.schema(schema).parquet(d) for d in dirs)
     )
+
+
+def _open_index(path: str) -> tuple[EpochCommitLog, dict]:
+    """The commit record and ``_minhash_params.json`` sidecar of the
+    index at ``path``. A URI path (both are driver-local file I/O), a
+    former layout and an index with no committed epoch all raise: read
+    as this layout, the latter two would probe as an index with fewer or
+    no rows — for a decontamination tool a silent safety failure."""
+    log = EpochCommitLog(path, _OWNER)
+    with open(os.path.join(path, _PARAMS)) as f:
+        params = json.load(f)
+    if params.get("layout") != _LAYOUT:
+        # pre-r17: hs on every band row, no band=-1 sets run (every
+        # verification fails); unified-v2: band=N dirs at the root, no
+        # commit record (no epoch to read)
+        raise ValueError(
+            f"index at {path!r} was built with layout "
+            f"{params.get('layout')!r}, not {_LAYOUT!r}: rebuild it "
+            "with build_minhash_index"
+        )
+    if log.committed() is None:
+        raise ValueError(
+            f"index at {path!r} has no committed epoch (its build did not "
+            "finish): rebuild it with build_minhash_index"
+        )
+    return log, params
 
 
 def build_minhash_index(
@@ -1174,8 +1215,12 @@ def build_minhash_index(
     bands: int = 16,
     shingle_words: int = 3,
 ) -> None:
-    """Materialize a reusable near-dup index on disk in the UNIFIED
-    split layout (r17): one parquet dataset partitioned by ``band`` —
+    """Materialize a reusable near-dup index on disk, replacing any
+    index at ``path``. ``path`` is an ``EpochCommitLog`` state directory
+    (streaming/exactly_once.py; driver-local, a URI is refused): the
+    build is epoch 0 of its one kind, ``index/e0/``, committed after the
+    epoch is written — a build that dies first leaves an index every
+    probe refuses. Each epoch dir holds one band-partitioned dataset —
     NARROW rows (id, bh, hs=NULL) per (corpus id, band), bh-sorted
     within each band partition, plus the ``band=-1`` partition holding
     ONE (id, hs) verification row per document, id-sorted.
@@ -1196,41 +1241,43 @@ def build_minhash_index(
     candidate-bounded `id IN (...)` scan of the id-sorted ``band=-1``
     run (same row-group pruning story, plan-asserted in tests). And
     because the sets rows are just another band partition written in
-    the SAME single action, build/append stay one job each and the
-    compaction/crash-repair protocol needs no second code path
-    (measured A/B vs both the old layout and a two-relation `_sets`
-    variant in OPTIMIZATION_r17.md §19 — the unified write matches the
-    old layout's wall clock locally at ~6× fewer index bytes).
+    the SAME single action, build/append stay one job each and
+    compaction rewrites them with the bands (measured A/B vs both the
+    old layout and a two-relation `_sets` variant in
+    OPTIMIZATION_r17.md §19 — the unified write matches the old
+    layout's wall clock locally at ~6× fewer index bytes).
 
     Index parameters persist in a `_`-prefixed sidecar so probes can
     never be computed with a mismatched family."""
-    _write_index_epoch(
-        corpus, path, id_col, text_col, num_hashes, bands, shingle_words,
-        mode="overwrite",
-    )
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_minhash_params.json"), "w") as f:
-        _json.dump(
+    log = EpochCommitLog(path, _OWNER)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    with open(os.path.join(path, _PARAMS), "w") as f:
+        json.dump(
             {
                 "num_hashes": num_hashes,
                 "bands": bands,
                 "shingle_words": shingle_words,
-                "layout": "unified-v2",
+                "id_type": corpus.schema[id_col].dataType.simpleString(),
+                "layout": _LAYOUT,
             },
             f,
         )
+    write_index_epoch(
+        index_rows(corpus, id_col, text_col, num_hashes, bands, shingle_words),
+        log.epoch_dir(INDEX_KIND, 0),
+    )
+    log.commit(0)
 
 
 def _probe_candidates(idx: DataFrame, probe_rows) -> DataFrame:
     """The probe's LSH candidate-generation relation: the index's NARROW
     band rows, partition-pruned to band >= 0 and row-group-pruned by
-    `bh IN (...)` (both pushed into the scan — the plan pin lives on
-    THIS relation since the r18 pairs-collect restructure moved the band
-    scan out of probe_minhash_index's returned verify plan). Since r18
-    the relation is the pruned SCAN ALONE: the probe band keys are
-    already driver-resident (they were collected to build the `bh`
+    `bh IN (...)` (both pushed into every epoch's scan — the plan pin
+    lives on THIS relation since the r18 pairs-collect restructure moved
+    the band scan out of probe_minhash_index's returned verify plan).
+    Since r18 the relation is the pruned SCAN ALONE: the probe band keys
+    are already driver-resident (they were collected to build the `bh`
     pushdown list), so attaching probe_ids to the matched corpus rows
     is a dict lookup per collected row, not a Spark job — the former
     createDataFrame → broadcast → hash join → dropDuplicates exchange
@@ -1264,14 +1311,18 @@ def probe_minhash_index(
     LSH candidate generation by (band, bh) equality against the NARROW
     band rows, then EXACT Jaccard verification on the stored
     shingle-hash sets re-attached from the index's id-sorted ``band=-1``
-    run — no false positives from banding survive, identically to
+    runs — no false positives from banding survive, identically to
     `minhash_decontaminate`'s verify step, but against an index built
-    once. Probe cost: the probe side computes its signatures fresh
-    (it is the small side — an eval set, a delta batch); the band
-    scan reads only row groups whose ``bh`` range intersects the
-    probes' bucket keys, and the sets scan only row groups whose id
-    range intersects the candidate ids (predicate pushdown on both
-    sorted columns — plan-asserted in tests).
+    once. The index read is the committed epochs only (its compacted
+    generation plus the epochs above its floor), so an append or a
+    compaction that died part-way changes no probe; an index whose
+    build never committed, or in a former layout, raises. Probe cost:
+    the probe side computes its signatures fresh (it is the small
+    side — an eval set, a delta batch); each epoch's band scan reads
+    only row groups whose ``bh`` range intersects the probes' bucket
+    keys, and its sets scan only row groups whose id range intersects
+    the candidate ids (predicate pushdown on both sorted columns —
+    plan-asserted in tests).
 
     TWO boundedness contracts are ENFORCED, not assumed (VERDICT r09
     item 6): ``max_probe_band_rows`` caps the driver materialization of
@@ -1290,26 +1341,11 @@ def probe_minhash_index(
 
     Output: (probe_id, corpus_id, jaccard double rounded to 6dp) for
     every pair at or above ``threshold``."""
-    import json as _json
-    import os as _os
-
     if max_probe_band_rows < 1:
         raise ValueError("max_probe_band_rows must be >= 1")
     if max_candidate_ids < 1:
         raise ValueError("max_candidate_ids must be >= 1")
-    with open(_os.path.join(path, "_minhash_params.json")) as f:
-        params = _json.load(f)
-    if params.get("layout") != "unified-v2":
-        # a pre-r17 index stores hs on every band row and has no
-        # band=-1 sets run: this probe would silently return ZERO
-        # matches (empty sets scan fails every verification) — for a
-        # decontamination tool that is a safety failure, so refuse
-        # loudly instead (ADVICE r17 #1).
-        raise ValueError(
-            f"index at {path!r} was built with layout "
-            f"{params.get('layout')!r}, not 'unified-v2': rebuild it "
-            "with build_minhash_index before probing"
-        )
+    log, params = _open_index(path)
     # spread=False: probes are bounded by contract (the collect cap
     # below enforces it) — spreading them buys nothing (§18)
     sh = hashed_shingle_sets(
@@ -1329,7 +1365,7 @@ def probe_minhash_index(
             "build_minhash_index over the probes and probe with the "
             "corpus — or raise max_probe_band_rows deliberately."
         )
-    idx = spark.read.parquet(path)
+    idx = read_index_epochs(spark, log.epoch_dirs(INDEX_KIND), params["id_type"])
     # bounded collect #2: the matched BAND ROWS drive the sets scan's
     # `id IN (...)` pruning and the driver-side pair formation; fetch at
     # most cap+1 rows in ONE job, then fail loudly on overflow. Raw
@@ -1426,39 +1462,39 @@ def append_to_minhash_index(
 ) -> None:
     """Incremental index maintenance: add a delta corpus (the day's new
     documents) to an existing MinHash index WITHOUT rebuilding —
-    signatures compute over the delta only, and the new rows append as
-    fresh parquet files in the same unified layout: bh-sorted band
-    files per band partition plus an id-sorted delta run in ``band=-1``
-    (row-group pruning applies per file, so probes stay bounded by
-    bucket/candidate selectivity across old + new files alike).
-    Hash-family parameters come from the index's sidecar, so a delta
-    can never be indexed with a mismatched family. Pairs with
-    `probe_minhash_index` for the standing decontamination loop:
-    index once, append deltas, probe the bounded eval set each run."""
-    import json as _json
-    import os as _os
+    signatures compute over the delta only, and the new rows land as
+    the next epoch, ``index/e{committed+1}/``, in the same layout:
+    bh-sorted band files per band partition plus an id-sorted delta run
+    in ``band=-1`` (row-group pruning applies per file, so probes stay
+    bounded by bucket/candidate selectivity across old and new epochs
+    alike). The epoch commits after it is written: an append that dies
+    first leaves rows no probe reads, and the next append overwrites
+    them. Running a finished append again adds its rows as one more
+    epoch (the probe dedups the repeated sets rows). Hash-family
+    parameters come from the index's sidecar, so a delta can never be
+    indexed with a mismatched family. Pairs with `probe_minhash_index`
+    for the standing decontamination loop: index once, append deltas,
+    probe the bounded eval set each run."""
+    log, params = _open_index(path)
+    epoch = log.committed() + 1
+    write_index_epoch(
+        index_rows(
+            corpus,
+            id_col,
+            text_col,
+            params["num_hashes"],
+            params["bands"],
+            params["shingle_words"],
+        ),
+        log.epoch_dir(INDEX_KIND, epoch),
+    )
+    log.commit(epoch)
 
-    with open(_os.path.join(path, "_minhash_params.json")) as f:
-        params = _json.load(f)
-    if params.get("layout") != "unified-v2":
-        # appending unified-layout rows into a pre-r17 index would mix
-        # layouts silently (band rows without hs landing next to rows
-        # that carry it) — same loud-refusal contract as the probe
-        # (ADVICE r17 #1)
-        raise ValueError(
-            f"index at {path!r} was built with layout "
-            f"{params.get('layout')!r}, not 'unified-v2': rebuild it "
-            "with build_minhash_index before appending"
-        )
-    _write_index_epoch(
-        corpus,
-        path,
-        id_col,
-        text_col,
-        params["num_hashes"],
-        params["bands"],
-        params["shingle_words"],
-        mode="append",
+
+def _index_files(log: EpochCommitLog) -> int:
+    return sum(
+        len(glob.glob(os.path.join(d, "band=*", "*.parquet")))
+        for d in log.epoch_dirs(INDEX_KIND)
     )
 
 
@@ -1467,85 +1503,26 @@ def compact_minhash_index(spark, path: str) -> dict[str, int]:
     per band partition — bh-sorted band files, the id-sorted ``band=-1``
     sets run included as just another band (VERDICT r08 item 7 — the
     index twin of the message log's `compact_stream`). Every
-    `append_to_minhash_index` adds one file per partition whose sort
-    ranges overlap the base files', so probes read more row groups per
-    epoch; compaction rewrites each partition as a single sorted run,
-    restoring build-time pruning selectivity.
+    `append_to_minhash_index` adds an epoch whose files' sort ranges
+    overlap the earlier epochs', so probes read more row groups per
+    epoch; compaction rewrites every committed epoch through the same
+    writer as one generation, restoring build-time pruning selectivity.
 
-    Safety contract (mirrors streaming/message_log.py compaction —
-    including its single-maintainer assumption: one compactor at a
-    time; probes may run concurrently):
-    - LOCAL-FILESYSTEM ONLY: the swap uses os.rename/glob against
-      ``path``, so a non-file URI (hdfs://, s3a://) fails fast here
-      rather than silently operating on a nonexistent local path —
-      build/append/probe remain URI-agnostic (pure Spark I/O), but
-      this maintenance step, like compact_stream, is driver-local.
-    - the rewrite lands in a ``_``-prefixed staging dir INSIDE the
-      index, which parquet partition discovery ignores — concurrent
-      probes keep reading the live layout until the swap;
-    - the swap is TWO renames per band (live -> _trash/band=N, then
-      staging -> live); POSIX cannot rename over a non-empty dir, so
-      the window is not atomic. The old dir is parked under the
-      ``_``-prefixed ``_trash`` dir, which partition discovery also
-      ignores — so at every instant the live layout is either the old
-      band, the new band, or (inside the crash window) the band absent.
-      Compaction never changes content, so old/new mixes stay
-      probe-identical (property tested); a crash INSIDE one band's
-      two-rename window leaves that band parked in ``_trash`` and
-      invisible to probes until repair. Re-running compaction IS the
-      repair: it restores any parked band missing from the live layout
-      before reading (below), then converges the whole index.
+    The commit protocol is ``EpochCommitLog.compact`` (one maintainer
+    at a time; probes may run concurrently): the generation is written
+    under ``compacted/`` where no reader looks, becomes visible only
+    when the ``_COMPACTED`` record is atomically replaced, and the
+    superseded epochs are deleted after that. A crash at any step
+    leaves every probe identical; the next run finishes the cleanup.
+    Driver-local only, like compact_stream: a URI path is refused.
 
     Returns {"files_before": n, "files_after": m} for observability.
     """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
+    log, params = _open_index(path)
+    files_before = _index_files(log)
 
-    if "://" in path and not path.startswith("file:"):
-        raise ValueError(
-            "compact_minhash_index operates on the driver-local "
-            f"filesystem only (got {path!r}); copy the index local or "
-            "rebuild instead of compacting remote layouts"
-        )
+    def rewrite(_kind: str, dirs: list[str], out: str) -> None:
+        write_index_epoch(read_index_epochs(spark, dirs, params["id_type"]), out)
 
-    def _data_files() -> list[str]:
-        return [
-            p
-            for p in _glob.glob(_os.path.join(path, "band=*", "*.parquet"))
-            if not _os.path.basename(p).startswith(("_", "."))
-        ]
-
-    trash_root = _os.path.join(path, "_trash")
-    # crash-window repair: a previous compaction that died between its
-    # two renames left the partition's only copy parked here — restore
-    # it BEFORE reading, else the rewrite would silently drop it (the
-    # band=* glob covers the band=-1 sets run too)
-    for parked in sorted(_glob.glob(_os.path.join(trash_root, "band=*"))):
-        live = _os.path.join(path, _os.path.basename(parked))
-        if not _os.path.exists(live):
-            _os.rename(parked, live)
-        else:
-            _shutil.rmtree(parked, ignore_errors=True)
-
-    files_before = len(_data_files())
-    staging = _os.path.join(path, "_compact_staging")
-    _shutil.rmtree(staging, ignore_errors=True)
-    (
-        _route_index_epoch(spark.read.parquet(path))
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(staging)
-    )
-    _os.makedirs(trash_root, exist_ok=True)
-    for band_dir in sorted(_glob.glob(_os.path.join(staging, "band=*"))):
-        live = _os.path.join(path, _os.path.basename(band_dir))
-        trash = _os.path.join(trash_root, _os.path.basename(band_dir))
-        _shutil.rmtree(trash, ignore_errors=True)
-        if _os.path.exists(live):
-            _os.rename(live, trash)
-        _os.rename(band_dir, live)  # band flips back in; window closed
-        _shutil.rmtree(trash, ignore_errors=True)
-    _shutil.rmtree(staging, ignore_errors=True)
-    _shutil.rmtree(trash_root, ignore_errors=True)
-    return {"files_before": files_before, "files_after": len(_data_files())}
+    log.compact((INDEX_KIND,), rewrite)
+    return {"files_before": files_before, "files_after": _index_files(log)}

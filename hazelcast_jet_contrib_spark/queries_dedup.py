@@ -772,18 +772,20 @@ _MINHASH_INDEX_ORACLE = r"""
     reason=(
         "r14: build->probe is a strict subset of minhash_index_lifecycle "
         "(build evens -> append odds -> compact -> PROBE against the same "
-        "band-partitioned bh-sorted layout, same exact-Jaccard oracle); the "
+        "epoch-committed bh-sorted layout, same exact-Jaccard oracle); the "
         "standalone row re-created its ~2s index build per driver run. Probe "
         "pruning/caps stay pinned by tests/test_minhash_index.py."
     ),
 )
 def minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted near-dup index driver-proven end-to-end: BUILD the
-    band-partitioned, bh-sorted MinHash index on the corpus once (64
-    hashes / 32 bands — a J>=0.6 pair escapes banding with prob
-    (1-0.36)^32 ≈ 6e-7, the decontamination_near_dup trade), then PROBE
-    it with mutated eval docs; LSH candidates verify by EXACT Jaccard on
-    the stored shingle sets, so the result equals the exact-Jaccard SQL.
+    MinHash index on the corpus once — epoch 0 of an EpochCommitLog
+    state directory, a band-partitioned, bh-sorted dataset committed
+    after it is written (64 hashes / 32 bands — a J>=0.6 pair escapes
+    banding with prob (1-0.36)^32 ≈ 6e-7, the decontamination_near_dup
+    trade), then PROBE its committed epochs with mutated eval docs; LSH
+    candidates verify by EXACT Jaccard on the stored shingle sets, so
+    the result equals the exact-Jaccard SQL.
     Scale: the probe's `bh IN (...)` predicate prunes the sorted index
     scan by row-group min/max (pushdown plan-asserted, and the physical
     bh/id sort order of the written files — what makes the row-group
@@ -827,15 +829,16 @@ def minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL index lifecycle driver-proven end-to-end (VERDICT r09
     next-round #3): BUILD the MinHash index on half the corpus (even
-    doc_ids), APPEND the other half as a delta epoch
+    doc_ids) as epoch 0, APPEND the other half as epoch 1
     (append_to_minhash_index — one fresh bh-sorted file per band, the
-    standing-decontamination maintenance path), COMPACT back to one
-    sorted run per band (compact_minhash_index — the two-rename swap
-    with _trash parking), then PROBE with mutated eval docs. Because
-    base ∪ delta = the full documents corpus, the result must hash-
-    match the SAME exact-Jaccard oracle as minhash_index_probe — so a
-    row lost or duplicated anywhere in append/compact/swap surfaces as
-    a driver mismatch, not just a pytest property. Scale: identical
+    standing-decontamination maintenance path), COMPACT both epochs
+    into one sorted run per band (compact_minhash_index — an
+    EpochCommitLog generation, invisible until its record swaps), then
+    PROBE with mutated eval docs. Because base ∪ delta = the full
+    documents corpus, the result must hash-match the SAME exact-Jaccard
+    oracle as minhash_index_probe — so a row lost or duplicated
+    anywhere in append/compact surfaces as a driver mismatch, not just
+    a pytest property. Scale: identical
     shapes to build/probe (corpus-linear signatures once, bh-pruned
     probe scan); compaction is driver-local index maintenance
     (SCALE.md). Eager compute + temp-index cleanup."""

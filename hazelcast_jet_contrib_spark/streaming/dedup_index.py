@@ -9,26 +9,31 @@ streaming corpus build needs, with the index surviving restarts.
 
 Design (the epoch commit record is exactly_once.EpochCommitLog, the one
 protocol of every exactly-once state directory):
-- the index is an append-only store under ``state_dir``:
-  ``bands/e{N}/`` (id, band, bh) and ``sets/e{N}/`` (id, hs) parquet
-  per epoch, plus ``accepted/e{N}/`` holding the admitted rows; the
-  epoch commits AFTER its three directories are written. Crash
-  leftovers above the marker are invisible and a replay rewrites them
-  deterministically; a replayed committed epoch is a no-op and an
-  epoch that rewinds behind the marker raises.
+- the index is an append-only store under ``state_dir`` in the batch
+  index's layout (operators/dedup.py build_minhash_index): each epoch
+  writes its survivors' band and sets rows to ``index/e{N}/band=*``
+  through the same writer (``write_index_epoch``), plus
+  ``accepted/e{N}/`` holding the admitted rows; the epoch commits
+  AFTER both directories are written. Crash leftovers above the marker
+  are invisible and a replay rewrites them deterministically; a
+  replayed committed epoch is a no-op and an epoch that rewinds behind
+  the marker raises.
 - admission = two LSH probes, both candidate-bounded: the batch's band
   keys self-join (within-batch dedup, min-id wins) and join the
-  committed band index (history dedup); only candidate pairs are
-  verified with exact Jaccard over hashed shingle sets. The index side
-  the join touches is (band, bh, id) — ~24-byte rows, never documents.
+  committed index's band rows (history dedup); only candidate pairs
+  are verified with exact Jaccard over hashed shingle sets, the
+  history's read from the same index's ``band=-1`` rows. The index
+  side the band join touches is (band, bh, id) — ~24-byte rows, never
+  documents.
 - at scale the per-epoch directory count grows with trigger count and
   the history probe degrades into a small-files scan; :meth:`compact`
-  rewrites all committed epochs into one size-targeted generation and
-  commits it through the log's compaction record. Readers take the
-  referenced generation plus epochs above its floor, so a crash
-  mid-compaction leaves an unreferenced generation that is simply
-  invisible — admission decisions are identical before, during, and
-  after (tests/test_dedup_index.py).
+  rewrites all committed epochs into one generation (the index kind
+  through the batch index's writer) and commits it through the log's
+  compaction record. Readers take the referenced generation plus
+  epochs above its floor, so a crash mid-compaction leaves an
+  unreferenced generation that is simply invisible — admission
+  decisions are identical before, during, and after
+  (tests/test_dedup_index.py).
 
 Reference lineage: composes S8-style replayable sources with the
 near-dup operators; the reference has no streaming dedup (its dedup
@@ -37,19 +42,24 @@ story is batch), so this is an extension, not a port.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hazelcast_jet_contrib_spark.operators.dedup import (
+    INDEX_KIND,
     band_keys,
     hashed_shingle_sets,
     minhash_signatures,
+    read_index_epochs,
+    signature_index_rows,
+    write_index_epoch,
 )
 from hazelcast_jet_contrib_spark.streaming.exactly_once import EpochCommitLog
 
-_KINDS = ("bands", "sets", "accepted")
+_ACCEPTED_FILE_BYTES = 128 << 20  # compaction's target accepted file size
 
 
 class StreamingNearDupIndex:
@@ -81,12 +91,9 @@ class StreamingNearDupIndex:
         self.bands = bands
         self.shingle_words = shingle_words
         self.commit_log = EpochCommitLog(state_dir, "neardup index")
-
-    def _read(self, spark: SparkSession, kind: str, schema: str) -> DataFrame:
-        dirs = self.commit_log.epoch_dirs(kind)
-        if not dirs:
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(*dirs)
+        self.commit_log.refuse_former(
+            "", r"bands|sets", f"one '{INDEX_KIND}' kind of band=N epoch dirs"
+        )
 
     # -- admission ----------------------------------------------------------
     def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -131,13 +138,17 @@ class StreamingNearDupIndex:
                 .select(F.col("id_b").alias("id"))
             )
 
-            # (b) vs history: batch bands join the committed band index
-            hist_bands = self._read(spark, "bands", "id long, band int, bh long")
-            hist_sets = self._read(spark, "sets", "id long, hs array<bigint>")
+            # (b) vs history: batch bands join the committed band rows
+            hist = read_index_epochs(
+                spark,
+                log.epoch_dirs(INDEX_KIND),
+                batch_df.schema[id_col].dataType.simpleString(),
+            )
+            hist_sets = hist.filter(F.col("band") < 0)
             vs_hist = (
                 banded.alias("n")
                 .join(
-                    hist_bands.alias("h"),
+                    hist.filter(F.col("band") >= 0).alias("h"),
                     (F.col("n.band") == F.col("h.band"))
                     & (F.col("n.bh") == F.col("h.bh")),
                 )
@@ -156,7 +167,7 @@ class StreamingNearDupIndex:
             # cannot be near-dups under this scheme, and must still be
             # admitted — an inner join on sig-derived ids would silently
             # reject them from the output corpus. They carry no signature,
-            # so they add nothing to bands/sets.
+            # so they add nothing to the index.
             survivors = batch_df.join(
                 dropped.withColumnRenamed("id", id_col), id_col, "left_anti"
             )
@@ -164,12 +175,11 @@ class StreamingNearDupIndex:
             survivors.write.mode("overwrite").parquet(
                 log.epoch_dir("accepted", epoch_id)
             )
-            surv_sig = sig.join(survivor_ids, "id")
-            band_keys(surv_sig, self.num_hashes, self.bands).write.mode(
-                "overwrite"
-            ).parquet(log.epoch_dir("bands", epoch_id))
-            surv_sig.select("id", "hs").write.mode("overwrite").parquet(
-                log.epoch_dir("sets", epoch_id)
+            write_index_epoch(
+                signature_index_rows(
+                    sig.join(survivor_ids, "id"), self.num_hashes, self.bands
+                ),
+                log.epoch_dir(INDEX_KIND, epoch_id),
             )
         finally:
             sig.unpersist()
@@ -180,37 +190,36 @@ class StreamingNearDupIndex:
         return self.apply_batch
 
     # -- maintenance ---------------------------------------------------------
-    def compact(
-        self, spark: SparkSession, target_file_bytes: int = 128 << 20
-    ) -> bool:
+    def compact(self, spark: SparkSession) -> bool:
         """Rewrite all committed epochs (and any prior compacted
-        generation) into one size-targeted generation committed through
-        the log's compaction record (exactly_once.EpochCommitLog.compact:
-        one captured snapshot for all three kinds, crash-invisible until
-        the record swaps). Returns False if there is nothing new to
-        compact (idempotent re-run). Safe to run between micro-batches.
-        Bands are repartitioned on (band, bh) so a probe join's shuffle
-        reads clustered files."""
-        import math
+        generation) into one generation committed through the log's
+        compaction record (exactly_once.EpochCommitLog.compact: one
+        captured snapshot for both kinds, crash-invisible until the
+        record swaps). The index kind is rewritten exactly as the batch
+        index compacts (sorted band=N runs); accepted rows coalesce to
+        ~128 MiB files. Returns False if there is nothing new to compact
+        (idempotent re-run). Safe to run between micro-batches."""
 
         def write(kind: str, dirs: list[str], out: str) -> None:
-            n_bytes = 0
-            for d in dirs:
-                for root, _, files in os.walk(d):
-                    n_bytes += sum(
-                        os.path.getsize(os.path.join(root, f))
-                        for f in files
-                        if f.endswith(".parquet")
-                    )
-            n_files = max(1, math.ceil(n_bytes / target_file_bytes))
-            df = spark.read.parquet(*dirs)
-            if kind == "bands":
-                df = df.repartition(n_files, "band", "bh")
-            else:
-                df = df.coalesce(n_files)
-            df.write.mode("overwrite").parquet(out)
+            if kind == INDEX_KIND:
+                id_type = self.accepted(spark).schema[self._id_col].dataType
+                write_index_epoch(
+                    read_index_epochs(spark, dirs, id_type.simpleString()), out
+                )
+                return
+            n_bytes = sum(
+                os.path.getsize(os.path.join(root, f))
+                for d in dirs
+                for root, _, files in os.walk(d)
+                for f in files
+                if f.endswith(".parquet")
+            )
+            n_files = max(1, math.ceil(n_bytes / _ACCEPTED_FILE_BYTES))
+            spark.read.parquet(*dirs).coalesce(n_files).write.mode(
+                "overwrite"
+            ).parquet(out)
 
-        return self.commit_log.compact(_KINDS, write)
+        return self.commit_log.compact((INDEX_KIND, "accepted"), write)
 
     # -- readers ------------------------------------------------------------
     def accepted(self, spark: SparkSession, schema: str | None = None) -> DataFrame:

@@ -10,8 +10,9 @@ duplicate.
 
 :class:`EpochCommitLog` is the one commit record behind every
 exactly-once state directory in the package: the wrapper below, the CDC
-apply (cdc.py), the near-dup index (dedup_index.py) and streaming
-PageRank (graph.py).
+apply (cdc.py), the streaming near-dup index (dedup_index.py), the
+batch MinHash index (operators/dedup.py build/append/compact/probe) and
+streaming PageRank (graph.py).
 """
 
 from __future__ import annotations

@@ -4,14 +4,19 @@ only the final leg). Usage:
 
     python scripts/capture_op_plans.py <tag> <op> [...]
 
-ops: jaccard_pairs, index_rows, bm25_topk_multi. Files land in
+ops: jaccard_pairs, index_rows, bm25_topk_multi, minhash_probe (the
+probe's executed candidate relation, then its returned verify plan with
+the sets scan, on an index built over half the corpus with the other
+half appended as a second epoch). Files land in
 plans/r<N>/OP_<op>_<tag>.txt, N being ``registry._ROTATION_ROUND``
 (same rule as capture_plans.py).
 """
 
 from __future__ import annotations
 
+import shutil
 import sys
+import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -44,7 +49,10 @@ def main() -> None:
             )
         )
 
+    cleanup: list[str] = []  # index dirs to delete after the captures
+
     def build(op):
+        """The op's relation(s); a list is captured plan after plan."""
         if op == "jaccard_pairs":
             from hazelcast_jet_contrib_spark.operators.dedup import jaccard_pairs
 
@@ -66,18 +74,46 @@ def main() -> None:
                 "query_id long, terms array<string>",
             )
             return bm25_topk_multi(docs, qs, k=10)
+        if op == "minhash_probe":
+            from hazelcast_jet_contrib_spark.operators.dedup import (
+                append_to_minhash_index,
+                build_minhash_index,
+                probe_minhash_index,
+            )
+
+            docs = table(spark, SF_DIR, "documents").select("doc_id", "text")
+            probes = docs.filter(F.col("doc_id") % 97 == 0).select(
+                (F.col("doc_id") + 5000000).alias("doc_id"),
+                F.concat("text", F.lit(" zz yy")).alias("text"),
+            )
+            path = tempfile.mkdtemp(prefix="capture_minhash_probe_")
+            build_minhash_index(
+                docs.filter(F.col("doc_id") % 2 == 0), path,
+                num_hashes=64, bands=32,
+            )
+            append_to_minhash_index(docs.filter(F.col("doc_id") % 2 == 1), path)
+            obs: dict = {}
+            out = probe_minhash_index(spark, path, probes, _observe=obs)
+            out.collect()
+            cleanup.append(path)
+            return [obs["candidates"], out]
         raise ValueError(op)
 
     for op in ops:
-        df = build(op)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        dfs = build(op)
+        plan = "\n".join(
+            df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            for df in (dfs if isinstance(dfs, list) else [dfs])
         )
         out = OUT / f"OP_{op}_{tag}.txt"
         out.write_text(plan)
         print(f"wrote {out.relative_to(REPO)} ({len(plan)} chars)")
         spark.catalog.clearCache()
     spark.stop()
+    for path in cleanup:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 if __name__ == "__main__":

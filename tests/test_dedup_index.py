@@ -161,14 +161,14 @@ def test_compaction_preserves_admission_and_bounds_files(spark, tmp_path):
         2,
     )
     before = {r["doc_id"] for r in index.accepted(spark).collect()}
-    n_epoch_dirs_before = len(os.listdir(os.path.join(state, "bands")))
+    n_epoch_dirs_before = len(os.listdir(os.path.join(state, "index")))
     assert n_epoch_dirs_before == 3
 
     assert index.compact(spark) is True
-    # accepted corpus identical, band dirs collapsed to the generation
+    # accepted corpus identical, index dirs collapsed to the generation
     assert {r["doc_id"] for r in index.accepted(spark).collect()} == before
-    assert index.commit_log.epoch_dirs("bands") == [
-        os.path.join(state, "compacted", "g2", "bands")
+    assert index.commit_log.epoch_dirs("index") == [
+        os.path.join(state, "compacted", "g2", "index")
     ]
     assert index.compact(spark) is False  # idempotent re-run: no-op
 
@@ -187,13 +187,13 @@ def test_compaction_preserves_admission_and_bounds_files(spark, tmp_path):
 
     # a second compaction folds the new epoch in; file count stays bounded
     assert index.compact(spark) is True
-    assert len(index.commit_log.epoch_dirs("bands")) == 1
+    assert len(index.commit_log.epoch_dirs("index")) == 1
     assert {r["doc_id"] for r in index.accepted(spark).collect()} == after
 
     # crash simulation: an unreferenced generation directory is invisible
-    ghost = os.path.join(state, "compacted", "g99", "bands")
+    ghost = os.path.join(state, "compacted", "g99", "index")
     os.makedirs(ghost)
-    assert ghost not in index.commit_log.epoch_dirs("bands")
+    assert ghost not in index.commit_log.epoch_dirs("index")
 
 
 def test_streaming_curation_pipeline_gates_then_index(spark, tmp_path):
@@ -299,3 +299,15 @@ def test_epoch_dirs_snapshot_cap_excludes_later_commits(spark, tmp_path):
     uncapped = index.commit_log.epoch_dirs("accepted")
     assert len(uncapped) == len(capped) + 1
     assert all(os.path.basename(d) != f"e{snap + 1}" for d in capped)
+
+
+def test_former_bands_sets_state_dir_is_refused(tmp_path):
+    """A state dir written before the index moved to the one 'index'
+    kind holds bands/ and sets/ epoch dirs; read through the new kind it
+    would look empty and admit every near-dup of its history, so opening
+    it raises."""
+    state = tmp_path / "index"
+    (state / "bands" / "e0").mkdir(parents=True)
+    (state / "sets" / "e0").mkdir(parents=True)
+    with pytest.raises(RuntimeError, match="former on-disk layout"):
+        StreamingNearDupIndex(str(state), "doc_id", "text")

@@ -1,22 +1,31 @@
 """Persisted MinHash-LSH index tests: build-once/probe-many recall on
 planted near-dups, exact-Jaccard verification parity, bucket-predicate
-pushdown at the probe scan, and parameter-sidecar round-trip."""
+pushdown at the probe scan, parameter-sidecar round-trip, and the
+epoch-commit crash contract of append and compaction."""
 
 from __future__ import annotations
 
+import os
 import re
 import shutil
 import tempfile
+import types
 
 import pytest
 from pyspark.sql import functions as F
 
 from hazelcast_jet_contrib_spark.operators.dedup import (
+    INDEX_KIND,
+    append_to_minhash_index,
     build_minhash_index,
+    compact_minhash_index,
     jaccard_pairs,
     probe_minhash_index,
+    read_index_epochs,
 )
 from hazelcast_jet_contrib_spark.registry import table
+from hazelcast_jet_contrib_spark.streaming import exactly_once
+from hazelcast_jet_contrib_spark.streaming.exactly_once import EpochCommitLog
 from tests.conftest import CORRECTNESS_SF
 
 
@@ -34,6 +43,23 @@ def _probes(docs):
         (F.col("doc_id") + 5_000_000).alias("doc_id"),
         F.concat("text", F.lit(" zz yy")).alias("text"),
     )
+
+
+def _probe_list(spark, path, probes):
+    """The full sorted (probe_id, corpus_id, jaccard) list."""
+    return sorted(
+        (r["probe_id"], r["corpus_id"], r["jaccard"])
+        for r in probe_minhash_index(spark, path, probes, threshold=0.6).collect()
+    )
+
+
+def _read_index(spark, path):
+    dirs = EpochCommitLog(path, "test").epoch_dirs(INDEX_KIND)
+    return read_index_epochs(spark, dirs, "bigint")
+
+
+class _Crash(Exception):
+    """Stands for the process dying at the patched step."""
 
 
 def test_probe_finds_planted_near_dups_and_verifies_exactly(spark, mh_index):
@@ -102,11 +128,6 @@ def test_incremental_append_probes_across_old_and_new(spark, tmp_path):
     probe: planted near-dups of BOTH halves are found, and the probe
     still pushes its bucket predicate (pruning applies to old and new
     files alike)."""
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        append_to_minhash_index,
-        build_minhash_index,
-    )
-
     docs = table(spark, CORRECTNESS_SF, "documents").select("doc_id", "text")
     old = docs.filter(F.col("doc_id") < 250)
     new = docs.filter(F.col("doc_id") >= 250)
@@ -135,12 +156,6 @@ def test_compaction_is_probe_identical_and_reduces_files(spark, tmp_path):
     cut the per-band file count back to one sorted run, (b) leave probe
     results EXACTLY identical — for any split of the corpus into base +
     deltas — and (c) keep the bucket predicate pushed."""
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        append_to_minhash_index,
-        build_minhash_index,
-        compact_minhash_index,
-    )
-
     docs = table(spark, CORRECTNESS_SF, "documents").select("doc_id", "text")
     path = str(tmp_path / "idx")
     build_minhash_index(docs.filter(F.col("doc_id") < 125), path)
@@ -165,7 +180,7 @@ def test_compaction_is_probe_identical_and_reduces_files(spark, tmp_path):
     assert before, "vacuous: no probe hits at all"
     plan = obs["candidates"]._jdf.queryExecution().executedPlan().toString()
     assert "In(bh" in plan, "bucket predicate no longer pushed after compaction"
-    # idempotent: a second compaction converges (crash-mid-swap story)
+    # idempotent: a second compaction converges
     stats2 = compact_minhash_index(spark, path)
     assert stats2["files_after"] <= stats["files_after"]
     again = sorted(
@@ -175,60 +190,133 @@ def test_compaction_is_probe_identical_and_reduces_files(spark, tmp_path):
     assert again == before
 
 
-def test_compaction_repairs_crash_window_parked_band(spark, tmp_path):
-    """The two-rename swap's crash window (ADVICE r09): a compaction
-    that dies between rename(live -> _trash/band=N) and
-    rename(staging -> live) leaves that band's ONLY copy parked under
-    the ignored _trash dir. Probes in that window legitimately miss
-    the band (documented gap); the repair contract is that the NEXT
-    compaction restores the parked band before reading — no rows are
-    ever lost to a re-run."""
-    import os
-
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        compact_minhash_index,
-    )
-
+def _appended_index(spark, tmp_path):
+    """Build + one appended epoch, and the probe list before any
+    maintenance."""
     docs = table(spark, CORRECTNESS_SF, "documents").select("doc_id", "text")
     path = str(tmp_path / "idx")
-    build_minhash_index(docs, path)
+    build_minhash_index(docs.filter(F.col("doc_id") < 250), path)
+    append_to_minhash_index(docs.filter(F.col("doc_id") >= 250), path)
     probes = _probes(docs)
-    want = sorted(
-        (r["probe_id"], r["corpus_id"], r["jaccard"])
-        for r in probe_minhash_index(spark, path, probes, threshold=0.6).collect()
-    )
+    want = _probe_list(spark, path, probes)
     assert want, "vacuous: no probe hits"
+    return path, probes, want
 
-    # simulate the crash: one band parked in _trash, absent from live
-    bands = sorted(
-        d for d in os.listdir(path) if d.startswith("band=")
-    )
-    victim = bands[len(bands) // 2]
-    os.makedirs(os.path.join(path, "_trash"), exist_ok=True)
-    os.rename(
-        os.path.join(path, victim), os.path.join(path, "_trash", victim)
-    )
-    # the parked copy is invisible to partition discovery (probe runs,
-    # just with that band's candidates missing — no error, fewer rows)
-    degraded = probe_minhash_index(spark, path, probes, threshold=0.6).collect()
-    assert len(degraded) <= len(want)
 
-    compact_minhash_index(spark, path)  # repair + converge
-    got = sorted(
-        (r["probe_id"], r["corpus_id"], r["jaccard"])
-        for r in probe_minhash_index(spark, path, probes, threshold=0.6).collect()
+def test_compaction_crash_before_swap_leaves_probes_identical(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that dies after writing its generation but before
+    the _COMPACTED swap: the generation is on disk but unreferenced, so
+    every probe is identical to the pre-compaction probe; the next
+    compaction converges to the same probe."""
+    path, probes, want = _appended_index(spark, tmp_path)
+    replace = EpochCommitLog._replace
+
+    def crash_at_swap(self, name, *values):
+        if name == "_COMPACTED":
+            raise _Crash
+        replace(self, name, *values)
+
+    monkeypatch.setattr(EpochCommitLog, "_replace", crash_at_swap)
+    with pytest.raises(_Crash):
+        compact_minhash_index(spark, path)
+    monkeypatch.undo()
+    assert os.listdir(os.path.join(path, "compacted")), "no generation written"
+    assert EpochCommitLog(path, "test").compaction() is None
+    assert _probe_list(spark, path, probes) == want
+
+    stats = compact_minhash_index(spark, path)
+    assert stats["files_after"] < stats["files_before"], stats
+    assert _probe_list(spark, path, probes) == want
+
+
+def test_compaction_crash_after_swap_leaves_probes_identical(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that dies after the _COMPACTED swap but before it
+    deletes the superseded epochs: readers take the generation and skip
+    the epochs at or below its floor, so every probe is identical to the
+    pre-compaction probe; the next compaction finishes the cleanup."""
+    path, probes, want = _appended_index(spark, tmp_path)
+
+    def crash(*_a, **_kw):
+        raise _Crash
+
+    monkeypatch.setattr(exactly_once, "shutil", types.SimpleNamespace(rmtree=crash))
+    with pytest.raises(_Crash):
+        compact_minhash_index(spark, path)
+    monkeypatch.undo()
+    epochs = os.path.join(path, INDEX_KIND)
+    assert sorted(os.listdir(epochs)) == ["e0", "e1"], "cleanup ran"
+    assert EpochCommitLog(path, "test").compaction() == (1, 1)
+    assert _probe_list(spark, path, probes) == want
+
+    compact_minhash_index(spark, path)
+    assert os.listdir(epochs) == []
+    assert _probe_list(spark, path, probes) == want
+
+
+def test_append_crash_before_commit_is_invisible_and_replaced(
+    spark, tmp_path, monkeypatch
+):
+    """An append that dies after writing its epoch but before the commit:
+    its rows are on disk but no probe reads them, and the next append
+    takes the same epoch and replaces them — the index then probes
+    exactly like one built over base + the second delta."""
+    docs = table(spark, CORRECTNESS_SF, "documents").select("doc_id", "text")
+    probes = _probes(docs)
+    path = str(tmp_path / "idx")
+    build_minhash_index(docs.filter(F.col("doc_id") < 250), path)
+    base = _probe_list(spark, path, probes)
+
+    def crash_at_commit(self, epoch_id):
+        raise _Crash
+
+    monkeypatch.setattr(EpochCommitLog, "commit", crash_at_commit)
+    with pytest.raises(_Crash):
+        append_to_minhash_index(docs.filter(F.col("doc_id") >= 250), path)
+    monkeypatch.undo()
+    assert os.listdir(os.path.join(path, INDEX_KIND, "e1")), "no rows written"
+    assert _probe_list(spark, path, probes) == base
+
+    append_to_minhash_index(
+        docs.filter((F.col("doc_id") >= 250) & (F.col("doc_id") < 375)), path
     )
-    assert got == want, "repair lost rows from the parked band"
-    assert not os.path.exists(os.path.join(path, "_trash"))
+    ref = str(tmp_path / "ref")
+    build_minhash_index(docs.filter(F.col("doc_id") < 375), ref)
+    want = _probe_list(spark, ref, probes)
+    assert want != base, "vacuous: the second delta adds no probe hit"
+    assert _probe_list(spark, path, probes) == want
+
+
+def test_probe_and_append_refuse_uncommitted_build(spark, tmp_path):
+    """A build that died before committing epoch 0 leaves band=N rows
+    on disk; probing or appending to it raises instead of reading a
+    partial index."""
+    docs = _tiny_corpus(spark)
+    path = str(tmp_path / "idx")
+    build_minhash_index(docs, path, num_hashes=64, bands=16)
+    os.remove(os.path.join(path, "_CURRENT"))
+    assert os.listdir(os.path.join(path, INDEX_KIND, "e0"))
+    with pytest.raises(ValueError, match="no committed epoch"):
+        probe_minhash_index(spark, path, docs)
+    with pytest.raises(ValueError, match="no committed epoch"):
+        append_to_minhash_index(docs, path)
 
 
 def test_compaction_rejects_remote_uris(spark):
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        compact_minhash_index,
-    )
-
+    """The index is an EpochCommitLog state directory (driver-local
+    marker and sidecar I/O): build, probe and compaction all refuse a
+    URI before touching anything."""
+    docs = _tiny_corpus(spark)
+    uri = "s3a://bucket/minhash_index"
     with pytest.raises(ValueError, match="driver-local"):
-        compact_minhash_index(spark, "s3a://bucket/minhash_index")
+        build_minhash_index(docs, uri)
+    with pytest.raises(ValueError, match="driver-local"):
+        probe_minhash_index(spark, uri, docs)
+    with pytest.raises(ValueError, match="driver-local"):
+        compact_minhash_index(spark, uri)
 
 
 def test_probe_side_collect_is_capped_with_clear_error(spark, mh_index):
@@ -253,7 +341,7 @@ def test_unified_layout_band_rows_narrow_and_sets_written_once(spark, mh_index):
     hs, and the band=-1 sets partition holds exactly one (id, hs) row
     per indexed document."""
     docs, path = mh_index
-    idx = spark.read.parquet(path)
+    idx = _read_index(spark, path)
     assert set(idx.columns) == {"id", "band", "bh", "hs"}
     assert idx.filter((F.col("band") >= 0) & F.col("hs").isNotNull()).count() == 0
     sets = idx.filter(F.col("band") < 0)
@@ -304,64 +392,30 @@ def test_probe_candidate_id_collect_is_capped_with_clear_error(spark, mh_index):
         )
 
 
-def test_compaction_repairs_crash_window_parked_sets_partition(spark, tmp_path):
-    """The band=-1 sets run shares the bands' two-rename protocol: a
-    compaction that dies inside ITS swap window leaves the only sets
-    copy parked under _trash — probes in that window degrade (every
-    candidate loses its verification set, so fewer/zero rows, same
-    documented gap class as a parked band); the next compaction
-    restores the parked run before reading — no rows lost."""
-    import os
-
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        compact_minhash_index,
-    )
-
-    docs = table(spark, CORRECTNESS_SF, "documents").select("doc_id", "text")
-    path = str(tmp_path / "idx")
-    build_minhash_index(docs, path)
-    probes = _probes(docs)
-    want = sorted(
-        (r["probe_id"], r["corpus_id"], r["jaccard"])
-        for r in probe_minhash_index(spark, path, probes, threshold=0.6).collect()
-    )
-    assert want, "vacuous: no probe hits"
-
-    os.makedirs(os.path.join(path, "_trash"), exist_ok=True)
-    os.rename(
-        os.path.join(path, "band=-1"), os.path.join(path, "_trash", "band=-1")
-    )
-    degraded = probe_minhash_index(spark, path, probes, threshold=0.6).collect()
-    assert len(degraded) < len(want)
-
-    compact_minhash_index(spark, path)  # repair + converge
-    got = sorted(
-        (r["probe_id"], r["corpus_id"], r["jaccard"])
-        for r in probe_minhash_index(spark, path, probes, threshold=0.6).collect()
-    )
-    assert got == want, "repair lost rows from the parked sets run"
-    assert not os.path.exists(os.path.join(path, "_trash"))
-
-
-def test_index_files_physically_sorted(spark, mh_index):
+def test_index_files_physically_sorted(spark, mh_index, tmp_path):
     """r17: the epoch sort LEADS with the partition column, so the
     dynamic-partition writer preserves the secondary order — band
     files non-decreasing in bh, the band=-1 sets run non-decreasing in
-    id. (The former sortWithinPartitions("bh") was silently destroyed
+    id — in the built epoch and in a compacted generation alike. (The
+    former sortWithinPartitions("bh") was silently destroyed
     by the writer's own re-sort on `band`: 0/32 band files were
     actually bh-sorted, making row-group min/max pruning ineffective.)
     Single-file reads collect in file order (one partition, no
     shuffle), so the assertion observes on-disk order directly."""
     import glob
-    import os
-
     import json
 
     _docs, path = mh_index
     with open(os.path.join(path, "_minhash_params.json")) as f:
         n_bands = json.load(f)["bands"]
+    compacted = str(tmp_path / "compacted_copy")
+    shutil.copytree(path, compacted)
+    compact_minhash_index(spark, compacted)
+    band_dirs = glob.glob(os.path.join(path, INDEX_KIND, "e*", "band=*")) + glob.glob(
+        os.path.join(compacted, "compacted", "g*", INDEX_KIND, "band=*")
+    )
     checked = 0
-    for d in sorted(glob.glob(os.path.join(path, "band=*"))):
+    for d in sorted(band_dirs):
         col = "id" if os.path.basename(d) == "band=-1" else "bh"
         for fpath in glob.glob(os.path.join(d, "*.parquet")):
             vals = [
@@ -370,7 +424,7 @@ def test_index_files_physically_sorted(spark, mh_index):
             ]
             assert vals == sorted(vals), (fpath, col)
             checked += 1
-    assert checked >= n_bands + 1, f"only {checked} files checked"
+    assert checked >= 2 * (n_bands + 1), f"only {checked} files checked"
 
 
 def _tiny_corpus(spark):
@@ -383,13 +437,10 @@ def _tiny_corpus(spark):
 def test_probe_and_append_refuse_pre_unified_layout(spark, tmp_path):
     """ADVICE r17 #1: probing a pre-unified index silently returns ZERO
     matches (no band=-1 sets run -> every candidate fails verification)
-    and appending mixes layouts — both must refuse loudly instead."""
+    and appending mixes layouts; a unified-v2 index (band=N dirs at the
+    root, no commit record) would probe as empty — all must refuse
+    loudly and ask for a rebuild instead."""
     import json
-    import os
-
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        append_to_minhash_index,
-    )
 
     docs = _tiny_corpus(spark)
     path = str(tmp_path / "idx")
@@ -397,23 +448,24 @@ def test_probe_and_append_refuse_pre_unified_layout(spark, tmp_path):
     side = os.path.join(path, "_minhash_params.json")
     with open(side) as f:
         params = json.load(f)
-    params.pop("layout")  # what a pre-r17 sidecar looks like
-    with open(side, "w") as f:
-        json.dump(params, f)
-    with pytest.raises(ValueError, match="unified-v2"):
-        probe_minhash_index(spark, path, _tiny_corpus(spark))
-    with pytest.raises(ValueError, match="unified-v2"):
-        append_to_minhash_index(docs, path)
+    # what a pre-r17 sidecar looks like, then a unified-v2 one
+    for layout, shown in ((None, "None"), ("unified-v2", "'unified-v2'")):
+        params.pop("layout", None)
+        if layout is not None:
+            params["layout"] = layout
+        with open(side, "w") as f:
+            json.dump(params, f)
+        refusal = f"layout {shown}, not .* rebuild it with build_minhash_index"
+        with pytest.raises(ValueError, match=refusal):
+            probe_minhash_index(spark, path, _tiny_corpus(spark))
+        with pytest.raises(ValueError, match=refusal):
+            append_to_minhash_index(docs, path)
 
 
 def test_duplicate_sets_rows_do_not_duplicate_probe_pairs(spark, tmp_path):
     """ADVICE r17 #2: a re-run append of the same delta leaves duplicate
     (id, hs) sets rows; the probe must still emit each
     (probe_id, corpus_id) pair exactly once."""
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        append_to_minhash_index,
-    )
-
     docs = _tiny_corpus(spark)
     base = docs.filter(F.col("doc_id") < 20)
     delta = docs.filter(F.col("doc_id") >= 20)
@@ -421,7 +473,7 @@ def test_duplicate_sets_rows_do_not_duplicate_probe_pairs(spark, tmp_path):
     build_minhash_index(base, path, num_hashes=64, bands=16)
     append_to_minhash_index(delta, path)
     append_to_minhash_index(delta, path)  # retried/re-run delta
-    idx = spark.read.parquet(path)
+    idx = _read_index(spark, path)
     dup_sets = (
         idx.filter(F.col("band") < 0).groupBy("id").count().filter("count > 1")
     )
@@ -433,32 +485,3 @@ def test_duplicate_sets_rows_do_not_duplicate_probe_pairs(spark, tmp_path):
     pairs = [(r["probe_id"], r["corpus_id"]) for r in out]
     assert len(pairs) == len(set(pairs)), "duplicate output pairs"
     assert {(d + 1_000_000, d) for d in range(20, 30)} <= set(pairs)
-
-
-def test_sets_shard_space_derives_from_conf(spark, tmp_path):
-    """VERDICT r17 item 9: the sets rows' exchange-salt space is a conf,
-    not a constant — and an insane value refuses loudly."""
-    import glob
-    import os
-
-    from hazelcast_jet_contrib_spark.operators.dedup import (
-        _SETS_SHARD_SPACE_CONF,
-        _sets_shard_space,
-    )
-
-    assert _sets_shard_space(spark) == 4096
-    spark.conf.set(_SETS_SHARD_SPACE_CONF, "7")
-    try:
-        assert _sets_shard_space(spark) == 7
-        docs = _tiny_corpus(spark)
-        path = str(tmp_path / "idx")
-        build_minhash_index(docs, path, num_hashes=64, bands=16)
-        # the salt space bounds the sets run's exchange buckets; the
-        # write is still one sorted run per partition dir
-        sets_files = glob.glob(os.path.join(path, "band=-1", "*.parquet"))
-        assert 1 <= len(sets_files) <= 7
-        spark.conf.set(_SETS_SHARD_SPACE_CONF, "0")
-        with pytest.raises(ValueError, match="setsShardSpace"):
-            _sets_shard_space(spark)
-    finally:
-        spark.conf.unset(_SETS_SHARD_SPACE_CONF)
