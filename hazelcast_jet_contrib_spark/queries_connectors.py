@@ -931,16 +931,12 @@ def webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sse_data_rows(text: str) -> list[str]:
-    """Extract the DATA rows from a raw SSE byte stream already joined
-    to text: split on the \n\n event delimiter, keep ``data: `` blocks,
-    drop every sentinel/_eof-bearing block AND any block that is not a
-    JSON object — non-objects can only be the sentinel's own bytes cut
-    mid-frame by a client's stop callback (all genuine rows precede the
-    sentinel in the stream and come from toJSON, so they are complete
-    JSON objects; a bare JSON scalar would previously raise TypeError
-    from the ``in`` test and fail the whole row, ADVICE r16 #5).
-    Unit-pinned in tests/test_http_listener.py against a mid-sentinel
-    truncation (review r16 #1)."""
+    """The DATA rows of a raw SSE stream joined to text: split on the
+    blank-line event delimiter, keep ``data: `` blocks, and drop every
+    block that carries ``_eof`` or is not a JSON object. Every genuine
+    row precedes the sentinel and comes from toJSON, so a non-object can
+    only be the sentinel cut mid-frame by a client's stop callback
+    (pinned in tests/test_http_listener.py)."""
     import json as _json
 
     out: list[str] = []
@@ -958,31 +954,23 @@ def _sse_data_rows(text: str) -> list[str]:
     return out
 
 
-def _audit_message_keys(
-    posted: dict, got: list, what: str
-) -> None:
-    """Per-message sequence audit for the live-adapter roundtrip rows
-    (VERDICT r15 what's-wrong #1): compare the readback (key, payload)
-    multiset against the posted set so a red row NAMES its lost,
-    duplicated, or corrupted messages instead of presenting as an
-    opaque oracle hash mismatch downstream. ``posted`` maps a unique
-    message key (event_id / o_orderkey) to its payload tuple; ``got``
-    is the readback as (key, payload) pairs. Payloads are compared by
-    exact equality — both sides come from the same JSON serialization,
-    no arithmetic — and everything here is fixture-bounded (the rows'
-    k-bounded collect discipline)."""
+def _audit_message_keys(posted: dict, got: list, what: str) -> None:
+    """Raise naming every lost, duplicated, unknown-key or corrupted
+    message, so a red roundtrip names its messages instead of showing
+    as an opaque oracle mismatch. ``posted`` maps each unique message
+    key to its payload tuple; ``got`` holds the delivered (key, payload)
+    pairs. Payloads compare by exact equality: both sides come from the
+    same JSON serialization, with no arithmetic."""
     from collections import Counter
 
     counts = Counter(k for k, _ in got)
     missing = sorted(k for k in posted if counts[k] == 0)
     duplicated = sorted(k for k, c in counts.items() if c > 1 and k in posted)
     unknown = sorted(k for k in counts if k not in posted)
-    corrupted = sorted(
-        {k for k, v in got if k in posted and posted[k] != v}
-    )
+    corrupted = sorted({k for k, v in got if k in posted and posted[k] != v})
     if missing or duplicated or unknown or corrupted:
         raise RuntimeError(
-            f"{what}: spool readback diverged from the posted message set "
+            f"{what}: readback diverged from the posted message set "
             f"({len(posted)} posted, {len(got)} read): "
             f"{len(missing)} missing {missing[:20]}, "
             f"{len(duplicated)} duplicated {duplicated[:20]}, "
@@ -991,9 +979,126 @@ def _audit_message_keys(
         )
 
 
-# ---------------------------------------------------------------------------
-# S14 — live subscribe-side MQTT adapter, driver-proven (round 14)
-# ---------------------------------------------------------------------------
+def _roundtrip(
+    spark: SparkSession,
+    name: str,
+    fixture: DataFrame,
+    transport,
+    columns: list[str],
+    scale: int,
+) -> DataFrame:
+    """The checking half of every connector roundtrip query: collect the
+    bounded ``(key, group, value)`` fixture once, hand its rows to
+    ``transport`` (which pushes them through one connector and returns
+    the delivered ``(key, group, value)`` tuples), audit the delivered
+    set message by message, and aggregate it per group as ``columns``:
+    count, the sum of ``round(value * scale)`` as a bigint (integer
+    addition commutes, so the result is immune to summation order), and
+    min/max key. The aggregate runs over the rows the audit already
+    holds, so the transport's scratch state is gone before it returns."""
+    rows = [tuple(r) for r in fixture.collect()]
+    got = transport(rows)
+    _audit_message_keys(
+        {k: (g, v) for k, g, v in rows}, [(k, (g, v)) for k, g, v in got], name
+    )
+    group, n, total, lo, hi = columns
+    return (
+        spark.createDataFrame(got, f"k long, {group} string, v double")
+        .groupBy(group)
+        .agg(
+            F.count(F.lit(1)).alias(n),
+            F.sum(F.round(F.col("v") * scale).cast("long")).alias(total),
+            F.min("k").alias(lo),
+            F.max("k").alias(hi),
+        )
+    )
+
+
+def _spool_readback(
+    spark: SparkSession, root: str, select: list, posted: int
+) -> list[tuple]:
+    """Every record under the message-log ``root`` as the ``select``
+    columns (key, group, value expressions over the records' ``key`` and
+    ``value``), in one collect. The stream dirs are the ones that EXIST,
+    not the ones the fixture expects: a record in an unexpected stream
+    stays visible to the audit as an unknown key, and an empty spool
+    names every posted message missing instead of failing in Spark's
+    PATH_NOT_FOUND. Dir paths, not a segment glob: a glob past
+    parallelPartitionDiscovery.threshold launches a distributed listing
+    job with one task per segment file."""
+    import os
+
+    names = os.listdir(root) if os.path.isdir(root) else []
+    dirs = sorted(
+        p for p in (os.path.join(root, d) for d in names) if os.path.isdir(p)
+    )
+    if not dirs:
+        raise RuntimeError(
+            f"no stream dirs under {root}: all {posted} posted messages "
+            "are missing"
+        )
+    read = spark.read.schema("key string, value string").json(dirs)
+    return [tuple(r) for r in read.select(*select).collect()]
+
+
+def _run_threads(fns: dict, what: str) -> dict:
+    """Run each ``name → fn()`` on its own thread; return ``name →
+    result``. A thread hung past 120 s or raising fails the roundtrip
+    here, by name, instead of as an opaque oracle mismatch later."""
+    import threading
+
+    results: dict = {}
+    errors: list[str] = []
+
+    def run(name: str, fn) -> None:
+        try:
+            results[name] = fn()
+        except Exception as ex:  # surfaced after join
+            errors.append(f"{name}: {ex!r}")
+
+    threads = [threading.Thread(target=run, args=kv) for kv in fns.items()]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+        if t.is_alive():
+            raise RuntimeError(f"{what} hung past 120s")
+    if errors:
+        raise RuntimeError(f"{what} failed: {errors}")
+    return results
+
+
+_EOF = '{"_eof": 1}'
+
+
+def _push_fanout(sink, src: DataFrame, clients: dict) -> list[tuple]:
+    """Publish ``src`` through the started push ``sink``'s foreachBatch
+    adapter (toJSON → toLocalIterator → publish) plus the sentinel, then
+    connect every client (``name → fn()`` returning the payloads read
+    up to the sentinel) and return the rows as ``src``-column tuples.
+    Every client must receive the same rows: fan-out is broadcast, not
+    round-robin. Publishing before the clients connect keeps the whole
+    fixture in the sink's buffer, so a late joiner reads the same
+    content and a loaded host cannot truncate a stream in the handler's
+    5 s idle window; liveness is pinned in tests/test_http_listener.py."""
+    import json as _json
+
+    try:
+        sink.foreach_batch()(src, 0)
+        sink.publish(_EOF)
+        results = _run_threads(clients, "push clients")
+    finally:
+        sink.stop()
+    first = next(iter(results.values()))
+    if any(sorted(r) != sorted(first) for r in results.values()):
+        raise RuntimeError(
+            "fan-out diverged: "
+            + ", ".join(f"{n} {len(r)} rows" for n, r in results.items())
+        )
+    return [tuple(row[c] for c in src.columns) for row in map(_json.loads, first)]
+
+
+# S14 — subscribe-side MQTT adapter
 
 
 @query(
@@ -1008,26 +1113,19 @@ def _audit_message_keys(
     """,
 )
 def mqtt_subscribe_spool_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S14's subscribe side driver-proven end-to-end through the LIVE
-    adapter's glue (real_clients.PahoSubscribeSource — the exact
-    callback → bounded-queue → flusher → spool code a real paho client
-    drives; MqttSourceBuilder.java:42-180, Subscription.java:85-127,
-    impl/SourceContext.java:58-124): a bounded fixture subset of the
-    events table (event_id % 97 — ~1k messages at sf0.1, the k-bounded
-    collect discipline) publishes through an in-process broker stub
-    into the adapter's real on_message callback, one topic per event
-    type under a wildcard ``events/#`` QoS-1 subscription; the flusher
-    spools per-topic message-log segments; Spark reads the spooled
-    segments back (distributed jsonl scan over the per-topic stream
-    dirs) and aggregates per topic. The aggregate hash-matches the
-    same SQL over events iff no message was lost, duplicated,
-    re-keyed, or mis-topiced anywhere in the callback → queue → spool
-    → read path. Scale: the adapter is the parallelism-one half of the
-    reference source (one MQTT session); the spool read and aggregate
-    are ordinary distributed scans — see real_clients.py's scale note
-    on fanning out via shared subscriptions."""
+    """S14's subscribe side through the LIVE adapter's glue
+    (real_clients.PahoSubscribeSource — the exact callback →
+    bounded-queue → flusher → spool code a real paho client drives;
+    MqttSourceBuilder.java:42-180, Subscription.java:85-127,
+    impl/SourceContext.java:58-124): events with event_id % 97 publish
+    through an in-process broker stub into the adapter's real
+    on_message callback, one topic per event type under a wildcard
+    ``events/#`` QoS-1 subscription; the flusher spools per-topic
+    message-log segments, which are read back as (event_id, topic,
+    value). Scale: the adapter is the parallelism-one half of the
+    reference source (one MQTT session) — see real_clients.py's scale
+    note on fanning out via shared subscriptions."""
     import json as _json
-    import os
     import shutil
     import tempfile
 
@@ -1036,106 +1134,59 @@ def mqtt_subscribe_spool_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
         PahoSubscribeSource,
     )
 
-    rows = (
+    def transport(rows: list[tuple]) -> list[tuple]:
+        spool = tempfile.mkdtemp(prefix="mqtt_spool_q_")
+        try:
+            mod = MqttStubModule()
+            src = PahoSubscribeSource(
+                "fixture-broker",
+                spool,
+                [("events/#", 1)],
+                client_id="sg-driver-row",
+                flush_seconds=0.02,
+                mqtt_module=mod,
+            ).start()
+            try:
+                c = mod.clients[0]
+                if c.subscribed != [[("events/#", 1)]]:
+                    raise RuntimeError(
+                        f"expected one events/# QoS-1 subscribe call: {c.subscribed}"
+                    )
+                for k, topic, v in rows:
+                    c.deliver(topic, _json.dumps({"event_id": k, "value": v}), 1)
+            finally:
+                src.stop()  # final drain flushes every queued message
+            return _spool_readback(
+                spark,
+                spool,
+                [
+                    F.get_json_object("value", "$.event_id").cast("long"),
+                    "key",
+                    F.get_json_object("value", "$.value").cast("double"),
+                ],
+                len(rows),
+            )
+        finally:
+            shutil.rmtree(spool, ignore_errors=True)
+
+    fixture = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 97 == 0)
-        .select("event_id", "event_type", "value")
-        .collect()
+        .select(
+            "event_id", F.concat(F.lit("events/"), "event_type"), "value"
+        )
     )
-    spool = tempfile.mkdtemp(prefix="mqtt_spool_q_")
-    try:
-        mod = MqttStubModule()
-        src = PahoSubscribeSource(
-            "fixture-broker",
-            spool,
-            [("events/#", 1)],
-            client_id="sg-driver-row",
-            flush_seconds=0.02,
-            mqtt_module=mod,
-        ).start()
-        try:
-            c = mod.clients[0]
-            assert c.subscribed == [[("events/#", 1)]]  # one call, one filter
-            for r in rows:
-                c.deliver(
-                    f"events/{r['event_type']}",
-                    _json.dumps({"event_id": r["event_id"], "value": r["value"]}),
-                    1,
-                )
-        finally:
-            src.stop()  # final drain flushes every queued message
-        # read the per-topic stream DIRECTORIES, not a per-segment
-        # glob: a glob expanding past
-        # parallelPartitionDiscovery.threshold launches a distributed
-        # LISTING job with one task per segment file (VERDICT r15
-        # what's-wrong #2 — the trap the HTTP row's fix measured as a
-        # 600-task stage); a handful of dir paths list driver-side.
-        # List the dirs that EXIST on disk, not the ones the fixture
-        # expects (review r16 #2): a mis-topiced or duplicated message
-        # landing in an unexpected stream dir must stay visible to the
-        # audit's unknown/duplicated categories, and a fully-lost
-        # topic must surface as missing keys, not a PATH_NOT_FOUND.
-        topic_dirs = sorted(
-            os.path.join(spool, d)
-            for d in os.listdir(spool)
-            if os.path.isdir(os.path.join(spool, d))
-        )
-        if not topic_dirs:
-            raise RuntimeError(
-                "mqtt_subscribe_spool_roundtrip: spool is empty — all "
-                f"{len(rows)} posted messages are missing"
-            )
-        readback = (
-            spark.read.schema("key string, value string")
-            .json(topic_dirs)
-            .select(
-                F.col("key").alias("topic"),
-                F.get_json_object("value", "$.event_id").cast("long").alias(
-                    "event_id"
-                ),
-                F.get_json_object("value", "$.value").cast("double").alias("v"),
-            )
-            # audit + aggregate are two actions over the same scan:
-            # cache so the spool is read once (review r16 #6)
-            .cache()
-        )
-        # per-message sequence audit (VERDICT r15 #1): a lost,
-        # duplicated, or corrupted message is named HERE, with its
-        # event_id, instead of surfacing rounds later as an opaque
-        # driver hash mismatch. Fixture-bounded collect (~1k msgs).
-        posted = {r["event_id"]: (f"events/{r['event_type']}", r["value"]) for r in rows}
-        got = [
-            (m["event_id"], (m["topic"], m["v"])) for m in readback.collect()
-        ]
-        _audit_message_keys(posted, got, "mqtt_subscribe_spool_roundtrip")
-        agg = (
-            readback
-            .groupBy("topic")
-            .agg(
-                F.count(F.lit(1)).alias("n_msgs"),
-                # per-message milli-scaled integer, THEN sum: bigint
-                # addition is associative/commutative, so the hash is
-                # immune to partition summation order (ADVICE r14 #4 —
-                # the discipline the money-summing oracles use)
-                F.sum(F.round(F.col("v") * 1000).cast("long")).alias("sum_milli"),
-            )
-            .collect()
-        )
-    finally:
-        try:
-            readback.unpersist()
-        except (NameError, UnboundLocalError):
-            pass
-        shutil.rmtree(spool, ignore_errors=True)
-    return spark.createDataFrame(
-        [(r["topic"], r["n_msgs"], r["sum_milli"]) for r in agg],
-        "topic string, n_msgs long, sum_milli long",
-    )
+    return _roundtrip(
+        spark,
+        "mqtt_subscribe_spool_roundtrip",
+        fixture,
+        transport,
+        ["topic", "n_msgs", "sum_milli", "min_id", "max_id"],
+        1000,
+    ).select("topic", "n_msgs", "sum_milli")
 
 
-# ---------------------------------------------------------------------------
-# S15 — live HTTP(S) listener source, driver-proven (round 15)
-# ---------------------------------------------------------------------------
+# S15 — HTTP(S) listener source
 
 
 @query(
@@ -1152,31 +1203,23 @@ def mqtt_subscribe_spool_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def http_listener_spool_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S15's listener source driver-proven end-to-end through the LIVE
-    embedded server over REAL sockets (sources/http_listener.py;
-    HttpListenerSourceBuilder.java:36-254): a bounded fixture subset of
-    orders (o_orderkey % 101 — ~1.5k rows at sf0.1, the k-bounded
-    collect discipline) is POSTed as JSON webhook bodies, most over
-    eight keep-alive HTTP/1.1 connections in parallel (exercising the
-    durable-ack group-commit path), a deterministic 1-in-10 slice over
-    ONE multiplexed h2c prior-knowledge HTTP/2 connection
+    """S15's listener source through the LIVE embedded server over REAL
+    sockets (sources/http_listener.py; HttpListenerSourceBuilder.java:
+    36-254): orders with o_orderkey % 101 are POSTed as JSON webhook
+    bodies, most over eight keep-alive HTTP/1.1 connections in parallel
+    (the durable-ack group-commit path), a deterministic 1-in-10 slice
+    over ONE multiplexed h2c prior-knowledge HTTP/2 connection
     (http2.post_h2c — the embedded RFC 7540 path, ENABLE_HTTP2 parity,
     HttpListenerSourceContext.java:80), plus one malformed-JSON POST
-    asserted 400-and-not-spooled (Undertow 400 parity,
-    HttpListenerSourceContext.java:103-107). The listener spools
-    accepted bodies into message-log segments BEFORE each 200
-    (durable_ack); Spark reads the spool back (distributed jsonl scan),
-    parses the bodies, and aggregates per priority with integer-cents
-    sums (bigint addition commutes — hash immune to summation order).
-    The aggregate hash-matches the same SQL over orders iff no body was
-    lost, duplicated, truncated, or corrupted anywhere in the
-    socket → handler → spool → read path, on either protocol. Scale:
-    the listener is the parallelism-one half of the reference source
-    (one ingest endpoint, HttpListenerSinkBuilder.java:253-263); the
-    spool read and aggregate are ordinary distributed scans."""
+    that must get a 400 and not be spooled (Undertow 400 parity,
+    HttpListenerSourceContext.java:103-107). The listener spools each
+    accepted body BEFORE its 200 (durable_ack); the spool is read back
+    as (o_orderkey, priority, totalprice). Scale: the listener is the
+    parallelism-one half of the reference source (one ingest endpoint,
+    HttpListenerSinkBuilder.java:253-263)."""
     import json as _json
-    import os
     import shutil
+    import socket
     import tempfile
     import threading
     from http.client import HTTPConnection
@@ -1184,161 +1227,93 @@ def http_listener_spool_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     from hazelcast_jet_contrib_spark.sources import http2
     from hazelcast_jet_contrib_spark.sources.http_listener import HttpListenerSource
 
-    rows = (
+    def transport(rows: list[tuple]) -> list[tuple]:
+        bodies = [
+            _json.dumps({"k": k, "p": p, "t": t}).encode() for k, p, t in rows
+        ]
+        h2_bodies = bodies[::10]
+        h11_bodies = iter(b for i, b in enumerate(bodies) if i % 10 != 0)
+        lock = threading.Lock()
+        spool = tempfile.mkdtemp(prefix="http_spool_q_")
+        try:
+            src = HttpListenerSource(
+                spool, require_json=True, durable_ack=True
+            ).start()
+            try:
+                host, port = src._server.server_address[:2]
+                c = HTTPConnection(host, port, timeout=30)
+                c.request("POST", "/", b'{"k": not json')
+                resp = c.getresponse()
+                resp.read()
+                c.close()
+                if resp.status != 400:
+                    raise RuntimeError(
+                        f"malformed JSON must get a 400, got {resp.status}"
+                    )
+
+                def h11_producer() -> None:
+                    conn = HTTPConnection(host, port, timeout=30)
+                    conn.connect()
+                    # http.client writes headers and body separately;
+                    # with Nagle on, the body write stalls behind the
+                    # server's delayed ACK (~18ms/request measured)
+                    conn.sock.setsockopt(
+                        socket.IPPROTO_TCP, socket.TCP_NODELAY, 1
+                    )
+                    try:
+                        while True:
+                            with lock:
+                                body = next(h11_bodies, None)
+                            if body is None:
+                                return
+                            conn.request(
+                                "POST", "/", body,
+                                {"Content-Type": "application/json"},
+                            )
+                            r = conn.getresponse()
+                            r.read()
+                            if r.status != 200:
+                                raise RuntimeError(f"HTTP {r.status}")
+                    finally:
+                        conn.close()
+
+                # the h2c slice posts concurrently with the HTTP/1.1
+                # producers: the two legs carry disjoint bodies
+                producers = {f"h11-{i}": h11_producer for i in range(8)}
+                producers["h2c"] = lambda: http2.post_h2c(host, port, h2_bodies)
+                statuses = _run_threads(producers, "HTTP producers")["h2c"]
+                if statuses != ["200"] * len(h2_bodies):
+                    raise RuntimeError(f"h2c statuses: {statuses}")
+            finally:
+                src.stop()
+            return _spool_readback(
+                spark,
+                spool,
+                [
+                    F.get_json_object("value", f"$.{f}").cast(t)
+                    for f, t in (("k", "long"), ("p", "string"), ("t", "double"))
+                ],
+                len(rows),
+            )
+        finally:
+            shutil.rmtree(spool, ignore_errors=True)
+
+    fixture = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 101 == 0)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
-        .collect()
     )
-    bodies = [
-        _json.dumps(
-            {"k": r["o_orderkey"], "p": r["o_orderpriority"], "t": r["o_totalprice"]}
-        ).encode()
-        for r in rows
-    ]
-    h2_bodies = bodies[::10]
-    h11_bodies = [b for i, b in enumerate(bodies) if i % 10 != 0]
-    spool = tempfile.mkdtemp(prefix="http_spool_q_")
-    try:
-        src = HttpListenerSource(
-            spool, require_json=True, durable_ack=True
-        ).start()
-        try:
-            host, port = src._server.server_address[:2]
-            # malformed JSON → 400, and the body must NOT reach the spool
-            c = HTTPConnection(host, port, timeout=30)
-            c.request("POST", "/", b'{"k": not json')
-            resp = c.getresponse()
-            assert resp.status == 400, resp.status
-            resp.read()
-            c.close()
-            # HTTP/1.1 slice: eight keep-alive producer connections
-            it = iter(h11_bodies)
-            lock = threading.Lock()
-            failures: list[str] = []
-
-            def producer() -> None:
-                import socket as _socket
-
-                conn = HTTPConnection(host, port, timeout=30)
-                conn.connect()
-                # http.client writes headers and body separately; with
-                # Nagle on, the body write stalls behind the server's
-                # delayed ACK (~18ms/request measured; <1ms without)
-                conn.sock.setsockopt(
-                    _socket.IPPROTO_TCP, _socket.TCP_NODELAY, 1
-                )
-                try:
-                    while True:
-                        with lock:
-                            body = next(it, None)
-                        if body is None:
-                            return
-                        conn.request(
-                            "POST", "/", body,
-                            {"Content-Type": "application/json"},
-                        )
-                        r = conn.getresponse()
-                        r.read()
-                        if r.status != 200:
-                            failures.append(f"HTTP {r.status}")
-                            return
-                finally:
-                    conn.close()
-
-            # HTTP/2 slice posts CONCURRENTLY with the HTTP/1.1
-            # producers (r18): the two protocol legs exercise disjoint
-            # body slices and the spool aggregate is order-insensitive,
-            # so serializing them only added the h2 leg's wall time
-            h2_out: dict = {}
-
-            def h2_producer() -> None:
-                try:
-                    h2_out["statuses"] = http2.post_h2c(host, port, h2_bodies)
-                except Exception as ex:  # surfaced by the assert below
-                    h2_out["error"] = ex
-
-            workers = [threading.Thread(target=producer) for _ in range(8)]
-            workers.append(threading.Thread(target=h2_producer))
-            for w in workers:
-                w.start()
-            for w in workers:
-                w.join(timeout=120)
-                # a hung worker would otherwise surface only as an
-                # opaque oracle hash mismatch much later (review r15 #6)
-                if w.is_alive():
-                    raise RuntimeError("HTTP producer hung past 120s")
-            assert not failures, failures
-            if "error" in h2_out:
-                raise h2_out["error"]
-            assert h2_out.get("statuses") == ["200"] * len(h2_bodies), h2_out
-        finally:
-            src.stop()
-        # read the stream DIRECTORY, not a segment glob: a glob
-        # expanding past parallelPartitionDiscovery.threshold (32
-        # paths) makes Spark launch a distributed LISTING job with one
-        # task per segment file (measured: a 600-task stage before the
-        # 32-task scan); one root path lists driver-side in one call
-        readback = (
-            spark.read.schema("key string, value string")
-            .json(os.path.join(spool, "http"))
-            .select(
-                F.get_json_object("value", "$.p").alias("priority"),
-                F.get_json_object("value", "$.k").cast("long").alias("k"),
-                F.get_json_object("value", "$.t").cast("double").alias("t"),
-            )
-            # one scan serves both the audit and the aggregate
-            # (review r16 #6)
-            .cache()
-        )
-        # per-message sequence audit (VERDICT r15 #1): a lost,
-        # duplicated, or corrupted body is named HERE, with its
-        # o_orderkey, instead of surfacing as an opaque driver hash
-        # mismatch. Fixture-bounded collect (~1.5k rows at sf0.1).
-        posted = {
-            r["o_orderkey"]: (r["o_orderpriority"], r["o_totalprice"])
-            for r in rows
-        }
-        got = [
-            (m["k"], (m["priority"], m["t"])) for m in readback.collect()
-        ]
-        _audit_message_keys(posted, got, "http_listener_spool_roundtrip")
-        agg = (
-            readback
-            .groupBy("priority")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.round(F.col("t") * 100).cast("long")).alias("cents"),
-                F.min("k").alias("min_key"),
-                F.max("k").alias("max_key"),
-            )
-            .collect()
-        )
-    finally:
-        try:
-            readback.unpersist()
-        except (NameError, UnboundLocalError):
-            pass
-        shutil.rmtree(spool, ignore_errors=True)
-    return spark.createDataFrame(
-        [
-            (r["priority"], r["n_orders"], r["cents"], r["min_key"], r["max_key"])
-            for r in agg
-        ],
-        "priority string, n_orders long, cents long, min_key long, max_key long",
+    return _roundtrip(
+        spark,
+        "http_listener_spool_roundtrip",
+        fixture,
+        transport,
+        ["priority", "n_orders", "cents", "min_key", "max_key"],
+        100,
     )
 
 
-# ---------------------------------------------------------------------------
-# K8 — SSE push sink, driver-registered round 16 (the first SINK row)
-# ---------------------------------------------------------------------------
-#
-# Staged unregistered in round 15 (window/cap arithmetic was full);
-# promoted exactly as ROUND15_PLAN §Round-16 planned: @query + a
-# rotation slot, nothing else changed except the two r16 hardening
-# edits (sentinel-by-parsed-payload, ADVICE r15 #3; the per-message
-# audit, VERDICT r15 #1). tests/test_http_listener.py keeps running the
-# EXACT driver comparison every pytest.
+# K8 — SSE and WebSocket push sinks
 
 SSE_PUSH_ROUNDTRIP_ORACLE = """
     SELECT event_type,
@@ -1354,171 +1329,69 @@ SSE_PUSH_ROUNDTRIP_ORACLE = """
 
 @query("sse_push_roundtrip", oracle=SSE_PUSH_ROUNDTRIP_ORACLE)
 def sse_push_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K8's SSE push sink driver-proven end-to-end (the first SINK
-    driver row; HttpListenerSinks.java:41-146, accumulation contract
-    HttpListenerSinkContext.java:128-152): a bounded events fixture
-    (event_id % 89 — ~1.7k rows at sf0.1) flows through the sink's REAL
-    foreachBatch adapter (toJSON → toLocalIterator → publish) to TWO
-    live clients reading the SAME endpoint concurrently — one HTTP/1.1
-    SSE client, one multiplexed h2c client (http2.get_h2c_stream, each
-    event its own DATA frame, flow-control replenished) — each
-    collecting until a sentinel. Both clients must receive the full
-    row set identically (fan-out is broadcast, not round-robin); the
-    received rows are aggregated with order-insensitive integer-milli
-    sums and hash-match the same SQL over events iff no row was lost,
-    duplicated, re-encoded wrong, or mis-framed on either protocol.
-    Scale: the sink is the parallelism-one serving point of the
-    reference (forceTotalParallelismOne,
+    """K8's SSE push sink (HttpListenerSinks.java:41-146, accumulation
+    contract HttpListenerSinkContext.java:128-152): events with
+    event_id % 89 are published to TWO live clients reading the SAME
+    endpoint concurrently — one HTTP/1.1 SSE client and one multiplexed
+    h2c client (http2.get_h2c_stream, each event its own DATA frame,
+    flow-control replenished). Scale: the sink is the parallelism-one
+    serving point of the reference (forceTotalParallelismOne,
     HttpListenerSinkBuilder.java:253-263); rows stream through the
-    driver partition-at-a-time (bounded memory), and the aggregate is
-    an ordinary distributed job."""
-    import json as _json
-    import threading
+    driver partition-at-a-time (bounded memory)."""
     import urllib.request
 
     from hazelcast_jet_contrib_spark.sources import http2
     from hazelcast_jet_contrib_spark.sources.http_listener import SsePushSink
 
-    src = (
+    fixture = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 89 == 0)
         .select("event_id", "event_type", "value")
     )
-    # fixture snapshot for the per-message audit (bounded, ~1.7k rows
-    # at sf0.1 — the k-bounded collect discipline)
-    fixture = src.collect()
-    sentinel = '{"_eof": 1}'
-    sink = SsePushSink(max_buffer=500_000).start()
-    results: dict[str, list[str]] = {}
-    errors: list[str] = []
-    try:
+
+    def transport(rows: list[tuple]) -> list[tuple]:
+        sink = SsePushSink(max_buffer=500_000).start()
         host, port = sink._server.server_address[:2]
 
-        def h11_client() -> None:
-            try:
-                out: list[str] = []
-                req = urllib.request.Request(sink.address)
-                with urllib.request.urlopen(req, timeout=120) as resp:
-                    while True:
-                        line = resp.readline()
-                        if not line:
-                            break
-                        text = line.decode().strip()
-                        if text.startswith("data: "):
-                            payload = text[len("data: "):]
-                            if payload == sentinel:
-                                break
-                            out.append(payload)
-                results["h11"] = out
-            except Exception as ex:  # surfaced after join
-                errors.append(f"h11: {ex!r}")
+        def h11_client() -> list[str]:
+            out: list[str] = []
+            with urllib.request.urlopen(sink.address, timeout=120) as resp:
+                for line in resp:
+                    text = line.decode().strip()
+                    if text == f"data: {_EOF}":
+                        break
+                    if text.startswith("data: "):
+                        out.append(text[len("data: "):])
+            return out
 
-        def h2_client() -> None:
-            try:
-                # frames split at 16KB boundaries, not event boundaries:
-                # match the sentinel on a rolling tail so a split
-                # sentinel still stops the client immediately instead
-                # of waiting out the server's idle close
-                tail = {"b": b""}
+        def h2_client() -> list[str]:
+            # frames split at 16KB boundaries, not event boundaries:
+            # match the sentinel on a rolling tail so a split sentinel
+            # still stops the client, and let _sse_data_rows drop the
+            # sentinel's possibly truncated block by parsing payloads
+            tail = {"b": b""}
 
-                def _stop(c: bytes) -> bool:
-                    tail["b"] = (tail["b"] + c)[-64:]
-                    return b'"_eof"' in tail["b"]
+            def _stop(c: bytes) -> bool:
+                tail["b"] = (tail["b"] + c)[-64:]
+                return b'"_eof"' in tail["b"]
 
-                _, chunks = http2.get_h2c_stream(
-                    host, port, timeout=120, stop=_stop
-                )
-                text = b"".join(chunks).decode()
-                # frames split at 16KB boundaries, not event
-                # boundaries — the sentinel may arrive truncated;
-                # _sse_data_rows drops sentinel and truncated-sentinel
-                # blocks by PARSING payloads (ADVICE r15 #3 + review
-                # r16 #1; unit-pinned)
-                results["h2"] = _sse_data_rows(text)
-            except Exception as ex:
-                errors.append(f"h2: {ex!r}")
+            _, chunks = http2.get_h2c_stream(host, port, timeout=120, stop=_stop)
+            return _sse_data_rows(b"".join(chunks).decode())
 
-        clients = [
-            threading.Thread(target=h11_client),
-            threading.Thread(target=h2_client),
-        ]
-        # publish BEFORE the clients connect: the buffer retains the
-        # whole fixture + sentinel (max_buffer > fixture), and a late
-        # joiner reads identical content — by contract AND by the
-        # pytest live-delivery pins. Connecting first would hang the
-        # row's fate on the handler's 5 s idle window: a loaded driver
-        # host that delays Spark's first publish past it gets a
-        # truncated stream (exactly the r15 host-load flake class this
-        # round is eliminating). The driver row proves content
-        # fidelity over real sockets; liveness stays pytest-proven.
-        sink.foreach_batch()(src, 0)
-        sink.publish(sentinel)
-        for c in clients:
-            c.start()
-        for c in clients:
-            c.join(timeout=120)
-            if c.is_alive():
-                raise RuntimeError("SSE client hung past 120s")
-        if errors:
-            raise RuntimeError(f"SSE clients failed: {errors}")
-    finally:
-        sink.stop()
-    h11, h2 = results["h11"], results["h2"]
-    if sorted(h11) != sorted(h2):
-        raise ValueError(
-            f"fan-out diverged: h11 {len(h11)} rows vs h2 {len(h2)} rows"
-        )
-    received = [
-        (r["event_id"], r["event_type"], r["value"])
-        for r in map(_json.loads, h11)
-    ]
-    # per-message sequence audit (VERDICT r15 #1, applied to the sink
-    # row from day one): a lost, duplicated, or corrupted pushed event
-    # is named HERE, with its event_id, instead of surfacing as an
-    # opaque driver hash mismatch.
-    _audit_message_keys(
-        {r["event_id"]: (r["event_type"], r["value"]) for r in fixture},
-        [(eid, (etype, val)) for eid, etype, val in received],
+        return _push_fanout(sink, fixture, {"h11": h11_client, "h2": h2_client})
+
+    return _roundtrip(
+        spark,
         "sse_push_roundtrip",
-    )
-    frame = spark.createDataFrame(
-        received, "event_id long, event_type string, value double"
-    )
-    agg = (
-        frame.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 1000).cast("long")).alias("sum_milli"),
-            F.min("event_id").alias("min_id"),
-            F.max("event_id").alias("max_id"),
-        )
-        .collect()
-    )
-    return spark.createDataFrame(
-        [
-            (r["event_type"], r["n_events"], r["sum_milli"], r["min_id"], r["max_id"])
-            for r in agg
-        ],
-        "event_type string, n_events long, sum_milli long, min_id long, max_id long",
+        fixture,
+        transport,
+        ["event_type", "n_events", "sum_milli", "min_id", "max_id"],
+        1000,
     )
 
 
-# ---------------------------------------------------------------------------
-# K8 — WebSocket push sink, STAGED for the round-18 driver window
-# ---------------------------------------------------------------------------
-#
-# NOT registered: the round-17 window arithmetic changed when the three
-# r16 rows came back red (demand 48 aging + 3 re-proofs = 51 > 50), so
-# the two genuine-subsumption retirements this round funded the
-# stream_sink_2pc_roundtrip registration — the more reference-
-# meaningful row (VERDICT r16 #4/#7: "register ws only if a second
-# retirement keeps the cap sustainable; otherwise hold it staged").
-# Round 18's window holds the 47 r16-greens plus three spare slots, so
-# this row promotes there with @query and no retirement needed. The
-# oracle below already carries the r17 CAST(...AS BIGINT) HUGEINT fix
-# and is swept by the oracle-type guard tests; the EXACT driver
-# comparison runs every pytest via tests/test_http_listener.py.
-
+# Not registered (the registry takes no new queries);
+# tests/test_http_listener.py runs its oracle comparison.
 WS_PUSH_ROUNDTRIP_ORACLE = """
     SELECT event_type,
            COUNT(*) AS n_events,
@@ -1609,113 +1482,39 @@ def _ws_client_collect(address: str, timeout: float = 120.0) -> list[str]:
 
 
 def ws_push_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K8's WebSocket push sink driver-proven end-to-end (the websocket
-    variant of HttpListenerSinks.java:41-146; same accumulation
-    contract HttpListenerSinkContext.java:128-152): a bounded events
-    fixture (event_id % 83 — ~1.8k rows at sf0.1) flows through the
-    sink's REAL foreachBatch adapter (toJSON → toLocalIterator →
-    publish) to TWO live RFC 6455 clients on the SAME endpoint — each
-    completes the real upgrade handshake and reads text frames until
-    the sentinel. Both clients must receive the full row set
-    identically (fan-out is broadcast, not round-robin); a per-message
-    audit names any lost/duplicated/corrupted event_id (VERDICT r15
-    #1, inherited from day one); the received rows aggregate with
-    order-insensitive integer-milli sums and hash-match the same SQL
-    over events iff no row was lost, duplicated, re-encoded wrong, or
-    mis-framed. Scale: the sink is the parallelism-one serving point
+    """K8's WebSocket push sink (the websocket variant of
+    HttpListenerSinks.java:41-146; same accumulation contract
+    HttpListenerSinkContext.java:128-152): events with event_id % 83 are
+    published to TWO live RFC 6455 clients on the SAME endpoint, each
+    completing the real upgrade handshake and reading text frames until
+    the sentinel. Scale: the sink is the parallelism-one serving point
     of the reference (forceTotalParallelismOne,
-    HttpListenerSinkBuilder.java:253-263); rows stream through the
-    driver partition-at-a-time (bounded memory), and the aggregate is
-    an ordinary distributed job."""
-    import json as _json
-    import threading
-
+    HttpListenerSinkBuilder.java:253-263)."""
     from hazelcast_jet_contrib_spark.sources.http_listener import WebSocketPushSink
 
-    src = (
+    fixture = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 83 == 0)
         .select("event_id", "event_type", "value")
     )
-    fixture = src.collect()
-    sink = WebSocketPushSink(max_buffer=500_000).start()
-    results: dict[str, list[str]] = {}
-    errors: list[str] = []
-    try:
 
-        def client(tag: str) -> None:
-            try:
-                results[tag] = _ws_client_collect(sink.address)
-            except Exception as ex:  # surfaced after join
-                errors.append(f"{tag}: {ex!r}")
+    def transport(rows: list[tuple]) -> list[tuple]:
+        sink = WebSocketPushSink(max_buffer=500_000).start()
 
-        clients = [
-            threading.Thread(target=client, args=(t,)) for t in ("ws1", "ws2")
-        ]
-        # publish before the clients connect — the buffered late-joiner
-        # read eliminates the handler's 5 s idle-window race under
-        # driver-host load (see sse_push_roundtrip's note; liveness is
-        # pytest-pinned in test_http_listener.py)
-        sink.foreach_batch()(src, 0)
-        sink.publish('{"_eof": 1}')
-        for c in clients:
-            c.start()
-        for c in clients:
-            c.join(timeout=120)
-            if c.is_alive():
-                raise RuntimeError("WS client hung past 120s")
-        if errors:
-            raise RuntimeError(f"WS clients failed: {errors}")
-    finally:
-        sink.stop()
-    ws1, ws2 = results["ws1"], results["ws2"]
-    if sorted(ws1) != sorted(ws2):
-        raise ValueError(
-            f"fan-out diverged: ws1 {len(ws1)} rows vs ws2 {len(ws2)} rows"
-        )
-    received = [
-        (r["event_id"], r["event_type"], r["value"])
-        for r in map(_json.loads, ws1)
-    ]
-    _audit_message_keys(
-        {r["event_id"]: (r["event_type"], r["value"]) for r in fixture},
-        [(eid, (etype, val)) for eid, etype, val in received],
+        clients = {t: lambda: _ws_client_collect(sink.address) for t in ("ws1", "ws2")}
+        return _push_fanout(sink, fixture, clients)
+
+    return _roundtrip(
+        spark,
         "ws_push_roundtrip",
-    )
-    frame = spark.createDataFrame(
-        received, "event_id long, event_type string, value double"
-    )
-    agg = (
-        frame.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 1000).cast("long")).alias("sum_milli"),
-            F.min("event_id").alias("min_id"),
-            F.max("event_id").alias("max_id"),
-        )
-        .collect()
-    )
-    return spark.createDataFrame(
-        [
-            (r["event_type"], r["n_events"], r["sum_milli"], r["min_id"], r["max_id"])
-            for r in agg
-        ],
-        "event_type string, n_events long, sum_milli long, min_id long, max_id long",
+        fixture,
+        transport,
+        ["event_type", "n_events", "sum_milli", "min_id", "max_id"],
+        1000,
     )
 
 
-# ---------------------------------------------------------------------------
-# K4 + S8 — Redis-stream sink's 2PC epoch-committed writer, STAGED for
-# the round-17 driver window (second spare slot candidate)
-# ---------------------------------------------------------------------------
-#
-# REGISTERED round 17 (staged r16): the XA-analog exactly-once proof
-# through a REAL StreamingQuery, the most reference-meaningful staged
-# capability (VERDICT r16 #7; xa-test/ parity through the driver gate).
-# Funded by the two r17 retirements (ngram_vocab_top100,
-# rolling_running_total — genuine subsumptions at their
-# @retired_query sites). tests/test_stream_writer.py keeps running the
-# exact driver comparison every pytest as before.
+# K4 + S8 — Redis-stream sink's 2PC epoch-committed writer
 
 STREAM_SINK_2PC_ROUNDTRIP_ORACLE = """
     SELECT event_type,
@@ -1731,28 +1530,23 @@ STREAM_SINK_2PC_ROUNDTRIP_ORACLE = """
 
 @query("stream_sink_2pc_roundtrip", oracle=STREAM_SINK_2PC_ROUNDTRIP_ORACLE)
 def stream_sink_2pc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K4's stream sink driver-proven through the FULL streaming loop
-    the reference closes between RedisSources.stream and
-    RedisSinks.stream (RedisSinks.java:269-349; exactly-once offsets
-    RedisSources.java:273-395): a bounded events fixture (event_id %
-    79) is produced into a source message-log stream; a REAL Structured
-    Streaming query reads it with the DSv2 message_log source
-    (offset-tracked segments), routes every record to a per-event-type
-    output stream via the writer's row-routed ``stream`` column, and
-    lands it through the per-epoch two-phase writer
-    (streaming/message_log.py MessageLogStreamWriter — invisible
-    staged dotfiles, deterministic segment numbers, idempotent
-    os.link promotion; the XA prepared-transaction analog,
-    JdbcXaTest.java:62-97). Spark then batch-reads the output streams
-    back, audits the per-message key set (VERDICT r15 #1 discipline),
-    and aggregates with order-insensitive integer-milli sums that
-    hash-match the same SQL over events iff no record was lost,
-    duplicated, corrupted, or mis-routed anywhere in the
-    produce → stream-read → 2PC-write → read path. Scale: segments are
-    the parallelism unit on both sides; the 2PC writer's staged-file
-    protocol is per-partition with a driver-side O(files) commit."""
+    """K4's stream sink through the FULL streaming loop the reference
+    closes between RedisSources.stream and RedisSinks.stream
+    (RedisSinks.java:269-349; exactly-once offsets
+    RedisSources.java:273-395): events with event_id % 79 are produced
+    into a source message-log stream; a REAL Structured Streaming query
+    reads it with the DSv2 message_log source (offset-tracked segments),
+    routes every record to a per-event-type output stream via the
+    writer's row-routed ``stream`` column, and lands it through the
+    per-epoch two-phase writer (streaming/message_log.py
+    MessageLogStreamWriter — invisible staged dotfiles, deterministic
+    segment numbers, idempotent os.link promotion; the XA
+    prepared-transaction analog, JdbcXaTest.java:62-97). The output
+    streams are read back as (event_id, event_type, value). Scale:
+    segments are the parallelism unit on both sides; the 2PC writer's
+    staged-file protocol is per-partition with a driver-side O(files)
+    commit."""
     import json as _json
-    import os
     import shutil
     import tempfile
 
@@ -1761,123 +1555,77 @@ def stream_sink_2pc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         register,
     )
 
-    rows = (
+    register(spark)
+
+    def transport(rows: list[tuple]) -> list[tuple]:
+        root = tempfile.mkdtemp(prefix="stream2pc_q_")
+        src_root, dst_root, ckpt = f"{root}/src", f"{root}/dst", f"{root}/ckpt"
+        try:
+            # fixture → source stream in 8 segments = 8 read tasks
+            chunk = max(1, (len(rows) + 7) // 8)
+            for i in range(0, len(rows), chunk):
+                append_segment(
+                    src_root,
+                    "events_src",
+                    [
+                        {
+                            "key": str(k),
+                            "value": _json.dumps(
+                                {"event_id": k, "event_type": g, "value": v}
+                            ),
+                        }
+                        for k, g, v in rows[i : i + chunk]
+                    ],
+                )
+            q = (
+                spark.readStream.format("message_log")
+                .option("path", src_root)
+                .load()
+                .select(
+                    F.concat(
+                        F.lit("out_"), F.get_json_object("value", "$.event_type")
+                    ).alias("stream"),
+                    "key",
+                    "value",
+                )
+                .writeStream.format("message_log")
+                .option("path", dst_root)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                # a query leaked past the rmtree below would keep
+                # polling the deleted src/checkpoint for the session
+                q.stop()
+            q.awaitTermination()
+            return _spool_readback(
+                spark,
+                dst_root,
+                [
+                    F.get_json_object("value", f"$.{f}").cast(t)
+                    for f, t in (
+                        ("event_id", "long"),
+                        ("event_type", "string"),
+                        ("value", "double"),
+                    )
+                ],
+                len(rows),
+            )
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+
+    fixture = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 79 == 0)
         .select("event_id", "event_type", "value")
-        .collect()
     )
-    register(spark)
-    root = tempfile.mkdtemp(prefix="stream2pc_q_")
-    src_root, dst_root, ckpt = f"{root}/src", f"{root}/dst", f"{root}/ckpt"
-    try:
-        # producer side: fixture → source stream in bounded segments
-        # (k-bounded collect discipline; 8 segments = 8 read tasks)
-        chunk = max(1, (len(rows) + 7) // 8)
-        for i in range(0, len(rows), chunk):
-            append_segment(
-                src_root,
-                "events_src",
-                [
-                    {
-                        "key": str(r["event_id"]),
-                        "value": _json.dumps(
-                            {
-                                "event_id": r["event_id"],
-                                "event_type": r["event_type"],
-                                "value": r["value"],
-                            }
-                        ),
-                    }
-                    for r in rows[i : i + chunk]
-                ],
-            )
-        stream = (
-            spark.readStream.format("message_log")
-            .option("path", src_root)
-            .load()
-            .select(
-                F.concat(
-                    F.lit("out_"),
-                    F.get_json_object("value", "$.event_type"),
-                ).alias("stream"),
-                "key",
-                "value",
-            )
-        )
-        q = (
-            stream.writeStream.format("message_log")
-            .option("path", dst_root)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            # a query leaked past the rmtree below would keep polling
-            # the deleted src/checkpoint for the rest of the session
-            # (review r16 #3)
-            q.stop()
-        q.awaitTermination()
-        # list the output dirs that EXIST, not the expected ones
-        # (review r16 #2): a mis-routed stream must stay visible to
-        # the audit's unknown category
-        out_dirs = (
-            sorted(
-                os.path.join(dst_root, d)
-                for d in os.listdir(dst_root)
-                if os.path.isdir(os.path.join(dst_root, d))
-            )
-            if os.path.isdir(dst_root)
-            else []
-        )
-        if not out_dirs:
-            raise RuntimeError(
-                "stream_sink_2pc_roundtrip: no output streams — all "
-                f"{len(rows)} records are missing"
-            )
-        readback = (
-            spark.read.schema("key string, value string")
-            .json(out_dirs)
-            .select(
-                F.get_json_object("value", "$.event_id").cast("long").alias(
-                    "event_id"
-                ),
-                F.get_json_object("value", "$.event_type").alias("event_type"),
-                F.get_json_object("value", "$.value").cast("double").alias("v"),
-            )
-            # one scan serves both the audit and the aggregate
-            # (review r16 #6)
-            .cache()
-        )
-        posted = {
-            r["event_id"]: (r["event_type"], r["value"]) for r in rows
-        }
-        got = [
-            (m["event_id"], (m["event_type"], m["v"]))
-            for m in readback.collect()
-        ]
-        _audit_message_keys(posted, got, "stream_sink_2pc_roundtrip")
-        agg = (
-            readback.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_msgs"),
-                F.sum(F.round(F.col("v") * 1000).cast("long")).alias("sum_milli"),
-                F.min("event_id").alias("min_id"),
-                F.max("event_id").alias("max_id"),
-            )
-            .collect()
-        )
-    finally:
-        try:
-            readback.unpersist()
-        except (NameError, UnboundLocalError):
-            pass
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        [
-            (r["event_type"], r["n_msgs"], r["sum_milli"], r["min_id"], r["max_id"])
-            for r in agg
-        ],
-        "event_type string, n_msgs long, sum_milli long, min_id long, max_id long",
+    return _roundtrip(
+        spark,
+        "stream_sink_2pc_roundtrip",
+        fixture,
+        transport,
+        ["event_type", "n_msgs", "sum_milli", "min_id", "max_id"],
+        1000,
     )
