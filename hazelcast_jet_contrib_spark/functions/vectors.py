@@ -19,40 +19,24 @@ def as_double(vec: Column | str) -> Column:
     return F.transform(_c(vec), lambda x: x.cast("double"))
 
 
-def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+def dot(a: Column | str, b: Column | str) -> Column:
     """Left-to-right summed dot product (same fold order as DuckDB's
-    list functions, keeping float results comparable).
-
-    With ``dim`` given, unrolls to a flat sum of element_at products —
-    a plain codegen'd expression whose per-row cost beats the
-    interpreted aggregate/zip_with higher-order form ~10x, at the price
-    of ~seconds of one-time Janino compilation for the 64+-term method.
-    Unroll for corpus-scale scans; leave ``dim=None`` for small or
-    interactive inputs. Both forms fold left-to-right, so results are
-    bit-identical.
-    """
-    ca, cb = _c(a), _c(b)
-    if dim is not None:
-        terms = [F.element_at(ca, j + 1) * F.element_at(cb, j + 1) for j in range(dim)]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
+    list functions, keeping float results comparable)."""
     return F.aggregate(
-        F.zip_with(ca, cb, lambda x, y: x * y),
+        F.zip_with(_c(a), _c(b), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
 
 
-def norm(a: Column | str, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
+def norm(a: Column | str) -> Column:
+    return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+def cosine(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; null-safe 0.0 when either norm is 0."""
-    d = dot(a, b, dim)
-    na, nb = norm(a, dim), norm(b, dim)
+    d = dot(a, b)
+    na, nb = norm(a), norm(b)
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(d / (na * nb))
 
 

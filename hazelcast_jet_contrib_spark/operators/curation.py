@@ -121,25 +121,16 @@ def ngram_vocab(
     that survives a 100 TB corpus because the reduce side only carries
     distinct n-grams. Ties break lexicographically for determinism.
     Output: (ngram string, n bigint)."""
-    from hazelcast_jet_contrib_spark.functions.text import tokens
+    from hazelcast_jet_contrib_spark.functions.text import shingle_list_of_tokens, tokens
 
-    # materialize the token array as its own column BEFORE the lambda:
-    # referencing the split() expression inside transform would re-split
-    # the text once per element (the HOF re-evaluation pitfall
-    # functions/text.py documents)
-    toks = F.col("__t__")
-    # guard short docs: sequence(0, -1) would DESCEND and index out of
-    # bounds, so docs with fewer than n tokens get an empty gram array
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)]),
-    )
+    # materialize the token array as its own column BEFORE the n-gram
+    # transform: referencing the split() expression inside it would
+    # re-split the text once per element (the HOF re-evaluation pitfall
+    # functions/text.py documents); docs with fewer than n tokens yield
+    # no n-grams
     return (
         df.select(tokens(text_col).alias("__t__"))
-        .select(F.explode(grams).alias("ngram"))
+        .select(F.explode(shingle_list_of_tokens("__t__", n)).alias("ngram"))
         .filter(F.length("ngram") > 0)
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("n"))

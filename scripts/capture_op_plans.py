@@ -7,7 +7,10 @@ only the final leg). Usage:
 ops: jaccard_pairs, index_rows, bm25_topk_multi, minhash_probe (the
 probe's executed candidate relation, then its returned verify plan with
 the sets scan, on an index built over half the corpus with the other
-half appended as a second epoch). Files land in
+half appended as a second epoch), ivf_pq_probe (an IVF-PQ index,
+nlist=8, m=8, kcent=16, over embeddings vec_id >= 10, probed at
+nprobe=4 by the 10 queries vec_id < 10 three ways: ivf_index_topk,
+ivf_pq_topk ADC-only, ivf_pq_topk with rerank=20). Files land in
 plans/r<N>/OP_<op>_<tag>.txt, N being ``registry._ROTATION_ROUND``
 (same rule as capture_plans.py).
 """
@@ -97,6 +100,25 @@ def main() -> None:
             out.collect()
             cleanup.append(path)
             return [obs["candidates"], out]
+        if op == "ivf_pq_probe":
+            from hazelcast_jet_contrib_spark.operators.similarity import (
+                build_ivf_index,
+                ivf_index_topk,
+                ivf_pq_topk,
+            )
+
+            emb = table(spark, SF_DIR, "embeddings")
+            q = emb.filter(F.col("vec_id") < 10)
+            path = tempfile.mkdtemp(prefix="capture_ivf_pq_probe_")
+            build_ivf_index(
+                emb.filter(F.col("vec_id") >= 10), path, nlist=8, pq_m=8, pq_kcent=16
+            )
+            cleanup.append(path)
+            return [
+                ivf_index_topk(spark, path, q, k=5, nprobe=4),
+                ivf_pq_topk(spark, path, q, k=5, nprobe=4),
+                ivf_pq_topk(spark, path, q, k=5, nprobe=4, rerank=20),
+            ]
         raise ValueError(op)
 
     for op in ops:

@@ -504,12 +504,14 @@ def test_pq_topk_shuffle_is_corpus_size_independent(spark, tmp_path):
     the code relation — the corpus never shuffles, and WindowGroupLimit
     keeps the exchange at O(partitions x queries x k) regardless of
     corpus size. 8x corpus => ~1x shuffle records; and the codes are
-    what scans, not the vectors. Self-recall sanity at both scales with
-    a 50-deep exact re-rank: every query is a verbatim corpus vector and
-    must come back rank 1."""
+    what scans, not the vectors. PQ over the whole corpus is an IVF-PQ
+    index probed at nprobe = nlist. Self-recall sanity at both scales
+    with a 50-deep exact re-rank: every query is a verbatim corpus
+    vector and must come back rank 1."""
+    from hazelcast_jet_contrib_spark.cache import release_tracked
     from hazelcast_jet_contrib_spark.operators.similarity import (
-        pq_topk,
-        train_pq_codebooks,
+        build_ivf_index,
+        ivf_pq_topk,
     )
 
     results = {}
@@ -518,10 +520,12 @@ def test_pq_topk_shuffle_is_corpus_size_independent(spark, tmp_path):
         _write_embeddings(spark, path, n)
         corpus = spark.read.parquet(path)
         queries = corpus.filter((F.col("vec_id") % 100 == 0) & (F.col("vec_id") < N1))
-        books = train_pq_codebooks(corpus, m=8, kcent=16)
-        topk = pq_topk(queries, corpus, k=5, codebooks=books, rerank=50)
+        index = str(tmp_path / f"{tag}_ivfpq")
+        build_ivf_index(corpus, index, nlist=8, pq_m=8, pq_kcent=16)
+        topk = ivf_pq_topk(spark, index, queries, k=5, nprobe=8, rerank=50)
         rows = topk.collect()
         stats = executed_shuffle_stats(topk)
+        release_tracked()
         spark.catalog.clearCache()
         results[tag] = {"rows": rows, "shuffle": stats["shuffle_records"]}
 
